@@ -240,14 +240,3 @@ def prune_partitioned_bloom_in(
         files.extend(sub)
         total += n
     return files, total
-
-
-def drop_bloom_manifest(dir_path: str) -> None:
-    """Remove a (now stale) manifest after its files were rewritten.
-    Pruning stays correct either way — rewritten files get fresh
-    names that miss the manifest and therefore survive — but a
-    dropped manifest never makes even a stale no-claim."""
-    try:
-        os.remove(_mpath(dir_path))
-    except FileNotFoundError:
-        pass

@@ -135,12 +135,18 @@ def merge_rows(
     staging = os.path.join(path, MERGE_STAGING_DIR)
     if os.path.exists(staging):
         shutil.rmtree(staging)
-    updates.select(*data_cols).withColumn(
+    staged = updates.select(*data_cols).withColumn(
         partition_col, partition.expr()
-    ).write.mode("overwrite").parquet(staging)
-    upd = spark.read.parquet(staging)
-    n_rows = upd.count()
-    n_keys = upd.select(key_column).distinct().count()
+    )
+    staged.write.mode("overwrite").parquet(staging)
+    upd = spark.read.schema(staged.schema).parquet(staging)
+    # One aggregate validates the batch; NULL keys count as one key,
+    # as distinct() counts them.
+    key = F.col(key_column)
+    v = upd.agg(
+        F.count(F.lit(1)), F.countDistinct(key), F.count_if(key.isNull())
+    ).first()
+    n_rows, n_keys, n_null = v[0], v[1] + (v[2] > 0), v[2]
     if n_rows != n_keys:
         shutil.rmtree(staging)
         raise ValueError(
@@ -153,7 +159,7 @@ def merge_rows(
     # append-another-copy on every merge and heal replay — reject it
     # instead of silently breaking the upsert and idempotence
     # contracts.
-    if upd.where(F.col(key_column).isNull()).limit(1).count():
+    if n_null:
         shutil.rmtree(staging)
         raise ValueError(
             f"updates contain a NULL {key_column}; a keyed merge "

@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goe_spark.catalog import spread
 from goe_spark.functions.casts import (
     build_cast_map,
     corruption_probe_aggs,
@@ -172,8 +173,14 @@ class OffloadPipeline:
         self.store = MetadataStore(config.metadata_dir)
 
     def _verify_count(self, check_df: DataFrame) -> int:
-        """Seam for tests to inject a verification mismatch."""
-        return check_df.count()
+        """Count the slice read back, grouped by the synthetic column
+        when partitioned: that one job also gives SAVE_METADATA the
+        partitions written. Seam for tests to inject a mismatch."""
+        if self.cfg.partition is None:
+            return check_df.count()
+        counts = check_df.groupBy(SYNTHETIC_COL).count().collect()
+        self._partitions_read = [r[0] for r in counts]
+        return sum(r[1] for r in counts)
 
     # -- steps (named like the reference's command_steps) ------------------
 
@@ -554,20 +561,20 @@ class OffloadPipeline:
             pre_snapshot = (
                 None if full_replace else writer.snapshot(self.spark)
             )
+            final_df_out = staged.select(*final_proj)
+            if cfg.partition is not None:
+                # A one-file staged read would write every partition
+                # from one task; spread hashes it on the partition key
+                # across the cores (no exchange at 8+ staged splits).
+                final_df_out = spread(
+                    staged.select(*final_proj, F.col(SYNTHETIC_COL)),
+                    SYNTHETIC_COL,
+                )
             # SORT_COLUMNS: cluster-on-write (plans/sort_columns.py) —
             # a per-partition sort gives parquet row-group locality on
             # the sort key, the Spark rendering of BigQuery CLUSTER BY.
-            final_df_out = apply_sort_on_write(
-                staged.select(
-                    *final_proj,
-                    *(
-                        [F.col(SYNTHETIC_COL)]
-                        if cfg.partition is not None
-                        else []
-                    ),
-                ),
-                sort_cols,
-            )
+            # After the spread: a repartition would undo the sort.
+            final_df_out = apply_sort_on_write(final_df_out, sort_cols)
             # The incremental slice clause, recorded by warehouse
             # writers as the INSERT's WHERE (the reference passes the
             # same filter_clauses into load_final_table).
@@ -619,6 +626,7 @@ class OffloadPipeline:
                         else F.lit(True)
                     )
                 )
+            self._partitions_read = []
             rows_final = self._verify_count(check_df)
             if rows_final != rows_staged:
                 if not full_replace:
@@ -630,12 +638,8 @@ class OffloadPipeline:
 
         # SAVE_METADATA: HWM / predicate bookkeeping.
         with self._step(steps, "SAVE_METADATA"):
-            partitions_written = []
+            partitions_written = self._partitions_read
             if cfg.partition is not None:
-                partitions_written = [
-                    r[0]
-                    for r in check_df.select(SYNTHETIC_COL).distinct().collect()
-                ]
                 if cfg.hwm is not None:
                     md.incremental_high_value = cfg.hwm
                 elif boundary_hwm is not None:

@@ -3,14 +3,16 @@ offloaded parquet target — the lakehouse DELETE the reference
 delegates to its warehouse backend.
 
 Spark-first shape: deletion is two phases. Phase 1 finds the
-partition DIRECTORIES that contain any doomed key — one scan with the
-key set applied, collecting `input_file_name()` of matching rows, so
+partition DIRECTORIES that contain any doomed key — one aggregate
+over a scan with the key set applied, collecting `input_file_name()`
+of matching rows and counting the distinct matched keys, so
 the affected set is exact file-system truth (no reconstruction of
 directory names from partition values, which breaks on type-inferred
 reads: lpad-padded numerics, Hive-escaped characters,
 __HIVE_DEFAULT_PARTITION__). Phase 2 rewrites ONLY those directories
-with the key anti-filter, reusing compaction's marker-driven
-crash-safe swap, so untouched partitions stay byte-identical. At
+with the key anti-filter through compaction's rewrite_partition (one
+write job, footer row counts, marker-driven crash-safe swap), so
+untouched partitions stay byte-identical. At
 100 TB a delete of k keys costs O(affected partitions), never a table
 rewrite.
 
@@ -22,21 +24,12 @@ keys on the second pass).
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.plans.compaction import (
-    _complete_swap,
-    _data_files,
-    _marker_path,
-    _tmp_dir,
-    heal_interrupted_swaps,
-)
-from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.plans.compaction import heal_interrupted_swaps, rewrite_partition
 
 HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
@@ -44,12 +37,13 @@ HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 FILE_COL = "_goe_src_file"
 
 
-def affected_partition_dirs(matches: DataFrame) -> list[str]:
-    """Distinct immediate parent directory NAMES of the files holding
-    matching rows — exact (from input_file_name), driver-bounded by
-    affected-partition file counts. ``matches`` must already carry
-    FILE_COL projected AT SCAN TIME: input_file_name() is task-local
-    and evaluates to '' when first referenced above a shuffle join.
+def affected_partition_dirs(files: list[str]) -> list[str]:
+    """Distinct immediate parent directory NAMES of ``files``, the
+    collected FILE_COL values of the matching rows — exact (from
+    input_file_name), driver-bounded by affected-partition file
+    counts. The matches must carry FILE_COL projected AT SCAN TIME:
+    input_file_name() is task-local and evaluates to '' when first
+    referenced above a shuffle join.
 
     input_file_name returns a URI, so each segment is URL-encoded ON
     TOP of whatever Hive escaping the on-disk name carries (dir
@@ -57,7 +51,6 @@ def affected_partition_dirs(matches: DataFrame) -> list[str]:
     as '%20') — one unquote restores the on-disk spelling."""
     from urllib.parse import unquote
 
-    files = [r[0] for r in matches.select(FILE_COL).distinct().collect()]
     if any(not f for f in files):  # pragma: no cover - defensive
         raise RuntimeError(
             "input_file_name lost provenance — FILE_COL must be "
@@ -164,45 +157,32 @@ def delete_rows(
                 | F.col(key_column).isNull()
             )
 
-    report.keys_matched = (
-        matches.select(key_column).distinct().count()
-    )
-    for d in affected_partition_dirs(matches):
+    # One aggregate: the distinct doomed keys present (matches hold no
+    # NULL key) and the files holding them.
+    report.keys_matched, files = matches.agg(
+        F.countDistinct(key_column), F.collect_set(FILE_COL)
+    ).first()
+    for d in affected_partition_dirs(files):
         if d != HIVE_NULL_DIR and not d.startswith(f"{partition_col}="):
             # A matching file NOT under a partition dir means the
             # layout assumption is wrong — refuse rather than skip.
             raise ValueError(
                 f"matched file outside the partition layout: {d!r}"
             )
-        full = os.path.join(path, d)
-        old_files = _data_files(full)
-        part_df = spark.read.parquet(full)
-        n_before = part_df.count()
-        kept = anti(part_df)
-        tmp = _tmp_dir(path, d)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        kept.write.mode("overwrite").parquet(tmp)
-        n_after = spark.read.parquet(tmp).count()
-        if n_after >= n_before:
-            # input_file_name said this dir holds doomed rows; a no-op
-            # rewrite means the scans disagreed — don't swap files for
-            # nothing.
-            shutil.rmtree(tmp)
-            if n_after == n_before:
-                continue
-            raise RuntimeError(  # pragma: no cover - defensive
-                f"delete grew partition {d}: {n_before} -> {n_after}"
-            )
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": old_files}
+        # The swap drops the partition's stale manifests.
+        rw = rewrite_partition(
+            spark,
+            path,
+            d,
+            lambda df, tmp: anti(df).write.mode("overwrite").parquet(tmp),
+            deleting=True,
         )
-        # _complete_swap drops the partition's now-stale bloom
-        # manifest for every rewrite path (see compaction.py).
-        _complete_swap(path, d, old_files)
+        if rw is None:
+            continue
+        deleted = rw[0] - rw[1]
         report.partitions_affected += 1
-        report.rows_deleted += n_before - n_after
-        report.details.append((d, n_before - n_after))
+        report.rows_deleted += deleted
+        report.details.append((d, deleted))
     if maintain_indexes:
         from goe_spark.operators.index_maintenance import evict_keys
 

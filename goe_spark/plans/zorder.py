@@ -78,11 +78,6 @@ def zvalue_expr(
     (min, max) from the stats pass. NULL ranks as 0 (start of the
     curve) — range predicates never match NULL rows, so their
     placement only affects locality, not pruning correctness."""
-    if not 2 <= len(cols) <= 64 // BITS:
-        raise ValueError(
-            f"zorder needs 2..{64 // BITS} columns, got {len(cols)}"
-        )
-    max_rank = (1 << BITS) - 1
     ranks = []
     for c in cols:
         lo, hi = stats[c]
@@ -92,16 +87,16 @@ def zvalue_expr(
         scaled = (_rankable(df, c) - F.lit(float(lo))) / F.lit(
             float(hi) - float(lo)
         )
-        ranks.append(
-            F.coalesce(
-                F.least(
-                    F.floor(scaled * (max_rank + 1)).cast("long"),
-                    F.lit(max_rank).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-            )
-        )
+        ranks.append(_rank(scaled * (1 << BITS)))
     return _interleave(ranks)
+
+
+def _rank(x: F.Column) -> F.Column:
+    """floor(x) as a BITS-bit rank, capped at the top; NULL ranks 0."""
+    top = F.lit((1 << BITS) - 1).cast("long")
+    return F.coalesce(
+        F.least(F.floor(x).cast("long"), top), F.lit(0).cast("long")
+    )
 
 
 def _interleave(ranks: list) -> F.Column:
@@ -133,10 +128,6 @@ def _quantile_z(df: DataFrame, cols: list[str]) -> DataFrame:
     pruning correctness (range predicates don't match NULL)."""
     from pyspark.ml.feature import Bucketizer
 
-    if not 2 <= len(cols) <= 64 // BITS:
-        raise ValueError(
-            f"zorder needs 2..{64 // BITS} columns, got {len(cols)}"
-        )
     # Quantile granularity is deliberately COARSER than the rank range
     # (2^10 equi-depth buckets rescaled onto the 2^16 rank scale): a
     # Greenwald-Khanna sketch's size grows ~1/relativeError, so asking
@@ -145,41 +136,23 @@ def _quantile_z(df: DataFrame, cols: list[str]) -> DataFrame:
     # file-grain layouts (even 4096 files only consume 12 curve bits).
     n_buckets = 1 << 10
     probs = [i / n_buckets for i in range(1, n_buckets)]
+    in_cols = [f"__v{j}" for j in range(len(cols))]
+    out_cols = [f"__b{j}" for j in range(len(cols))]
     work = df.select(
-        "*", *[_rankable(df, c).alias(f"__v{j}") for j, c in enumerate(cols)]
+        "*", *[_rankable(df, c).alias(v) for c, v in zip(cols, in_cols)]
     )
-    cuts = work.approxQuantile(
-        [f"__v{j}" for j in range(len(cols))], probs, 1.0 / (4 * n_buckets)
-    )
-    splits_arr, in_cols, out_cols = [], [], []
-    for j in range(len(cols)):
-        distinct = sorted(set(cuts[j]))
-        splits_arr.append(
-            [float("-inf"), *distinct, float("inf")]
-        )
-        in_cols.append(f"__v{j}")
-        out_cols.append(f"__b{j}")
-    buck = Bucketizer(
+    cuts = work.approxQuantile(in_cols, probs, 1.0 / (4 * n_buckets))
+    splits_arr = [[float("-inf"), *sorted(set(c)), float("inf")] for c in cuts]
+    bucketed = Bucketizer(
         splitsArray=splits_arr,
         inputCols=in_cols,
         outputCols=out_cols,
         handleInvalid="keep",
-    )
-    bucketed = buck.transform(work)
-    max_rank = (1 << BITS) - 1  # rescale buckets onto the full range
-    ranks = []
-    for j in range(len(cols)):
-        nb = len(splits_arr[j]) - 1
-        scale = (max_rank + 1) / nb
-        ranks.append(
-            F.coalesce(
-                F.least(
-                    F.floor(F.col(f"__b{j}") * scale).cast("long"),
-                    F.lit(max_rank).cast("long"),
-                ),
-                F.lit(0).cast("long"),
-            )
-        )
+    ).transform(work)
+    ranks = [  # rescale each column's buckets onto the full rank range
+        _rank(F.col(f"__b{j}") * ((1 << BITS) / (len(splits_arr[j]) - 1)))
+        for j in range(len(cols))
+    ]
     return bucketed.withColumn("__z", _interleave(ranks)).drop(
         *in_cols, *out_cols
     )
@@ -210,23 +183,18 @@ def write_zordered(
     collapses a skewed column onto a few rank values and its dimension
     stops skipping files). The manifest stores raw value bounds either
     way, so pruning semantics are identical."""
+    if not 2 <= len(cols) <= 64 // BITS:
+        raise ValueError(
+            f"zorder needs 2..{64 // BITS} columns, got {len(cols)}"
+        )
     spark = df.sparkSession
     if rank == "quantile":
         zdf = _quantile_z(df, cols)
     elif rank == "linear":
         row = df.agg(
-            *[
-                F.min(_rankable(df, c)).alias(f"lo_{i}")
-                for i, c in enumerate(cols)
-            ],
-            *[
-                F.max(_rankable(df, c)).alias(f"hi_{i}")
-                for i, c in enumerate(cols)
-            ],
+            *[f(_rankable(df, c)) for c in cols for f in (F.min, F.max)]
         ).first()
-        stats = {
-            c: (row[f"lo_{i}"], row[f"hi_{i}"]) for i, c in enumerate(cols)
-        }
+        stats = {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
         zdf = df.withColumn("__z", zvalue_expr(df, cols, stats))
     else:
         raise ValueError(f"rank must be 'linear' or 'quantile': {rank!r}")
@@ -237,7 +205,10 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-    manifest = build_manifest(spark, path, cols)
+    # The files hold df's schema: read them back without inferring it.
+    manifest = _write_manifest(
+        spark.read.schema(df.schema).parquet(path), path, cols
+    )
     return ZorderReport(
         n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
     )
@@ -256,7 +227,12 @@ def build_manifest(
     from the parquet footers — this keeps the semantics engine-visible
     and testable. Bounds are stored on the RANK scale (epoch
     days/micros for temporal columns) so JSON stays typed-neutral."""
-    df = spark.read.parquet(path)
+    return _write_manifest(spark.read.parquet(path), path, cols)
+
+
+def _write_manifest(
+    df: DataFrame, path: str, cols: list[str]
+) -> dict[str, dict[str, list]]:
     per_file = (
         df.select(
             F.input_file_name().alias(_FILE),
@@ -351,58 +327,40 @@ def zorder_partitioned_table(
     Crash contract is compaction's: the clustered copy is complete in
     a dot-prefixed temp dir before the marker arms; any crash is
     healed by the next run (which this one begins with). The old
-    manifest is removed IN the swap and the fresh one written after —
+    manifest is removed IN the swap and the fresh one (computed on the
+    temp copy, whose file names the swap keeps) written after —
     a crash in between leaves a manifest-less partition, which
     read_pruned_partitioned treats as unprunable-but-correct (reads
     all its files) until the next zorder pass."""
     from goe_spark.plans.compaction import (
-        _complete_swap,
-        _data_files,
-        _marker_path,
-        _tmp_dir,
         heal_interrupted_swaps,
+        partition_dirs,
+        rewrite_partition,
     )
     from goe_spark.plans.metadata import atomic_write_json
 
     report = PartitionedZorderReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
-    part_dirs = [
-        d
-        for d in sorted(os.listdir(path))
-        if d.startswith(f"{partition_col}=")
-        and os.path.isdir(os.path.join(path, d))
-    ]
+    part_dirs = partition_dirs(path, partition_col)
     if not part_dirs:
         raise ValueError(
             f"{path} has no {partition_col}= partition directories; "
             "use write_zordered for flat tables"
         )
-    import shutil
 
     def _rewrite_one(d: str) -> int:
-        full = os.path.join(path, d)
-        old_files = _data_files(full)
-        df = spark.read.parquet(full)
-        n_before = df.count()
-        tmp = _tmp_dir(path, d)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
-        # The temp manifest described the temp paths; drop it — the
-        # real one is rebuilt on the final dir after the swap.
-        os.remove(_mpath(tmp))
-        if spark.read.parquet(tmp).count() != n_before:
-            shutil.rmtree(tmp)  # pragma: no cover - defensive
-            raise RuntimeError(f"zorder row mismatch in {d}")
-        doomed = list(old_files)
-        if os.path.exists(_mpath(full)):
-            doomed.append(MANIFEST_NAME)  # stale manifest dies in-swap
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": doomed}
-        )
-        n_after = _complete_swap(path, d, doomed)
-        build_manifest(spark, full, cols)
-        return n_after
+        manifest: dict = {}
+
+        def write(df: DataFrame, tmp: str) -> None:
+            write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
+            # Keyed by bare file names, which the swap keeps: this is
+            # the partition's manifest once the files are moved in.
+            with open(_mpath(tmp)) as fh:
+                manifest.update(json.load(fh))
+
+        _, _, n_files_after = rewrite_partition(spark, path, d, write)
+        atomic_write_json(_mpath(os.path.join(path, d)), manifest)
+        return n_files_after
 
     # Partitions are INDEPENDENT (own dirs, own markers, own temp
     # dirs), so a driver thread pool overlaps the per-partition
@@ -437,14 +395,12 @@ def read_pruned_partitioned(
     partition contributes all its files — correct, just unpruned);
     the union reads with basePath so ``partition_col`` survives.
     Returns (DataFrame | None, files_read, files_total)."""
-    from goe_spark.plans.compaction import _data_files
+    from goe_spark.plans.compaction import _data_files, partition_dirs
 
     files: list[str] = []
     total = 0
-    for d in sorted(os.listdir(path)):
+    for d in partition_dirs(path, partition_col):
         full = os.path.join(path, d)
-        if not (d.startswith(f"{partition_col}=") and os.path.isdir(full)):
-            continue
         if os.path.exists(_mpath(full)):
             keep, n = prune_files(full, bounds)
             files.extend(keep)
