@@ -424,6 +424,8 @@ def cmd_ingest(args) -> int:
 def cmd_agg_validate(args) -> int:
     from pyspark.sql import functions as F
 
+    from goe_spark.plans.compaction import footer_reader
+
     spark = _spark("goe-agg-validate")
 
     def _side(path, jdbc_url, table, which):
@@ -437,7 +439,7 @@ def cmd_agg_validate(args) -> int:
                 raise SystemExit(f"--{which}-jdbc-url needs --{which}-table")
             df = spark.read.jdbc(jdbc_url, table)
         else:
-            df = spark.read.parquet(path)
+            df = footer_reader(spark, path).parquet(path)
         # relational engines fold unquoted identifiers to UPPER —
         # compare both sides on the lower-case layout so a parquet
         # frontend lines up with a JDBC backend
@@ -452,20 +454,23 @@ def cmd_agg_validate(args) -> int:
         "backend",
     )
     cols = args.columns.split(",") if args.columns else front.columns[:5]
-    f = front.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        *[F.min(c).alias(f"min_{c}") for c in cols],
-        *[F.max(c).alias(f"max_{c}") for c in cols],
-    ).first()
-    b = back.agg(
-        F.count(F.lit(1)).alias("row_count"),
-        *[F.min(c).alias(f"min_{c}") for c in cols],
-        *[F.max(c).alias(f"max_{c}") for c in cols],
-    ).first()
+    aggs = {
+        "row_count": F.count(F.lit(1)),
+        **{f"min_{c}": F.min(c) for c in cols},
+        **{f"max_{c}": F.max(c) for c in cols},
+    }
+    # One action over the cross join of the two one-row aggregates:
+    # both scans run in the same job graph, side by side, each side
+    # keeping its own column types.
+    row = (
+        front.agg(*[e.alias(f"f_{k}") for k, e in aggs.items()])
+        .crossJoin(back.agg(*[e.alias(f"b_{k}") for k, e in aggs.items()]))
+        .first()
+    )
     diffs = {
-        k: {"frontend": f[k], "backend": b[k]}
-        for k in f.asDict()
-        if f[k] != b[k]
+        k: {"frontend": row[f"f_{k}"], "backend": row[f"b_{k}"]}
+        for k in aggs
+        if row[f"f_{k}"] != row[f"b_{k}"]
     }
     ok = not diffs
     print(json.dumps({"match": ok, "diffs": {k: {s: str(v) for s, v in d.items()} for k, d in diffs.items()}}))

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.functions.hashing import MERSENNE_P, hash64, minhash_coeffs
+from goe_spark.plans.compaction import footer_reader
+from goe_spark.plans.metadata import atomic_write_json
 
 M_BITS = 1024  # filter width per (file, column)
 K_HASHES = 4  # probes per value
@@ -82,11 +84,11 @@ def build_bloom_manifest(
     One aggregate pass per column; each pass shuffles at most
     (n_files x m) position rows after map-side set-dedup. NULLs are
     skipped (a NULL never matches an equality probe)."""
+    table = footer_reader(spark, path).parquet(path)
     manifest: dict[str, dict[str, list[int]]] = {}
     for col in cols:
         df = (
-            spark.read.parquet(path)
-            .where(F.col(col).isNotNull())
+            table.where(F.col(col).isNotNull())
             .select(
                 F.input_file_name().alias(_FILE),
                 F.explode(F.array(*_positions_expr(col))).alias("pos"),
@@ -100,8 +102,8 @@ def build_bloom_manifest(
         for r in rows:
             fname = os.path.basename(r[_FILE])
             manifest.setdefault(fname, {})[col] = [int(p) for p in r.ps]
-    with open(_mpath(path), "w") as fh:
-        json.dump(manifest, fh)
+    # Atomic: a torn manifest would fail every later bloom-pruned read.
+    atomic_write_json(_mpath(path), manifest, indent=None)
     return manifest
 
 

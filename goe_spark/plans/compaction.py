@@ -39,15 +39,17 @@ from __future__ import annotations
 
 import contextlib
 import json
+import math
 import os
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
 
 from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.sinks.backend_writer import is_dfs_uri
 
 # Footer key holding the Spark schema a file was written with.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -121,45 +123,152 @@ def _complete_swap(path: str, d: str, old_files: list[str]) -> int:
     return len(_data_files(full))
 
 
-def _footer_facts(d: str, files: list[str]) -> tuple[int, StructType | None]:
-    """(row count, Spark schema) of parquet ``files`` in ``d`` from
-    their footers, read on the driver. The schema is the one Spark
-    recorded on write; None (the reader infers) for foreign files."""
+@dataclass
+class FooterFacts:
+    """What the parquet footers of a set of files record."""
+
+    rows: int
+    # The Spark schema the files were written with; None (the reader
+    # infers) for foreign files.
+    schema: StructType | None
+    # {file name: {col: [min, max]}} over the files holding rows, the
+    # way Spark's own min/max sees them ([None, None] for an all-NULL
+    # column); None when some footer cannot answer for some column.
+    bounds: dict[str, dict[str, list]] | None
+
+
+def _nan_last(v):
+    # Spark orders NaN above every other double; parquet-mr writes
+    # min/max in the same order.
+    return (isinstance(v, float) and math.isnan(v), v)
+
+
+def _column_bounds(meta, j: int) -> list | None:
+    """[min, max] of column ``j`` over the row groups of one footer,
+    or None when the footer cannot answer: a row group holding values
+    has no min/max (written without statistics, or a type pyarrow
+    cannot decode), or a floating column came from a writer other than
+    parquet-mr (Arrow's writer leaves NaN out of min/max, so NaN rows
+    would slip past a pruned range predicate)."""
+    import pyarrow as pa
+
+    lo = hi = None
+    for i in range(meta.num_row_groups):
+        rg = meta.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        col = rg.column(j)
+        if col.physical_type in ("FLOAT", "DOUBLE") and not (
+            meta.created_by or ""
+        ).startswith(("parquet-mr", "parquet-java")):
+            return None
+        st = col.statistics
+        if st is None:
+            return None
+        if not st.has_min_max:
+            if st.has_null_count and st.null_count == rg.num_rows:
+                continue  # all NULL
+            return None
+        try:
+            mn, mx = st.min, st.max
+        except pa.ArrowException:
+            return None
+        if lo is None or _nan_last(mn) < _nan_last(lo):
+            lo = mn
+        if hi is None or _nan_last(mx) > _nan_last(hi):
+            hi = mx
+    return [lo, hi]
+
+
+def footer_facts(d: str, files: list[str], cols=()) -> FooterFacts:
+    """Row count, Spark schema and, for ``cols``, per-file min/max of
+    parquet ``files`` in ``d``, from their footers read on the driver
+    — the driver-side reader for every footer question the write path
+    asks, so none of them costs a Spark job."""
     import pyarrow.parquet as pq
 
-    rows, schema = 0, None
+    facts = FooterFacts(0, None, {} if cols else None)
     for f in files:
         meta = pq.read_metadata(os.path.join(d, f))
-        rows += meta.num_rows
+        facts.rows += meta.num_rows
         raw = (meta.metadata or {}).get(SPARK_SCHEMA_KEY)
-        if schema is None and raw:
-            schema = StructType.fromJson(json.loads(raw))
-    return rows, schema
+        if facts.schema is None and raw:
+            facts.schema = StructType.fromJson(json.loads(raw))
+        if facts.bounds is None or meta.num_rows == 0:
+            continue
+        index = {
+            meta.schema.column(j).path: j for j in range(meta.num_columns)
+        }
+        per_col = {
+            c: _column_bounds(meta, index[c]) if c in index else None
+            for c in cols
+        }
+        if None in per_col.values():
+            facts.bounds = None
+        else:
+            facts.bounds[f] = per_col
+    return facts
+
+
+def _first_data_file(path: str) -> str | None:
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
+def footer_reader(spark: SparkSession, path: str) -> DataFrameReader:
+    """``spark.read`` carrying the Spark schema in the footer of
+    ``path``, or of the first data file under it (a flat directory or
+    a Hive-partitioned root): reading back files Spark wrote then runs
+    no schema-inference job. A Hive partition column is still inferred
+    from the directory names, and file sources read every column as
+    nullable whatever the recorded schema says. Foreign files, an
+    empty tree or a DFS URI leave the reader to infer."""
+    import pyarrow as pa
+
+    first = None if is_dfs_uri(path) else _first_data_file(path)
+    schema = None
+    if first is not None:
+        d, f = os.path.split(first)
+        try:
+            schema = footer_facts(d, [f]).schema
+        except (OSError, pa.ArrowException):
+            pass  # not parquet: the reader's own error is clearer
+    return spark.read if schema is None else spark.read.schema(schema)
 
 
 def rewrite_partition(
     spark: SparkSession,
     path: str,
     d: str,
-    write: Callable[[DataFrame, str], object],
+    write: Callable[[DataFrame, str, FooterFacts], object],
     deleting: bool = False,
+    bounds_cols=(),
 ) -> tuple[int, int, int] | None:
     """Rewrite partition directory ``d`` of the table at ``path``
     behind the crash-safe marker swap; the caller heals the table
-    first. ``write(df, tmp)`` writes the partition's new contents to
-    the temp dir, ``df`` read with the schema its footers record. The
-    footer row counts of the written files must equal the old ones,
-    or be lower when ``deleting`` (equal: no swap, returns None).
-    Returns (rows before, rows after, data files after)."""
+    first. ``write(df, tmp, old)`` writes the partition's new contents
+    to the temp dir, ``df`` read with the schema its footers record
+    and ``old`` the old files' footer facts (with min/max of
+    ``bounds_cols``). The footer row counts of the written files must
+    equal the old ones, or be lower when ``deleting`` (equal: no swap,
+    returns None). Returns (rows before, rows after, data files
+    after)."""
     full = os.path.join(path, d)
     old_files = _data_files(full)
-    n_before, schema = _footer_facts(full, old_files)
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    old = footer_facts(full, old_files, bounds_cols)
+    n_before = old.rows
+    reader = spark.read if old.schema is None else spark.read.schema(old.schema)
     tmp = _tmp_dir(path, d)
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    write(reader.parquet(full), tmp)
-    n_after, _ = _footer_facts(tmp, _data_files(tmp))
+    write(reader.parquet(full), tmp, old)
+    n_after = footer_facts(tmp, _data_files(tmp)).rows
     if (n_after >= n_before) if deleting else (n_after != n_before):
         shutil.rmtree(tmp)
         if deleting and n_after == n_before:
@@ -220,7 +329,7 @@ def compact_partitioned_table(
             spark,
             path,
             d,
-            lambda df, tmp: df.coalesce(target_files)
+            lambda df, tmp, _old: df.coalesce(target_files)
             .write.mode("overwrite")
             .parquet(tmp),
         )

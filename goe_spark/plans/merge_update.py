@@ -44,6 +44,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from goe_spark.plans.compaction import footer_reader
 from goe_spark.plans.metadata import atomic_write_json
 from goe_spark.plans.offload import SYNTHETIC_COL, PartitionSpec
 from goe_spark.plans.targeted_delete import delete_rows
@@ -71,7 +72,8 @@ def _run_pending(spark: SparkSession, path: str) -> None:
         import json
 
         marker = json.load(fh)
-    staged = spark.read.parquet(os.path.join(path, MERGE_STAGING_DIR))
+    staging = os.path.join(path, MERGE_STAGING_DIR)
+    staged = footer_reader(spark, staging).parquet(staging)
     key_column = marker["key_column"]
     partition_col = marker["partition_col"]
     delete_rows(
@@ -83,7 +85,7 @@ def _run_pending(spark: SparkSession, path: str) -> None:
     )
     staged.write.mode("append").partitionBy(partition_col).parquet(path)
     os.remove(marker_path)
-    shutil.rmtree(os.path.join(path, MERGE_STAGING_DIR))
+    shutil.rmtree(staging)
 
 
 def heal_pending_merge(spark: SparkSession, path: str) -> bool:
@@ -118,7 +120,7 @@ def merge_rows(
     if heal_pending_merge(spark, path):
         report.merges_healed = 1
 
-    table = spark.read.option("basePath", path).parquet(path)
+    table = footer_reader(spark, path).option("basePath", path).parquet(path)
     if partition_col not in table.columns:
         raise ValueError(
             f"{path} is not partitioned by {partition_col!r}; merge "

@@ -13,8 +13,12 @@ Scale design: the per-chunk loop bounds any single Spark job to
 max_chunk_bytes of input (reference default 16G) so restart scope and
 executor memory stay fixed no matter how big the table is; within a
 chunk everything is one lineage — Catalyst fuses the projection+filter
-into the scan, and the final write shuffles only to honor the
-partition layout (partitionBy on the synthetic column).
+into the scan. partitionBy itself never shuffles: the partitioned final
+write adds one hash exchange on the synthetic column only when the
+staged input has too few splits to use the cores (``catalog.spread``),
+plus whatever a sort-on-write needs. The staging and final read-backs
+carry the schema of the frame written, so neither runs a
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -483,8 +487,9 @@ class OffloadPipeline:
             from pyspark.sql import Observation
 
             staging_obs = Observation()
+            to_stage = sliced.select(staged_proj)
             write_staging(
-                sliced.select(staged_proj).observe(
+                to_stage.observe(
                     staging_obs, F.count(F.lit(1)).alias("rows_written")
                 ),
                 cfg.staging_dir,
@@ -492,7 +497,10 @@ class OffloadPipeline:
             )
             rows_staged_observed = int(staging_obs.get["rows_written"])
             staged = read_staging(
-                self.spark, cfg.staging_dir, fmt=cfg.staging_format
+                self.spark,
+                cfg.staging_dir,
+                fmt=cfg.staging_format,
+                schema=to_stage.schema,
             )
 
         # VALIDATE_STAGED_DATA (A5): one aggregate pass (the cast-

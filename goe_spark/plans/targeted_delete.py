@@ -29,7 +29,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.plans.compaction import heal_interrupted_swaps, rewrite_partition
+from goe_spark.plans.compaction import (
+    footer_reader,
+    heal_interrupted_swaps,
+    rewrite_partition,
+)
 
 HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
 
@@ -111,17 +115,20 @@ def delete_rows(
     report = DeleteReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
 
+    sources = [path]
     if use_bloom and not isinstance(keys, DataFrame):
         from goe_spark.plans.bloom_skip import prune_partitioned_bloom_in
 
-        files, _total = prune_partitioned_bloom_in(
+        sources, _total = prune_partitioned_bloom_in(
             path, key_column, list(keys)
         )
-        if not files:
+        if not sources:
             return report  # no file can hold any doomed key
-        table = spark.read.option("basePath", path).parquet(*files)
-    else:
-        table = spark.read.option("basePath", path).parquet(path)
+    table = (
+        footer_reader(spark, sources[0])
+        .option("basePath", path)
+        .parquet(*sources)
+    )
     if partition_col not in table.columns:
         raise ValueError(
             f"{path} is not partitioned by {partition_col!r}; targeted "
@@ -174,7 +181,7 @@ def delete_rows(
             spark,
             path,
             d,
-            lambda df, tmp: anti(df).write.mode("overwrite").parquet(tmp),
+            lambda df, tmp, _old: anti(df).write.mode("overwrite").parquet(tmp),
             deleting=True,
         )
         if rw is None:

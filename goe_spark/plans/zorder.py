@@ -12,16 +12,21 @@ predicate on ANY of the columns skips most files. This is the same
 trade Delta Lake OPTIMIZE ZORDER BY and Databricks data skipping make;
 here it is built from stock Spark operators:
 
-1. stats pass: one ``agg(min, max)`` per clustered column (O(1) rows
-   to the driver);
+1. stats: each clustered column's min/max, from the parquet footers of
+   the files being rewritten when they record it (numeric and date
+   columns), else one ``agg(min, max)`` (O(1) rows to the driver);
 2. map-side: scale each column linearly to a ``BITS``-bit integer rank
    and bit-interleave the ranks into one long — pure JVM expressions
-   inside whole-stage codegen, no UDF;
+   inside whole-stage codegen, no UDF; the interleave is built once
+   per column count;
 3. ``repartitionByRange(n_files, z)`` + ``sortWithinPartitions(z)``:
    each output file covers a contiguous Morton range, i.e. a small
    hyper-rectangle of the clustered space;
-4. manifest pass: per-file min/max of the clustered columns (grouped
-   on ``input_file_name``), persisted as JSON next to the data.
+4. manifest: per-file min/max of the clustered columns, read from the
+   footers of the files just written (parquet-mr records the same
+   min/max Spark's aggregate returns, NaN included), else one
+   aggregate grouped on ``input_file_name``; persisted as JSON next to
+   the data.
 
 ``read_pruned`` then intersects a conjunction of range predicates with
 the manifest and hands Spark only the surviving files. At 100 TB the
@@ -38,6 +43,7 @@ not implemented, rejected loudly.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 from dataclasses import dataclass
@@ -46,19 +52,33 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DateType,
+    DecimalType,
     NumericType,
+    StructType,
     TimestampNTZType,
     TimestampType,
 )
 
+from goe_spark.plans.compaction import (
+    FooterFacts,
+    _data_files,
+    _nan_last,
+    footer_facts,
+    heal_interrupted_swaps,
+    partition_dirs,
+    rewrite_partition,
+)
+from goe_spark.plans.metadata import atomic_write_json
+
 BITS = 16  # rank bits per column; 4 columns max fills a signed long
 MANIFEST_NAME = "_zorder_manifest.json"
 _FILE = "__zfile"
+_EPOCH = datetime.date(1970, 1, 1)
 
 
-def _rankable(df: DataFrame, col: str) -> F.Column:
+def _rankable(schema: StructType, col: str) -> F.Column:
     """The column as a double suitable for linear min/max ranking."""
-    t = df.schema[col].dataType
+    t = schema[col].dataType
     if isinstance(t, NumericType):
         return F.col(col).cast("double")
     if isinstance(t, DateType):
@@ -71,12 +91,14 @@ def _rankable(df: DataFrame, col: str) -> F.Column:
     )
 
 
-def zvalue_expr(
-    df: DataFrame, cols: list[str], stats: dict[str, tuple[float, float]]
-) -> F.Column:
-    """The interleaved Morton key as a Column. ``stats`` maps column ->
-    (min, max) from the stats pass. NULL ranks as 0 (start of the
-    curve) — range predicates never match NULL rows, so their
+def _linear_ranks(
+    schema: StructType,
+    cols: list[str],
+    stats: dict[str, tuple[float, float]],
+) -> list[F.Column]:
+    """Each column scaled linearly onto a BITS-bit rank. ``stats`` maps
+    column -> (min, max) on the rank scale. NULL ranks as 0 (start of
+    the curve) — range predicates never match NULL rows, so their
     placement only affects locality, not pruning correctness."""
     ranks = []
     for c in cols:
@@ -84,11 +106,11 @@ def zvalue_expr(
         if lo is None or hi == lo:
             ranks.append(F.lit(0).cast("long"))
             continue
-        scaled = (_rankable(df, c) - F.lit(float(lo))) / F.lit(
+        scaled = (_rankable(schema, c) - F.lit(float(lo))) / F.lit(
             float(hi) - float(lo)
         )
         ranks.append(_rank(scaled * (1 << BITS)))
-    return _interleave(ranks)
+    return ranks
 
 
 def _rank(x: F.Column) -> F.Column:
@@ -114,7 +136,28 @@ def _interleave(ranks: list) -> F.Column:
     return z
 
 
-def _quantile_z(df: DataFrame, cols: list[str]) -> DataFrame:
+def _with_z(df: DataFrame, ranks: list[F.Column]) -> DataFrame:
+    """``df`` + the ``__z`` Morton key of ``ranks``. The interleave
+    (five Column ops per bit per column, one py4j call each) is built
+    once per column count over named rank columns, not once per write
+    over the rank expressions."""
+    from goe_spark.catalog import memo_exprs
+
+    names = [f"__r{j}" for j in range(len(ranks))]
+    z = memo_exprs(
+        f"zorder.interleave.{len(ranks)}",
+        lambda: _interleave([F.col(r) for r in names]),
+    )
+    return (
+        df.withColumns(dict(zip(names, ranks)))
+        .withColumn("__z", z)
+        .drop(*names)
+    )
+
+
+def _quantile_z(
+    df: DataFrame, schema: StructType, cols: list[str]
+) -> DataFrame:
     """``df`` + a ``__z`` Morton key built from EQUI-DEPTH ranks: each
     column is bucketed on its own approx quantile cuts (one
     Greenwald-Khanna pass for all columns), so a heavily skewed
@@ -139,7 +182,8 @@ def _quantile_z(df: DataFrame, cols: list[str]) -> DataFrame:
     in_cols = [f"__v{j}" for j in range(len(cols))]
     out_cols = [f"__b{j}" for j in range(len(cols))]
     work = df.select(
-        "*", *[_rankable(df, c).alias(v) for c, v in zip(cols, in_cols)]
+        "*",
+        *[_rankable(schema, c).alias(v) for c, v in zip(cols, in_cols)],
     )
     cuts = work.approxQuantile(in_cols, probs, 1.0 / (4 * n_buckets))
     splits_arr = [[float("-inf"), *sorted(set(c)), float("inf")] for c in cuts]
@@ -153,9 +197,7 @@ def _quantile_z(df: DataFrame, cols: list[str]) -> DataFrame:
         _rank(F.col(f"__b{j}") * ((1 << BITS) / (len(splits_arr[j]) - 1)))
         for j in range(len(cols))
     ]
-    return bucketed.withColumn("__z", _interleave(ranks)).drop(
-        *in_cols, *out_cols
-    )
+    return _with_z(bucketed, ranks).drop(*in_cols, *out_cols)
 
 
 @dataclass
@@ -177,25 +219,53 @@ def write_zordered(
     manifest. The data written is bit-identical in content to ``df``
     (layout only).
 
-    ``rank``: 'linear' (one min/max pass; right when values spread
+    ``rank``: 'linear' (min/max ranking; right when values spread
     evenly) or 'quantile' (equi-depth ranks from an approx-quantile
     pass; right when a column is heavily skewed — linear ranking
     collapses a skewed column onto a few rank values and its dimension
     stops skipping files). The manifest stores raw value bounds either
     way, so pruning semantics are identical."""
+    manifest = _write_zordered(df, path, cols, n_files, rank)
+    return ZorderReport(
+        n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
+    )
+
+
+def _write_zordered(
+    df: DataFrame,
+    path: str,
+    cols: list[str],
+    n_files: int,
+    rank: str,
+    old: FooterFacts | None = None,
+) -> dict[str, dict[str, list]]:
+    """write_zordered's body; returns the manifest. ``old``: footer
+    facts (with ``cols`` bounds) of the files ``df`` reads, which
+    serve the linear ranks' min/max when they can."""
     if not 2 <= len(cols) <= 64 // BITS:
         raise ValueError(
             f"zorder needs 2..{64 // BITS} columns, got {len(cols)}"
         )
-    spark = df.sparkSession
+    # A rewrite reads ``df`` with the schema its footers record.
+    schema = (old and old.schema) or df.schema
     if rank == "quantile":
-        zdf = _quantile_z(df, cols)
+        zdf = _quantile_z(df, schema, cols)
     elif rank == "linear":
-        row = df.agg(
-            *[f(_rankable(df, c)) for c in cols for f in (F.min, F.max)]
-        ).first()
-        stats = {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
-        zdf = df.withColumn("__z", zvalue_expr(df, cols, stats))
+        old_bounds = _footer_manifest(schema, cols, old and old.bounds)
+        if old_bounds is not None:
+            stats = _overall_bounds(old_bounds, cols)
+        else:
+            row = df.agg(
+                *[
+                    f(_rankable(schema, c))
+                    for c in cols
+                    for f in (F.min, F.max)
+                ]
+            ).first()
+            stats = {
+                c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)
+            }
+        zdf = _with_z(df, _linear_ranks(schema, cols, stats))
     else:
         raise ValueError(f"rank must be 'linear' or 'quantile': {rank!r}")
     (
@@ -205,38 +275,90 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-    # The files hold df's schema: read them back without inferring it.
-    manifest = _write_manifest(
-        spark.read.schema(df.schema).parquet(path), path, cols
-    )
-    return ZorderReport(
-        n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
-    )
+    written = footer_facts(path, _data_files(path), cols)
+    manifest = _footer_manifest(schema, cols, written.bounds)
+    if manifest is None:
+        # The files hold df's schema: read them back without inferring it.
+        read = df.sparkSession.read.schema(schema).parquet(path)
+        manifest = _spark_manifest(read, cols)
+    atomic_write_json(_mpath(path), manifest)
+    return manifest
 
 
 def _mpath(path: str) -> str:
     return os.path.join(path, MANIFEST_NAME)
 
 
+def _footer_rank(t):
+    """Maps a footer min/max of Spark type ``t`` onto the rank scale
+    exactly as ``_rankable``'s cast does; None for types whose footer
+    values the rank scale can't take (decimals, timestamps), which
+    fall back to a Spark aggregate."""
+    if isinstance(t, DateType):
+        return lambda v: float((v - _EPOCH).days)
+    if isinstance(t, NumericType) and not isinstance(t, DecimalType):
+        return float
+    return None
+
+
+def _footer_manifest(
+    schema: StructType, cols: list[str], bounds: dict | None
+) -> dict[str, dict[str, list]] | None:
+    """FooterFacts bounds on the rank scale, or None when some footer
+    or some column type can't answer."""
+    if bounds is None:
+        return None
+    conv = {c: _footer_rank(schema[c].dataType) for c in cols}
+    if None in conv.values():
+        return None
+    return {
+        f: {
+            c: [None if v is None else conv[c](v) for v in per_col[c]]
+            for c in cols
+        }
+        for f, per_col in bounds.items()
+    }
+
+
+def _overall_bounds(
+    manifest: dict[str, dict[str, list]], cols: list[str]
+) -> dict[str, tuple]:
+    """Per column, (min, max) over the files of a manifest — what one
+    Spark min/max aggregate over those files returns."""
+    out = {}
+    for c in cols:
+        los = [m[c][0] for m in manifest.values() if m[c][0] is not None]
+        his = [m[c][1] for m in manifest.values() if m[c][1] is not None]
+        out[c] = (
+            min(los, key=_nan_last) if los else None,
+            max(his, key=_nan_last) if his else None,
+        )
+    return out
+
+
 def build_manifest(
     spark: SparkSession, path: str, cols: list[str]
 ) -> dict[str, dict[str, list]]:
     """{file_name: {col: [min, max]}} over the clustered columns,
-    persisted to MANIFEST_NAME inside ``path``. One aggregate pass
-    grouped on input_file_name; at 100 TB the same bounds come free
-    from the parquet footers — this keeps the semantics engine-visible
-    and testable. Bounds are stored on the RANK scale (epoch
-    days/micros for temporal columns) so JSON stays typed-neutral."""
-    return _write_manifest(spark.read.parquet(path), path, cols)
+    recomputed by Spark (one aggregate grouped on input_file_name) and
+    persisted to MANIFEST_NAME inside ``path``. Zorder itself takes
+    these bounds from the footers of the files it wrote; this is the
+    engine-side recompute that keeps those semantics testable. Bounds
+    are stored on the RANK scale (epoch days/micros for temporal
+    columns) so JSON stays typed-neutral."""
+    manifest = _spark_manifest(spark.read.parquet(path), cols)
+    atomic_write_json(_mpath(path), manifest)
+    return manifest
 
 
-def _write_manifest(
-    df: DataFrame, path: str, cols: list[str]
+def _spark_manifest(
+    df: DataFrame, cols: list[str]
 ) -> dict[str, dict[str, list]]:
+    schema = df.schema
     per_file = (
         df.select(
             F.input_file_name().alias(_FILE),
-            *[_rankable(df, c).alias(c) for c in cols],
+            *[_rankable(schema, c).alias(c) for c in cols],
         )
         .groupBy(_FILE)
         .agg(
@@ -245,16 +367,12 @@ def _write_manifest(
         )
         .collect()
     )
-    manifest = {
+    return {
         os.path.basename(r[_FILE]): {
             c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols
         }
         for r in per_file
     }
-    from goe_spark.plans.metadata import atomic_write_json
-
-    atomic_write_json(_mpath(path), manifest)
-    return manifest
 
 
 def prune_files(
@@ -332,13 +450,6 @@ def zorder_partitioned_table(
     a crash in between leaves a manifest-less partition, which
     read_pruned_partitioned treats as unprunable-but-correct (reads
     all its files) until the next zorder pass."""
-    from goe_spark.plans.compaction import (
-        heal_interrupted_swaps,
-        partition_dirs,
-        rewrite_partition,
-    )
-    from goe_spark.plans.metadata import atomic_write_json
-
     report = PartitionedZorderReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
     part_dirs = partition_dirs(path, partition_col)
@@ -351,14 +462,14 @@ def zorder_partitioned_table(
     def _rewrite_one(d: str) -> int:
         manifest: dict = {}
 
-        def write(df: DataFrame, tmp: str) -> None:
-            write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
+        def write(df: DataFrame, tmp: str, old: FooterFacts) -> None:
             # Keyed by bare file names, which the swap keeps: this is
             # the partition's manifest once the files are moved in.
-            with open(_mpath(tmp)) as fh:
-                manifest.update(json.load(fh))
+            manifest.update(_write_zordered(df, tmp, cols, n_files, rank, old))
 
-        _, _, n_files_after = rewrite_partition(spark, path, d, write)
+        _, _, n_files_after = rewrite_partition(
+            spark, path, d, write, bounds_cols=cols
+        )
         atomic_write_json(_mpath(os.path.join(path, d)), manifest)
         return n_files_after
 
@@ -395,8 +506,6 @@ def read_pruned_partitioned(
     partition contributes all its files — correct, just unpruned);
     the union reads with basePath so ``partition_col`` survives.
     Returns (DataFrame | None, files_read, files_total)."""
-    from goe_spark.plans.compaction import _data_files, partition_dirs
-
     files: list[str] = []
     total = 0
     for d in partition_dirs(path, partition_col):

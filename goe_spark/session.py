@@ -75,8 +75,15 @@ def get_spark(
     """
     builder = SparkSession.builder.appName(app_name).master(master or default_master())
     conf = dict(_DEFAULT_CONF)
-    nshuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    conf["spark.sql.shuffle.partitions"] = str(nshuffle)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cores)
+    # Listing a partitioned table past the parallel-discovery threshold
+    # (32 paths) runs one Spark task per path by default: a read-back of
+    # an 83-month target scheduled 83 tasks to list 83 tiny dirs. One
+    # task per core lists the same paths in a single wave; the
+    # threshold stays, since a serial driver-side listing is the slow
+    # path at 10k partitions on an object store.
+    conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = str(cores)
     if extra_conf:
         conf.update(extra_conf)
     ansi_env = os.environ.get("SPARK_GRAFT_ANSI")

@@ -73,6 +73,14 @@ def remove_files(paths: set[str], spark: SparkSession | None = None) -> None:
             pass
 
 
+def _read_parquet(spark, path, schema) -> DataFrame:
+    """The parquet table at ``path``, read with the schema of the
+    frame last loaded into it when there is one: verification then
+    runs no schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 class BackendWriter(abc.ABC):
     """The five calls the offload pipeline makes against a backend."""
 
@@ -130,6 +138,7 @@ class ParquetBackendWriter(BackendWriter):
 
     def __init__(self, target_dir: str):
         self.target_dir = target_dir
+        self._loaded_schema = None
 
     def create_table(
         self,
@@ -159,9 +168,10 @@ class ParquetBackendWriter(BackendWriter):
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
         writer.parquet(self.target_dir)
+        self._loaded_schema = df.schema
 
     def read_final(self, spark) -> DataFrame:
-        return spark.read.parquet(self.target_dir)
+        return _read_parquet(spark, self.target_dir, self._loaded_schema)
 
     def snapshot(self, spark):
         return list_files(self.target_dir, spark)
@@ -240,6 +250,7 @@ class FakeWarehouseWriter(BackendWriter):
         self.backend_name = dialect
         self.commands: list[str] = []
         self._qualified = None
+        self._loaded_schema = None
         os.makedirs(root, exist_ok=True)
 
     def _record(self, sql: str) -> None:
@@ -289,9 +300,10 @@ class FakeWarehouseWriter(BackendWriter):
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
         writer.parquet(self._data_dir())
+        self._loaded_schema = df.schema
 
     def read_final(self, spark) -> DataFrame:
-        return spark.read.parquet(self._data_dir())
+        return _read_parquet(spark, self._data_dir(), self._loaded_schema)
 
     def snapshot(self, spark):
         return list_files(self._data_dir(), spark)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 STAGING_FORMATS = ("parquet", "orc", "json", "csv")
 
@@ -99,20 +100,31 @@ def write_staging(
 
 
 def read_staging(
-    spark: SparkSession, path: str, fmt: str = "parquet", view: str | None = None
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    view: str | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """Read staged files back; optionally register the load-table view
     (the reference reads staged files through an external table —
     src/goe/offload/bigquery/bigquery_backend_table.py:116-147).
 
-    Jar-free Avro staging dirs read back through binaryFile + a
-    mapInPandas decode (per-file parallelism, sources/avro_io.py)."""
+    ``schema``, the staged frame's, spares the parquet/ORC read-back
+    its schema-inference job (columns still read as nullable, so NULL
+    checks on the staged data stay live). Text formats infer, as the
+    schema would change how their values parse. Jar-free Avro staging
+    dirs read back through binaryFile + a mapInPandas decode
+    (per-file parallelism, sources/avro_io.py)."""
     if fmt == "avro" and not avro_available(spark):
         from goe_spark.sources.avro_io import read_avro_staging_dist
 
         df = read_avro_staging_dist(spark, path)
     else:
-        df = spark.read.format(fmt).load(path)
+        reader = spark.read.format(fmt)
+        if schema is not None and fmt in ("parquet", "orc"):
+            reader = reader.schema(schema)
+        df = reader.load(path)
     if view:
         df.createOrReplaceTempView(view)
     return df

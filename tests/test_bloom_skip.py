@@ -3,11 +3,15 @@ driver/engine hash agreement."""
 
 from __future__ import annotations
 
+import os
+
 import hypothesis.strategies as st
+import pytest
 from hypothesis import given, settings
 from pyspark.sql import functions as F
 
 from goe_spark.plans.bloom_skip import (
+    BLOOM_MANIFEST_NAME,
     K_HASHES,
     M_BITS,
     build_bloom_manifest,
@@ -159,3 +163,26 @@ def test_partitioned_build_and_delete_integration(spark, offloaded_orders):
         spark, target, "o_orderkey", [-1, -2], use_bloom=True
     )
     assert rep2.rows_deleted == 0 and rep2.partitions_affected == 0
+
+
+def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A crash while the manifest is being dumped leaves the previous
+    manifest whole: the next bloom-pruned read still parses it."""
+    import json
+
+    path = str(tmp_path / "bloomed3")
+    _write_fixture(spark, path)
+    before = build_bloom_manifest(spark, path, ["doc_id"])
+    pruned = prune_files_bloom(path, {"doc_id": 1500})
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj)[:100])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_bloom_manifest(spark, path, ["doc_id", "lang"])
+    monkeypatch.undo()
+    with open(os.path.join(path, BLOOM_MANIFEST_NAME)) as fh:
+        assert json.load(fh) == before
+    assert prune_files_bloom(path, {"doc_id": 1500}) == pruned

@@ -405,3 +405,34 @@ def test_staging_write_observation_matches_readback(spark, tmp_path):
     )
     res = OffloadPipeline(spark, cfg).run(src)
     assert res.rows_staged_observed == res.rows_staged == 5
+
+
+def test_staged_null_in_not_null_column_fails_validation(
+    spark, tmp_path, monkeypatch
+):
+    """The staged read-back carries the staged frame's schema, in which
+    ``k`` is NOT NULL; file sources read every column as nullable, so
+    the NOT NULL probe is not folded away and a NULL that reaches the
+    staged files still fails VALIDATE_STAGED_DATA."""
+    from goe_spark.sources import files
+
+    write_staging = files.write_staging
+
+    def null_one_key(df, path, **kw):
+        k = F.when(F.col("k") == 3, F.lit(None)).otherwise(F.col("k"))
+        write_staging(df.withColumn("k", k), path, **kw)
+
+    monkeypatch.setattr(files, "write_staging", null_one_key)
+    src = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    assert not src.schema["k"].nullable
+    cfg = OffloadConfig(
+        owner="t",
+        table_name="nn",
+        target_dir=str(tmp_path / "final"),
+        staging_dir=str(tmp_path / "stage"),
+        metadata_dir=str(tmp_path / "md"),
+    )
+    with pytest.raises(OffloadValidationError, match="'nn_k': 1"):
+        OffloadPipeline(spark, cfg).run(src)

@@ -1,7 +1,8 @@
 """Job-budget guards for the write path: the partitioned final load
-spreads a one-file staged input across the cores, and a partition
-rewrite (compaction, targeted delete, partitioned zorder) costs one
-write job plus driver-side footer reads. Counted from Spark's status
+spreads a one-file staged input across the cores, a partition rewrite
+(compaction, targeted delete, partitioned zorder) costs one write job
+plus driver-side footer reads, read-backs of files the offload wrote
+infer no schema, and listing runs at most one task per core. Counted from Spark's status
 store under a job tag, so a later change (or an optimizer rule) that
 brings back the extra scans fails here instead of going unnoticed."""
 
@@ -141,13 +142,14 @@ def test_compaction_rewrite_job_budget(spark, offloaded_orders):
 def test_partitioned_zorder_job_budget_and_manifest(
     spark, offloaded_orders, tmp_path
 ):
-    """Two partitions, zordered: at most 7 jobs each — the stats
-    aggregate (2 under AQE), range sample and exchange (2), the write
-    and the manifest aggregate (2). Before it was 17: schema inference
-    and a count on the old and the new files, an inference for the
-    temp manifest, and a second manifest pass after the swap. The
-    manifest written after the swap, computed on the temp copy, must
-    equal build_manifest recomputed on the swapped partition."""
+    """Two partitions, zordered: at most 3 jobs each — the range
+    sample, and the exchange and write. The min/max behind the linear
+    ranks come from the old files' footers and the manifest from the
+    written files' footers; before, those were two more aggregates of
+    2 jobs each under AQE (7 per partition), and 17 before the footer
+    row counts. The manifest written after the swap, computed on the
+    temp copy, must equal build_manifest recomputed on the swapped
+    partition."""
     target, src, _ = offloaded_orders
     small = str(tmp_path / "two")
     for d in _part_dirs(target)[:2]:
@@ -156,7 +158,7 @@ def test_partitioned_zorder_job_budget_and_manifest(
     with tagged_jobs(spark) as ids:
         rep = zorder_partitioned_table(spark, small, ZCOLS, n_files=2)
     assert rep.partitions_rewritten == 2
-    assert len(ids) <= 2 * 7, len(ids)
+    assert len(ids) <= 2 * 3, len(ids)
     assert spark.read.parquet(small).count() == before
     for d in _part_dirs(small):
         full = os.path.join(small, d)
@@ -170,3 +172,52 @@ def test_partitioned_zorder_job_budget_and_manifest(
                 F.min("o_custkey"), F.max("o_custkey")
             ).first()
             assert bounds["o_custkey"] == [float(lo), float(hi)]
+
+
+def test_incremental_offload_reads_back_with_known_schema(spark, tmp_path):
+    """An HWM append reads its staged files and the final table back
+    with the schema of the frames written, so neither read-back runs
+    a schema-inference job: 7 jobs, where inferring both ran 9."""
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    target = str(tmp_path / "final")
+
+    def offload(hwm):
+        return OffloadPipeline(
+            spark,
+            OffloadConfig(
+                owner="tpch",
+                table_name="orders",
+                target_dir=target,
+                staging_dir=str(tmp_path / "staging"),
+                metadata_dir=str(tmp_path / "meta"),
+                partition=PartitionSpec("o_orderdate", "date", "M"),
+                hwm=hwm,
+            ),
+        ).run(src)
+
+    offload("1995-06")
+    with tagged_jobs(spark) as ids:
+        res = offload("1995-12")
+    assert res.partitions_written == [f"1995-{m:02d}" for m in range(7, 13)]
+    assert res.rows_final == res.rows_staged > 0
+    assert len(ids) <= 7, len(ids)
+
+
+def test_partition_listing_runs_one_task_per_core(spark, offloaded_orders):
+    """Listing a target past the parallel-discovery threshold (32
+    paths) runs at most one task per core; by default it ran one task
+    per partition directory (~80 here)."""
+    target, _, _ = offloaded_orders
+    assert len(_part_dirs(target)) > 32
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    with tagged_jobs(spark) as ids:
+        assert "goe_part_key" in spark.read.parquet(target).columns
+    tasks = []
+    for job_id in ids:
+        stages = store.job(job_id).stageIds()
+        tasks += [
+            store.lastStageAttempt(stages.apply(i)).numTasks()
+            for i in range(stages.size())
+        ]
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks

@@ -276,3 +276,129 @@ def test_partitioned_zorder_heals_crashed_swap(spark, offloaded_orders):
     assert rep.partitions_healed == 1
     assert spark.read.parquet(target).count() == src.count()
     assert not os.path.exists(_marker_path(target, d))
+
+
+# --- manifests from parquet footers ---------------------------------------
+
+
+def _same_bounds(a, b):
+    """Manifest equality with NaN equal to itself (-0.0 == 0.0 as in
+    Spark's comparisons)."""
+
+    def norm(m):
+        return {
+            f: {
+                c: ["NaN" if v != v else v for v in lohi]
+                for c, lohi in cols.items()
+            }
+            for f, cols in m.items()
+        }
+
+    return norm(a) == norm(b)
+
+
+def _zorder_one_partition(spark, tmp_path, df, cols, write=None):
+    """Zorder a one-partition table holding ``df`` (written by Spark,
+    or by ``write(df, dir)``); returns (partition dir, the manifest
+    written after the swap, the Spark jobs the zorder ran)."""
+    import json
+    import os
+
+    from goe_spark.plans.zorder import _mpath, zorder_partitioned_table
+    from tests.test_write_path_jobs import tagged_jobs
+
+    root = str(tmp_path / "t")
+    part = os.path.join(root, "goe_part_key=a")
+    if write is None:
+        df.repartition(3).write.parquet(part)
+    else:
+        os.makedirs(part)
+        write(df, part)
+    with tagged_jobs(spark) as ids:
+        rep = zorder_partitioned_table(spark, root, cols, n_files=2)
+    assert rep.partitions_rewritten == 1
+    with open(_mpath(part)) as fh:
+        return part, json.load(fh), ids
+
+
+def test_footer_manifest_all_null_file(spark, tmp_path):
+    """A file whose clustered column is all NULL has no footer min/max
+    for it, only a NULL count: its bounds are [None, None], as
+    Spark's."""
+    df = spark.createDataFrame(
+        [(i, None) for i in range(80)], "k long, price double"
+    )
+    part, written, ids = _zorder_one_partition(
+        spark, tmp_path, df, ["k", "price"]
+    )
+    assert len(written) == 2
+    assert all(b["price"] == [None, None] for b in written.values())
+    assert written == build_manifest(spark, part, ["k", "price"])
+    assert len(ids) <= 3, len(ids)
+
+
+def test_footer_manifest_nan_and_negative_zero(spark, tmp_path):
+    """parquet-mr orders NaN above every double, as Spark's max does,
+    and -0.0 equals 0.0 in both."""
+    vals = [float("nan"), -0.0, 0.0, 1.5, -2.5, float("nan")] * 10
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "k long, x double"
+    )
+    part, written, ids = _zorder_one_partition(spark, tmp_path, df, ["k", "x"])
+    assert any(b["x"][1] != b["x"][1] for b in written.values())  # NaN max
+    assert _same_bounds(written, build_manifest(spark, part, ["k", "x"]))
+    assert len(ids) <= 3, len(ids)
+
+
+def test_footer_manifest_date_column(spark, tmp_path):
+    """A date column's footer min/max land on the rank scale as epoch
+    days, the same values Spark's datediff gives."""
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        F.date_add(
+            F.lit("1995-03-01").cast("date"), ((F.col("id") * 7) % 365).cast("int")
+        )
+        .alias("d"),
+    )
+    part, written, ids = _zorder_one_partition(spark, tmp_path, df, ["d", "k"])
+    assert written == build_manifest(spark, part, ["d", "k"])
+    assert min(b["d"][0] for b in written.values()) == 9190.0  # 1995-03-01
+    assert len(ids) <= 3, len(ids)
+
+
+def test_footer_manifest_falls_back_without_statistics(spark, tmp_path):
+    """Footers without min/max answer nothing. Old files written by
+    pyarrow without statistics send the linear ranks' min/max to a
+    Spark aggregate, and written files without statistics send the
+    manifest to one; either way it equals build_manifest."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from goe_spark.plans.compaction import _data_files, footer_facts
+
+    cols = ["o_custkey", "o_totalprice"]
+    rows = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(*cols)
+
+    def arrow_no_stats(df, d):
+        table = pa.Table.from_pandas(df.toPandas(), preserve_index=False)
+        pq.write_table(table, os.path.join(d, "a.parquet"),
+                       write_statistics=False)
+
+    part, written, ids = _zorder_one_partition(
+        spark, tmp_path / "arrow", rows, cols, write=arrow_no_stats
+    )
+    assert written == build_manifest(spark, part, cols)
+    assert len(ids) > 3, len(ids)  # + the stats aggregate
+
+    hadoop = spark.sparkContext._jsc.hadoopConfiguration()
+    hadoop.set("parquet.column.statistics.enabled", "false")
+    try:
+        part, written, _ = _zorder_one_partition(
+            spark, tmp_path / "spark", rows, cols
+        )
+    finally:
+        hadoop.unset("parquet.column.statistics.enabled")
+    assert footer_facts(part, _data_files(part), cols).bounds is None
+    assert written == build_manifest(spark, part, cols)
