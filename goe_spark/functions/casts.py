@@ -3,15 +3,16 @@
 Reference semantics: decimals, dates, timestamps and intervals are
 staged as STRING (§1.5, avro/parquet staging types) and parsed on
 final insert with SAFE_CAST / PARSE_* (bigquery_backend_table.py:
-290-400). Spark equivalent: try_cast / try_to_timestamp — failures
-become NULL, and the cast-corruption probe (A6) counts them before
-the final load commits.
+290-400). Spark equivalent: try_cast — failures become NULL, and the
+cast-corruption probe (A6) counts them before the final load commits.
+
+Every helper returns Spark SQL text with backtick-quoted identifiers,
+applied with one ``selectExpr`` per projection: building the same
+projection from pyspark Columns costs dozens of py4j round trips per
+column on the driver.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from goe_spark.types import canonical as C
 from goe_spark.types.canonical import CanonicalColumn
@@ -38,77 +39,53 @@ def staging_type_for(col: CanonicalColumn) -> str:
     return canonical_to_spark(col).simpleString()
 
 
-def staging_expr(col: CanonicalColumn, source: Column | str | None = None) -> Column:
-    """Projection expression applied when writing the staging file."""
-    c = F.col(col.name) if source is None else (
-        F.col(source) if isinstance(source, str) else source
-    )
-    if col.data_type in (C.DATE,):
-        return F.date_format(c, "yyyy-MM-dd").alias(col.name)
-    if col.data_type in (C.TIMESTAMP, C.TIMESTAMP_TZ):
-        return F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(col.name)
-    if col.data_type in STAGED_AS_STRING:
-        return c.cast("string").alias(col.name)
-    return c.cast(canonical_to_spark(col)).alias(col.name)
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def final_cast_expr(col: CanonicalColumn, safe: bool = True) -> Column:
-    """Staging column -> final typed column (the reference's cast map
-    entry, backend_table.py:704-751). safe=True uses try_* semantics
-    (SAFE_CAST); safe=False is the verify_cast twin that would raise
-    under ANSI."""
-    name = col.name
-    spark_t = canonical_to_spark(col)
+def staging_sql(col: CanonicalColumn) -> str:
+    """Projection applied when writing the staging file."""
+    c = quote(col.name)
+    if col.data_type == C.DATE:
+        expr = f"date_format({c}, 'yyyy-MM-dd')"
+    elif col.data_type in (C.TIMESTAMP, C.TIMESTAMP_TZ):
+        expr = f"date_format({c}, 'yyyy-MM-dd HH:mm:ss.SSSSSS')"
+    else:
+        expr = f"CAST({c} AS {staging_type_for(col)})"
+    return f"{expr} AS {c}"
+
+
+def _safe_cast(col: CanonicalColumn) -> str:
+    """Staging column -> final typed value, unaliased (the reference's
+    cast map entry, backend_table.py:704-751). String-staged types go
+    through try_cast (SAFE_CAST): a bad value becomes NULL, which the
+    corruption probe counts."""
+    c = quote(col.name)
     t = col.data_type
-    fn = "try_cast" if safe else "cast"
-    if t == C.DATE:
-        return F.expr(f"{fn}({name} AS date)").alias(name)
-    if t in (C.TIMESTAMP, C.TIMESTAMP_TZ):
-        target = "timestamp_ntz" if t == C.TIMESTAMP else "timestamp"
-        return F.expr(f"{fn}({name} AS {target})").alias(name)
-    if t in STAGED_AS_STRING and t not in (
-        C.TIME,
-        C.INTERVAL_DS,
-        C.INTERVAL_YM,
-    ):
-        return F.expr(f"{fn}({name} AS {spark_t.simpleString()})").alias(name)
     if t in (C.TIME, C.INTERVAL_DS, C.INTERVAL_YM):
         # Kept as string end-to-end (matches the reference's unsafe
         # STRING mappings for these on BigQuery).
-        return F.col(name).cast("string").alias(name)
-    return F.col(name).cast(spark_t).alias(name)
+        return f"CAST({c} AS string)"
+    spark_t = canonical_to_spark(col).simpleString()
+    if t in STAGED_AS_STRING:
+        return f"try_cast({c} AS {spark_t})"
+    return f"CAST({c} AS {spark_t})"
 
 
-def build_cast_map(columns: list[CanonicalColumn]) -> dict[str, dict]:
-    """Per-column cast metadata, mirroring _gen_final_table_casts:
-    {'cast': Column, 'verify_cast': Column, 'staging_type': str}."""
-    return {
-        col.name: {
-            "cast": final_cast_expr(col, safe=True),
-            "verify_cast": final_cast_expr(col, safe=False),
-            "staging_type": staging_type_for(col),
-        }
+def final_cast_sql(col: CanonicalColumn) -> str:
+    """Projection applied to the staged data on final load."""
+    return f"{_safe_cast(col)} AS {quote(col.name)}"
+
+
+def corruption_probe_sql(columns: list[CanonicalColumn]) -> list[str]:
+    """A6: per-column count of rows where staging IS NOT NULL and the
+    safe cast comes back NULL, as ``corrupt_<name>`` aggregates that
+    ride one aggregate pass."""
+    return [
+        f"count_if({quote(col.name)} IS NOT NULL AND {_safe_cast(col)} IS NULL)"
+        f" AS {quote('corrupt_' + col.name)}"
         for col in columns
-    }
-
-
-def corruption_probe_aggs(columns: list[CanonicalColumn]) -> list[Column]:
-    """A6: per-column COUNT of rows where staging IS NOT NULL and the
-    safe cast comes back NULL — one aggregate pass."""
-    aggs = []
-    for col in columns:
-        if col.data_type not in STAGED_AS_STRING or col.data_type in (
-            C.TIME,
-            C.INTERVAL_DS,
-            C.INTERVAL_YM,
-        ):
-            continue
-        casted = final_cast_expr(col, safe=True)
-        aggs.append(
-            F.sum(
-                F.when(F.col(col.name).isNotNull() & casted.isNull(), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"corrupt_{col.name}")
-        )
-    return aggs
+        if col.data_type in STAGED_AS_STRING
+        and col.data_type not in (C.TIME, C.INTERVAL_DS, C.INTERVAL_YM)
+    ]

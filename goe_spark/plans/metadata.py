@@ -14,7 +14,7 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import os
-import tempfile
+import secrets
 from dataclasses import asdict, dataclass, field
 
 
@@ -44,8 +44,11 @@ def atomic_write_json(path: str, obj, indent: int | None = 2) -> None:
     # Dot-prefixed temp name: markers are written INSIDE table data
     # directories, and a crash in this window must not leave a file
     # Spark's parquet reader would treat as data (every other marker
-    # name is dot-prefixed for exactly this invariant).
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp", suffix=".tmp")
+    # name is dot-prefixed for exactly this invariant). Mode 0666 under
+    # the process umask, as a plain open() would give: mkstemp's 0600
+    # made every metadata file owner-only.
+    tmp = os.path.join(d, f".tmp{secrets.token_hex(8)}.tmp")
+    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
     try:
         with os.fdopen(fd, "w") as fh:
             json.dump(obj, fh, indent=indent, default=str)

@@ -32,9 +32,10 @@ from pyspark.sql import functions as F
 
 from goe_spark.catalog import spread
 from goe_spark.functions.casts import (
-    build_cast_map,
-    corruption_probe_aggs,
-    staging_expr,
+    corruption_probe_sql,
+    final_cast_sql,
+    quote,
+    staging_sql,
 )
 from goe_spark.functions.synthetic import (
     synthetic_date_expr,
@@ -161,12 +162,9 @@ def reset_backend(spark: SparkSession, cfg: "OffloadConfig") -> None:
     """Drop the backend table (writer-aware) and the metadata row —
     the --reset-backend-table action, shared by the pipeline step and
     the chunked runner's one-time up-front reset."""
-    from goe_spark.sinks.backend_writer import list_files, remove_files
+    from goe_spark.sinks.backend_writer import ParquetBackendWriter
 
-    if cfg.backend_writer is not None:
-        cfg.backend_writer.drop_table(spark)
-    else:
-        remove_files(list_files(cfg.target_dir, spark), spark)
+    (cfg.backend_writer or ParquetBackendWriter(cfg.target_dir)).drop_table(spark)
     MetadataStore(cfg.metadata_dir).delete(cfg.owner, cfg.table_name)
 
 
@@ -478,16 +476,16 @@ class OffloadPipeline:
             # binaryFile) when the datasource is absent. The staged
             # projection below string-stages exotics either way, so
             # the cast map sees identical shapes on every format.
-            staged_proj = [staging_expr(c) for c in canonical_cols]
+            staged_proj = [staging_sql(c) for c in canonical_cols]
             if cfg.partition is not None:
-                staged_proj.append(F.col(SYNTHETIC_COL))
+                staged_proj.append(quote(SYNTHETIC_COL))
             # Observation rides the write job: rows counted as they
             # are written, no listener-log scraping, no extra scan
             # (reference S15 counts rows via a Spark task listener).
             from pyspark.sql import Observation
 
             staging_obs = Observation()
-            to_stage = sliced.select(staged_proj)
+            to_stage = sliced.selectExpr(*staged_proj)
             write_staging(
                 to_stage.observe(
                     staging_obs, F.count(F.lit(1)).alias("rows_written")
@@ -507,16 +505,14 @@ class OffloadPipeline:
         # corruption probes ride the same aggregate, so VALIDATE_CASTS
         # is recorded with it).
         with self._step(steps, "VALIDATE_STAGED_DATA"):
-            not_null_cols = [c.name for c in canonical_cols if not c.nullable]
-            aggs = [F.count(F.lit(1)).alias("row_count")]
-            for name in not_null_cols:
-                aggs.append(
-                    F.sum(F.when(F.col(name).isNull(), 1).otherwise(0))
-                    .cast("long")
-                    .alias(f"nn_{name}")
-                )
-            probe_aggs = corruption_probe_aggs(canonical_cols)
-            row = staged.agg(*aggs, *probe_aggs).collect()[0].asDict()
+            aggs = ["count(1) AS row_count"]
+            aggs += [
+                f"count_if({quote(c.name)} IS NULL) AS {quote('nn_' + c.name)}"
+                for c in canonical_cols
+                if not c.nullable
+            ]
+            aggs += corruption_probe_sql(canonical_cols)
+            row = staged.selectExpr(*aggs).collect()[0].asDict()
             rows_staged = row.pop("row_count")
             # Write-vs-read integrity: the read-back count must equal
             # what the write job observed leaving the executors.
@@ -564,20 +560,20 @@ class OffloadPipeline:
             and not cfg.list_partition_values
         )
         with self._step(steps, "FINAL_LOAD"):
-            cast_map = build_cast_map(canonical_cols)
-            final_proj = [cast_map[c.name]["cast"] for c in canonical_cols]
+            final_proj = [final_cast_sql(c) for c in canonical_cols]
             pre_snapshot = (
                 None if full_replace else writer.snapshot(self.spark)
             )
-            final_df_out = staged.select(*final_proj)
             if cfg.partition is not None:
                 # A one-file staged read would write every partition
                 # from one task; spread hashes it on the partition key
                 # across the cores (no exchange at 8+ staged splits).
                 final_df_out = spread(
-                    staged.select(*final_proj, F.col(SYNTHETIC_COL)),
+                    staged.selectExpr(*final_proj, quote(SYNTHETIC_COL)),
                     SYNTHETIC_COL,
                 )
+            else:
+                final_df_out = staged.selectExpr(*final_proj)
             # SORT_COLUMNS: cluster-on-write (plans/sort_columns.py) —
             # a per-partition sort gives parquet row-group locality on
             # the sort key, the Spark rendering of BigQuery CLUSTER BY.

@@ -56,6 +56,40 @@ _DEFAULT_CONF = {
 }
 
 
+# goe_spark/jvm: a local file system whose setPermission uses java.nio.
+# Without libhadoop, Hadoop's RawLocalFileSystem forks ``chmod`` for
+# every file, .crc sidecar and directory it creates (~4 ms each).
+# Checksums are kept: the class is still a LocalFileSystem. Rebuild
+# the jar with tools/build_localfs_jar.sh.
+LOCAL_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "goe-localfs.jar"
+)
+LOCAL_FS_CLASS = "goe.NioLocalFileSystem"
+
+
+def _local_fs_conf(master: str, conf: dict[str, str]) -> None:
+    """Name the non-forking local FS in ``conf`` when every task runs
+    in the driver JVM (``local`` / ``local[...]``): the jar goes on the
+    driver classpath only. Other masters keep stock Hadoop."""
+    if not (master == "local" or master.startswith("local[")):
+        return
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        return  # a running context keeps its classpath and file system
+    jvm = SparkContext._jvm
+    if jvm is not None and jvm.org.apache.hadoop.conf.Configuration(
+        False
+    ).getClassByNameOrNull(LOCAL_FS_CLASS) is None:
+        # A JVM started without the jar keeps its classpath.
+        return
+    cp = conf.get("spark.driver.extraClassPath")
+    conf["spark.driver.extraClassPath"] = (
+        f"{cp}{os.pathsep}{LOCAL_FS_JAR}" if cp else LOCAL_FS_JAR
+    )
+    conf.setdefault("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+
+
 def default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -73,7 +107,8 @@ def get_spark(
     coalesces down from there; on a cluster you'd set it high (or rely
     on spark.sql.adaptive.coalescePartitions.initialPartitionNum).
     """
-    builder = SparkSession.builder.appName(app_name).master(master or default_master())
+    master = master or default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cores)
@@ -86,6 +121,7 @@ def get_spark(
     conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = str(cores)
     if extra_conf:
         conf.update(extra_conf)
+    _local_fs_conf(master, conf)
     ansi_env = os.environ.get("SPARK_GRAFT_ANSI")
     if ansi_env is not None:
         conf["spark.sql.ansi.enabled"] = (

@@ -30,6 +30,7 @@ nothing is collected to the driver.
 from __future__ import annotations
 
 import abc
+import contextlib
 import os
 import re
 
@@ -46,18 +47,41 @@ def is_dfs_uri(path: str) -> bool:
     return re.match(r"[A-Za-z][A-Za-z0-9+.\-]*:/", path) is not None
 
 
-def list_files(root: str, spark: SparkSession | None = None) -> set[str]:
-    """Recursive file listing; DFS URIs route through the Hadoop
-    FileSystem API so rollback works on hdfs/gs/s3a targets too."""
+def list_tree(
+    root: str, spark: SparkSession | None = None
+) -> tuple[set[str], set[str]]:
+    """(files, directories) under root, any depth: the rollback token
+    of the file-backed writers. DFS URIs route through the Hadoop
+    FileSystem API, so rollback works on hdfs/gs/s3a targets too."""
     if is_dfs_uri(root):
         from goe_spark.sources.dfs import HadoopDfs
 
-        return set(HadoopDfs(spark).list_files_recursive(root))
-    out: set[str] = set()
-    for dirpath, _dirnames, filenames in os.walk(root):
-        for f in filenames:
-            out.add(os.path.join(dirpath, f))
-    return out
+        return HadoopDfs(spark).list_tree(root)
+    files: set[str] = set()
+    dirs: set[str] = set()
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirs.update(os.path.join(dirpath, d) for d in dirnames)
+        files.update(os.path.join(dirpath, f) for f in filenames)
+    return files, dirs
+
+
+def rollback_tree(root: str, token, spark: SparkSession | None) -> None:
+    """Undo what was written under root since ``token = list_tree(root)``:
+    remove the new files, then the new directories (an append's
+    partition directories) left empty, deepest first."""
+    files, dirs = list_tree(root, spark)
+    remove_files(files - token[0], spark)
+    dfs = None
+    if is_dfs_uri(root):
+        from goe_spark.sources.dfs import HadoopDfs
+
+        dfs = HadoopDfs(spark)
+    for d in sorted(dirs - token[1], key=len, reverse=True):
+        if dfs is None:
+            with contextlib.suppress(OSError):  # not empty: leave it
+                os.rmdir(d)
+        elif not dfs.list_dir(d):
+            dfs.delete(d)
 
 
 def remove_files(paths: set[str], spark: SparkSession | None = None) -> None:
@@ -174,13 +198,13 @@ class ParquetBackendWriter(BackendWriter):
         return _read_parquet(spark, self.target_dir, self._loaded_schema)
 
     def snapshot(self, spark):
-        return list_files(self.target_dir, spark)
+        return list_tree(self.target_dir, spark)
 
     def rollback_to(self, token, spark) -> None:
-        remove_files(list_files(self.target_dir, spark) - token, spark)
+        rollback_tree(self.target_dir, token, spark)
 
     def drop_table(self, spark) -> None:
-        remove_files(list_files(self.target_dir, spark), spark)
+        remove_files(list_tree(self.target_dir, spark)[0], spark)
 
 
 def warehouse_backend_column(dialect: str, col):
@@ -306,16 +330,16 @@ class FakeWarehouseWriter(BackendWriter):
         return _read_parquet(spark, self._data_dir(), self._loaded_schema)
 
     def snapshot(self, spark):
-        return list_files(self._data_dir(), spark)
+        return list_tree(self._data_dir(), spark)
 
     def rollback_to(self, token, spark) -> None:
         self._record(
             f"-- ROLLBACK {self._qualified or '<unnamed>'} to snapshot"
         )
-        remove_files(list_files(self._data_dir(), spark) - token, spark)
+        rollback_tree(self._data_dir(), token, spark)
 
     def drop_table(self, spark) -> None:
         self._record(
             f"DROP TABLE IF EXISTS {self._qualified or '<unnamed>'}"
         )
-        remove_files(list_files(self._data_dir(), spark), spark)
+        remove_files(list_tree(self._data_dir(), spark)[0], spark)

@@ -101,17 +101,23 @@ class HadoopDfs:
         statuses = self._fs(uri).listStatus(self._jpath(uri))
         return sorted(str(s.getPath()) for s in statuses)
 
-    def list_files_recursive(self, uri: str) -> list[str]:
-        """Every FILE under uri (directories excluded), any depth."""
+    def list_tree(self, uri: str) -> tuple[set[str], set[str]]:
+        """(files, directories) under uri, any depth."""
         fs = self._fs(uri)
-        p = self._jpath(uri)
-        if not fs.exists(p):
-            return []
-        it = fs.listFiles(p, True)
-        out = []
-        while it.hasNext():
-            out.append(str(it.next().getPath()))
-        return sorted(out)
+        pending = [self._jpath(uri)]
+        files: set[str] = set()
+        dirs: set[str] = set()
+        if not fs.exists(pending[0]):
+            return files, dirs
+        while pending:
+            for st in fs.listStatus(pending.pop()):
+                p = st.getPath()
+                if st.isDirectory():
+                    dirs.add(str(p))
+                    pending.append(p)
+                else:
+                    files.add(str(p))
+        return files, dirs
 
     def total_bytes(self, uri: str) -> int:
         """Recursive byte count, skipping _SUCCESS/. markers — the

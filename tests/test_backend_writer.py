@@ -124,6 +124,48 @@ class TestFakeWarehouseIncremental:
         assert any(c.startswith("-- ROLLBACK") for c in w.commands)
 
 
+def _tree(root):
+    """Every file and directory under root, relative to it."""
+    import os
+
+    out = set()
+    for dirpath, dirnames, filenames in os.walk(root):
+        rel = os.path.relpath(dirpath, root)
+        out.update(os.path.join(rel, n) + "/" for n in dirnames)
+        out.update(os.path.join(rel, n) for n in filenames)
+    return out
+
+
+@pytest.mark.parametrize("backend", ["parquet", "parquet-dfs", "fake"])
+def test_rollback_restores_directory_tree(spark, tmp_path, backend):
+    """A failed HWM append leaves the target exactly as it was: its
+    files and the partition directories it created are gone."""
+    if backend == "fake":
+        w = FakeWarehouseWriter(str(tmp_path / "bq"))
+        data = str(tmp_path / "bq" / "data")
+    else:
+        data = str(tmp_path / "final")
+        w = ParquetBackendWriter(
+            "file://" + data if backend == "parquet-dfs" else data
+        )
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    part = PartitionSpec("o_orderdate", "date", "M")
+    OffloadPipeline(
+        spark, _cfg(tmp_path, writer=w, partition=part, hwm="1995-06")
+    ).run(src)
+    before = _tree(data)
+
+    class Broken(OffloadPipeline):
+        def _verify_count(self, check_df):
+            return -1
+
+    with pytest.raises(OffloadValidationError, match="rolled back"):
+        Broken(
+            spark, _cfg(tmp_path, writer=w, partition=part, hwm="1995-09")
+        ).run(src)
+    assert _tree(data) == before
+
+
 class TestStagingFormat:
     def test_orc_staging_end_to_end(self, spark, tmp_path):
         """A non-default staging format flows through write_staging /

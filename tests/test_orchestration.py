@@ -46,6 +46,27 @@ class TestStepRunner:
             r.run("staging", lambda: 2)
 
 
+def test_atomic_write_json_mode_matches_plain_open(tmp_path):
+    """The written file gets the mode a plain open() gives under the
+    process umask, not mkstemp's owner-only 0600, and no temp file is
+    left behind."""
+    import os
+
+    from goe_spark.plans.metadata import atomic_write_json
+
+    for umask in (0o022, 0o077, 0o002):
+        doc, plain = tmp_path / f"doc{umask:o}.json", tmp_path / f"p{umask:o}"
+        old = os.umask(umask)
+        try:
+            atomic_write_json(str(doc), {"k": 1})
+            plain.write_text("{}")
+        finally:
+            os.umask(old)
+        assert os.stat(doc).st_mode & 0o777 == os.stat(plain).st_mode & 0o777
+        assert os.stat(doc).st_mode & 0o777 == 0o666 & ~umask
+    assert not [p for p in tmp_path.iterdir() if p.name.startswith(".")]
+
+
 class TestLocks:
     def test_exclusive(self, tmp_path):
         root = str(tmp_path)

@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from goe_spark.functions import synthetic as S
 from goe_spark.functions.casts import (
-    build_cast_map,
-    corruption_probe_aggs,
-    staging_expr,
+    corruption_probe_sql,
+    final_cast_sql,
+    staging_sql,
     staging_type_for,
 )
 from goe_spark.functions.transforms import apply_transformations
@@ -88,8 +88,7 @@ def test_cast_roundtrip(spark):
          (2, "99.99", "1999-12-31 23:59:59.123456")],
         "id: long, amount: string, ts: string",
     )
-    cast_map = build_cast_map(cols)
-    out = df.select(*[cast_map[c.name]["cast"] for c in cols])
+    out = df.selectExpr(*[final_cast_sql(c) for c in cols])
     assert out.schema["amount"].dataType.simpleString() == "decimal(12,2)"
     assert out.schema["ts"].dataType.simpleString() == "timestamp_ntz"
     rows = out.orderBy("id").collect()
@@ -106,9 +105,25 @@ def test_corruption_probe(spark):
         [("12.34", "2024-01-02"), ("not-a-number", "2024-13-99"), (None, None)],
         "amount: string, d: string",
     )
-    row = df.agg(*corruption_probe_aggs(cols)).collect()[0]
+    row = df.selectExpr(*corruption_probe_sql(cols)).collect()[0]
     assert row["corrupt_amount"] == 1  # NULL staging rows don't count
     assert row["corrupt_d"] == 1
+
+
+def test_cast_sql_quotes_identifiers(spark):
+    """A name with a space, a dot and a backtick survives staging,
+    the final cast and the probe under its own name."""
+    name = "unit `price`.usd"
+    col = CanonicalColumn(name, C.DECIMAL, data_precision=6, data_scale=2)
+    df = spark.createDataFrame([("1.5",), ("bad",)], "x: string").toDF(name)
+    staged = df.selectExpr(staging_sql(col))
+    assert staged.columns == [name]
+    final = staged.selectExpr(final_cast_sql(col))
+    assert final.columns == [name]
+    assert final.schema[name].dataType.simpleString() == "decimal(6,2)"
+    assert sorted(str(r[0]) for r in final.collect()) == ["1.50", "None"]
+    row = staged.selectExpr(*corruption_probe_sql([col])).collect()[0]
+    assert row[f"corrupt_{name}"] == 1
 
 
 def test_staging_expr_formats(spark):
@@ -116,7 +131,7 @@ def test_staging_expr_formats(spark):
     df = spark.createDataFrame(
         [(dt.datetime(2024, 1, 2, 3, 4, 5, 123456),)], "ts: timestamp"
     )
-    out = df.select(staging_expr(col)).collect()[0][0]
+    out = df.selectExpr(staging_sql(col)).collect()[0][0]
     assert out == "2024-01-02 03:04:05.123456"
 
 
