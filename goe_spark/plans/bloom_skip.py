@@ -41,7 +41,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.functions.hashing import MERSENNE_P, hash64, minhash_coeffs
+from goe_spark.functions.casts import quote
+from goe_spark.functions.hashing import MERSENNE_P, minhash_coeffs
 from goe_spark.plans.compaction import footer_reader
 from goe_spark.plans.metadata import atomic_write_json
 
@@ -55,13 +56,19 @@ _FILE = "__bfile"
 _COEFFS = minhash_coeffs(K_HASHES, seed=20240814)
 
 
-def _positions_expr(col: str) -> list:
-    """k Spark-side bit positions of a column value."""
-    h = F.pmod(hash64(F.col(col).cast("string")), F.lit(MERSENNE_P))
-    return [
-        F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE_P)) % F.lit(M_BITS)
-        for a, b in _COEFFS
-    ]
+def _positions_sql(col: str) -> str:
+    """Spark SQL array of the k bit positions of a column value: the
+    hash64 of its string form (md5's first 15 hex chars as a long),
+    folded mod p, then each (a*h + b) mod p mod m."""
+    h = (
+        f"pmod(cast(conv(substring(md5(cast({quote(col)} as string)), 1, 15),"
+        f" 16, 10) as bigint), {MERSENNE_P})"
+    )
+    return "array({})".format(
+        ", ".join(
+            f"pmod({h} * {a} + {b}, {MERSENNE_P}) % {M_BITS}" for a, b in _COEFFS
+        )
+    )
 
 
 def value_positions(value) -> list[int]:
@@ -87,15 +94,13 @@ def build_bloom_manifest(
     table = footer_reader(spark, path).parquet(path)
     manifest: dict[str, dict[str, list[int]]] = {}
     for col in cols:
-        df = (
-            table.where(F.col(col).isNotNull())
-            .select(
-                F.input_file_name().alias(_FILE),
-                F.explode(F.array(*_positions_expr(col))).alias("pos"),
-            )
-        )
         rows = (
-            df.groupBy(_FILE)
+            table.where(f"{quote(col)} IS NOT NULL")
+            .selectExpr(
+                f"input_file_name() AS {_FILE}",
+                f"explode({_positions_sql(col)}) AS pos",
+            )
+            .groupBy(_FILE)
             .agg(F.sort_array(F.collect_set("pos")).alias("ps"))
             .collect()
         )

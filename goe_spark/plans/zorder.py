@@ -17,8 +17,8 @@ here it is built from stock Spark operators:
    columns), else one ``agg(min, max)`` (O(1) rows to the driver);
 2. map-side: scale each column linearly to a ``BITS``-bit integer rank
    and bit-interleave the ranks into one long — pure JVM expressions
-   inside whole-stage codegen, no UDF; the interleave is built once
-   per column count;
+   inside whole-stage codegen, no UDF, applied as SQL text (one
+   ``selectExpr`` each for the ranks and the interleave);
 3. ``repartitionByRange(n_files, z)`` + ``sortWithinPartitions(z)``:
    each output file covers a contiguous Morton range, i.e. a small
    hyper-rectangle of the clustered space;
@@ -59,6 +59,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from goe_spark.functions.casts import quote
 from goe_spark.plans.compaction import (
     FooterFacts,
     _data_files,
@@ -76,26 +77,34 @@ _FILE = "__zfile"
 _EPOCH = datetime.date(1970, 1, 1)
 
 
-def _rankable(schema: StructType, col: str) -> F.Column:
-    """The column as a double suitable for linear min/max ranking."""
+def _rankable(schema: StructType, col: str) -> str:
+    """The column as a double suitable for linear min/max ranking, as
+    Spark SQL text."""
     t = schema[col].dataType
+    c = quote(col)
     if isinstance(t, NumericType):
-        return F.col(col).cast("double")
+        return f"CAST({c} AS DOUBLE)"
     if isinstance(t, DateType):
-        return F.datediff(F.col(col), F.lit("1970-01-01")).cast("double")
+        return f"CAST(datediff({c}, DATE'1970-01-01') AS DOUBLE)"
     if isinstance(t, (TimestampType, TimestampNTZType)):
-        return F.unix_micros(F.col(col).cast("timestamp")).cast("double")
+        return f"CAST(unix_micros(CAST({c} AS TIMESTAMP)) AS DOUBLE)"
     raise ValueError(
         f"zorder supports numeric/date/timestamp columns; {col!r} is "
         f"{t.simpleString()} (string ranking needs sampled quantiles)"
     )
 
 
+def _double(x: float) -> str:
+    """``x`` as a DOUBLE constant (a bare ``1.5`` parses as DECIMAL),
+    NaN and infinities included."""
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
 def _linear_ranks(
     schema: StructType,
     cols: list[str],
     stats: dict[str, tuple[float, float]],
-) -> list[F.Column]:
+) -> list[str]:
     """Each column scaled linearly onto a BITS-bit rank. ``stats`` maps
     column -> (min, max) on the rank scale. NULL ranks as 0 (start of
     the curve) — range predicates never match NULL rows, so their
@@ -104,53 +113,38 @@ def _linear_ranks(
     for c in cols:
         lo, hi = stats[c]
         if lo is None or hi == lo:
-            ranks.append(F.lit(0).cast("long"))
+            ranks.append("0L")
             continue
-        scaled = (_rankable(schema, c) - F.lit(float(lo))) / F.lit(
-            float(hi) - float(lo)
-        )
-        ranks.append(_rank(scaled * (1 << BITS)))
+        span = _double(float(hi) - float(lo))
+        scaled = f"({_rankable(schema, c)} - {_double(float(lo))}) / {span}"
+        ranks.append(_rank(f"({scaled}) * {1 << BITS}"))
     return ranks
 
 
-def _rank(x: F.Column) -> F.Column:
+def _rank(x: str) -> str:
     """floor(x) as a BITS-bit rank, capped at the top; NULL ranks 0."""
-    top = F.lit((1 << BITS) - 1).cast("long")
-    return F.coalesce(
-        F.least(F.floor(x).cast("long"), top), F.lit(0).cast("long")
-    )
+    top = (1 << BITS) - 1
+    return f"coalesce(least(CAST(floor({x}) AS BIGINT), {top}L), 0L)"
 
 
-def _interleave(ranks: list) -> F.Column:
+def _interleave(ranks: list[str]) -> str:
     """Bit-interleave BITS-bit rank columns into one Morton key."""
-    z = F.lit(0).cast("long")
     n = len(ranks)
-    for bit in range(BITS):
-        for j, r in enumerate(ranks):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(r, bit).bitwiseAND(F.lit(1)),
-                    bit * n + j,
-                )
-            )
-    return z
-
-
-def _with_z(df: DataFrame, ranks: list[F.Column]) -> DataFrame:
-    """``df`` + the ``__z`` Morton key of ``ranks``. The interleave
-    (five Column ops per bit per column, one py4j call each) is built
-    once per column count over named rank columns, not once per write
-    over the rank expressions."""
-    from goe_spark.catalog import memo_exprs
-
-    names = [f"__r{j}" for j in range(len(ranks))]
-    z = memo_exprs(
-        f"zorder.interleave.{len(ranks)}",
-        lambda: _interleave([F.col(r) for r in names]),
+    return " | ".join(
+        f"shiftleft(shiftright({r}, {bit}) & 1, {bit * n + j})"
+        for bit in range(BITS)
+        for j, r in enumerate(ranks)
     )
+
+
+def _with_z(df: DataFrame, ranks: list[str]) -> DataFrame:
+    """``df`` + the ``__z`` Morton key of the SQL ``ranks``. Each rank
+    is named once and the interleave reads the names, so a rank is
+    computed once per row, not once per bit."""
+    names = [f"__r{j}" for j in range(len(ranks))]
     return (
-        df.withColumns(dict(zip(names, ranks)))
-        .withColumn("__z", z)
+        df.selectExpr("*", *[f"{r} AS {n}" for r, n in zip(ranks, names)])
+        .selectExpr("*", f"{_interleave(names)} AS __z")
         .drop(*names)
     )
 
@@ -181,9 +175,9 @@ def _quantile_z(
     probs = [i / n_buckets for i in range(1, n_buckets)]
     in_cols = [f"__v{j}" for j in range(len(cols))]
     out_cols = [f"__b{j}" for j in range(len(cols))]
-    work = df.select(
+    work = df.selectExpr(
         "*",
-        *[_rankable(schema, c).alias(v) for c, v in zip(cols, in_cols)],
+        *[f"{_rankable(schema, c)} AS {v}" for c, v in zip(cols, in_cols)],
     )
     cuts = work.approxQuantile(in_cols, probs, 1.0 / (4 * n_buckets))
     splits_arr = [[float("-inf"), *sorted(set(c)), float("inf")] for c in cuts]
@@ -194,7 +188,7 @@ def _quantile_z(
         handleInvalid="keep",
     ).transform(work)
     ranks = [  # rescale each column's buckets onto the full rank range
-        _rank(F.col(f"__b{j}") * ((1 << BITS) / (len(splits_arr[j]) - 1)))
+        _rank(f"__b{j} * {_double((1 << BITS) / (len(splits_arr[j]) - 1))}")
         for j in range(len(cols))
     ]
     return _with_z(bucketed, ranks).drop(*in_cols, *out_cols)
@@ -255,12 +249,8 @@ def _write_zordered(
         if old_bounds is not None:
             stats = _overall_bounds(old_bounds, cols)
         else:
-            row = df.agg(
-                *[
-                    f(_rankable(schema, c))
-                    for c in cols
-                    for f in (F.min, F.max)
-                ]
+            row = df.selectExpr(
+                *[f"{f}({_rankable(schema, c)})" for c in cols for f in ("min", "max")]
             ).first()
             stats = {
                 c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)
@@ -356,9 +346,9 @@ def _spark_manifest(
 ) -> dict[str, dict[str, list]]:
     schema = df.schema
     per_file = (
-        df.select(
-            F.input_file_name().alias(_FILE),
-            *[_rankable(schema, c).alias(c) for c in cols],
+        df.selectExpr(
+            f"input_file_name() AS {_FILE}",
+            *[f"{_rankable(schema, c)} AS {quote(c)}" for c in cols],
         )
         .groupBy(_FILE)
         .agg(

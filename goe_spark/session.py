@@ -53,6 +53,15 @@ _DEFAULT_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # Janino-compiled classes the JVM keeps, LRU-evicted past this
+    # count (Spark's default is 100). One warm offload pass runs 109
+    # distinct generated classes and the 8-query registry slice ~180;
+    # a cyclic working set larger than an LRU misses on nearly every
+    # access, so at 100 each warm pass recompiled ~70 and 175 of them
+    # (0.6-1.9 s of single-threaded driver time). 1000 leaves 5x
+    # headroom at ~2.6 KB of bytecode per class. Static: fixed by the
+    # first session in a JVM and shared by every later one.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -106,22 +115,38 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count — AQE
     coalesces down from there; on a cluster you'd set it high (or rely
     on spark.sql.adaptive.coalescePartitions.initialPartitionNum).
+
+    On a live session only what the caller asks for is applied
+    (``shuffle_partitions`` if given, ``extra_conf`` and the
+    ``SPARK_GRAFT_ANSI`` override): the defaults would overwrite what
+    the session's owner set, e.g. for an in-process CLI command.
     """
-    master = master or default_master()
-    builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULT_CONF)
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cores)
-    # Listing a partitioned table past the parallel-discovery threshold
-    # (32 paths) runs one Spark task per path by default: a read-back of
-    # an 83-month target scheduled 83 tasks to list 83 tiny dirs. One
-    # task per core lists the same paths in a single wave; the
-    # threshold stays, since a serial driver-side listing is the slow
-    # path at 10k partitions on an object store.
-    conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = str(cores)
+    session = SparkSession._instantiatedSession
+    live = session is not None and session._sc._jsc is not None
+    if live:
+        builder = SparkSession.builder
+        conf = {}
+        if shuffle_partitions:
+            conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    else:
+        master = master or default_master()
+        builder = SparkSession.builder.appName(app_name).master(master)
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        conf = dict(_DEFAULT_CONF)
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cores)
+        # Listing a partitioned table past the parallel-discovery
+        # threshold (32 paths) runs one Spark task per path by default:
+        # a read-back of an 83-month target scheduled 83 tasks to list
+        # 83 tiny dirs. One task per core lists the same paths in a
+        # single wave; the threshold stays, since a serial driver-side
+        # listing is the slow path at 10k partitions on an object store.
+        conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = str(
+            cores
+        )
     if extra_conf:
         conf.update(extra_conf)
-    _local_fs_conf(master, conf)
+    if not live:
+        _local_fs_conf(master, conf)
     ansi_env = os.environ.get("SPARK_GRAFT_ANSI")
     if ansi_env is not None:
         conf["spark.sql.ansi.enabled"] = (

@@ -14,6 +14,7 @@ from goe_spark.plans.bloom_skip import (
     BLOOM_MANIFEST_NAME,
     K_HASHES,
     M_BITS,
+    _positions_sql,
     build_bloom_manifest,
     prune_files_bloom,
     read_pruned_bloom,
@@ -44,14 +45,7 @@ def test_spark_and_python_positions_agree(spark):
     vals = [0, 1, 42, 999_999_999_999, "x", "lang_7", "héllo wörld"]
     df = spark.createDataFrame(
         [(str(v),) for v in vals], "v string"
-    ).select(
-        "v",
-        F.array(
-            *__import__(
-                "goe_spark.plans.bloom_skip", fromlist=["_positions_expr"]
-            )._positions_expr("v")
-        ).alias("ps"),
-    )
+    ).selectExpr("v", f"{_positions_sql('v')} AS ps")
     got = {r.v: [int(p) for p in r.ps] for r in df.collect()}
     for v in vals:
         assert got[str(v)] == value_positions(v), v
