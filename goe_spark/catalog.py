@@ -155,10 +155,6 @@ def memo_exprs(name: str, builder):
     return out
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql access."""
     for t in TABLES:

@@ -241,39 +241,21 @@ def cmd_zorder(args) -> int:
     directory) on the Morton curve over the given columns and build
     the file-skipping manifest. Sits beside compact/delete/merge in
     the maintenance family — layout only, content byte-equal."""
-    import shutil
-
-    from goe_spark.plans.zorder import write_zordered
+    from goe_spark.plans.compaction import partition_dirs
+    from goe_spark.plans.zorder import heal_flat_zorder, zorder_flat_table
 
     spark = _spark("goe-zorder")
     target = args.target_dir.rstrip("/")
-    tmp, old = f"{target}.zorder_tmp", f"{target}.zorder_old"
-    # Crash-safe rewrite: the clustered copy is COMPLETE in a sibling
-    # dir before the source moves; a crash leaves either the original
-    # (tmp partial — rerun cleans it), both renamed halves (finish =
-    # rename tmp in), or target + stale old (swap done, cleanup
-    # interrupted — discard old, or the next rename would wedge).
-    if os.path.isdir(old) and not os.path.isdir(target):
-        os.rename(old, target)  # heal a crash between the two renames
-    elif os.path.isdir(old):
-        shutil.rmtree(old)  # heal a crash during the old-copy cleanup
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
+    # Before the layout is read: a crash between the flat swap's two
+    # renames leaves no table at ``target`` until the heal puts it back.
+    heal_flat_zorder(target)
     # A Hive-partitioned layout keeps its directories: each partition
     # is re-clustered in place behind compaction's marker swap, so the
     # delete/merge/compact family keeps working and partition pruning
     # stays native (manifest skipping applies within partitions).
-    # Dot-prefixed entries are maintenance debris (compact tmp dirs,
-    # markers), not partitions — a '.goe_part_key=...._compact_tmp'
-    # leftover must not be mistaken for the layout; sorted so the
-    # derived partition column is deterministic.
-    part_dirs = sorted(
-        d
-        for d in os.listdir(target)
-        if "=" in d
-        and not d.startswith(".")
-        and os.path.isdir(os.path.join(target, d))
-    )
+    # partition_dirs is sorted: the derived partition column is
+    # deterministic.
+    part_dirs = partition_dirs(target)
     if part_dirs:
         from goe_spark.plans.zorder import zorder_partitioned_table
 
@@ -297,14 +279,13 @@ def cmd_zorder(args) -> int:
             )
         )
         return 0
-    df = spark.read.parquet(target)
-    rep = write_zordered(
-        df, tmp, args.columns.split(","), n_files=args.n_files, rank=args.rank
+    rep = zorder_flat_table(
+        spark.read.parquet(target),
+        target,
+        args.columns.split(","),
+        n_files=args.n_files,
+        rank=args.rank,
     )
-    os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old)
-    rep.manifest_path = os.path.join(target, os.path.basename(rep.manifest_path))
     print(
         json.dumps(
             {

@@ -43,10 +43,6 @@ def hash31(col: Column | str) -> Column:
     return F.pmod(hash64(col), F.lit(MERSENNE_P))
 
 
-def hash31_sql(expr: str) -> str:
-    return f"({hash64_sql(expr)} % {MERSENNE_P})"
-
-
 def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for k universal hash functions.
 
@@ -63,12 +59,3 @@ def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
         b = state % MERSENNE_P  # b in [0, p-1]
         coeffs.append((a, b))
     return coeffs
-
-
-def minhash_expr(shingle_hash: Column, a: int, b: int) -> Column:
-    """(a * x + b) mod p on a hash31 column (fits int64: a,x < 2^31)."""
-    return F.pmod(shingle_hash * F.lit(a) + F.lit(b), F.lit(MERSENNE_P))
-
-
-def minhash_expr_sql(shingle_hash_expr: str, a: int, b: int) -> str:
-    return f"(({shingle_hash_expr} * {a} + {b}) % {MERSENNE_P})"

@@ -22,8 +22,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("de5", "shi4", "le5", "zai4", "he2"),
 }
 
-STOPWORDS = tuple(sorted({w for ws in LANG_MARKERS.values() for w in ws}))
-
 
 def tokens(col: Column | str) -> Column:
     """Whitespace tokenization — split on runs of whitespace."""
@@ -65,16 +63,6 @@ def _isin_pred(words: tuple[str, ...]):
     """Single-arg lambda factory — a default-arg closure would give the
     lambda arity 2 and PySpark would bind a second lambda variable."""
     return lambda t: t.isin(*words)
-
-
-def stopword_count(col: Column | str, words: tuple[str, ...] = STOPWORDS) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.filter(tokens(c), _isin_pred(words))).cast("long")
-
-
-def stopword_count_sql(expr: str, words: tuple[str, ...] = STOPWORDS) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return f"len(list_filter({tokens_sql(expr)}, t -> t IN ({lst})))"
 
 
 def punct_count(col: Column | str) -> Column:
@@ -128,16 +116,6 @@ def quality_score_sql(expr: str) -> str:
     # floor-based half-up: matches the Spark side bit-for-bit (see
     # quality_score docstring — round() disagrees at the half grid)
     return f"(floor({raw} * 1000000 + 0.5) / 1000000)"
-
-
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Stopword-overlap score per candidate language."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(c)
-    return {
-        lang: F.size(F.filter(toks, _isin_pred(ws))).cast("long")
-        for lang, ws in LANG_MARKERS.items()
-    }
 
 
 def lang_scores_sql(expr: str) -> dict[str, str]:

@@ -810,7 +810,6 @@ def mp3_channel_mode_sql(content_expr: str) -> str:
 # DuckDB recursive CTE. (Reference scope: SURVEY.md §2 multimodal —
 # media as opaque binary + typed metadata; this completes the
 # image (PNG/GIF/BMP/JPEG) + audio (WAV/MP3) + video family.)
-MP4_FTYP_HEX = "66747970"  # 'ftyp' at byte 5
 MP4_MOOV_HEX = "6D6F6F76"
 MP4_MVHD_HEX = "6D766864"
 MP4_TRAK_HEX = "7472616B"
@@ -819,10 +818,6 @@ MP4_TKHD_HEX = "746B6864"
 #: ftyp [+free] [+mdat] +moov, moov is [free] mvhd [free] trak [...];
 #: real muxers emit < 8 siblings at every level we touch
 MP4_WALK_CAP = 8
-
-
-def mp4_is_bmff(content) -> "F.Column":
-    return F.substring(_hex_of(content), 9, 8) == MP4_FTYP_HEX
 
 
 #: one fold pass covers all three levels: ≤ MP4_WALK_CAP siblings at

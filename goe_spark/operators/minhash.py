@@ -58,14 +58,6 @@ def hash31_lambda_sql(expr: str) -> str:
     )
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    return F.transform(shingles, lambda s: hash31_lambda(s))
-
-
-def shingle_hashes_sql(expr: str) -> str:
-    return f"list_transform({expr}, s -> {hash31_lambda_sql('s')})"
-
-
 # Token-combination coefficients for arithmetic 3-gram shingle hashes:
 # h(shingle_i) = (th[i]*C1 + th[i+1]*C2 + th[i+2]) mod p. Small enough
 # that th (< p ~ 2^31) times C stays well under 2^63 pre-mod.
@@ -253,19 +245,6 @@ def simhash_signature(token_hashes: Column) -> Column:
     low = _vote_bits(token_hashes, SIMHASH_HALF, 0)
     high = _vote_bits(th2, SIMHASH_HALF, SIMHASH_HALF)
     return (low + high).cast("long")
-
-
-def simhash_signature_named(name: str) -> Column:
-    """simhash_signature over a BOUND column reference, memoized per
-    (column name, SparkContext): the 60 per-bit aggregate HOFs cost
-    ~0.95 s of py4j construction per call — by far the largest
-    expression-build term in the repo (measured r13); memoization
-    makes it once per JVM."""
-    from goe_spark.catalog import memo_exprs
-
-    return memo_exprs(
-        f"minhash.simhash:{name}", lambda: simhash_signature(F.col(name))
-    )
 
 
 def simhash_signature_sql(hashes_expr: str) -> str:

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from goe_spark.functions.casts import quote
 from goe_spark.functions.hashing import MERSENNE_P, minhash_coeffs
-from goe_spark.plans.compaction import footer_reader
+from goe_spark.plans.compaction import footer_reader, partition_dirs
 from goe_spark.plans.metadata import atomic_write_json
 
 M_BITS = 1024  # filter width per (file, column)
@@ -165,16 +165,6 @@ def read_pruned_bloom(
     return spark.read.parquet(*files), len(files), total
 
 # --- partitioned layouts -------------------------------------------------
-
-
-def partition_dirs(path: str) -> list[str]:
-    """Immediate child partition directories of a Hive-partitioned
-    root (plus the Hive null dir)."""
-    return sorted(
-        d
-        for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d)) and not d.startswith(".")
-    )
 
 
 def build_bloom_manifest_partitioned(

@@ -73,12 +73,18 @@ def _data_files(d: str) -> list[str]:
     ]
 
 
-def partition_dirs(path: str, partition_col: str) -> list[str]:
-    """The ``partition_col=`` directories of a partitioned root."""
+def partition_dirs(path: str, partition_col: str | None = None) -> list[str]:
+    """The Hive partition directories (``col=value``, the Hive null dir
+    included) of a partitioned root, sorted; only ``partition_col``'s
+    when given. Never a directory Spark's reader hides: a ``.`` prefix
+    (maintenance debris — compact tmp dirs, markers) or a ``_`` prefix
+    without ``=`` (a leftover ``_temporary``)."""
     return sorted(
         d
         for d in os.listdir(path)
-        if d.startswith(f"{partition_col}=")
+        if "=" in d
+        and not d.startswith(".")
+        and partition_col in (None, d.split("=", 1)[0])
         and os.path.isdir(os.path.join(path, d))
     )
 

@@ -87,11 +87,7 @@ from pyspark.sql import functions as F
 
 from goe_spark.functions import text as T
 from goe_spark.functions.hashing import hash64
-from goe_spark.plans.history import (
-    COMMAND_ERROR,
-    COMMAND_SUCCESS,
-    ExecutionHistoryStore,
-)
+from goe_spark.plans.history import COMMAND_ERROR, ExecutionHistoryStore
 from goe_spark.plans.metadata import atomic_write_json
 from goe_spark.plans.steps import StepRunner
 
@@ -706,19 +702,15 @@ class CurationPipeline:
                     )
                 ):
                     resume_done.add(s)
-        execution = history.begin(
-            "CURATION", cfg.owner, cfg.table_name, command_input
-        )
         runner = StepRunner(
             spark=self.spark,
             skip=skip or set(),
             error_at=error_at,
-            history=history,
-            execution=execution,
             resume_done=resume_done,
-            log=lambda *_: None,
         )
-        try:
+        with runner.command(
+            history, "CURATION", cfg.owner, cfg.table_name, command_input
+        ) as execution:
             runner.run("CRAWL_DEDUP", self._crawl_dedup)
             runner.run("HYGIENE_SCRUB", self._hygiene_scrub)
             runner.run("RULE_FILTER", self._rule_filter)
@@ -734,10 +726,6 @@ class CurationPipeline:
             runner.run("MIXTURE_SAMPLE", self._mixture_sample)
             runner.run("FINAL_WRITE", self._final_write)
             n_final = runner.run("VERIFY", self._verify)
-        except Exception:
-            history.end(execution, COMMAND_ERROR)
-            raise
-        history.end(execution, COMMAND_SUCCESS)
 
         report = CurationReport(
             final_rows=int(n_final or 0),

@@ -7,22 +7,21 @@ exist once."""
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 
 def heal_target(spark: SparkSession, target_dir: str) -> dict:
     """Complete whatever a crash interrupted under ``target_dir``:
-    - finish or discard a half-done zorder rename (old without target
-      = finish the swap; old WITH target = stale cleanup debris that
-      would wedge the next rewrite; tmp = incomplete copy, discard);
+    - finish or discard a half-done flat zorder swap
+      (zorder.heal_flat_zorder);
     - complete interrupted compaction/delete partition swaps;
     - complete a pending keyed merge from its durable staging copy;
     - complete a crashed streamed-batch fold (streaming/ingest.py).
     Returns a JSON-ready report. Idempotent."""
     from goe_spark.plans.compaction import heal_interrupted_swaps
     from goe_spark.plans.merge_update import heal_pending_merge
+    from goe_spark.plans.zorder import heal_flat_zorder
     from goe_spark.streaming.ingest import heal_fold
 
     target = target_dir.rstrip("/")
@@ -34,17 +33,7 @@ def heal_target(spark: SparkSession, target_dir: str) -> dict:
     }
     if os.path.isdir(target):
         result["fold_healed"] = heal_fold(target)
-    old, tmp = f"{target}.zorder_old", f"{target}.zorder_tmp"
-    if os.path.isdir(old) and not os.path.isdir(target):
-        os.rename(old, target)
-        result["zorder_healed"] = True
-    elif os.path.isdir(old):
-        shutil.rmtree(old)
-        result["zorder_healed"] = True
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-        result["zorder_healed"] = True
-
+    result["zorder_healed"] = heal_flat_zorder(target)
     if os.path.isdir(target):
         result["swaps_healed"] = heal_interrupted_swaps(target)
         result["merge_healed"] = heal_pending_merge(spark, target)

@@ -19,12 +19,16 @@ staged input has too few splits to use the cores (``catalog.spread``),
 plus whatever a sort-on-write needs. The staging and final read-backs
 carry the schema of the frame written, so neither runs a
 schema-inference job.
+
+Each named step runs through the one step tracker
+(``plans/steps.StepRunner``): it times the step, tags the step's Spark
+jobs with ``steps.step_tag(name)`` and writes the execution record, so
+``status``/``/api/executions`` show where an offload spent its time and
+a step's jobs can be found in Spark's status store without the UI.
 """
 
 from __future__ import annotations
 
-import contextlib
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +47,7 @@ from goe_spark.functions.synthetic import (
     synthetic_string_expr,
 )
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
+from goe_spark.plans.steps import StepRunner
 from goe_spark.predicate import (
     parse_predicate_dsl,
     predicate_to_column,
@@ -189,68 +194,35 @@ class OffloadPipeline:
     def run(self, source_df: DataFrame) -> OffloadResult:
         """Execute the offload under the per-table orchestration lock
         (O6): two concurrent offloads of one table would race the HWM
-        bookkeeping, so the second caller fails fast instead."""
+        bookkeeping, so the second caller fails fast instead. The step
+        sequence runs as one persisted command execution
+        (plans/steps.py), so a crashed run leaves a durable record for
+        the status report and for resume."""
+        from goe_spark.plans.history import ExecutionHistoryStore
         from goe_spark.plans.locks import TableLock
 
-        with TableLock(self.cfg.metadata_dir, self.cfg.owner, self.cfg.table_name):
-            return self._run_locked(source_df)
-
-    def _run_locked(self, source_df: DataFrame) -> OffloadResult:
-        """Wrap the step sequence in a persisted command execution
-        (plans/history.py — the reference's start_command/end_command,
-        orchestration_runner.py:139-227): every step outcome is written
-        through to disk as it happens, so a crashed run leaves a
-        durable record for the status report and for resume."""
-        from goe_spark.plans.history import (
-            COMMAND_ERROR,
-            COMMAND_SUCCESS,
-            ExecutionHistoryStore,
-        )
-
         cfg = self.cfg
-        self._history = ExecutionHistoryStore(cfg.metadata_dir)
-        self._exec = self._history.begin(
-            "OFFLOAD",
-            cfg.owner,
-            cfg.table_name,
-            command_input={
-                "target_dir": cfg.target_dir,
-                "partition": bool(cfg.partition),
-                "predicate": cfg.offload_predicate,
-                "hwm": str(cfg.hwm) if cfg.hwm is not None else None,
-            },
-        )
-        try:
-            res = self._run_steps(source_df)
-        except BaseException:
-            self._history.end(self._exec, COMMAND_ERROR)
-            raise
-        self._history.end(self._exec, COMMAND_SUCCESS)
+        self._tracker = StepRunner(spark=self.spark)
+        with TableLock(cfg.metadata_dir, cfg.owner, cfg.table_name):
+            with self._tracker.command(
+                ExecutionHistoryStore(cfg.metadata_dir),
+                "OFFLOAD",
+                cfg.owner,
+                cfg.table_name,
+                command_input={
+                    "target_dir": cfg.target_dir,
+                    "partition": bool(cfg.partition),
+                    "predicate": cfg.offload_predicate,
+                    "hwm": str(cfg.hwm) if cfg.hwm is not None else None,
+                },
+            ):
+                res = self._run_steps(source_df)
+        res.steps = self._tracker.ok_steps()
         return res
-
-    @contextlib.contextmanager
-    def _step(self, steps: list[str], name: str):
-        """Time one named step and persist its outcome immediately."""
-        import time
-
-        from goe_spark.plans.history import STEP_ERROR, STEP_OK
-
-        t0 = time.perf_counter()
-        try:
-            yield
-        except Exception as e:
-            self._history.record_step(
-                self._exec, name, STEP_ERROR, time.perf_counter() - t0, str(e)
-            )
-            raise
-        self._history.record_step(
-            self._exec, name, STEP_OK, time.perf_counter() - t0
-        )
-        steps.append(name)
 
     def _run_steps(self, source_df: DataFrame) -> OffloadResult:
         cfg = self.cfg
-        steps: list[str] = []
+        step = self._tracker.step
         notes: list[str] = []
 
         # RESET_BACKEND_TABLE: drop table + metadata, offload from
@@ -265,7 +237,7 @@ class OffloadPipeline:
                     "--ddl-file is preview-only and cannot be combined "
                     "with --reset-backend-table"
                 )
-            with self._step(steps, "RESET_BACKEND_TABLE"):
+            with step("RESET_BACKEND_TABLE"):
                 reset_backend(self.spark, cfg)
 
         existing_md = self.store.get(cfg.owner, cfg.table_name)
@@ -326,7 +298,7 @@ class OffloadPipeline:
         # ANALYZE_DATA_TYPES: schema -> canonical columns, then the
         # user's --<type>-columns overrides (reference
         # data_type_controls.offload_source_to_canonical_mappings).
-        with self._step(steps, "ANALYZE_DATA_TYPES"):
+        with step("ANALYZE_DATA_TYPES"):
             canonical_cols = [
                 spark_to_canonical(f.name, f.dataType, f.nullable)
                 for f in source_df.schema.fields
@@ -371,7 +343,7 @@ class OffloadPipeline:
                 write_ddl_file,
             )
 
-            with self._step(steps, "CREATE_DDL_FILE"):
+            with step("CREATE_DDL_FILE"):
                 path = cfg.ddl_file.strip()
                 if path.upper() == DDL_FILE_AUTO:
                     path = generate_ddl_file_path(
@@ -391,8 +363,7 @@ class OffloadPipeline:
                 )
                 write_ddl_file(path, ddl)
             return OffloadResult(
-                rows_staged=0, rows_final=0, partitions_written=[path],
-                steps=steps,
+                rows_staged=0, rows_final=0, partitions_written=[path]
             )
 
         # CREATE_TABLE: ensure the backend final table exists (the
@@ -402,7 +373,7 @@ class OffloadPipeline:
         from goe_spark.sinks.backend_writer import ParquetBackendWriter
 
         writer = cfg.backend_writer or ParquetBackendWriter(cfg.target_dir)
-        with self._step(steps, "CREATE_TABLE"):
+        with step("CREATE_TABLE"):
             writer.create_table(
                 cfg.owner,
                 cfg.table_name,
@@ -414,7 +385,7 @@ class OffloadPipeline:
             )
 
         # FIND_OFFLOAD_DATA: predicate / HWM slicing.
-        with self._step(steps, "FIND_OFFLOAD_DATA"):
+        with step("FIND_OFFLOAD_DATA"):
             sliced = source_df
             pred_ast = None
             if cfg.offload_predicate:
@@ -466,7 +437,7 @@ class OffloadPipeline:
         # STAGING_TRANSPORT: write staging files with string-staged
         # exotics (the reference's Avro/Parquet staging schema,
         # staging format per cfg.staging_format).
-        with self._step(steps, "STAGING_TRANSPORT"):
+        with step("STAGING_TRANSPORT"):
             from goe_spark.sources.files import read_staging, write_staging
 
             # Avro staging (the reference's default format) no longer
@@ -504,7 +475,7 @@ class OffloadPipeline:
         # VALIDATE_STAGED_DATA (A5): one aggregate pass (the cast-
         # corruption probes ride the same aggregate, so VALIDATE_CASTS
         # is recorded with it).
-        with self._step(steps, "VALIDATE_STAGED_DATA"):
+        with step("VALIDATE_STAGED_DATA"):
             aggs = ["count(1) AS row_count"]
             aggs += [
                 f"count_if({quote(c.name)} IS NULL) AS {quote('nn_' + c.name)}"
@@ -527,11 +498,11 @@ class OffloadPipeline:
                 raise OffloadValidationError(
                     f"staged-data validation failed: {violations}"
                 )
-        with self._step(steps, "VALIDATE_CASTS"):
+        with step("VALIDATE_CASTS"):
             pass  # probes evaluated in the shared aggregate above
 
         if cfg.expectations:
-            with self._step(steps, "CHECK_EXPECTATIONS"):
+            with step("CHECK_EXPECTATIONS"):
                 from goe_spark.plans.expectations import check_expectations
 
                 failed = {
@@ -559,7 +530,7 @@ class OffloadPipeline:
             and cfg.hwm is None
             and not cfg.list_partition_values
         )
-        with self._step(steps, "FINAL_LOAD"):
+        with step("FINAL_LOAD"):
             final_proj = [final_cast_sql(c) for c in canonical_cols]
             pre_snapshot = (
                 None if full_replace else writer.snapshot(self.spark)
@@ -608,7 +579,7 @@ class OffloadPipeline:
         # verify_offload_by_backend_count) for the same reason: the
         # final table holds every previously offloaded slice, so an
         # unscoped count can only match on the very first offload.
-        with self._step(steps, "VERIFY_EXPORTED_DATA"):
+        with step("VERIFY_EXPORTED_DATA"):
             final_df = writer.read_final(self.spark)
             check_df = final_df
             if pred_ast is not None:
@@ -641,7 +612,7 @@ class OffloadPipeline:
                 )
 
         # SAVE_METADATA: HWM / predicate bookkeeping.
-        with self._step(steps, "SAVE_METADATA"):
+        with step("SAVE_METADATA"):
             partitions_written = self._partitions_read
             if cfg.partition is not None:
                 if cfg.hwm is not None:
@@ -705,11 +676,11 @@ class OffloadPipeline:
         # cluster natively (BigQuery CLUSTER BY via sort_cols).
         if cfg.zorder_columns_csv and hasattr(writer, "target_dir"):
             from goe_spark.plans.zorder import (
-                write_zordered,
+                zorder_flat_table,
                 zorder_partitioned_table,
             )
 
-            with self._step(steps, "ZORDER"):
+            with step("ZORDER"):
                 zcols = [
                     c.strip()
                     for c in cfg.zorder_columns_csv.split(",")
@@ -723,31 +694,15 @@ class OffloadPipeline:
                         partition_col=SYNTHETIC_COL,
                     )
                 else:
-                    # Flat target: same tmp + two-rename swap as the
-                    # CLI zorder path (healed by plans/heal.py). An
-                    # in-place overwrite backed only by localCheckpoint
-                    # would destroy the verified table on a crash or
-                    # executor loss mid-write.
-                    import shutil
-
-                    t = writer.target_dir.rstrip("/")
-                    tmp, old = f"{t}.zorder_tmp", f"{t}.zorder_old"
-                    for stale in (tmp, old):
-                        if os.path.isdir(stale):
-                            shutil.rmtree(stale)
-                    write_zordered(
-                        writer.read_final(self.spark), tmp, zcols
+                    zorder_flat_table(
+                        writer.read_final(self.spark), writer.target_dir, zcols
                     )
-                    os.rename(t, old)
-                    os.rename(tmp, t)
-                    shutil.rmtree(old)
 
         return OffloadResult(
             rows_staged=rows_staged,
             rows_final=rows_final,
             rows_staged_observed=rows_staged_observed,
             partitions_written=sorted(partitions_written),
-            steps=steps,
             notes=notes,
         )
 

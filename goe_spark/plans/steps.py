@@ -1,17 +1,37 @@
-"""Offload step runner (O1 — command_steps.py:29-67 and
+"""The one step tracker (O1 — command_steps.py:29-67 and
 OffloadMessages.offload_step in the reference).
 
-Named steps with timing, optional skip, and error injection for
-failure-path testing. Each step tags the Spark job group so the UI /
-event log attributes every job to its orchestration step — the
-Spark-native replacement for the reference's step-name log lines and
-Redis progress publishing.
+``StepRunner`` is the only code that times a step, tags its Spark jobs
+and writes the execution record; the offload and curation pipelines
+both run through it:
+
+- ``command`` wraps a whole command in one persisted execution
+  (plans/history.py): begin, then end SUCCESS, or end ERROR on any
+  BaseException — so an interrupted run is recorded, and resumable,
+  like a failed one;
+- ``step`` times one named step, records ok or error as it happens,
+  and re-raises the step's own exception. While the step runs its
+  Spark jobs carry the job tag ``step_tag(name)`` — a tag, not a job
+  group: tags are additive, so a group or tag the caller set still
+  sees every job (the Spark-native replacement for the reference's
+  step-name log lines and Redis progress publishing);
+- ``run`` adds the resume, skip and error-injection checks on top of
+  ``step`` and wraps a failure in ``StepError``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import time
 from dataclasses import dataclass, field
+
+from goe_spark.plans.history import (
+    COMMAND_ERROR,
+    COMMAND_SUCCESS,
+    STEP_ERROR,
+    STEP_OK,
+    STEP_SKIPPED,
+)
 
 
 class StepError(RuntimeError):
@@ -19,6 +39,11 @@ class StepError(RuntimeError):
         super().__init__(f"step {step!r} failed: {cause}")
         self.step = step
         self.cause = cause
+
+
+def step_tag(name: str) -> str:
+    """The Spark job tag every job of step ``name`` carries."""
+    return f"goe_spark.step.{name}"
 
 
 @dataclass
@@ -41,16 +66,16 @@ class StepRunner:
     ``history``/``execution`` persist every step outcome to an
     ExecutionHistoryStore as it happens (reference
     start_command_step/end_command_step), so a crash leaves a durable
-    record of what completed. ``resume_done`` names steps recorded ok
-    by a prior failed execution (history.completed_steps) — they are
-    skipped with a "resumed" marker instead of re-running.
+    record of what completed; ``command`` sets both. ``resume_done``
+    names steps recorded ok by a prior failed execution
+    (history.completed_steps) — they are skipped with a "resumed"
+    marker instead of re-running.
     """
 
     spark: object | None = None
     skip: set[str] = field(default_factory=set)
     error_at: str | None = None
     results: list[StepResult] = field(default_factory=list)
-    log: object = print
     history: object | None = None  # ExecutionHistoryStore
     execution: object | None = None  # ExecutionRecord
     resume_done: set[str] = field(default_factory=set)
@@ -64,9 +89,7 @@ class StepRunner:
             # latest execution — recording "skipped" would make the
             # resume chain survive exactly one crash before
             # recomputing everything.
-            status = (
-                "ok" if result.detail == "resumed" else result.status
-            )
+            status = STEP_OK if result.detail == "resumed" else result.status
             self.history.record_step(
                 self.execution,
                 result.name,
@@ -75,36 +98,67 @@ class StepRunner:
                 str(result.detail) if result.detail is not None else None,
             )
 
+    @contextlib.contextmanager
+    def command(
+        self,
+        history,
+        command_type: str,
+        owner: str,
+        table_name: str,
+        command_input: object = None,
+    ):
+        """One persisted command execution around the block (reference
+        start_command/end_command, orchestration_runner.py:139-227)."""
+        self.history = history
+        self.execution = history.begin(
+            command_type, owner, table_name, command_input
+        )
+        try:
+            yield self.execution
+        except BaseException:
+            history.end(self.execution, COMMAND_ERROR)
+            raise
+        history.end(self.execution, COMMAND_SUCCESS)
+
+    @contextlib.contextmanager
+    def step(self, name: str):
+        """Time the block as step ``name`` and tag its Spark jobs."""
+        sc = self.spark.sparkContext if self.spark is not None else None
+        if sc is not None:
+            sc.addJobTag(step_tag(name))
+        try:
+            t0 = time.perf_counter()
+            try:
+                yield
+            except BaseException as e:
+                self._record(
+                    StepResult(name, STEP_ERROR, time.perf_counter() - t0, str(e))
+                )
+                raise
+            self._record(StepResult(name, STEP_OK, time.perf_counter() - t0))
+        finally:
+            if sc is not None:
+                sc.removeJobTag(step_tag(name))
+
     def run(self, name: str, fn, *args, **kwargs):
         if name in self.resume_done:
-            self._record(StepResult(name, "skipped", detail="resumed"))
-            self.log(f"step {name}: skipped (completed by prior execution)")
+            self._record(StepResult(name, STEP_SKIPPED, detail="resumed"))
             return None
         if name in self.skip:
-            self._record(StepResult(name, "skipped"))
-            self.log(f"step {name}: skipped")
+            self._record(StepResult(name, STEP_SKIPPED))
             return None
         if self.error_at == name:
             err = RuntimeError(f"injected error before step {name}")
-            self._record(StepResult(name, "error", detail=str(err)))
+            self._record(StepResult(name, STEP_ERROR, detail=str(err)))
             raise StepError(name, err)
-        if self.spark is not None:
-            self.spark.sparkContext.setJobGroup(name, f"goe_spark step: {name}")
-        t0 = time.perf_counter()
         try:
-            out = fn(*args, **kwargs)
+            with self.step(name):
+                return fn(*args, **kwargs)
         except Exception as e:
-            dt = time.perf_counter() - t0
-            self._record(StepResult(name, "error", dt, str(e)))
-            self.log(f"step {name}: ERROR after {dt:.2f}s: {e}")
             raise StepError(name, e) from e
-        finally:
-            if self.spark is not None:
-                self.spark.sparkContext.setJobGroup("", "")
-        dt = time.perf_counter() - t0
-        self._record(StepResult(name, "ok", dt))
-        self.log(f"step {name}: ok ({dt:.2f}s)")
-        return out
+
+    def ok_steps(self) -> list[str]:
+        return [r.name for r in self.results if r.status == STEP_OK]
 
     def summary(self) -> dict[str, str]:
         return {r.name: r.status for r in self.results}

@@ -46,6 +46,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -223,6 +224,53 @@ def write_zordered(
     return ZorderReport(
         n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
     )
+
+
+def heal_flat_zorder(target: str) -> bool:
+    """Finish or discard a flat zorder swap a crash interrupted: old
+    without target = the crash fell between the two renames, so the
+    original goes back in; old WITH target = stale cleanup debris that
+    would wedge the next rename, discarded; tmp = an incomplete copy,
+    discarded. Returns whether anything was healed. Idempotent."""
+    target = target.rstrip("/")
+    tmp, old = f"{target}.zorder_tmp", f"{target}.zorder_old"
+    healed = False
+    if os.path.isdir(old):
+        if os.path.isdir(target):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, target)
+        healed = True
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+        healed = True
+    return healed
+
+
+def zorder_flat_table(
+    df: DataFrame,
+    target: str,
+    cols: list[str],
+    n_files: int = 16,
+    rank: str = "linear",
+) -> ZorderReport:
+    """Re-cluster the flat parquet table at ``target`` (which ``df``
+    reads) in place. Crash-safe: the clustered copy is COMPLETE in a
+    sibling ``.zorder_tmp`` dir before two renames swap it in, so a
+    crash leaves the original (tmp partial), both renamed halves, or
+    the new table plus a stale ``.zorder_old`` — each healed by
+    ``heal_flat_zorder``, which this begins with. An in-place
+    overwrite backed only by localCheckpoint would destroy the table
+    on a crash or an executor loss mid-write."""
+    target = target.rstrip("/")
+    heal_flat_zorder(target)
+    tmp, old = f"{target}.zorder_tmp", f"{target}.zorder_old"
+    rep = write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
+    os.rename(target, old)
+    os.rename(tmp, target)
+    shutil.rmtree(old)
+    rep.manifest_path = _mpath(target)
+    return rep
 
 
 def _write_zordered(

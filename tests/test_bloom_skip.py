@@ -159,6 +159,32 @@ def test_partitioned_build_and_delete_integration(spark, offloaded_orders):
     assert rep2.rows_deleted == 0 and rep2.partitions_affected == 0
 
 
+def test_partitioned_build_skips_leftover_temporary_dir(
+    spark, offloaded_orders
+):
+    """A leftover ``_temporary/0/`` under a partitioned target is
+    hidden from Spark's reader, so it is no partition: the build and
+    the probe skip it instead of failing to infer its schema."""
+    from goe_spark.plans.bloom_skip import (
+        build_bloom_manifest_partitioned,
+        prune_partitioned_bloom_in,
+    )
+
+    target, src, _ = offloaded_orders
+    os.makedirs(os.path.join(target, "_temporary", "0"))
+    n_parts = len([d for d in os.listdir(target) if "=" in d])
+    assert build_bloom_manifest_partitioned(
+        spark, target, ["o_orderkey"]
+    ) == n_parts
+    assert not os.path.exists(
+        os.path.join(target, "_temporary", BLOOM_MANIFEST_NAME)
+    )
+    key = src.select("o_orderkey").first()[0]
+    files, total = prune_partitioned_bloom_in(target, "o_orderkey", [key])
+    assert 0 < len(files) < total
+    assert not any("_temporary" in f for f in files)
+
+
 def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
     """A crash while the manifest is being dumped leaves the previous
     manifest whole: the next bloom-pruned read still parses it."""

@@ -117,6 +117,31 @@ def test_crash_resume_skips_completed_stages(spark, tmp_path):
     assert [r.status for r in runs] == ["ERROR", "SUCCESS"]
 
 
+def test_interrupted_run_is_recorded_error(spark, tmp_path, monkeypatch):
+    """A run stopped by KeyboardInterrupt ends its execution ERROR, not
+    EXECUTING forever — resume only trusts a failed (ERROR) run."""
+    from goe_spark.plans.history import ExecutionHistoryStore
+
+    cfg = CurationConfig(
+        source_sf_dir=SF_SMALL,
+        work_dir=str(tmp_path / "work"),
+        metadata_dir=str(tmp_path / "meta"),
+    )
+
+    def interrupted(self):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(CurationPipeline, "_crawl_dedup", interrupted)
+    with pytest.raises(KeyboardInterrupt):
+        CurationPipeline(spark, cfg).run()
+    rec = ExecutionHistoryStore(cfg.metadata_dir).latest(
+        cfg.owner, cfg.table_name
+    )
+    assert rec.command_type == "CURATION"
+    assert rec.status == "ERROR"
+    assert rec.step_names("error") == ["CRAWL_DEDUP"]
+
+
 def test_parameter_change_invalidates_resume(spark, tmp_path):
     """After a SUCCESSFUL run, re-running with different parameters
     must recompute from scratch — never return stages computed under

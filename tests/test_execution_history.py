@@ -53,7 +53,7 @@ class TestStepRunnerHistory:
     def test_steps_persisted_as_they_run(self, tmp_path):
         store = ExecutionHistoryStore(str(tmp_path))
         rec = store.begin("TEST", "o", "t")
-        r = StepRunner(log=lambda *_: None, history=store, execution=rec)
+        r = StepRunner(history=store, execution=rec)
         r.run("one", lambda: 1)
         # Reload mid-command: the completed step is already on disk.
         assert ExecutionHistoryStore(str(tmp_path)).get(
@@ -74,7 +74,6 @@ class TestStepRunnerHistory:
 
         rec1 = store.begin("TEST", "o", "t")
         r1 = StepRunner(
-            log=lambda *_: None,
             history=store,
             execution=rec1,
             error_at="load",
@@ -92,7 +91,6 @@ class TestStepRunnerHistory:
         assert prior.status == COMMAND_ERROR
         rec2 = fresh.begin("TEST", "o", "t")
         r2 = StepRunner(
-            log=lambda *_: None,
             history=fresh,
             execution=rec2,
             resume_done=fresh.completed_steps(prior),

@@ -27,20 +27,20 @@ from tests.conftest import SF_SMALL
 
 class TestStepRunner:
     def test_ok_and_skip_and_timing(self):
-        r = StepRunner(skip={"verify"}, log=lambda *_: None)
+        r = StepRunner(skip={"verify"})
         assert r.run("transport", lambda: 42) == 42
         assert r.run("verify", lambda: 1 / 0) is None  # skipped, not run
         assert r.summary() == {"transport": "ok", "verify": "skipped"}
         assert r.results[0].seconds >= 0
 
     def test_error_wraps_and_records(self):
-        r = StepRunner(log=lambda *_: None)
+        r = StepRunner()
         with pytest.raises(StepError, match="final_load"):
             r.run("final_load", lambda: (_ for _ in ()).throw(ValueError("boom")))
         assert r.summary() == {"final_load": "error"}
 
     def test_injected_error_before_step(self):
-        r = StepRunner(error_at="staging", log=lambda *_: None)
+        r = StepRunner(error_at="staging")
         r.run("transport", lambda: 1)
         with pytest.raises(StepError, match="staging"):
             r.run("staging", lambda: 2)

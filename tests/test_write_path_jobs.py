@@ -22,6 +22,7 @@ from goe_spark.plans.offload import (
     OffloadPipeline,
     PartitionSpec,
 )
+from goe_spark.plans.steps import step_tag
 from goe_spark.plans.targeted_delete import delete_rows
 from goe_spark.plans.zorder import (
     _mpath,
@@ -221,3 +222,29 @@ def test_partition_listing_runs_one_task_per_core(spark, offloaded_orders):
             for i in range(stages.size())
         ]
     assert tasks and max(tasks) <= sc.defaultParallelism, tasks
+
+
+def test_offload_steps_tag_their_jobs(spark, tmp_path):
+    """While an offload step runs its jobs carry the step's job tag. A
+    tag is additive, so the caller's own tag still sees every job."""
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    with tagged_jobs(spark) as ids:
+        res = OffloadPipeline(
+            spark,
+            OffloadConfig(
+                owner="tpch",
+                table_name="orders",
+                target_dir=str(tmp_path / "final"),
+                staging_dir=str(tmp_path / "staging"),
+                metadata_dir=str(tmp_path / "meta"),
+            ),
+        ).run(src)
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+
+    def tagged(step):
+        # The tag names the step, not the run: keep this run's jobs.
+        return {j for j in tracker.getJobIdsForTag(step_tag(step)) if j >= min(ids)}
+
+    final_load = tagged("FINAL_LOAD")
+    assert final_load
+    assert final_load <= set().union(*map(tagged, res.steps)) == set(ids)
