@@ -11,15 +11,16 @@ bloom_filter_enabled and Delta's bloom-filter index make; here it is
 an explicit manifest built from stock aggregates so the pruning
 happens at FILE granularity before Spark even lists row groups.
 
-Construction (one pass per indexed column):
+Construction: ONE aggregate over the whole table for every indexed
+column (and every partition directory):
 - map-side: k = {K_HASHES} bit positions per value, from the
   cross-engine md5 hash64 (functions/hashing.py) pushed through the
-  (a*h + b) mod p universal family and folded mod m = {M_BITS}. All
-  JVM expressions, no UDF.
-- one narrow shuffle groups positions per (file): collect_set is
-  bounded by m per file regardless of row count.
-- manifest JSON: {file: {col: sorted set-bit positions}} next to the
-  data, same lifecycle discipline as the z-order manifest.
+  (a*h + b) mod p universal family and folded mod m = {M_BITS}, then
+  offset by m times the column's index. JVM expressions, no UDF.
+- one narrow shuffle groups positions per file: collect_set is
+  bounded by m per file and column.
+- manifest JSON per directory, written by the driver: {file: {col:
+  sorted set-bit positions}}, same lifecycle as the z-order manifest.
 
 Probing runs on the DRIVER with hashlib.md5 — bit-identical to the
 Spark expression by construction (pinned by a property test), so a
@@ -37,13 +38,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from collections.abc import Callable
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.functions.casts import quote
 from goe_spark.functions.hashing import MERSENNE_P, minhash_coeffs
-from goe_spark.plans.compaction import footer_reader, partition_dirs
+from goe_spark.plans.compaction import file_dir, footer_reader, partition_dirs
 from goe_spark.plans.metadata import atomic_write_json
 
 M_BITS = 1024  # filter width per (file, column)
@@ -83,33 +86,73 @@ def _mpath(path: str) -> str:
     return os.path.join(path, BLOOM_MANIFEST_NAME)
 
 
+def _bloom_entries(
+    table: DataFrame, cols: list[str]
+) -> dict[str, dict[str, list[int]]]:
+    """{input_file_name: {col: sorted set-bit positions}} for ``cols``
+    of ``table``: ONE aggregate over every column, grouped by file,
+    whose shuffle carries at most (n_files x m x len(cols)) position
+    rows after map-side set-dedup. NULLs are skipped (a NULL never
+    matches an equality probe)."""
+    codes = ", ".join(
+        f"IF({quote(c)} IS NULL, array(),"
+        f" transform({_positions_sql(c)}, p -> p + {j * M_BITS}))"
+        for j, c in enumerate(cols)
+    )
+    rows = (
+        table.selectExpr(
+            f"input_file_name() AS {_FILE}", f"explode(concat({codes})) AS code"
+        )
+        .groupBy(_FILE)
+        .agg(F.sort_array(F.collect_set("code")).alias("codes"))
+        .collect()
+    )
+    out: dict[str, dict[str, list[int]]] = {}
+    for r in rows:
+        entry = out[r[_FILE]] = {}
+        for code in r.codes:  # ascending: each column's list comes sorted
+            entry.setdefault(cols[code // M_BITS], []).append(int(code % M_BITS))
+    return out
+
+
 def build_bloom_manifest(
     spark: SparkSession, path: str, cols: list[str]
 ) -> dict:
-    """Build and persist the per-file Bloom manifest for ``cols``.
-
-    One aggregate pass per column; each pass shuffles at most
-    (n_files x m) position rows after map-side set-dedup. NULLs are
-    skipped (a NULL never matches an equality probe)."""
+    """Build and persist the per-file Bloom manifest for ``cols`` of
+    the flat table at ``path``."""
     table = footer_reader(spark, path).parquet(path)
-    manifest: dict[str, dict[str, list[int]]] = {}
-    for col in cols:
-        rows = (
-            table.where(f"{quote(col)} IS NOT NULL")
-            .selectExpr(
-                f"input_file_name() AS {_FILE}",
-                f"explode({_positions_sql(col)}) AS pos",
-            )
-            .groupBy(_FILE)
-            .agg(F.sort_array(F.collect_set("pos")).alias("ps"))
-            .collect()
-        )
-        for r in rows:
-            fname = os.path.basename(r[_FILE])
-            manifest.setdefault(fname, {})[col] = [int(p) for p in r.ps]
+    manifest = {
+        unquote(os.path.basename(f)): entry
+        for f, entry in _bloom_entries(table, cols).items()
+    }
     # Atomic: a torn manifest would fail every later bloom-pruned read.
     atomic_write_json(_mpath(path), manifest, indent=None)
     return manifest
+
+
+def _surviving(
+    path: str, fires: Callable[[dict[str, list[int]]], bool]
+) -> tuple[list[str], int]:
+    """The data files of the FLAT directory ``path`` that are absent
+    from its Bloom manifest (written after the build, or no manifest
+    at all: correct, just unpruned) or whose entry ``fires``; returns
+    (surviving file paths, total data files)."""
+    data_files = sorted(
+        f
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    try:
+        with open(_mpath(path)) as fh:
+            manifest = json.load(fh)
+    except FileNotFoundError:
+        manifest = {}
+    out = [
+        os.path.join(path, f)
+        for f in data_files
+        if f not in manifest or fires(manifest[f])
+    ]
+    return out, len(data_files)
 
 
 def prune_files_bloom(
@@ -117,40 +160,16 @@ def prune_files_bloom(
 ) -> tuple[list[str], int]:
     """Files that can contain ALL the equality predicates in
     ``equals`` (col -> value): a file survives iff, for every probed
-    column it has a filter for, all k positions are set. Files absent
-    from the manifest (written after the build) survive — correct,
-    just unpruned. Returns (surviving file paths, total data files)."""
-    data_files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    try:
-        with open(_mpath(path)) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        return [os.path.join(path, f) for f in sorted(data_files)], len(
-            data_files
-        )
+    column it has a filter for, all k positions are set (a column not
+    indexed in a file makes no claim)."""
     probe = {c: value_positions(v) for c, v in equals.items()}
-    out = []
-    for f in sorted(data_files):
-        entry = manifest.get(f)
-        if entry is None:
-            out.append(os.path.join(path, f))
-            continue
-        ok = True
-        for c, poss in probe.items():
-            bits = entry.get(c)
-            if bits is None:
-                continue  # column not indexed in this file: no claim
-            bitset = set(bits)
-            if not all(p in bitset for p in poss):
-                ok = False
-                break
-        if ok:
-            out.append(os.path.join(path, f))
-    return out, len(data_files)
+    return _surviving(
+        path,
+        lambda entry: all(
+            c not in entry or set(entry[c]).issuperset(ps)
+            for c, ps in probe.items()
+        ),
+    )
 
 
 def read_pruned_bloom(
@@ -170,25 +189,19 @@ def read_pruned_bloom(
 def build_bloom_manifest_partitioned(
     spark: SparkSession, path: str, cols: list[str]
 ) -> int:
-    """One Bloom manifest per partition directory; returns the number
-    of partitions indexed. Each partition's build is independent, so
-    an incremental pipeline rebuilds only partitions it rewrote."""
-    dirs = partition_dirs(path)
-    # Each partition's build is one small independent Spark job
-    # writing its own manifest file; overlap them from a driver
-    # thread pool (guide §2.6) instead of running a month-partitioned
-    # table's dozens of tiny actions back to back — same discipline
-    # as zorder_partitioned_table.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    def _one(d: str) -> None:
-        build_bloom_manifest(spark, os.path.join(path, d), cols)
-
-    with ThreadPoolExecutor(max_workers=max(1, min(4, len(dirs)))) as tp:
-        list(tp.map(inheritable_thread_target(spark)(_one), dirs))
-    return len(dirs)
+    """One Bloom manifest per partition directory, all from one
+    aggregate over the whole table; returns the number of partitions
+    indexed."""
+    manifests: dict[str, dict] = {d: {} for d in partition_dirs(path)}
+    if not manifests:
+        return 0
+    table = footer_reader(spark, path).parquet(path)
+    for f, entry in _bloom_entries(table, cols).items():
+        # A file below a nested directory stays unindexed: it survives.
+        manifests.get(file_dir(f), {})[unquote(os.path.basename(f))] = entry
+    for d, manifest in manifests.items():
+        atomic_write_json(_mpath(os.path.join(path, d)), manifest, indent=None)
+    return len(manifests)
 
 
 def prune_files_bloom_in(
@@ -198,29 +211,15 @@ def prune_files_bloom_in(
     FLAT directory: a file survives iff at least one key's positions
     are all set (or the file/column is unindexed). Same no-false-
     negative contract as the single-value probe."""
-    data_files = [
-        f
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    try:
-        with open(_mpath(path)) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        return [os.path.join(path, f) for f in sorted(data_files)], len(
-            data_files
-        )
     probes = [value_positions(k) for k in keys]
-    out = []
-    for f in sorted(data_files):
-        bits = (manifest.get(f) or {}).get(col)
-        if bits is None:
-            out.append(os.path.join(path, f))
-            continue
-        bitset = set(bits)
-        if any(all(p in bitset for p in ps) for ps in probes):
-            out.append(os.path.join(path, f))
-    return out, len(data_files)
+
+    def fires(entry: dict[str, list[int]]) -> bool:
+        if col not in entry:
+            return True
+        bits = set(entry[col])
+        return any(bits.issuperset(ps) for ps in probes)
+
+    return _surviving(path, fires)
 
 
 def prune_partitioned_bloom_in(

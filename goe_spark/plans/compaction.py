@@ -8,27 +8,24 @@ manage storage; a parquet-on-DFS backend has to do it itself.
 
 Spark-first design: selection is metadata-only (file listing, no data
 read); only partitions whose file count exceeds the threshold are
-rewritten. Rewrites are per-partition so restart scope is one
-partition, and untouched partitions keep their files byte-identical.
-
-Crash safety (directories cannot be renamed atomically over data):
-the swap is marker-driven. Compacted data is written to a DOT-PREFIXED
-temp dir (invisible to Spark readers and to the partition scan), a
-swap marker recording the old file list is written atomically, and
-only then are old files deleted and new files moved in; the marker is
-removed last. Every run begins by HEALING: a marker found on disk
-means a crash interrupted a swap, and the heal completes it (delete
-listed old files still present, move remaining temp files in).
-Marker-less temp dirs are leftovers from a crash before the marker
-and are discarded — the partition is still intact and will simply be
-recompacted. The only externally visible inconsistency is the window
-after a crash mid-swap and before the next run's heal.
+rewritten, each down to one file, and untouched partitions keep their
+files byte-identical.
 
 Every partition rewrite (compaction, targeted delete, partitioned
-zorder) goes through ``rewrite_partition``. Its schema and its row
-checks on the old and new files come from the parquet footers — the
-metadata Spark's own count of a parquet directory reads — so a
-rewrite is one Spark write job, with no inference or count jobs.
+zorder) is one Spark write for all its partitions
+(``rewrite_partitions``): each directory is read as one union branch
+tagged with its index and written ``partitionBy`` that index into one
+DOT-PREFIXED temp tree (invisible to Spark readers and the partition
+scan), so directory names never pass through partition-value parsing.
+Schemas and row checks come from the footers: no inference or counts.
+
+Crash safety (directories cannot be renamed atomically over data):
+each subtree moves to its partition's temp dir, a swap marker per
+partition recording the old file list is written atomically, and only
+then are old files deleted and new ones moved in; each marker goes
+last. Every run begins by HEALING: a marker on disk means a crash
+interrupted a swap, which the heal completes; the temp tree and
+marker-less temp dirs predate the markers and are discarded.
 
 At 100 TB you run this as a background janitor over partitions the
 chunker has finished with (HWM-closed partitions never receive new
@@ -38,12 +35,14 @@ appends, so compaction and ingest don't race).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import math
 import os
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql.types import StructType
@@ -53,6 +52,8 @@ from goe_spark.sinks.backend_writer import is_dfs_uri
 
 # Footer key holding the Spark schema a file was written with.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+PART = "__goe_part"  # branch index of a ``tag_union``; the temp tree's partition
+_TREE = ".compact_tree"
 
 
 @dataclass
@@ -87,6 +88,13 @@ def partition_dirs(path: str, partition_col: str | None = None) -> list[str]:
         and partition_col in (None, d.split("=", 1)[0])
         and os.path.isdir(os.path.join(path, d))
     )
+
+
+def file_dir(uri: str) -> str:
+    """The on-disk name of the directory of an input_file_name()
+    ``uri``: one unquote undoes the URI encoding on top of any Hive
+    escaping ('goe_part_key=a%2Fb' arrives as '...a%252Fb/...')."""
+    return unquote(uri.rstrip("/").rsplit("/", 2)[-2])
 
 
 def _tmp_dir(path: str, d: str) -> str:
@@ -248,52 +256,80 @@ def footer_reader(spark: SparkSession, path: str) -> DataFrameReader:
     return spark.read if schema is None else spark.read.schema(schema)
 
 
-def rewrite_partition(
+def tag_union(branches: list[DataFrame]) -> DataFrame:
+    """``branches[i]`` tagged ``PART = i``, unioned by column name (a
+    column one branch lacks reads NULL there)."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        (b.selectExpr("*", f"{i} AS {PART}") for i, b in enumerate(branches)),
+    )
+
+
+def rewrite_partitions(
     spark: SparkSession,
     path: str,
-    d: str,
-    write: Callable[[DataFrame, str, FooterFacts], object],
+    dirs: list[str],
+    plan: Callable[[list[DataFrame], list[FooterFacts]], DataFrame],
     deleting: bool = False,
     bounds_cols=(),
-) -> tuple[int, int, int] | None:
-    """Rewrite partition directory ``d`` of the table at ``path``
-    behind the crash-safe marker swap; the caller heals the table
-    first. ``write(df, tmp, old)`` writes the partition's new contents
-    to the temp dir, ``df`` read with the schema its footers record
-    and ``old`` the old files' footer facts (with min/max of
-    ``bounds_cols``). The footer row counts of the written files must
-    equal the old ones, or be lower when ``deleting`` (equal: no swap,
-    returns None). Returns (rows before, rows after, data files
-    after)."""
-    full = os.path.join(path, d)
-    old_files = _data_files(full)
-    old = footer_facts(full, old_files, bounds_cols)
-    n_before = old.rows
-    reader = spark.read if old.schema is None else spark.read.schema(old.schema)
-    tmp = _tmp_dir(path, d)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    write(reader.parquet(full), tmp, old)
-    n_after = footer_facts(tmp, _data_files(tmp)).rows
-    if (n_after >= n_before) if deleting else (n_after != n_before):
-        shutil.rmtree(tmp)
-        if deleting and n_after == n_before:
-            return None  # nothing left to delete: keep the old files
-        raise RuntimeError(  # pragma: no cover - defensive
-            f"rewrite of {d} went from {n_before} to {n_after} rows"
+) -> list[tuple[str, int, int, int]]:
+    """Rewrite the partition directories ``dirs`` holding data files in
+    one Spark write, behind the marker swaps; the caller heals first.
+    ``plan(branches, olds)`` returns every partition's new rows tagged
+    as by ``tag_union``: ``branches[i]`` reads the i-th directory with
+    the schema its footers record, ``olds[i]`` are its old footer facts
+    (with min/max of ``bounds_cols``). New footer row counts must equal
+    the old, or be lower when ``deleting`` (equal: no swap). Returns
+    (dir, rows before, rows after, data files after) of each swap."""
+    pending = []  # (dir, old files, old footer facts)
+    for d in dirs:
+        full = os.path.join(path, d)
+        if files := _data_files(full):
+            pending.append((d, files, footer_facts(full, files, bounds_cols)))
+    if not pending:
+        return []
+    branches = [
+        (spark.read if old.schema is None else spark.read.schema(old.schema))
+        .parquet(os.path.join(path, d))
+        for d, _, old in pending
+    ]
+    tree = os.path.join(path, _TREE)
+    plan(branches, [old for _, _, old in pending]).write.mode(
+        "overwrite"
+    ).partitionBy(PART).parquet(tree)
+    swaps = []
+    for i, (d, old_files, old) in enumerate(pending):
+        tmp, sub = _tmp_dir(path, d), os.path.join(tree, f"{PART}={i}")
+        if os.path.isdir(sub):
+            os.rename(sub, tmp)
+        else:  # every row of the partition was deleted
+            os.mkdir(tmp)
+        rows = footer_facts(tmp, _data_files(tmp)).rows
+        if (rows >= old.rows) if deleting else (rows != old.rows):
+            shutil.rmtree(tmp)
+            if deleting and rows == old.rows:
+                continue  # nothing deleted here: keep the old files
+            raise RuntimeError(  # pragma: no cover - defensive
+                f"rewrite of {d} went from {old.rows} to {rows} rows"
+            )
+        swaps.append((d, old_files, old.rows, rows))
+    shutil.rmtree(tree)
+    # Every marker BEFORE any partition is touched: from here a crash
+    # at any point is completed by the next run's heal.
+    for d, old_files, _, _ in swaps:
+        atomic_write_json(
+            _marker_path(path, d), {"partition": d, "old_files": old_files}
         )
-    # Marker BEFORE touching the partition: from here a crash at any
-    # point is completed by the next run's heal.
-    atomic_write_json(
-        _marker_path(path, d), {"partition": d, "old_files": old_files}
-    )
-    return n_before, n_after, _complete_swap(path, d, old_files)
+    return [
+        (d, before, after, _complete_swap(path, d, old_files))
+        for d, old_files, before, after in swaps
+    ]
 
 
 def heal_interrupted_swaps(path: str) -> list[str]:
     """Complete any swap a crash interrupted (marker present) and
-    discard marker-less temp dirs (crash before the marker — the
-    partition is still intact). Returns healed partition names."""
+    discard the temp tree and marker-less temp dirs (crash before the
+    markers: the partitions are intact). Returns healed partitions."""
     healed = []
     for name in sorted(os.listdir(path)):
         if name.startswith(".compact_swap.") and name.endswith(".json"):
@@ -301,10 +337,9 @@ def heal_interrupted_swaps(path: str) -> list[str]:
                 marker = json.load(fh)
             _complete_swap(path, marker["partition"], marker["old_files"])
             healed.append(marker["partition"])
-    for name in sorted(os.listdir(path)):
-        if name.endswith("._compact_tmp") and not os.path.exists(
-            _marker_path(path, name[1 : -len("._compact_tmp")])
-        ):
+    # Every marked swap is complete: what is left predates the markers.
+    for name in os.listdir(path):
+        if name == _TREE or name.endswith("._compact_tmp"):
             shutil.rmtree(os.path.join(path, name))
     return healed
 
@@ -314,32 +349,30 @@ def compact_partitioned_table(
     path: str,
     partition_col: str = "goe_part_key",
     max_files_per_partition: int = 4,
-    target_files: int = 1,
 ) -> CompactionReport:
     """Rewrite every partition directory holding more than
-    ``max_files_per_partition`` data files down to ``target_files``.
-    Data is bit-stable: the rewrite is a plain read+coalesce+write of
-    the same rows (footer row counts checked before the swap). Begins
-    by healing any swap a previous crash interrupted."""
+    ``max_files_per_partition`` data files down to one file, in one
+    shuffle-free write job (each partition's read coalesced to one
+    task) of the same rows, footer row counts checked before the swap.
+    Begins by healing any swap a previous crash interrupted."""
     report = CompactionReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
+    fragmented = {}
     for d in partition_dirs(path, partition_col):
-        full = os.path.join(path, d)
-        files = _data_files(full)
+        n = len(_data_files(os.path.join(path, d)))
         report.partitions_scanned += 1
-        report.files_before += len(files)
-        if len(files) <= max_files_per_partition:
-            report.files_after += len(files)
-            continue
-        _, _, n_files = rewrite_partition(
-            spark,
-            path,
-            d,
-            lambda df, tmp, _old: df.coalesce(target_files)
-            .write.mode("overwrite")
-            .parquet(tmp),
-        )
+        report.files_before += n
+        if n > max_files_per_partition:
+            fragmented[d] = n
+        else:
+            report.files_after += n
+    for d, _, _, n_files in rewrite_partitions(
+        spark,
+        path,
+        list(fragmented),
+        lambda branches, _olds: tag_union([b.coalesce(1) for b in branches]),
+    ):
         report.partitions_compacted += 1
         report.files_after += n_files
-        report.details.append((d, len(files), n_files))
+        report.details.append((d, fragmented[d], n_files))
     return report

@@ -5,21 +5,21 @@ delegates to its warehouse backend.
 Spark-first shape: deletion is two phases. Phase 1 finds the
 partition DIRECTORIES that contain any doomed key — one aggregate
 over a scan with the key set applied, collecting `input_file_name()`
-of matching rows and counting the distinct matched keys, so
-the affected set is exact file-system truth (no reconstruction of
+of matching rows and counting the distinct matched keys, so the
+affected set is exact file-system truth (no reconstruction of
 directory names from partition values, which breaks on type-inferred
 reads: lpad-padded numerics, Hive-escaped characters,
 __HIVE_DEFAULT_PARTITION__). Phase 2 rewrites ONLY those directories
-with the key anti-filter through compaction's rewrite_partition (one
-write job, footer row counts, marker-driven crash-safe swap), so
-untouched partitions stay byte-identical. At
-100 TB a delete of k keys costs O(affected partitions), never a table
-rewrite.
+with the key anti-filter through compaction's rewrite_partitions (one
+write job for all of them, footer row counts, marker-driven
+crash-safe swaps), so untouched partitions stay byte-identical. At
+100 TB a delete of k keys reads and writes O(affected partitions),
+never a table rewrite, in a fixed number of Spark jobs.
 
-Crash safety is compaction's: temp dir -> marker -> swap -> unmark,
-healed on the next run. A crash between phase-2 partitions resumes by
-re-running the delete (already-rewritten partitions simply match no
-keys on the second pass).
+Crash safety is compaction's: temp tree -> temp dirs -> every marker
+-> swaps -> unmark, healed on the next run. A crash before the markers
+leaves the table as it was, and re-running the delete redoes it; a
+crash after them is completed by the heal.
 """
 
 from __future__ import annotations
@@ -30,38 +30,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.plans.compaction import (
+    file_dir,
     footer_reader,
     heal_interrupted_swaps,
-    rewrite_partition,
+    rewrite_partitions,
+    tag_union,
 )
 
-HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
-
-
 FILE_COL = "_goe_src_file"
-
-
-def affected_partition_dirs(files: list[str]) -> list[str]:
-    """Distinct immediate parent directory NAMES of ``files``, the
-    collected FILE_COL values of the matching rows — exact (from
-    input_file_name), driver-bounded by affected-partition file
-    counts. The matches must carry FILE_COL projected AT SCAN TIME:
-    input_file_name() is task-local and evaluates to '' when first
-    referenced above a shuffle join.
-
-    input_file_name returns a URI, so each segment is URL-encoded ON
-    TOP of whatever Hive escaping the on-disk name carries (dir
-    'goe_part_key=a%2Fb' arrives as '...a%252Fb/...', a literal space
-    as '%20') — one unquote restores the on-disk spelling."""
-    from urllib.parse import unquote
-
-    if any(not f for f in files):  # pragma: no cover - defensive
-        raise RuntimeError(
-            "input_file_name lost provenance — FILE_COL must be "
-            "projected before any join"
-        )
-    return sorted({unquote(f.rstrip("/").rsplit("/", 2)[-2]) for f in files})
-
 
 @dataclass
 class DeleteReport:
@@ -90,10 +66,9 @@ def delete_rows(
 
     ``keys`` is a Python list (small takedown lists) or a DataFrame
     with a ``key_column`` column (large removal sets). A DataFrame
-    keyset is checkpointed once: phase 1 and every per-partition
-    anti-join must see the SAME key set, and a non-deterministic keys
-    plan (limit, sample) re-evaluated per partition would delete an
-    inconsistent set.
+    keyset is checkpointed once: phase 1 and the phase-2 anti-join
+    must see the SAME key set, and a non-deterministic keys plan
+    (limit, sample) evaluated twice would delete an inconsistent set.
 
     ``use_bloom`` bounds the PHASE-1 scan with the per-partition
     Bloom manifests (plans/bloom_skip.py) when ``keys`` is a list:
@@ -134,10 +109,9 @@ def delete_rows(
             f"{path} is not partitioned by {partition_col!r}; targeted "
             "delete needs the partition layout to bound the rewrite"
         )
-
-    # Project the provenance column AT SCAN TIME (see
-    # affected_partition_dirs) before any join can shuffle it away.
-    table_f = table.withColumn(FILE_COL, F.input_file_name())
+    # The provenance column is projected AT SCAN TIME: input_file_name()
+    # is task-local and reads '' when first referenced above a join.
+    table = table.withColumn(FILE_COL, F.input_file_name())
 
     if isinstance(keys, DataFrame):
         keys = (
@@ -145,14 +119,14 @@ def delete_rows(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        matches = table_f.join(keys, key_column, "left_semi")
+        matches = table.join(keys, key_column, "left_semi")
 
         def anti(df):
             return df.join(keys, key_column, "left_anti")
 
     else:
         key_list = list(keys)
-        matches = table_f.where(F.col(key_column).isin(key_list))
+        matches = table.where(F.col(key_column).isin(key_list))
 
         def anti(df):
             # NULL-key rows are never doomed: bare ~isin is NULL for
@@ -169,27 +143,25 @@ def delete_rows(
     report.keys_matched, files = matches.agg(
         F.countDistinct(key_column), F.collect_set(FILE_COL)
     ).first()
-    for d in affected_partition_dirs(files):
-        if d != HIVE_NULL_DIR and not d.startswith(f"{partition_col}="):
+    if not all(files):  # pragma: no cover - defensive
+        raise RuntimeError("input_file_name lost provenance above a join")
+    dirs = sorted({file_dir(f) for f in files})
+    for d in dirs:
+        if not d.startswith(f"{partition_col}="):
             # A matching file NOT under a partition dir means the
             # layout assumption is wrong — refuse rather than skip.
-            raise ValueError(
-                f"matched file outside the partition layout: {d!r}"
-            )
-        # The swap drops the partition's stale manifests.
-        rw = rewrite_partition(
-            spark,
-            path,
-            d,
-            lambda df, tmp, _old: anti(df).write.mode("overwrite").parquet(tmp),
-            deleting=True,
-        )
-        if rw is None:
-            continue
-        deleted = rw[0] - rw[1]
+            raise ValueError(f"matched file outside the partition layout: {d!r}")
+    # One write for all affected partitions; the swaps drop stale manifests.
+    for d, before, after, _ in rewrite_partitions(
+        spark,
+        path,
+        dirs,
+        lambda branches, _olds: anti(tag_union(branches)),
+        deleting=True,
+    ):
         report.partitions_affected += 1
-        report.rows_deleted += deleted
-        report.details.append((d, deleted))
+        report.rows_deleted += before - after
+        report.details.append((d, before - after))
     if maintain_indexes:
         from goe_spark.operators.index_maintenance import evict_keys
 

@@ -21,7 +21,8 @@ here it is built from stock Spark operators:
    ``selectExpr`` each for the ranks and the interleave);
 3. ``repartitionByRange(n_files, z)`` + ``sortWithinPartitions(z)``:
    each output file covers a contiguous Morton range, i.e. a small
-   hyper-rectangle of the clustered space;
+   hyper-rectangle of the clustered space (a partitioned table: one
+   plan for all P partitions, ``repartitionByRange(n_files*P, part, z)``);
 4. manifest: per-file min/max of the clustered columns, read from the
    footers of the files just written (parquet-mr records the same
    min/max Spark's aggregate returns, NaN included), else one
@@ -62,13 +63,15 @@ from pyspark.sql.types import (
 
 from goe_spark.functions.casts import quote
 from goe_spark.plans.compaction import (
+    PART,
     FooterFacts,
     _data_files,
     _nan_last,
     footer_facts,
     heal_interrupted_swaps,
     partition_dirs,
-    rewrite_partition,
+    rewrite_partitions,
+    tag_union,
 )
 from goe_spark.plans.metadata import atomic_write_json
 
@@ -220,7 +223,16 @@ def write_zordered(
     collapses a skewed column onto a few rank values and its dimension
     stops skipping files). The manifest stores raw value bounds either
     way, so pruning semantics are identical."""
-    manifest = _write_zordered(df, path, cols, n_files, rank)
+    schema = df.schema
+    (
+        _z_frame(df, schema, cols, rank)
+        .repartitionByRange(n_files, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+    (manifest,) = _write_manifests(df.sparkSession, schema, cols, [path])
     return ZorderReport(
         n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
     )
@@ -273,58 +285,55 @@ def zorder_flat_table(
     return rep
 
 
-def _write_zordered(
+def _z_frame(
     df: DataFrame,
-    path: str,
+    schema: StructType,
     cols: list[str],
-    n_files: int,
     rank: str,
-    old: FooterFacts | None = None,
-) -> dict[str, dict[str, list]]:
-    """write_zordered's body; returns the manifest. ``old``: footer
-    facts (with ``cols`` bounds) of the files ``df`` reads, which
-    serve the linear ranks' min/max when they can."""
+    old: list[dict[str, dict[str, list]]] | None = None,
+) -> DataFrame:
+    """``df`` + the ``__z`` Morton key over ``cols``. The linear ranks'
+    min/max come from ``old`` (footer manifests, rank scale, covering
+    every file ``df`` reads) when given, else one aggregate."""
     if not 2 <= len(cols) <= 64 // BITS:
         raise ValueError(
             f"zorder needs 2..{64 // BITS} columns, got {len(cols)}"
         )
-    # A rewrite reads ``df`` with the schema its footers record.
-    schema = (old and old.schema) or df.schema
     if rank == "quantile":
-        zdf = _quantile_z(df, schema, cols)
-    elif rank == "linear":
-        old_bounds = _footer_manifest(schema, cols, old and old.bounds)
-        if old_bounds is not None:
-            stats = _overall_bounds(old_bounds, cols)
-        else:
-            row = df.selectExpr(
-                *[f"{f}({_rankable(schema, c)})" for c in cols for f in ("min", "max")]
-            ).first()
-            stats = {
-                c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)
-            }
-        zdf = _with_z(df, _linear_ranks(schema, cols, stats))
-    else:
+        return _quantile_z(df, schema, cols)
+    if rank != "linear":
         raise ValueError(f"rank must be 'linear' or 'quantile': {rank!r}")
-    (
-        zdf.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    written = footer_facts(path, _data_files(path), cols)
-    manifest = _footer_manifest(schema, cols, written.bounds)
-    if manifest is None:
-        # The files hold df's schema: read them back without inferring it.
-        read = df.sparkSession.read.schema(schema).parquet(path)
-        manifest = _spark_manifest(read, cols)
-    atomic_write_json(_mpath(path), manifest)
-    return manifest
+    if old is not None:
+        stats = _overall_bounds(old, cols)
+    else:
+        row = df.selectExpr(
+            *[f"{f}({_rankable(schema, c)})" for c in cols for f in ("min", "max")]
+        ).first()
+        stats = {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
+    return _with_z(df, _linear_ranks(schema, cols, stats))
 
 
 def _mpath(path: str) -> str:
     return os.path.join(path, MANIFEST_NAME)
+
+
+def _write_manifests(
+    spark: SparkSession, schema: StructType, cols: list[str], dirs: list[str]
+) -> list[dict[str, dict[str, list]]]:
+    """Write and return each directory's manifest, from the footers of
+    its files, which hold ``schema``; when some footer cannot answer,
+    from one aggregate over all ``dirs``, read without inference."""
+    manifests = [
+        _footer_manifest(schema, cols, footer_facts(d, _data_files(d), cols).bounds)
+        for d in dirs
+    ]
+    if None in manifests:
+        reader = spark.read.schema(schema)
+        got = _spark_manifests(tag_union([reader.parquet(d) for d in dirs]), cols)
+        manifests = [got.get(i, {}) for i in range(len(dirs))]
+    for d, manifest in zip(dirs, manifests):
+        atomic_write_json(_mpath(d), manifest)
+    return manifests
 
 
 def _footer_rank(t):
@@ -359,14 +368,15 @@ def _footer_manifest(
 
 
 def _overall_bounds(
-    manifest: dict[str, dict[str, list]], cols: list[str]
+    manifests: list[dict[str, dict[str, list]]], cols: list[str]
 ) -> dict[str, tuple]:
-    """Per column, (min, max) over the files of a manifest — what one
-    Spark min/max aggregate over those files returns."""
+    """Per column, (min, max) over the files of some manifests — what
+    one Spark min/max aggregate over those files returns."""
+    per_file = [b for m in manifests for b in m.values()]
     out = {}
     for c in cols:
-        los = [m[c][0] for m in manifest.values() if m[c][0] is not None]
-        his = [m[c][1] for m in manifest.values() if m[c][1] is not None]
+        los = [b[c][0] for b in per_file if b[c][0] is not None]
+        his = [b[c][1] for b in per_file if b[c][1] is not None]
         out[c] = (
             min(los, key=_nan_last) if los else None,
             max(his, key=_nan_last) if his else None,
@@ -384,33 +394,37 @@ def build_manifest(
     engine-side recompute that keeps those semantics testable. Bounds
     are stored on the RANK scale (epoch days/micros for temporal
     columns) so JSON stays typed-neutral."""
-    manifest = _spark_manifest(spark.read.parquet(path), cols)
+    manifest = _spark_manifests(tag_union([spark.read.parquet(path)]), cols).get(0, {})
     atomic_write_json(_mpath(path), manifest)
     return manifest
 
 
-def _spark_manifest(
+def _spark_manifests(
     df: DataFrame, cols: list[str]
-) -> dict[str, dict[str, list]]:
+) -> dict[int, dict[str, dict[str, list]]]:
+    """{PART: manifest} of a ``tag_union`` of reads: one aggregate
+    grouped on the branch and input_file_name (a file name alone can
+    repeat across partition directories)."""
     schema = df.schema
     per_file = (
         df.selectExpr(
+            PART,
             f"input_file_name() AS {_FILE}",
             *[f"{_rankable(schema, c)} AS {quote(c)}" for c in cols],
         )
-        .groupBy(_FILE)
+        .groupBy(PART, _FILE)
         .agg(
             *[F.min(c).alias(f"lo_{c}") for c in cols],
             *[F.max(c).alias(f"hi_{c}") for c in cols],
         )
         .collect()
     )
-    return {
-        os.path.basename(r[_FILE]): {
+    out: dict[int, dict[str, dict[str, list]]] = {}
+    for r in per_file:
+        out.setdefault(r[PART], {})[os.path.basename(r[_FILE])] = {
             c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols
         }
-        for r in per_file
-    }
+    return out
 
 
 def prune_files(
@@ -474,62 +488,41 @@ def zorder_partitioned_table(
     rank: str = "linear",
 ) -> PartitionedZorderReport:
     """Re-cluster EVERY partition of a Hive-partitioned target on the
-    Morton curve, each behind compaction's marker-driven crash-safe
-    swap — so zorder composes with the offload layout instead of
-    refusing it (the flat CLI path): partition pruning on
-    ``partition_col`` stays native, and the per-partition manifest
-    adds file skipping WITHIN each partition.
-
-    Crash contract is compaction's: the clustered copy is complete in
-    a dot-prefixed temp dir before the marker arms; any crash is
-    healed by the next run (which this one begins with). The old
-    manifest is removed IN the swap and the fresh one (computed on the
-    temp copy, whose file names the swap keeps) written after —
-    a crash in between leaves a manifest-less partition, which
-    read_pruned_partitioned treats as unprunable-but-correct (reads
-    all its files) until the next zorder pass."""
+    Morton curve behind compaction's marker swaps: partition pruning
+    stays native and each partition's manifest skips files within it.
+    One plan covers all P partitions (``rewrite_partitions``): ranks
+    are table-wide, then ``repartitionByRange(n_files * P, partition,
+    z)``. A range can straddle two partitions, so a partition holds its
+    row share of the ranges plus one: at most ``n_files + 1`` files on
+    equal partitions. Fresh manifests are written after the swaps; a
+    crash in between leaves a manifest-less partition, read unpruned
+    by read_pruned_partitioned until the next pass."""
     report = PartitionedZorderReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
-    part_dirs = partition_dirs(path, partition_col)
-    if not part_dirs:
+    dirs = partition_dirs(path, partition_col)
+    if not dirs:
         raise ValueError(
             f"{path} has no {partition_col}= partition directories; "
             "use write_zordered for flat tables"
         )
+    schema: StructType | None = None
 
-    def _rewrite_one(d: str) -> int:
-        manifest: dict = {}
-
-        def write(df: DataFrame, tmp: str, old: FooterFacts) -> None:
-            # Keyed by bare file names, which the swap keeps: this is
-            # the partition's manifest once the files are moved in.
-            manifest.update(_write_zordered(df, tmp, cols, n_files, rank, old))
-
-        _, _, n_files_after = rewrite_partition(
-            spark, path, d, write, bounds_cols=cols
+    def plan(branches: list[DataFrame], olds: list[FooterFacts]) -> DataFrame:
+        nonlocal schema
+        df = tag_union(branches)
+        schema = next((o.schema for o in olds if o.schema), None) or df.schema
+        old = [_footer_manifest(schema, cols, o.bounds) for o in olds]
+        return (
+            _z_frame(df, schema, cols, rank, None if None in old else old)
+            .repartitionByRange(n_files * len(branches), PART, "__z")
+            .sortWithinPartitions(PART, "__z")
+            .drop("__z")
         )
-        atomic_write_json(_mpath(os.path.join(path, d)), manifest)
-        return n_files_after
 
-    # Partitions are INDEPENDENT (own dirs, own markers, own temp
-    # dirs), so a driver thread pool overlaps the per-partition
-    # rewrite jobs instead of running a month-partitioned table's
-    # dozens of tiny actions strictly back to back (guide §2.6 —
-    # 3-4 jobs in flight fills each job's straggler tail). The crash
-    # contract is per partition and unchanged: a failure mid-pool
-    # leaves every partition either swapped or marker-armed, and the
-    # next run's heal pass completes the armed ones.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    workers = max(1, min(4, len(part_dirs)))
-    with ThreadPoolExecutor(max_workers=workers) as tp:
-        for n_after in tp.map(
-            inheritable_thread_target(spark)(_rewrite_one), part_dirs
-        ):
-            report.files_after += n_after
-            report.partitions_rewritten += 1
+    done = rewrite_partitions(spark, path, dirs, plan, bounds_cols=cols)
+    report.partitions_rewritten = len(done)
+    report.files_after = sum(n for *_, n in done)
+    _write_manifests(spark, schema, cols, [os.path.join(path, d) for d, *_ in done])
     return report
 
 
@@ -550,14 +543,11 @@ def read_pruned_partitioned(
         full = os.path.join(path, d)
         if os.path.exists(_mpath(full)):
             keep, n = prune_files(full, bounds)
-            files.extend(keep)
-            total += n
         else:
-            part_files = [
-                os.path.join(full, f) for f in _data_files(full)
-            ]
-            files.extend(part_files)
-            total += len(part_files)
+            keep = [os.path.join(full, f) for f in _data_files(full)]
+            n = len(keep)
+        files.extend(keep)
+        total += n
     if not files:
         return None, 0, total
     return (

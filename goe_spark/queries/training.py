@@ -35,12 +35,13 @@ sequence packing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.catalog import load_table
 from goe_spark.functions import text as T
 from goe_spark.functions.hashing import hash64, hash64_sql
+from goe_spark.functions.money import cents_exact_sum
 from goe_spark.queries import QuerySpec
 from goe_spark.queries.dedup import _minhash_lsh_sql, minhash_lsh_pairs
 
@@ -396,25 +397,13 @@ def dedup_survivor_bias_audit(
         F.sum(F.col("removed") * F.col("n_tokens")).alias(
             "tokens_removed"
         ),
-        # try_divide: a source whose clustered docs are ALL rank-1
-        # survivors has sum(removed)=0 — the ratio must be NULL (as
-        # DuckDB's /0 yields) rather than raise under the driver's
-        # ANSI-on session. kept-denominator is provably >=1 per group
-        # but hardened identically for free.
-        F.round(
-            F.try_divide(
-                F.sum(F.col("removed") * F.col("quality")),
-                F.sum("removed"),
-            ),
-            6,
-        ).alias("avg_quality_removed"),
-        F.round(
-            F.try_divide(
-                F.sum((1 - F.col("removed")) * F.col("quality")),
-                F.sum(1 - F.col("removed")),
-            ),
-            6,
-        ).alias("avg_quality_kept"),
+        # _avg_quality's try_divide: a source whose clustered docs are
+        # ALL rank-1 survivors has sum(removed)=0 — the ratio must be
+        # NULL (as DuckDB's /0 yields) rather than raise under the
+        # driver's ANSI-on session. kept-denominator is provably >=1
+        # per group but hardened identically for free.
+        _avg_quality(F.col("removed")).alias("avg_quality_removed"),
+        _avg_quality(1 - F.col("removed")).alias("avg_quality_kept"),
     )
     totals = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
@@ -431,6 +420,26 @@ def dedup_survivor_bias_audit(
             "avg_quality_removed",
             "avg_quality_kept",
         )
+    )
+
+
+def _avg_quality(weight: Column) -> Column:
+    """avg(quality) over the rows whose 0/1 ``weight`` is 1: quality
+    summed exactly on its 1e-6 grid (a double sum's last digit moves
+    with the summation order), converted to double once and rounded
+    half-up back onto the grid with quality_score's floor form."""
+    micros = cents_exact_sum(weight * F.col("quality"), 1_000_000)
+    return (
+        F.floor(F.try_divide(micros.cast("double"), F.sum(weight)) + 0.5)
+        / 1_000_000
+    )
+
+
+def _avg_quality_sql(weight: str) -> str:
+    """``_avg_quality`` in DuckDB SQL."""
+    micros = f"sum(cast(floor({weight} * quality * 1000000 + 0.5) AS bigint))"
+    return (
+        f"floor(cast({micros} AS double) / sum({weight}) + 0.5) / 1000000"
     )
 
 
@@ -466,10 +475,8 @@ WITH RECURSIVE lsh_pairs AS (
          count(*) AS n_clustered,
          cast(sum(removed) AS bigint) AS n_removed,
          cast(sum(removed * n_tokens) AS bigint) AS tokens_removed,
-         round(sum(removed * quality) / sum(removed), 6)
-           AS avg_quality_removed,
-         round(sum((1 - removed) * quality) / sum(1 - removed), 6)
-           AS avg_quality_kept
+         {_avg_quality_sql('removed')} AS avg_quality_removed,
+         {_avg_quality_sql('(1 - removed)')} AS avg_quality_kept
   FROM ranked GROUP BY source
 ), totals AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source

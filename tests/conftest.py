@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -83,3 +85,19 @@ def partition_file_map(path):
                 if not f.startswith(("_", "."))
             }
     return out
+
+
+@contextlib.contextmanager
+def tagged_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.addJobTag(tag)
+    try:
+        yield ids
+    finally:
+        sc.removeJobTag(tag)
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        ids.extend(jsc.statusTracker().getJobIdsForTag(tag))

@@ -206,3 +206,32 @@ def test_manifest_write_is_atomic(spark, tmp_path, monkeypatch):
     with open(os.path.join(path, BLOOM_MANIFEST_NAME)) as fh:
         assert json.load(fh) == before
     assert prune_files_bloom(path, {"doc_id": 1500}) == pruned
+
+
+def test_partitioned_manifests_equal_flat_builds(spark, tmp_path):
+    """The one aggregate behind the partitioned build gives each
+    directory the manifest build_bloom_manifest builds on it alone,
+    NULL-skipping included (a file whose column is all NULL has no
+    filter for it)."""
+    import json
+
+    from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
+
+    path = str(tmp_path / "parts")
+    spark.range(600).selectExpr(
+        "IF(id % 7 = 0, NULL, id) AS k",
+        "concat('v', id % 13) AS s",
+        "IF(id % 4 = 1, NULL, id % 3) AS n",
+        "id % 4 AS goe_part_key",
+    ).repartition(3).write.partitionBy("goe_part_key").parquet(path)
+    cols = ["k", "s", "n"]
+    assert build_bloom_manifest_partitioned(spark, path, cols) == 4
+    for d in sorted(os.listdir(path)):
+        full = os.path.join(path, d)
+        if not d.startswith("goe_part_key="):
+            continue
+        with open(os.path.join(full, BLOOM_MANIFEST_NAME)) as fh:
+            built = json.load(fh)
+        assert built == build_bloom_manifest(spark, full, cols), d
+    with open(os.path.join(path, "goe_part_key=1", BLOOM_MANIFEST_NAME)) as fh:
+        assert all("n" not in entry for entry in json.load(fh).values())

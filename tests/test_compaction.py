@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from goe_spark.plans.compaction import compact_partitioned_table
@@ -128,3 +129,174 @@ def test_markerless_tmp_discarded(spark, tmp_path):
     assert heal_interrupted_swaps(target) == []
     assert not os.path.exists(tmp)
     assert spark.read.parquet(target).count() == expected
+
+
+def _fragmented(spark, target, parts=("a", "b", "c")):
+    """One partition per value of ``parts``, six files each."""
+    df = spark.range(300).selectExpr(
+        "id",
+        "element_at(array({}), CAST(id % {} AS INT) + 1) AS goe_part_key".format(
+            ", ".join(f"'{p}'" for p in parts), len(parts)
+        ),
+    )
+    for _ in range(2):
+        df.repartition(3).write.mode("append").partitionBy(
+            "goe_part_key"
+        ).parquet(target)
+
+
+def _contents(spark, target):
+    """{partition dir: sorted ids}, each directory read on its own."""
+    from goe_spark.plans.compaction import partition_dirs
+
+    return {
+        d: sorted(r.id for r in spark.read.parquet(os.path.join(target, d)).collect())
+        for d in partition_dirs(target)
+    }
+
+
+def _debris(target):
+    """Maintenance leftovers: the temp tree, temp dirs and markers."""
+    return sorted(
+        n
+        for n in os.listdir(target)
+        if n.startswith((".compact_", ".goe_part_key="))
+    )
+
+
+def test_crash_before_markers_leaves_table_unchanged(spark, tmp_path, monkeypatch):
+    """A crash after the one write and before any marker (here: moving
+    the first subtree out of the temp tree) leaves every partition's
+    files as they were; heal_interrupted_swaps — behind `cli heal` and
+    /api/heal — discards the tree and reports nothing healed."""
+    from goe_spark.plans.heal import heal_target
+    from tests.conftest import partition_file_map
+
+    target = str(tmp_path / "t")
+    _fragmented(spark, target)
+    files, rows = partition_file_map(target), _contents(spark, target)
+    real_rename = os.rename
+
+    def crash(src, dst):
+        if ".compact_tree" in src:
+            raise OSError("crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="crash"):
+        compact_partitioned_table(spark, target)
+    monkeypatch.undo()
+    assert _debris(target) == [".compact_tree"]
+    assert partition_file_map(target) == files
+    assert heal_target(spark, target)["swaps_healed"] == []
+    assert _debris(target) == []
+    assert partition_file_map(target) == files
+    assert _contents(spark, target) == rows
+
+
+def test_next_run_discards_premarker_temp_dirs(spark, tmp_path, monkeypatch):
+    """A crash after the subtrees moved to their temp dirs but before
+    the first marker: the table is unchanged, and the next compaction
+    discards the temp dirs and compacts every partition."""
+    from goe_spark.plans import compaction
+
+    target = str(tmp_path / "t")
+    _fragmented(spark, target)
+    rows = _contents(spark, target)
+
+    def crash(*_a, **_k):
+        raise OSError("crash")
+
+    monkeypatch.setattr(compaction, "atomic_write_json", crash)
+    with pytest.raises(OSError, match="crash"):
+        compact_partitioned_table(spark, target)
+    monkeypatch.undo()
+    assert _debris(target) == sorted(
+        f".goe_part_key={p}._compact_tmp" for p in "abc"
+    )
+    assert all(len(_files(os.path.join(target, d))) == 6 for d in rows)
+    rep = compact_partitioned_table(spark, target)
+    assert rep.partitions_compacted == 3
+    assert _debris(target) == []
+    assert _contents(spark, target) == rows
+
+
+def test_heal_completes_every_swap_after_a_crash_mid_way(
+    spark, tmp_path, monkeypatch
+):
+    """Every marker is armed before the first swap: a crash after k of
+    P swaps is completed by the heal for the other P - k, with the
+    content unchanged."""
+    from goe_spark.plans import compaction
+    from goe_spark.plans.compaction import heal_interrupted_swaps
+
+    target = str(tmp_path / "t")
+    _fragmented(spark, target)
+    rows = _contents(spark, target)
+    real_swap, done = compaction._complete_swap, []
+
+    def crash_after_one(*a):
+        if done:
+            raise OSError("crash")
+        done.append(real_swap(*a))
+        return done[-1]
+
+    monkeypatch.setattr(compaction, "_complete_swap", crash_after_one)
+    with pytest.raises(OSError, match="crash"):
+        compact_partitioned_table(spark, target)
+    monkeypatch.undo()
+    assert heal_interrupted_swaps(target) == ["goe_part_key=b", "goe_part_key=c"]
+    assert _debris(target) == []
+    assert all(len(_files(os.path.join(target, d))) == 1 for d in rows)
+    assert _contents(spark, target) == rows
+
+
+def _named_layout(spark, target, layout):
+    """Six files in each of four partitions whose directory names
+    Spark's partition-value parsing would not give back: zero-padded
+    synthetic numbers or escaped strings, plus the Hive NULL dir."""
+    from goe_spark.functions.synthetic import synthetic_number_expr
+
+    df = spark.range(400).selectExpr(
+        "id",
+        "CAST(id AS DOUBLE) / 7 AS x",
+        "IF(id % 4 = 3, NULL, id % 4 * 100) AS b",
+    )
+    if layout == "padded":
+        key = synthetic_number_expr("b", 100, digits=5)
+    else:
+        key = F.expr(
+            "CASE b WHEN 0 THEN 'a/b' WHEN 100 THEN 'x:y' WHEN 200 THEN 'c=d' END"
+        )
+    df = df.withColumn("goe_part_key", key).drop("b")
+    for _ in range(2):
+        df.repartition(3).write.mode("append").partitionBy(
+            "goe_part_key"
+        ).parquet(target)
+
+
+@pytest.mark.parametrize("layout", ["padded", "escaped"])
+@pytest.mark.parametrize("verb", ["compact", "delete", "zorder"])
+def test_rewrites_keep_directory_names(spark, tmp_path, layout, verb):
+    """Compaction, delete and zorder write every partition through one
+    index-tagged temp tree, so each directory keeps its exact name."""
+    from goe_spark.plans.compaction import partition_dirs
+    from goe_spark.plans.targeted_delete import delete_rows
+    from goe_spark.plans.zorder import zorder_partitioned_table
+
+    target = str(tmp_path / "t")
+    _named_layout(spark, target, layout)
+    dirs, rows = partition_dirs(target), _contents(spark, target)
+    assert len(dirs) == 4 and "goe_part_key=__HIVE_DEFAULT_PARTITION__" in dirs
+    if verb == "compact":
+        assert compact_partitioned_table(spark, target).partitions_compacted == 4
+    elif verb == "delete":
+        doomed = [ids[0] for ids in rows.values()]
+        rep = delete_rows(spark, target, "id", doomed)
+        assert rep.partitions_affected == 4
+        rows = {d: [i for i in ids if i not in doomed] for d, ids in rows.items()}
+    else:
+        rep = zorder_partitioned_table(spark, target, ["id", "x"], n_files=2)
+        assert rep.partitions_rewritten == 4
+    assert partition_dirs(target) == dirs
+    assert _contents(spark, target) == rows

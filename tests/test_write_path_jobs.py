@@ -8,11 +8,9 @@ brings back the extra scans fails here instead of going unnoticed."""
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -30,25 +28,9 @@ from goe_spark.plans.zorder import (
     zorder_partitioned_table,
 )
 from goe_spark.sinks.backend_writer import ParquetBackendWriter
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, tagged_jobs
 
 ZCOLS = ["o_custkey", "o_totalprice"]
-
-
-@contextlib.contextmanager
-def tagged_jobs(spark):
-    """Collect the ids of the Spark jobs started inside the block."""
-    sc = spark.sparkContext
-    tag = f"jobs-{uuid.uuid4().hex}"
-    ids: list[int] = []
-    sc.addJobTag(tag)
-    try:
-        yield ids
-    finally:
-        sc.removeJobTag(tag)
-        jsc = sc._jsc.sc()
-        jsc.listenerBus().waitUntilEmpty()
-        ids.extend(jsc.statusTracker().getJobIdsForTag(tag))
 
 
 def _part_dirs(target):
@@ -248,3 +230,49 @@ def test_offload_steps_tag_their_jobs(spark, tmp_path):
     final_load = tagged("FINAL_LOAD")
     assert final_load
     assert final_load <= set().union(*map(tagged, res.steps)) == set(ids)
+
+
+def _fragmented(spark, root, n_parts):
+    """``n_parts`` partitions of 50 rows, five files each."""
+    spark.range(50 * n_parts).selectExpr(
+        "id",
+        "id * 7 % 101 AS k",
+        "CAST(id AS DOUBLE) / 3 AS x",
+        f"id % {n_parts} AS goe_part_key",
+    ).repartition(5).write.partitionBy("goe_part_key").parquet(root)
+
+
+def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
+    """Bloom, compaction, a delete of one key in every partition and
+    zorder each run one plan for all the partitions they touch: at 40
+    partitions they run at most the jobs they run at 4, plus one of
+    slack for the parallel listing job Spark runs for a read of more
+    than 32 paths. One pipeline per partition ran 2 jobs per partition
+    for bloom, 1 for compaction and delete, and 3 for zorder."""
+    from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
+
+    def jobs(n_parts):
+        root = str(tmp_path / f"p{n_parts}")
+        _fragmented(spark, root, n_parts)
+        counts = {}
+        with tagged_jobs(spark) as ids:
+            assert build_bloom_manifest_partitioned(spark, root, ["k", "x"]) == n_parts
+        counts["bloom"] = len(ids)
+        with tagged_jobs(spark) as ids:
+            rep = compact_partitioned_table(spark, root)
+        assert rep.partitions_compacted == rep.files_after == n_parts
+        counts["compact"] = len(ids)
+        with tagged_jobs(spark) as ids:
+            rep = delete_rows(spark, root, "id", list(range(n_parts)))
+        assert rep.partitions_affected == rep.rows_deleted == n_parts
+        counts["delete"] = len(ids)
+        with tagged_jobs(spark) as ids:
+            rep = zorder_partitioned_table(spark, root, ["k", "x"], n_files=2)
+        assert rep.partitions_rewritten == n_parts
+        counts["zorder"] = len(ids)
+        assert spark.read.parquet(root).count() == 49 * n_parts
+        return counts
+
+    few, many = jobs(4), jobs(40)
+    for verb, n in few.items():
+        assert many[verb] <= n + 1, (verb, few, many)

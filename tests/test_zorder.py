@@ -213,10 +213,9 @@ def test_partitioned_zorder_preserves_layout_and_prunes(
     rep = zorder_partitioned_table(
         spark, target, ["o_custkey", "o_totalprice"], n_files=4
     )
-    # the pooled rewrite (r14: partitions rewritten from a driver
-    # thread pool) must cover EVERY partition exactly once and leave
-    # one fresh manifest per partition — the report counters are
-    # aggregated across threads
+    # the set-oriented rewrite (every partition in one write, one
+    # marker swap each) must cover EVERY partition exactly once and
+    # leave one fresh manifest per partition
     assert rep.partitions_rewritten == len(part_dirs_before)
     from goe_spark.plans.zorder import _mpath
 
@@ -305,7 +304,7 @@ def _zorder_one_partition(spark, tmp_path, df, cols, write=None):
     import os
 
     from goe_spark.plans.zorder import _mpath, zorder_partitioned_table
-    from tests.test_write_path_jobs import tagged_jobs
+    from tests.conftest import tagged_jobs
 
     root = str(tmp_path / "t")
     part = os.path.join(root, "goe_part_key=a")
