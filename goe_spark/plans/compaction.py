@@ -13,11 +13,14 @@ files byte-identical.
 
 Every partition rewrite (compaction, targeted delete, partitioned
 zorder) is one Spark write for all its partitions
-(``rewrite_partitions``): each directory is read as one union branch
-tagged with its index and written ``partitionBy`` that index into one
-DOT-PREFIXED temp tree (invisible to Spark readers and the partition
-scan), so directory names never pass through partition-value parsing.
-Schemas and row checks come from the footers: no inference or counts.
+(``rewrite_partitions``): the directories are read in one scan, each
+row tagged with its directory's index (from input_file_name()), and
+written ``partitionBy`` that index into one DOT-PREFIXED temp tree
+(invisible to Spark readers and the partition scan), so directory
+names never pass through partition-value parsing. Compaction reads
+each directory in its own task instead, so each gets one file with no
+shuffle. Schemas and row checks come from the footers: no inference
+or counts.
 
 Crash safety (directories cannot be renamed atomically over data):
 each subtree moves to its partition's temp dir, a swap marker per
@@ -40,6 +43,7 @@ import json
 import math
 import os
 import shutil
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from urllib.parse import unquote
@@ -52,7 +56,7 @@ from goe_spark.sinks.backend_writer import is_dfs_uri
 
 # Footer key holding the Spark schema a file was written with.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-PART = "__goe_part"  # branch index of a ``tag_union``; the temp tree's partition
+PART = "__goe_part"  # a rewritten directory's index; the temp tree's partition
 _TREE = ".compact_tree"
 
 
@@ -256,31 +260,76 @@ def footer_reader(spark: SparkSession, path: str) -> DataFrameReader:
     return spark.read if schema is None else spark.read.schema(schema)
 
 
-def tag_union(branches: list[DataFrame]) -> DataFrame:
-    """``branches[i]`` tagged ``PART = i``, unioned by column name (a
-    column one branch lacks reads NULL there)."""
-    return functools.reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        (b.selectExpr("*", f"{i} AS {PART}") for i, b in enumerate(branches)),
-    )
+# Compaction reads each directory in one task, as one branch of a union.
+# Spark would run a union of single-task branches as ONE task, and plan
+# a Sort on the partitionBy column above it that buffers (and past
+# executor memory spills) each whole partition. Held for that write
+# only: every branch stays its own task, and the writer streams its
+# rows into one open file.
+_STREAMING_WRITE = {
+    "spark.sql.unionOutputPartitioning": "false",
+    "spark.sql.optimizer.plannedWrite.enabled": "false",
+    "spark.sql.maxConcurrentOutputFileWriters": "1",
+}
+_CONF_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def _streaming_write(spark: SparkSession):
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k) for k in _STREAMING_WRITE}
+        try:
+            for k, v in _STREAMING_WRITE.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in old.items():
+                spark.conf.set(k, v)
+
+
+def _dir_index(df: DataFrame, dirs: list[str]) -> str:
+    """SQL: the index in ``dirs`` of the directory holding the row's
+    file (-1: none), matched as input_file_name() spells it
+    (URI-encoded, as ``df.inputFiles()`` gives it)."""
+    if len(dirs) == 1:
+        return "0"
+    spelled = {file_dir(f): f.rsplit("/", 2)[-2] for f in df.inputFiles()}
+    names = ", ".join(repr(spelled[d]) for d in dirs)  # as SQL string literals
+    seg = "substring_index(substring_index(input_file_name(), '/', -2), '/', 1)"
+    return f"CAST(array_position(array({names}), {seg}) - 1 AS INT)"
+
+
+def _merged_schema(olds: list[FooterFacts]) -> StructType | None:
+    """Every column the footers record, first type seen: a partition
+    lacking a column reads NULL there. None when no footer records a
+    Spark schema (the reader infers)."""
+    fields = {}
+    for o in olds:
+        for f in o.schema or ():
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values())) if fields else None
 
 
 def rewrite_partitions(
     spark: SparkSession,
     path: str,
     dirs: list[str],
-    plan: Callable[[list[DataFrame], list[FooterFacts]], DataFrame],
+    plan: Callable[[DataFrame, list[FooterFacts]], DataFrame] = lambda df, _: df,
     deleting: bool = False,
     bounds_cols=(),
+    one_task_each: bool = False,
 ) -> list[tuple[str, int, int, int]]:
     """Rewrite the partition directories ``dirs`` holding data files in
     one Spark write, behind the marker swaps; the caller heals first.
-    ``plan(branches, olds)`` returns every partition's new rows tagged
-    as by ``tag_union``: ``branches[i]`` reads the i-th directory with
-    the schema its footers record, ``olds[i]`` are its old footer facts
-    (with min/max of ``bounds_cols``). New footer row counts must equal
-    the old, or be lower when ``deleting`` (equal: no swap). Returns
-    (dir, rows before, rows after, data files after) of each swap."""
+    ``plan(df, olds)`` maps ``df`` (every directory's rows, read in one
+    scan with the columns its footers record and tagged ``PART`` = the
+    directory's index among those rewritten) to the rows to write,
+    still tagged; ``olds[i]`` are the i-th directory's old footer facts
+    (with min/max of ``bounds_cols``). ``one_task_each`` reads each
+    directory in one task instead: one file per partition, with no
+    shuffle and no sort. New footer row counts must equal the old, or
+    be lower when ``deleting`` (equal: no swap). Returns (dir, rows
+    before, rows after, data files after) of each swap."""
     pending = []  # (dir, old files, old footer facts)
     for d in dirs:
         full = os.path.join(path, d)
@@ -288,15 +337,28 @@ def rewrite_partitions(
             pending.append((d, files, footer_facts(full, files, bounds_cols)))
     if not pending:
         return []
-    branches = [
-        (spark.read if old.schema is None else spark.read.schema(old.schema))
-        .parquet(os.path.join(path, d))
-        for d, _, old in pending
-    ]
+    olds = [old for _, _, old in pending]
+    schema = _merged_schema(olds)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    paths = [os.path.join(path, d) for d, _, _ in pending]
     tree = os.path.join(path, _TREE)
-    plan(branches, [old for _, _, old in pending]).write.mode(
-        "overwrite"
-    ).partitionBy(PART).parquet(tree)
+    if one_task_each:
+        df = functools.reduce(
+            DataFrame.unionByName,
+            (
+                reader.parquet(p).coalesce(1).selectExpr("*", f"{i} AS {PART}")
+                for i, p in enumerate(paths)
+            ),
+        )
+    else:  # the write sorts each task's rows (one input split) on PART
+        df = reader.parquet(*paths)
+        index = _dir_index(df, [d for d, _, _ in pending])
+        df = df.selectExpr("*", f"{index} AS {PART}")
+    with _streaming_write(spark) if one_task_each else contextlib.nullcontext():
+        plan(df, olds).write.mode("overwrite").partitionBy(PART).parquet(tree)
+    if os.path.exists(os.path.join(tree, f"{PART}=-1")):
+        shutil.rmtree(tree)  # the row checks would count its partition short
+        raise RuntimeError(f"rows of {path} not traced to their directory")
     swaps = []
     for i, (d, old_files, old) in enumerate(pending):
         tmp, sub = _tmp_dir(path, d), os.path.join(tree, f"{PART}={i}")
@@ -337,9 +399,13 @@ def heal_interrupted_swaps(path: str) -> list[str]:
                 marker = json.load(fh)
             _complete_swap(path, marker["partition"], marker["old_files"])
             healed.append(marker["partition"])
-    # Every marked swap is complete: what is left predates the markers.
     for name in os.listdir(path):
-        if name == _TREE or name.endswith("._compact_tmp"):
+        if name == _TREE or (
+            name.endswith("._compact_tmp")
+            and not os.path.exists(
+                _marker_path(path, name[1 : -len("._compact_tmp")])
+            )
+        ):
             shutil.rmtree(os.path.join(path, name))
     return healed
 
@@ -367,10 +433,7 @@ def compact_partitioned_table(
         else:
             report.files_after += n
     for d, _, _, n_files in rewrite_partitions(
-        spark,
-        path,
-        list(fragmented),
-        lambda branches, _olds: tag_union([b.coalesce(1) for b in branches]),
+        spark, path, list(fragmented), one_task_each=True
     ):
         report.partitions_compacted += 1
         report.files_after += n_files

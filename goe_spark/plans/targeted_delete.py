@@ -34,10 +34,10 @@ from goe_spark.plans.compaction import (
     footer_reader,
     heal_interrupted_swaps,
     rewrite_partitions,
-    tag_union,
 )
 
 FILE_COL = "_goe_src_file"
+
 
 @dataclass
 class DeleteReport:
@@ -156,7 +156,7 @@ def delete_rows(
         spark,
         path,
         dirs,
-        lambda branches, _olds: anti(tag_union(branches)),
+        lambda df, _olds: anti(df),
         deleting=True,
     ):
         report.partitions_affected += 1

@@ -22,7 +22,7 @@ here it is built from stock Spark operators:
 3. ``repartitionByRange(n_files, z)`` + ``sortWithinPartitions(z)``:
    each output file covers a contiguous Morton range, i.e. a small
    hyper-rectangle of the clustered space (a partitioned table: one
-   plan for all P partitions, ``repartitionByRange(n_files*P, part, z)``);
+   plan for all P partitions, ``repartitionByRange`` on (partition, z));
 4. manifest: per-file min/max of the clustered columns, read from the
    footers of the files just written (parquet-mr records the same
    min/max Spark's aggregate returns, NaN included), else one
@@ -67,11 +67,11 @@ from goe_spark.plans.compaction import (
     FooterFacts,
     _data_files,
     _nan_last,
+    file_dir,
     footer_facts,
     heal_interrupted_swaps,
     partition_dirs,
     rewrite_partitions,
-    tag_union,
 )
 from goe_spark.plans.metadata import atomic_write_json
 
@@ -232,7 +232,7 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-    (manifest,) = _write_manifests(df.sparkSession, schema, cols, [path])
+    (manifest,) = _write_manifests(df.sparkSession, cols, [path])
     return ZorderReport(
         n_files=len(manifest), cols=list(cols), manifest_path=_mpath(path)
     )
@@ -318,19 +318,22 @@ def _mpath(path: str) -> str:
 
 
 def _write_manifests(
-    spark: SparkSession, schema: StructType, cols: list[str], dirs: list[str]
+    spark: SparkSession, cols: list[str], dirs: list[str]
 ) -> list[dict[str, dict[str, list]]]:
     """Write and return each directory's manifest, from the footers of
-    its files, which hold ``schema``; when some footer cannot answer,
-    from one aggregate over all ``dirs``, read without inference."""
+    its files; when some footer cannot answer, from one aggregate over
+    all ``dirs``, read with the Spark schema the footers record."""
+    facts = [footer_facts(d, _data_files(d), cols) for d in dirs]
     manifests = [
-        _footer_manifest(schema, cols, footer_facts(d, _data_files(d), cols).bounds)
-        for d in dirs
+        f.schema and _footer_manifest(f.schema, cols, f.bounds) for f in facts
     ]
     if None in manifests:
-        reader = spark.read.schema(schema)
-        got = _spark_manifests(tag_union([reader.parquet(d) for d in dirs]), cols)
-        manifests = [got.get(i, {}) for i in range(len(dirs))]
+        schema = next((f.schema for f in facts if f.schema), None)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        index = {os.path.basename(d): i for i, d in enumerate(dirs)}
+        manifests = [{} for _ in dirs]
+        for uri, bounds in _spark_manifest(reader.parquet(*dirs), cols).items():
+            manifests[index[file_dir(uri)]][os.path.basename(uri)] = bounds
     for d, manifest in zip(dirs, manifests):
         atomic_write_json(_mpath(d), manifest)
     return manifests
@@ -394,37 +397,36 @@ def build_manifest(
     engine-side recompute that keeps those semantics testable. Bounds
     are stored on the RANK scale (epoch days/micros for temporal
     columns) so JSON stays typed-neutral."""
-    manifest = _spark_manifests(tag_union([spark.read.parquet(path)]), cols).get(0, {})
+    manifest = {
+        os.path.basename(uri): bounds
+        for uri, bounds in _spark_manifest(spark.read.parquet(path), cols).items()
+    }
     atomic_write_json(_mpath(path), manifest)
     return manifest
 
 
-def _spark_manifests(
+def _spark_manifest(
     df: DataFrame, cols: list[str]
-) -> dict[int, dict[str, dict[str, list]]]:
-    """{PART: manifest} of a ``tag_union`` of reads: one aggregate
-    grouped on the branch and input_file_name (a file name alone can
-    repeat across partition directories)."""
+) -> dict[str, dict[str, list]]:
+    """{input_file_name: {col: [min, max]}}: one aggregate grouped on
+    the file."""
     schema = df.schema
     per_file = (
         df.selectExpr(
-            PART,
             f"input_file_name() AS {_FILE}",
             *[f"{_rankable(schema, c)} AS {quote(c)}" for c in cols],
         )
-        .groupBy(PART, _FILE)
+        .groupBy(_FILE)
         .agg(
             *[F.min(c).alias(f"lo_{c}") for c in cols],
             *[F.max(c).alias(f"hi_{c}") for c in cols],
         )
         .collect()
     )
-    out: dict[int, dict[str, dict[str, list]]] = {}
-    for r in per_file:
-        out.setdefault(r[PART], {})[os.path.basename(r[_FILE])] = {
-            c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols
-        }
-    return out
+    return {
+        r[_FILE]: {c: [r[f"lo_{c}"], r[f"hi_{c}"]] for c in cols}
+        for r in per_file
+    }
 
 
 def prune_files(
@@ -491,12 +493,14 @@ def zorder_partitioned_table(
     Morton curve behind compaction's marker swaps: partition pruning
     stays native and each partition's manifest skips files within it.
     One plan covers all P partitions (``rewrite_partitions``): ranks
-    are table-wide, then ``repartitionByRange(n_files * P, partition,
-    z)``. A range can straddle two partitions, so a partition holds its
-    row share of the ranges plus one: at most ``n_files + 1`` files on
-    equal partitions. Fresh manifests are written after the swaps; a
-    crash in between leaves a manifest-less partition, read unpruned
-    by read_pruned_partitioned until the next pass."""
+    are table-wide, then ``repartitionByRange`` on (partition, z) into
+    equal-depth ranges, as many as put ``n_files`` of them in the
+    largest partition (``n_files * P`` on equal partitions). A range
+    can straddle two partitions, so a partition holds at most about
+    ``n_files + 1`` files; one with a small share of the rows holds
+    fewer. Fresh manifests are written after the swaps; a crash in
+    between leaves a manifest-less partition, read unpruned by
+    read_pruned_partitioned until the next pass."""
     report = PartitionedZorderReport()
     report.partitions_healed = len(heal_interrupted_swaps(path))
     dirs = partition_dirs(path, partition_col)
@@ -505,16 +509,15 @@ def zorder_partitioned_table(
             f"{path} has no {partition_col}= partition directories; "
             "use write_zordered for flat tables"
         )
-    schema: StructType | None = None
 
-    def plan(branches: list[DataFrame], olds: list[FooterFacts]) -> DataFrame:
-        nonlocal schema
-        df = tag_union(branches)
-        schema = next((o.schema for o in olds if o.schema), None) or df.schema
-        old = [_footer_manifest(schema, cols, o.bounds) for o in olds]
+    def plan(df: DataFrame, olds: list[FooterFacts]) -> DataFrame:
+        old = [_footer_manifest(df.schema, cols, o.bounds) for o in olds]
+        rows = [o.rows for o in olds]
+        # Equal-depth ranges sized so the largest partition spans n_files.
+        ranges = max(1, n_files * sum(rows) // (max(rows) or 1))
         return (
-            _z_frame(df, schema, cols, rank, None if None in old else old)
-            .repartitionByRange(n_files * len(branches), PART, "__z")
+            _z_frame(df, df.schema, cols, rank, None if None in old else old)
+            .repartitionByRange(ranges, PART, "__z")
             .sortWithinPartitions(PART, "__z")
             .drop("__z")
         )
@@ -522,7 +525,7 @@ def zorder_partitioned_table(
     done = rewrite_partitions(spark, path, dirs, plan, bounds_cols=cols)
     report.partitions_rewritten = len(done)
     report.files_after = sum(n for *_, n in done)
-    _write_manifests(spark, schema, cols, [os.path.join(path, d) for d, *_ in done])
+    _write_manifests(spark, cols, [os.path.join(path, d) for d, *_ in done])
     return report
 
 

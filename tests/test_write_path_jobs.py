@@ -245,11 +245,23 @@ def _fragmented(spark, root, n_parts):
 def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
     """Bloom, compaction, a delete of one key in every partition and
     zorder each run one plan for all the partitions they touch: at 40
-    partitions they run at most the jobs they run at 4, plus one of
-    slack for the parallel listing job Spark runs for a read of more
-    than 32 paths. One pipeline per partition ran 2 jobs per partition
-    for bloom, 1 for compaction and delete, and 3 for zorder."""
+    partitions they run at most the jobs they run at 4, not counting
+    the parallel listing job Spark runs for each read of more than 32
+    paths. One pipeline per partition ran 2 jobs per partition for
+    bloom, 1 for compaction and delete, and 3 for zorder. Compaction
+    runs one task per partition."""
     from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def listing(job):
+        desc = store.job(job).description()
+        return desc.isDefined() and desc.get().startswith("Listing leaf files")
+
+    def tasks(job):
+        info = sc.statusTracker().getJobInfo(job)
+        return [sc.statusTracker().getStageInfo(s).numTasks for s in info.stageIds]
 
     def jobs(n_parts):
         root = str(tmp_path / f"p{n_parts}")
@@ -257,22 +269,26 @@ def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
         counts = {}
         with tagged_jobs(spark) as ids:
             assert build_bloom_manifest_partitioned(spark, root, ["k", "x"]) == n_parts
-        counts["bloom"] = len(ids)
+        counts["bloom"] = ids
         with tagged_jobs(spark) as ids:
             rep = compact_partitioned_table(spark, root)
         assert rep.partitions_compacted == rep.files_after == n_parts
-        counts["compact"] = len(ids)
+        assert [tasks(j) for j in ids] == [[n_parts]]
+        counts["compact"] = ids
         with tagged_jobs(spark) as ids:
             rep = delete_rows(spark, root, "id", list(range(n_parts)))
         assert rep.partitions_affected == rep.rows_deleted == n_parts
-        counts["delete"] = len(ids)
+        counts["delete"] = ids
         with tagged_jobs(spark) as ids:
             rep = zorder_partitioned_table(spark, root, ["k", "x"], n_files=2)
         assert rep.partitions_rewritten == n_parts
-        counts["zorder"] = len(ids)
+        counts["zorder"] = ids
         assert spark.read.parquet(root).count() == 49 * n_parts
         return counts
 
+    def work(ids):
+        return len([j for j in ids if not listing(j)])
+
     few, many = jobs(4), jobs(40)
-    for verb, n in few.items():
-        assert many[verb] <= n + 1, (verb, few, many)
+    for verb in few:
+        assert work(many[verb]) <= work(few[verb]), (verb, few, many)

@@ -277,6 +277,36 @@ def test_partitioned_zorder_heals_crashed_swap(spark, offloaded_orders):
     assert not os.path.exists(_marker_path(target, d))
 
 
+def test_partitioned_zorder_files_per_partition_on_skew(spark, tmp_path):
+    """The range count is set by the largest partition, so one holding
+    most of the rows gets about ``n_files`` files, not its row share of
+    ``n_files`` per partition, and no partition more than
+    ``n_files + 1``. Content and every manifest stay exact."""
+    import json
+    import os
+
+    from goe_spark.plans.compaction import _data_files, partition_dirs
+    from goe_spark.plans.zorder import _mpath, zorder_partitioned_table
+
+    target = str(tmp_path / "t")
+    spark.range(1000).selectExpr(
+        "id",
+        "CAST(id * 37 % 1000 AS DOUBLE) AS x",
+        "CASE WHEN id < 850 THEN 'big' WHEN id < 950 THEN 'mid' ELSE 'small' "
+        "END AS goe_part_key",
+    ).repartition(3).write.partitionBy("goe_part_key").parquet(target)
+    before = sorted(spark.read.parquet(target).collect())
+    rep = zorder_partitioned_table(spark, target, ["id", "x"], n_files=4)
+    assert rep.partitions_rewritten == 3
+    for d in partition_dirs(target):
+        full = os.path.join(target, d)
+        assert len(_data_files(full)) <= 5, d
+        with open(_mpath(full)) as fh:
+            written = json.load(fh)
+        assert written == build_manifest(spark, full, ["id", "x"])
+    assert sorted(spark.read.parquet(target).collect()) == before
+
+
 # --- manifests from parquet footers ---------------------------------------
 
 
