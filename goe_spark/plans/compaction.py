@@ -1,26 +1,24 @@
-"""Small-file compaction for offloaded targets.
+"""Small-file compaction for offloaded targets, and the partition
+rewrite every maintenance verb shares.
 
 Incremental offloads append; every chunk writes its own files into
 each partition, so a long-running migration fragments the target
-(the classic small-file problem: file-listing latency, tiny row
-groups, scan task overhead). The reference leans on the warehouse to
-manage storage; a parquet-on-DFS backend has to do it itself.
+(file-listing latency, tiny row groups, scan task overhead). The
+reference leans on the warehouse to manage storage; a parquet-on-DFS
+backend has to do it itself. Selection is metadata-only (file
+listing): only partitions over the file-count threshold are rewritten,
+each to one file; the others keep their files byte-identical.
 
-Spark-first design: selection is metadata-only (file listing, no data
-read); only partitions whose file count exceeds the threshold are
-rewritten, each down to one file, and untouched partitions keep their
-files byte-identical.
-
-Every partition rewrite (compaction, targeted delete, partitioned
-zorder) is one Spark write for all its partitions
+Every partition rewrite (compaction, targeted delete, keyed merge,
+partitioned zorder) is one Spark write for all its partitions
 (``rewrite_partitions``): the directories are read in one scan, each
-row tagged with its directory's index (from input_file_name()), and
-written ``partitionBy`` that index into one DOT-PREFIXED temp tree
-(invisible to Spark readers and the partition scan), so directory
-names never pass through partition-value parsing. Compaction reads
-each directory in its own task instead, so each gets one file with no
-shuffle. Schemas and row checks come from the footers: no inference
-or counts.
+row tagged with its directory's index (from input_file_name(); a
+merge's staged rows by their directory's name), and written
+``partitionBy`` that index into one DOT-PREFIXED temp tree (invisible
+to Spark readers and the partition scan), so directory names never
+pass through partition-value parsing. Compaction reads each directory
+in its own task, so each gets one file with no shuffle. Schemas and
+exact row checks come from the footers: no inference or counts.
 
 Crash safety (directories cannot be renamed atomically over data):
 each subtree moves to its partition's temp dir, a swap marker per
@@ -28,11 +26,9 @@ partition recording the old file list is written atomically, and only
 then are old files deleted and new ones moved in; each marker goes
 last. Every run begins by HEALING: a marker on disk means a crash
 interrupted a swap, which the heal completes; the temp tree and
-marker-less temp dirs predate the markers and are discarded.
-
-At 100 TB you run this as a background janitor over partitions the
-chunker has finished with (HWM-closed partitions never receive new
-appends, so compaction and ingest don't race).
+marker-less temp dirs predate the markers and are discarded. At
+100 TB compaction runs as a background janitor over HWM-closed
+partitions, which never receive appends, so it and ingest don't race.
 """
 
 from __future__ import annotations
@@ -49,6 +45,7 @@ from dataclasses import dataclass, field
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from goe_spark.plans.metadata import atomic_write_json
@@ -57,6 +54,7 @@ from goe_spark.sinks.backend_writer import is_dfs_uri
 # Footer key holding the Spark schema a file was written with.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 PART = "__goe_part"  # a rewritten directory's index; the temp tree's partition
+DIR = "__goe_dir"  # an added row's directory, by its on-disk name
 _TREE = ".compact_tree"
 
 
@@ -122,15 +120,13 @@ def _complete_swap(path: str, d: str, old_files: list[str]) -> int:
         if os.path.exists(p):
             os.remove(p)
     if os.path.isdir(tmp):
+        os.makedirs(full, exist_ok=True)  # a partition the swap adds
         for f in _data_files(tmp):
             shutil.move(os.path.join(tmp, f), os.path.join(full, f))
         shutil.rmtree(tmp)
-    # Any rewrite through this swap (compaction, targeted delete,
-    # merge, zorder-partitioned) invalidates the partition's bloom
-    # and zorder manifests: the files they described are gone (a
-    # stale zorder manifest would list deleted files and miss new
-    # ones). Rebuild with `cli bloom` / `cli zorder` after
-    # maintenance; zorder writes its fresh one right after its swap.
+    # A swap invalidates the partition's bloom and zorder manifests
+    # (they describe gone files and miss new ones): rebuild with `cli
+    # bloom` / `cli zorder`; zorder writes its own after its swaps.
     from goe_spark.plans.bloom_skip import BLOOM_MANIFEST_NAME
     from goe_spark.plans.zorder import MANIFEST_NAME
 
@@ -315,77 +311,85 @@ def rewrite_partitions(
     path: str,
     dirs: list[str],
     plan: Callable[[DataFrame, list[FooterFacts]], DataFrame] = lambda df, _: df,
-    deleting: bool = False,
+    delta: dict[str, int] | None = None,
+    added: DataFrame | None = None,
     bounds_cols=(),
     one_task_each: bool = False,
-) -> list[tuple[str, int, int, int]]:
-    """Rewrite the partition directories ``dirs`` holding data files in
-    one Spark write, behind the marker swaps; the caller heals first.
-    ``plan(df, olds)`` maps ``df`` (every directory's rows, read in one
-    scan with the columns its footers record and tagged ``PART`` = the
-    directory's index among those rewritten) to the rows to write,
-    still tagged; ``olds[i]`` are the i-th directory's old footer facts
-    (with min/max of ``bounds_cols``). ``one_task_each`` reads each
-    directory in one task instead: one file per partition, with no
-    shuffle and no sort. New footer row counts must equal the old, or
-    be lower when ``deleting`` (equal: no swap). Returns (dir, rows
-    before, rows after, data files after) of each swap."""
-    pending = []  # (dir, old files, old footer facts)
-    for d in dirs:
-        full = os.path.join(path, d)
-        if files := _data_files(full):
-            pending.append((d, files, footer_facts(full, files, bounds_cols)))
-    if not pending:
+) -> list[tuple[str, int]]:
+    """Rewrite partition directories in one Spark write, behind the
+    marker swaps; the caller heals first. ``plan(df, olds)`` maps ``df``
+    (the rows of ``dirs``, read in one scan with the columns their
+    footers record and tagged ``PART`` = the directory's index among
+    those holding data files) to the rows to write, still tagged;
+    ``olds[i]`` are the i-th one's old footer facts (with min/max of
+    ``bounds_cols``). ``one_task_each`` reads each directory in one
+    task: one file per partition, with no shuffle and no sort. ``added``
+    rows join the write in the directory their ``DIR`` column names; one
+    outside ``dirs`` keeps its old files. The rows written to ``d`` must
+    be its old rows (0 if not read) plus ``delta[d]`` (default 0).
+    Returns (dir, data files after) of each swap."""
+    delta = delta or {}
+    pending = [  # (dir, old files, old footer facts) of each directory read
+        (d, files, footer_facts(os.path.join(path, d), files, bounds_cols))
+        for d in dirs
+        if (files := _data_files(os.path.join(path, d)))
+    ]
+    read = {d for d, _, _ in pending}
+    new = [(d, [], FooterFacts(0, None, None)) for d in delta if d not in read]
+    targets = pending + new
+    if not targets:
         return []
-    olds = [old for _, _, old in pending]
-    schema = _merged_schema(olds)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    paths = [os.path.join(path, d) for d, _, _ in pending]
-    tree = os.path.join(path, _TREE)
-    if one_task_each:
-        df = functools.reduce(
-            DataFrame.unionByName,
-            (
-                reader.parquet(p).coalesce(1).selectExpr("*", f"{i} AS {PART}")
-                for i, p in enumerate(paths)
-            ),
-        )
-    else:  # the write sorts each task's rows (one input split) on PART
-        df = reader.parquet(*paths)
-        index = _dir_index(df, [d for d, _, _ in pending])
-        df = df.selectExpr("*", f"{index} AS {PART}")
-    with _streaming_write(spark) if one_task_each else contextlib.nullcontext():
-        plan(df, olds).write.mode("overwrite").partitionBy(PART).parquet(tree)
-    if os.path.exists(os.path.join(tree, f"{PART}=-1")):
-        shutil.rmtree(tree)  # the row checks would count its partition short
-        raise RuntimeError(f"rows of {path} not traced to their directory")
-    swaps = []
-    for i, (d, old_files, old) in enumerate(pending):
-        tmp, sub = _tmp_dir(path, d), os.path.join(tree, f"{PART}={i}")
-        if os.path.isdir(sub):
-            os.rename(sub, tmp)
-        else:  # every row of the partition was deleted
-            os.mkdir(tmp)
-        rows = footer_facts(tmp, _data_files(tmp)).rows
-        if (rows >= old.rows) if deleting else (rows != old.rows):
-            shutil.rmtree(tmp)
-            if deleting and rows == old.rows:
-                continue  # nothing deleted here: keep the old files
-            raise RuntimeError(  # pragma: no cover - defensive
-                f"rewrite of {d} went from {old.rows} to {rows} rows"
+    parts = []
+    if pending:
+        olds = [old for _, _, old in pending]
+        schema = _merged_schema(olds)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        paths = [os.path.join(path, d) for d, _, _ in pending]
+        if one_task_each:
+            df = functools.reduce(
+                DataFrame.unionByName,
+                (
+                    reader.parquet(p).coalesce(1).selectExpr("*", f"{i} AS {PART}")
+                    for i, p in enumerate(paths)
+                ),
             )
-        swaps.append((d, old_files, old.rows, rows))
+        else:  # the write sorts each task's rows (one input split) on PART
+            df = reader.parquet(*paths)
+            index = _dir_index(df, [d for d, _, _ in pending])
+            df = df.selectExpr("*", f"{index} AS {PART}")
+        parts.append(plan(df, olds))
+    if added is not None:
+        names = F.array(*[F.lit(d) for d, _, _ in targets])
+        index = F.coalesce(F.array_position(names, F.col(DIR)), F.lit(0)) - 1
+        parts.append(added.withColumn(PART, index.cast("int")).drop(DIR))
+    tree = os.path.join(path, _TREE)
+    union = functools.partial(DataFrame.unionByName, allowMissingColumns=True)
+    with _streaming_write(spark) if one_task_each else contextlib.nullcontext():
+        functools.reduce(union, parts).write.mode("overwrite").partitionBy(
+            PART
+        ).parquet(tree)
+    # Every directory's rows are checked before any is touched: a lost
+    # or misrouted row (untraced ones go to PART -1) fails here, with no
+    # marker armed.
+    subs = [os.path.join(tree, f"{PART}={i}") for i in range(len(targets))]
+    rows = [
+        footer_facts(s, _data_files(s)).rows if os.path.isdir(s) else 0 for s in subs
+    ]
+    want = [old.rows + delta.get(d, 0) for d, _, old in targets]
+    if rows != want:
+        shutil.rmtree(tree)
+        raise RuntimeError(f"rows of {path} lost or misrouted: {rows}, not {want}")
+    for (d, _, _), sub in zip(targets, subs):
+        os.makedirs(sub, exist_ok=True)  # a partition left with no rows
+        os.rename(sub, _tmp_dir(path, d))
     shutil.rmtree(tree)
     # Every marker BEFORE any partition is touched: from here a crash
     # at any point is completed by the next run's heal.
-    for d, old_files, _, _ in swaps:
+    for d, old_files, _ in targets:
         atomic_write_json(
             _marker_path(path, d), {"partition": d, "old_files": old_files}
         )
-    return [
-        (d, before, after, _complete_swap(path, d, old_files))
-        for d, old_files, before, after in swaps
-    ]
+    return [(d, _complete_swap(path, d, old_files)) for d, old_files, _ in targets]
 
 
 def heal_interrupted_swaps(path: str) -> list[str]:
@@ -432,7 +436,7 @@ def compact_partitioned_table(
             fragmented[d] = n
         else:
             report.files_after += n
-    for d, _, _, n_files in rewrite_partitions(
+    for d, n_files in rewrite_partitions(
         spark, path, list(fragmented), one_task_each=True
     ):
         report.partitions_compacted += 1

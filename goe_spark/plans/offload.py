@@ -91,7 +91,6 @@ class OffloadConfig:
     partition: PartitionSpec | None = None
     offload_predicate: str | None = None  # DSL text (PBO)
     hwm: object | None = None  # RANGE: offload up to this synthetic value
-    verify_aggregates: bool = True
     # User --<type>-columns controls (types/controls.ColumnControls);
     # they take precedence over the automatic canonical mapping.
     column_controls: object | None = None

@@ -2,19 +2,19 @@
 offloaded parquet target — the lakehouse DELETE the reference
 delegates to its warehouse backend.
 
-Spark-first shape: deletion is two phases. Phase 1 finds the
-partition DIRECTORIES that contain any doomed key — one aggregate
-over a scan with the key set applied, collecting `input_file_name()`
-of matching rows and counting the distinct matched keys, so the
-affected set is exact file-system truth (no reconstruction of
-directory names from partition values, which breaks on type-inferred
-reads: lpad-padded numerics, Hive-escaped characters,
-__HIVE_DEFAULT_PARTITION__). Phase 2 rewrites ONLY those directories
-with the key anti-filter through compaction's rewrite_partitions (one
-write job for all of them, footer row counts, marker-driven
-crash-safe swaps), so untouched partitions stay byte-identical. At
-100 TB a delete of k keys reads and writes O(affected partitions),
-never a table rewrite, in a fixed number of Spark jobs.
+Spark-first shape: one keyed rewrite (``keyed_rewrite``, which merge
+runs too, adding its staged rows to the write) in two phases. Phase 1
+finds the partition DIRECTORIES holding any doomed key — one aggregate
+over a scan with the key set applied, collecting the matched rows and
+keys of each `input_file_name()` — so the affected set is file-system
+truth (no directory names rebuilt from type-inferred partition values:
+padded numerics, Hive escaping, __HIVE_DEFAULT_PARTITION__). Phase 2
+rewrites ONLY those directories with the key anti-filter in one
+compaction.rewrite_partitions write, each directory's row count
+checked to be exactly old minus matched before any swap, so untouched
+partitions stay byte-identical and a lost subtree fails instead of
+passing as "every row deleted". At 100 TB a delete of k keys reads and
+writes O(affected partitions) in a fixed number of Spark jobs.
 
 Crash safety is compaction's: temp tree -> temp dirs -> every marker
 -> swaps -> unmark, healed on the next run. A crash before the markers
@@ -24,6 +24,7 @@ crash after them is completed by the heal.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,10 +45,8 @@ class DeleteReport:
     partitions_affected: int = 0
     partitions_healed: int = 0
     rows_deleted: int = 0
-    # Distinct doomed keys actually present in the table — rows_deleted
-    # can exceed this when a key has several physical row versions
-    # (e.g. healing a crashed merge); merge accounting needs the
-    # distinct-key truth.
+    # Distinct doomed keys present, for merge accounting: rows_deleted
+    # exceeds it when a key has several physical row versions.
     keys_matched: int = 0
     details: list = field(default_factory=list)  # (partition, deleted)
 
@@ -87,81 +86,19 @@ def delete_rows(
     maintenance, mirroring the bloom-manifest drop — so the next
     ensure_* neither serves deleted rows nor full-rebuilds an index
     this pass already fixed."""
-    report = DeleteReport()
-    report.partitions_healed = len(heal_interrupted_swaps(path))
-
+    healed = len(heal_interrupted_swaps(path))
     sources = [path]
     if use_bloom and not isinstance(keys, DataFrame):
         from goe_spark.plans.bloom_skip import prune_partitioned_bloom_in
 
-        sources, _total = prune_partitioned_bloom_in(
-            path, key_column, list(keys)
-        )
-        if not sources:
-            return report  # no file can hold any doomed key
-    table = (
-        footer_reader(spark, sources[0])
-        .option("basePath", path)
-        .parquet(*sources)
-    )
-    if partition_col not in table.columns:
-        raise ValueError(
-            f"{path} is not partitioned by {partition_col!r}; targeted "
-            "delete needs the partition layout to bound the rewrite"
-        )
-    # The provenance column is projected AT SCAN TIME: input_file_name()
-    # is task-local and reads '' when first referenced above a join.
-    table = table.withColumn(FILE_COL, F.input_file_name())
-
+        sources, _ = prune_partitioned_bloom_in(path, key_column, list(keys))
+        if not sources:  # no file can hold any doomed key
+            return DeleteReport(partitions_healed=healed)
+    table = read_partitioned(spark, path, partition_col, sources)
     if isinstance(keys, DataFrame):
-        keys = (
-            keys.select(F.col(key_column))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        matches = table.join(keys, key_column, "left_semi")
-
-        def anti(df):
-            return df.join(keys, key_column, "left_anti")
-
-    else:
-        key_list = list(keys)
-        matches = table.where(F.col(key_column).isin(key_list))
-
-        def anti(df):
-            # NULL-key rows are never doomed: bare ~isin is NULL for
-            # them (three-valued logic) and where() would silently
-            # drop innocent rows from every rewritten partition — the
-            # left_anti path keeps them, so this path must too.
-            return df.where(
-                ~F.col(key_column).isin(key_list)
-                | F.col(key_column).isNull()
-            )
-
-    # One aggregate: the distinct doomed keys present (matches hold no
-    # NULL key) and the files holding them.
-    report.keys_matched, files = matches.agg(
-        F.countDistinct(key_column), F.collect_set(FILE_COL)
-    ).first()
-    if not all(files):  # pragma: no cover - defensive
-        raise RuntimeError("input_file_name lost provenance above a join")
-    dirs = sorted({file_dir(f) for f in files})
-    for d in dirs:
-        if not d.startswith(f"{partition_col}="):
-            # A matching file NOT under a partition dir means the
-            # layout assumption is wrong — refuse rather than skip.
-            raise ValueError(f"matched file outside the partition layout: {d!r}")
-    # One write for all affected partitions; the swaps drop stale manifests.
-    for d, before, after, _ in rewrite_partitions(
-        spark,
-        path,
-        dirs,
-        lambda df, _olds: anti(df),
-        deleting=True,
-    ):
-        report.partitions_affected += 1
-        report.rows_deleted += before - after
-        report.details.append((d, before - after))
+        keys = keys.select(key_column).distinct().localCheckpoint(eager=True)
+    report = keyed_rewrite(spark, path, table, key_column, keys, partition_col)
+    report.partitions_healed = healed
     if maintain_indexes:
         from goe_spark.operators.index_maintenance import evict_keys
 
@@ -174,3 +111,84 @@ def delete_rows(
         for idx_dir in maintain_indexes:
             evict_keys(spark, idx_dir, keys, key_column)
     return report
+
+
+def read_partitioned(
+    spark: SparkSession, path: str, partition_col: str, sources=None
+) -> DataFrame:
+    """The table at ``path`` (its files under ``sources``, default all)
+    with ``partition_col`` from the directory names."""
+    sources = sources or [path]
+    table = footer_reader(spark, sources[0]).option("basePath", path).parquet(*sources)
+    if partition_col not in table.columns:
+        raise ValueError(
+            f"{path} is not partitioned by {partition_col!r}; a keyed "
+            "rewrite needs the partition layout to bound it"
+        )
+    return table
+
+
+def keyed_rewrite(
+    spark: SparkSession,
+    path: str,
+    table: DataFrame,
+    key_column: str,
+    keys: list | DataFrame,
+    partition_col: str,
+    added: tuple[DataFrame, dict[str, int]] | None = None,
+) -> DeleteReport:
+    """Rewrite each directory of ``table`` (read from ``path``) holding
+    a key in ``keys`` (a list, or a DataFrame that reads the same keys
+    every time) without those keys' rows, and add the rows of ``added``
+    = (rows tagged ``DIR``, {directory: rows}), in one write; the
+    caller heals first."""
+    # The provenance column is projected AT SCAN TIME: input_file_name()
+    # is task-local and reads '' when first referenced above a join.
+    table = table.withColumn(FILE_COL, F.input_file_name())
+    if isinstance(keys, DataFrame):
+        matches = table.join(keys, key_column, "left_semi")
+
+        def anti(df):
+            return df.join(keys, key_column, "left_anti")
+
+    else:
+        key_list = [k for k in keys if k is not None]  # NULL matches nothing
+        matches = table.where(F.col(key_column).isin(key_list))
+
+        def anti(df):
+            # NULL-key rows are never doomed (left_anti keeps them too);
+            # bare ~isin is NULL for them, and where() would drop them.
+            key = F.col(key_column)
+            return df.where(~key.isin(key_list) | key.isNull())
+
+    # One aggregate: the matched rows and keys of each file (bounded by
+    # the key count; matches hold no NULL key).
+    matched, present = Counter(), set()
+    for f, n, file_keys in (
+        matches.groupBy(FILE_COL)
+        .agg(F.count(F.lit(1)), F.collect_set(key_column))
+        .collect()
+    ):
+        if not f:  # pragma: no cover - defensive
+            raise RuntimeError("input_file_name lost provenance above a join")
+        d = file_dir(f)
+        if not d.startswith(f"{partition_col}="):
+            # A matching file NOT under a partition dir means the
+            # layout assumption is wrong — refuse rather than skip.
+            raise ValueError(f"matched file outside the partition layout: {d!r}")
+        matched[d] += n
+        present.update(file_keys)
+    dirs = sorted(matched)
+    rows, per_dir = added or (None, {})
+    delta = Counter(per_dir)
+    delta.subtract(matched)
+    # One write for all affected partitions; the swaps drop stale manifests.
+    rewrite_partitions(
+        spark, path, dirs, lambda df, _olds: anti(df), delta=delta, added=rows
+    )
+    return DeleteReport(
+        partitions_affected=len(dirs),
+        rows_deleted=sum(matched.values()),
+        keys_matched=len(present),
+        details=[(d, matched[d]) for d in dirs],
+    )

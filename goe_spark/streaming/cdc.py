@@ -7,8 +7,11 @@ reference extracts Oracle changes and replays insert/update/delete
 against the backend) with the repo's streaming path: a Structured
 Streaming source of change rows is applied micro-batch by micro-batch
 through ``plans/merge_update.merge_rows`` (upserts) and
-``plans/targeted_delete.delete_rows`` (deletes), both of which rewrite
-only affected partitions behind a crash-safe marker swap.
+``plans/targeted_delete.delete_rows`` (deletes). Both are one keyed
+rewrite behind crash-safe marker swaps: delete rewrites the partitions
+holding doomed keys without them; merge gives the partitions holding
+changed keys their new versions and only adds files to the partitions
+that just gain rows.
 
 Change-row contract: each row carries the full table payload plus
 - ``op_column``   ('I' | 'U' | 'D') — insert/update collapse to the
@@ -25,9 +28,10 @@ Exactly-once into a non-transactional sink, the same contract as
 delivery with stable batch ids; the ledger short-circuits re-delivery
 of committed batches; and a crash INSIDE a batch is healed by
 merge_rows' pending-merge write-ahead (the staged rows are durable
-before any target mutation) plus delete idempotence (deleting absent
-keys is a no-op) — re-applying the same collapsed batch reaches the
-same final state.
+before any target mutation, and the heal reruns the same keyed
+rewrite from them, which replaces every version of a staged key)
+plus delete idempotence (deleting absent keys is a no-op) —
+re-applying the same collapsed batch reaches the same final state.
 
 At scale the per-batch plan is: one shuffle of the (small, CDC-sized)
 batch to collapse per key, then partition-bounded rewrites of only the

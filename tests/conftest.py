@@ -101,3 +101,10 @@ def tagged_jobs(spark):
         jsc = sc._jsc.sc()
         jsc.listenerBus().waitUntilEmpty()
         ids.extend(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def listing(spark, job: int) -> bool:
+    """Whether Spark job ``job`` is one of the parallel listing jobs
+    Spark runs for a read of more than 32 paths."""
+    desc = spark.sparkContext._jsc.sc().statusStore().job(job).description()
+    return desc.isDefined() and desc.get().startswith("Listing leaf files")

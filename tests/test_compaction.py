@@ -5,6 +5,7 @@ untouched."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -251,24 +252,27 @@ def test_heal_completes_every_swap_after_a_crash_mid_way(
     assert _contents(spark, target) == rows
 
 
-def _named_layout(spark, target, layout):
-    """Six files in each of four partitions whose directory names
-    Spark's partition-value parsing would not give back: zero-padded
-    synthetic numbers or escaped strings, plus the Hive NULL dir."""
+def _named_key(layout):
+    """The partition value of row ``id``: names Spark's partition-value
+    parsing would not give back — zero-padded synthetic numbers or
+    escaped strings — plus NULL (the Hive NULL dir), in four
+    directories, and a fifth for ids from 1000 on."""
     from goe_spark.functions.synthetic import synthetic_number_expr
 
-    df = spark.range(400).selectExpr(
-        "id",
-        "CAST(id AS DOUBLE) / 7 AS x",
-        "IF(id % 4 = 3, NULL, id % 4 * 100) AS b",
+    b = F.expr(
+        "CASE WHEN id >= 1000 THEN 400 WHEN id % 4 = 3 THEN NULL ELSE id % 4 * 100 END"
     )
     if layout == "padded":
-        key = synthetic_number_expr("b", 100, digits=5)
-    else:
-        key = F.expr(
-            "CASE b WHEN 0 THEN 'a/b' WHEN 100 THEN 'x:y' WHEN 200 THEN 'c=d' END"
-        )
-    df = df.withColumn("goe_part_key", key).drop("b")
+        return synthetic_number_expr(b, 100, digits=5)
+    names = {0: "a/b", 100: "x:y", 200: "c=d", 400: "e%f"}
+    pairs = [F.lit(x) for kv in names.items() for x in kv]
+    return F.element_at(F.create_map(*pairs), b)
+
+
+def _named_layout(spark, target, layout):
+    """Six files in each of the four partitions of ``_named_key``."""
+    df = spark.range(400).selectExpr("id", "CAST(id AS DOUBLE) / 7 AS x")
+    df = df.withColumn("goe_part_key", _named_key(layout))
     for _ in range(2):
         df.repartition(3).write.mode("append").partitionBy(
             "goe_part_key"
@@ -276,18 +280,24 @@ def _named_layout(spark, target, layout):
 
 
 @pytest.mark.parametrize("layout", ["padded", "escaped"])
-@pytest.mark.parametrize("verb", ["compact", "delete", "zorder"])
+@pytest.mark.parametrize("verb", ["compact", "delete", "zorder", "merge"])
 def test_rewrites_keep_directory_names(spark, tmp_path, layout, verb):
-    """Compaction, delete and zorder write every partition through one
-    index-tagged temp tree, so each directory keeps its exact name."""
+    """Compaction, delete, zorder and merge write every partition
+    through one index-tagged temp tree, so each directory keeps its
+    exact name; a partition merge adds gets the name Spark's own
+    partition writer gives its value."""
+    from types import SimpleNamespace
+
     from goe_spark.plans.compaction import partition_dirs
+    from goe_spark.plans.merge_update import merge_rows
     from goe_spark.plans.targeted_delete import delete_rows
     from goe_spark.plans.zorder import zorder_partitioned_table
 
     target = str(tmp_path / "t")
     _named_layout(spark, target, layout)
     dirs, rows = partition_dirs(target), _contents(spark, target)
-    assert len(dirs) == 4 and "goe_part_key=__HIVE_DEFAULT_PARTITION__" in dirs
+    null_dir = "goe_part_key=__HIVE_DEFAULT_PARTITION__"
+    assert len(dirs) == 4 and null_dir in dirs
     if verb == "compact":
         assert compact_partitioned_table(spark, target).partitions_compacted == 4
     elif verb == "delete":
@@ -295,6 +305,24 @@ def test_rewrites_keep_directory_names(spark, tmp_path, layout, verb):
         rep = delete_rows(spark, target, "id", doomed)
         assert rep.partitions_affected == 4
         rows = {d: [i for i in ids if i not in doomed] for d, ids in rows.items()}
+    elif verb == "merge":
+        # Without the NULL directory the merge adds one of each kind:
+        # NULL (id 3) and the fifth name (id 1000).
+        shutil.rmtree(os.path.join(target, null_dir))
+        del rows[null_dir]
+        updates = spark.createDataFrame(
+            [(ids[0], -1.0) for ids in rows.values()] + [(3, -1.0), (1000, -1.0)],
+            "id long, x double",
+        )
+        spec = SimpleNamespace(expr=lambda: _named_key(layout))
+        rep = merge_rows(spark, target, "id", updates, spec, "goe_part_key")
+        assert rep.partitions_affected == rep.rows_updated == 3
+        assert rep.rows_inserted == 2
+        # Each id was written twice: one version replaces both.
+        rows = {d: ids[:1] + [i for i in ids if i != ids[0]] for d, ids in rows.items()}
+        new_dir = "goe_part_key=" + {"padded": "00400", "escaped": "e%25f"}[layout]
+        rows.update({null_dir: [3], new_dir: [1000]})
+        dirs = sorted(rows)
     else:
         rep = zorder_partitioned_table(spark, target, ["id", "x"], n_files=2)
         assert rep.partitions_rewritten == 4

@@ -346,3 +346,86 @@ def test_merge_maintains_ivf_index(spark, tmp_path):
         .first()["cell"]
     )
     assert got[0]["cell"] == want
+
+
+@pytest.mark.parametrize("k", [0, 2])
+def test_merge_crash_after_markers_heals(spark, offloaded_orders, monkeypatch, k):
+    """A merge that dies after its swap markers are armed, after k of
+    its 4 swaps (an update in place, a row moved out to a new
+    partition, an insert into a partition holding no staged key):
+    heal_target completes the swaps and the merge, reaches the merged
+    table and removes the merge marker and the staging copy."""
+    import datetime
+    import os
+
+    from goe_spark.plans import compaction
+    from goe_spark.plans.heal import heal_target
+    from goe_spark.plans.merge_update import MERGE_MARKER, MERGE_STAGING_DIR
+
+    target, src, spec = offloaded_orders
+    first, moved = src.orderBy("o_orderkey").limit(2).collect()
+    months = {r.o_orderdate.strftime("%Y-%m") for r in (first, moved)}
+    other = (
+        src.where(~F.date_format("o_orderdate", "yyyy-MM").isin(*months))
+        .orderBy("o_orderkey")
+        .first()
+    )
+    new_key = src.agg(F.max("o_orderkey")).first()[0] + 1
+    new_rows = [
+        first.asDict() | {"o_totalprice": -1.0},
+        moved.asDict() | {"o_orderdate": datetime.datetime(2031, 5, 1)},
+        other.asDict() | {"o_orderkey": new_key},
+    ]
+    updates = spark.createDataFrame(new_rows, src.schema)
+    expected = {r.o_orderkey: tuple(r) for r in src.collect() + updates.collect()}
+
+    real_swap, done = compaction._complete_swap, []
+
+    def crash_after_k(*a):
+        if len(done) == k:
+            raise OSError("crash")
+        done.append(real_swap(*a))
+        return done[-1]
+
+    monkeypatch.setattr(compaction, "_complete_swap", crash_after_k)
+    with pytest.raises(OSError, match="crash"):
+        merge_rows(spark, target, "o_orderkey", updates, spec)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(target, MERGE_MARKER))
+
+    healed = heal_target(spark, target)
+    assert healed["merge_healed"] and len(healed["swaps_healed"]) == 4 - k
+    assert not os.path.exists(os.path.join(target, MERGE_MARKER))
+    assert not os.path.exists(os.path.join(target, MERGE_STAGING_DIR))
+    assert [n for n in os.listdir(target) if "compact" in n] == []
+    after = spark.read.parquet(target)
+    got = {r.o_orderkey: tuple(r) for r in after.drop("goe_part_key").collect()}
+    assert after.count() == len(got) == len(expected) and got == expected
+    assert (
+        after.where(F.col("o_orderkey") == moved.o_orderkey).first().goe_part_key
+        == "2031-05"
+    )
+
+
+def test_merge_insert_drops_stale_zorder_manifest(spark, offloaded_orders):
+    """A merge that only adds a row to a zordered partition swaps it
+    like any rewrite, dropping its manifest, so a manifest-pruned read
+    still finds the row. An append left the manifest in place, and the
+    manifest lists only the files it was built from."""
+    from goe_spark.plans.zorder import (
+        read_pruned_partitioned,
+        zorder_partitioned_table,
+    )
+
+    target, src, spec = offloaded_orders
+    zorder_partitioned_table(spark, target, ["o_custkey", "o_totalprice"], n_files=2)
+    row = src.orderBy("o_orderkey").first()
+    new_key = src.agg(F.max("o_orderkey")).first()[0] + 1
+    updates = spark.createDataFrame(
+        [row.asDict() | {"o_orderkey": new_key, "o_custkey": -5}], src.schema
+    )
+    rep = merge_rows(spark, target, "o_orderkey", updates, spec)
+    assert (rep.rows_inserted, rep.partitions_affected) == (1, 0)
+    df, _, _ = read_pruned_partitioned(spark, target, {"o_custkey": (-5, -5)})
+    assert df is not None
+    assert df.where(F.col("o_orderkey") == new_key).count() == 1

@@ -84,6 +84,40 @@ def test_delete_heals_interrupted_swap(spark, offloaded_orders):
     assert not os.path.exists(_tmp_dir(target, part))
 
 
+def test_rewrite_missing_a_directory_raises_and_keeps_it(
+    spark, offloaded_orders, monkeypatch
+):
+    """A rewrite whose output lacks one directory's rows fails the
+    exact row check before any marker is armed: the delete raises and
+    every directory keeps its files, byte-identical. Checked only as
+    'fewer rows', the empty subtree passed as every row deleted and
+    the partition was swapped in empty."""
+    from goe_spark.plans import targeted_delete
+    from goe_spark.plans.compaction import PART
+
+    target, src, _ = offloaded_orders
+    dirs = sorted(d for d in os.listdir(target) if d.startswith("goe_part_key="))
+    keys = [
+        spark.read.parquet(os.path.join(target, d)).first()["o_orderkey"]
+        for d in dirs[:2]
+    ]
+    real = targeted_delete.rewrite_partitions
+
+    def lossy(spark, path, dirs, plan, **kw):
+        def drop_first(df, olds):
+            return plan(df, olds).where(f"{PART} != 0")
+
+        return real(spark, path, dirs, drop_first, **kw)
+
+    monkeypatch.setattr(targeted_delete, "rewrite_partitions", lossy)
+    before = partition_file_map(target)
+    with pytest.raises(RuntimeError, match="rows"):
+        delete_rows(spark, target, "o_orderkey", keys)
+    assert partition_file_map(target) == before
+    assert [n for n in os.listdir(target) if "compact" in n] == []
+    assert spark.read.parquet(target).count() == src.count()
+
+
 def test_delete_from_padded_number_partitions(spark, tmp_path):
     """Digit-padded numeric partition values (goe_part_key=00100) are
     parsed as ints by Spark's partition inference; the directory set
@@ -164,3 +198,16 @@ def test_delete_keeps_innocent_null_key_rows(spark, tmp_path):
     after = spark.read.parquet(target)
     got = sorted((r.id if r.id is not None else -99) for r in after.collect())
     assert got == [-99, 2]  # NULL-key row kept
+
+
+def test_null_in_the_key_list_deletes_nothing_else(spark, tmp_path):
+    """A NULL among the doomed keys matches no row. In the IN list it
+    made ~isin NULL for every other row of a rewritten partition, so
+    the anti-filter dropped them all."""
+    target = str(tmp_path / "nullkey")
+    spark.createDataFrame(
+        [(1, "p"), (2, "p"), (3, "q")], "id long, goe_part_key string"
+    ).write.partitionBy("goe_part_key").parquet(target)
+    rep = delete_rows(spark, target, "id", [1, None])
+    assert (rep.rows_deleted, rep.keys_matched) == (1, 1)
+    assert sorted(r.id for r in spark.read.parquet(target).collect()) == [2, 3]

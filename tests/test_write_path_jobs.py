@@ -11,10 +11,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
 from goe_spark.plans.compaction import compact_partitioned_table
+from goe_spark.plans.merge_update import merge_rows
 from goe_spark.plans.offload import (
     OffloadConfig,
     OffloadPipeline,
@@ -28,7 +30,7 @@ from goe_spark.plans.zorder import (
     zorder_partitioned_table,
 )
 from goe_spark.sinks.backend_writer import ParquetBackendWriter
-from tests.conftest import SF_SMALL, tagged_jobs
+from tests.conftest import SF_SMALL, listing, tagged_jobs
 
 ZCOLS = ["o_custkey", "o_totalprice"]
 
@@ -104,6 +106,29 @@ def test_delete_rewrite_job_budget(spark, offloaded_orders):
     assert len(one) <= 6, len(one)
     assert len(two) - len(one) <= 1, (len(one), len(two))
     assert spark.read.parquet(target).count() == src.count() - 3
+
+
+def test_merge_rewrite_job_budget(spark, offloaded_orders):
+    """A merge stages its batch (one write), counts it on the driver,
+    finds the directories holding its keys with delete's one aggregate
+    and writes every directory it changes in one write: at most 10 jobs
+    besides Spark's listing jobs (6 today). Deleting the old versions
+    through a delete and then appending the batch with a separate
+    partitioned write ran 13."""
+    target, src, spec = offloaded_orders
+    old = src.orderBy("o_orderkey").limit(3).collect()
+    new_key = src.agg(F.max("o_orderkey")).first()[0] + 1
+    updates = spark.createDataFrame(
+        [r.asDict() | {"o_totalprice": -1.0} for r in old]
+        + [old[0].asDict() | {"o_orderkey": new_key}],
+        src.schema,
+    )
+    with tagged_jobs(spark) as ids:
+        rep = merge_rows(spark, target, "o_orderkey", updates, spec)
+    assert (rep.rows_updated, rep.rows_inserted) == (3, 1)
+    work = [j for j in ids if not listing(spark, j)]
+    assert len(work) <= 10, len(work)
+    assert spark.read.parquet(target).count() == src.count() + 1
 
 
 def test_compaction_rewrite_job_budget(spark, offloaded_orders):
@@ -243,8 +268,9 @@ def _fragmented(spark, root, n_parts):
 
 
 def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
-    """Bloom, compaction, a delete of one key in every partition and
-    zorder each run one plan for all the partitions they touch: at 40
+    """Bloom, compaction, a delete of one key in every partition,
+    zorder and a merge of one key in every partition plus one new
+    partition each run one plan for all the partitions they touch: at 40
     partitions they run at most the jobs they run at 4, not counting
     the parallel listing job Spark runs for each read of more than 32
     paths. One pipeline per partition ran 2 jobs per partition for
@@ -253,11 +279,6 @@ def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
     from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
 
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-
-    def listing(job):
-        desc = store.job(job).description()
-        return desc.isDefined() and desc.get().startswith("Listing leaf files")
 
     def tasks(job):
         info = sc.statusTracker().getJobInfo(job)
@@ -284,10 +305,25 @@ def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
         assert rep.partitions_rewritten == n_parts
         counts["zorder"] = ids
         assert spark.read.parquet(root).count() == 49 * n_parts
+        # One key updated in every partition, one row into a new one.
+        updates = spark.range(n_parts, 2 * n_parts + 1).selectExpr(
+            f"IF(id < 2 * {n_parts}, id, 50 * {n_parts}) AS id",
+            "0L AS k",
+            "-1.0D AS x",
+        )
+        spec = SimpleNamespace(
+            expr=lambda: F.expr(f"IF(id < 50 * {n_parts}, id % {n_parts}, {n_parts})")
+        )
+        with tagged_jobs(spark) as ids:
+            rep = merge_rows(spark, root, "id", updates, spec, "goe_part_key")
+        assert rep.partitions_affected == rep.rows_updated == n_parts
+        assert rep.rows_inserted == 1
+        counts["merge"] = ids
+        assert spark.read.parquet(root).count() == 49 * n_parts + 1
         return counts
 
     def work(ids):
-        return len([j for j in ids if not listing(j)])
+        return len([j for j in ids if not listing(spark, j)])
 
     few, many = jobs(4), jobs(40)
     for verb in few:
