@@ -133,6 +133,8 @@ def make_handler(spark):
                         partition_col=spec.get(
                             "partition_column", "goe_part_key"
                         ),
+                        use_bloom=bool(spec.get("use_bloom")),
+                        maintain_indexes=spec.get("maintain_index") or None,
                     )
                     self._reply(
                         200,
@@ -203,6 +205,8 @@ def make_handler(spark):
                         quality_min=float(spec.get("quality_min", 0.5)),
                         token_budget=int(spec.get("token_budget", 150_000)),
                         line_doc_max=int(spec.get("line_doc_max", 2)),
+                        containment_min=float(spec.get("containment_min", 0.9)),
+                        span_min_run=int(spec.get("span_min_run", 1)),
                     )
                     rep = CurationPipeline(spark, cfg).run()
                     self._reply(

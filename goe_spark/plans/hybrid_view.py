@@ -9,45 +9,26 @@ DataFrame whose two sides are sliced by the SAME metadata the offload
 pipeline wrote, so a query during a months-long migration sees every
 row exactly once no matter how far the offload has progressed.
 
-Boundary semantics per offload type:
-- FULL: everything is backend-side; the view is just the backend.
-- RANGE: backend rows are those at/below the HWM by construction;
-  the frontend contributes rows ABOVE the HWM (synthetic partition
-  expression recomputed from metadata — the same expression, so the
-  split is exact).
-- LIST: frontend contributes values not yet in offloaded_high_values.
-- PREDICATE: frontend contributes rows matching NO offloaded
-  predicate.
+Which rows have moved is decided by ``plans/slices.offloaded`` — the
+one place that reads the offload type (FULL, RANGE synthetic or
+native, LIST, PREDICATE), shared with the status report. The backend
+serves the rows inside that boundary; the frontend serves its NULL-safe
+complement, so a row whose boundary condition is NULL (a NULL partition
+key, a predicate that evaluates NULL) stays frontend-side.
 
 Scale: both sides are lazy scans with the boundary filter pushed into
 them (the synthetic expression is a deterministic projection of a
 frontend column; the backend side prunes on its partition column);
-UNION ALL adds no shuffle.
+UNION ALL adds no shuffle. When everything has moved the frontend
+filter folds to FALSE and Spark plans no frontend scan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from goe_spark.plans.metadata import OffloadMetadata
-from goe_spark.plans.offload import SYNTHETIC_COL, PartitionSpec
-
-
-def _synthetic_expr_from_metadata(md: OffloadMetadata):
-    sp = md.synthetic_partition
-    if not sp:
-        raise ValueError(
-            f"{md.owner}.{md.table_name}: RANGE metadata without a "
-            "synthetic partition spec"
-        )
-    spec = PartitionSpec(
-        source_column=sp["source_column"],
-        kind=sp.get("kind", "date"),
-        granularity=sp.get("granularity", "M"),
-        digits=sp.get("digits"),
-    )
-    return spec.expr()
+from goe_spark.plans.slices import offloaded
 
 
 def hybrid_view_df(
@@ -61,82 +42,20 @@ def hybrid_view_df(
     frontend's (the backend's synthetic partition column is internal
     and dropped). ``backend_df`` overrides the parquet read for
     non-file backends (e.g. a live JDBC warehouse table read through
-    ``spark.read.jdbc`` — pass it with lower-cased columns)."""
+    ``spark.read.jdbc`` — pass it with lower-cased columns).
+
+    The backend filter matters under 100/10 offloads (reference
+    offload_source_data.py:2392: everything moves but the requested
+    boundary still defines the view HWM): the backend then holds
+    above-boundary rows too, which the frontend also retains. Under
+    90/10 it is a no-op."""
     cols = source_df.columns
-    raw_backend = (
-        backend_df if backend_df is not None
-        else spark.read.parquet(backend_path)
-    )
-
-    def _sides(backend_cond, retained_cond):
-        """Exactly-once invariant: the backend serves rows INSIDE the
-        metadata boundary, the frontend serves the complement. The
-        backend-side filter matters under 100/10 offloads (reference
-        offload_source_data.py:2392: everything moves but the
-        requested boundary still defines the view HWM) — the backend
-        then holds above-boundary rows too, and serving them from the
-        backend while the frontend also retains them would double-
-        count. Under 90/10 the backend filter is a no-op."""
-        b = raw_backend
-        if backend_cond is not None:
-            b = b.where(backend_cond)
-        b = b.select(*[c for c in cols if c in b.columns])
-        return b.unionByName(source_df.where(retained_cond).select(*cols))
-
-    if md.offload_type == "FULL":
-        return raw_backend.select(
-            *[c for c in cols if c in raw_backend.columns]
-        )
-
-    if md.offload_type == "RANGE":
-        if md.incremental_high_value is None:
-            return raw_backend.select(
-                *[c for c in cols if c in raw_backend.columns]
-            )
-        if md.synthetic_partition is None:
-            # Native (possibly multi-column) RANGE key: the offloaded
-            # side is boundary-predicate-IS-TRUE, the frontend keeps
-            # the exact complement (FALSE or NULL) — shared with the
-            # status report via native_range_split so the two row
-            # classifications cannot diverge.
-            from goe_spark.plans.partitions import native_range_split
-
-            offloaded_cond, retained_cond = native_range_split(
-                md.incremental_key, md.incremental_high_value
-            )
-            return _sides(offloaded_cond, retained_cond)
-        part = _synthetic_expr_from_metadata(md)
-        hv = F.lit(md.incremental_high_value)
-        # NULL partition-source rows sit outside the boundary (the HWM
-        # comparison is NULL for them), so the frontend keeps them —
-        # without the isNull arm they would vanish from both sides.
-        backend_cond = (
-            F.col(SYNTHETIC_COL) <= hv
-            if SYNTHETIC_COL in raw_backend.columns
-            else None
-        )
-        return _sides(backend_cond, (part > hv) | part.isNull())
-
-    if md.offload_type == "LIST":
-        # Metadata stores values in string form (JSON round-trip);
-        # compare the column's string rendering so date/decimal LIST
-        # keys match their stored spelling.
-        offloaded = [str(v) for v in (md.offloaded_high_values or [])]
-        key = F.col(md.incremental_key).cast("string")
-        return _sides(key.isin(offloaded), ~key.isin(offloaded) | key.isNull())
-
-    if md.offload_type == "PREDICATE":
-        cond = F.lit(False)
-        for sql_text in md.offloaded_predicates:
-            # Predicates are stored as rendered SQL; they parse back
-            # through the DSL's SQL-compatible subset via expr().
-            cond = cond | F.expr(sql_text)
-        # NULL predicate evaluations were never offloaded (the slice
-        # filter drops them), so the frontend keeps them — same NULL
-        # arm as the RANGE/LIST sides.
-        return _sides(cond, ~cond | cond.isNull())
-
-    raise ValueError(f"unknown offload type: {md.offload_type!r}")
+    moved = offloaded(md)
+    b = backend_df if backend_df is not None else spark.read.parquet(backend_path)
+    if moved.backend is not None:
+        b = b.where(moved.backend)
+    b = b.select(*[c for c in cols if c in b.columns])
+    return b.unionByName(source_df.where(moved.retained).select(*cols))
 
 
 def register_hybrid_view(

@@ -41,44 +41,15 @@ from goe_spark.functions.casts import (
     quote,
     staging_sql,
 )
-from goe_spark.functions.synthetic import (
-    synthetic_date_expr,
-    synthetic_number_expr,
-    synthetic_string_expr,
-)
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
+from goe_spark.plans.slices import SYNTHETIC_COL, InFlight, PartitionSpec
 from goe_spark.plans.steps import StepRunner
-from goe_spark.predicate import (
-    parse_predicate_dsl,
-    predicate_to_column,
-    predicate_to_sql,
-)
+from goe_spark.predicate import parse_predicate_dsl, predicate_to_sql
 from goe_spark.types.spark_map import spark_to_canonical
-
-SYNTHETIC_COL = "goe_part_key"
 
 
 class OffloadValidationError(RuntimeError):
     pass
-
-
-@dataclass
-class PartitionSpec:
-    source_column: str
-    kind: str  # date | number | string
-    granularity: str | int = "M"
-    digits: int | None = None
-
-    def expr(self):
-        if self.kind == "date":
-            return synthetic_date_expr(self.source_column, str(self.granularity))
-        if self.kind == "number":
-            return synthetic_number_expr(
-                self.source_column, int(self.granularity), self.digits
-            )
-        if self.kind == "string":
-            return synthetic_string_expr(self.source_column, int(self.granularity))
-        raise ValueError(f"bad partition kind: {self.kind}")
 
 
 @dataclass
@@ -383,55 +354,40 @@ class OffloadPipeline:
                 cluster_columns=sort_cols,
             )
 
-        # FIND_OFFLOAD_DATA: predicate / HWM slicing.
+        # FIND_OFFLOAD_DATA: build this run's slice (plans/slices.py)
+        # and apply it to the source. The bookkeeping guards run first:
+        # a predicate or LIST value already offloaded is refused.
         with step("FIND_OFFLOAD_DATA"):
-            sliced = source_df
-            pred_ast = None
-            if cfg.offload_predicate:
-                ast = parse_predicate_dsl(cfg.offload_predicate)
-                pred_ast = ast
-                sql_text = predicate_to_sql(ast)
-                if sql_text in md.offloaded_predicates:
+            if cfg.list_partition_values and cfg.list_partition_column is None:
+                raise OffloadValidationError(
+                    "list_partition_values requires list_partition_column"
+                )
+            in_flight = InFlight.find(cfg, md.incremental_high_value, source_df)
+            if in_flight.predicate:
+                if in_flight.predicate in md.offloaded_predicates:
                     raise OffloadValidationError(
-                        f"predicate already offloaded: {sql_text}"
+                        f"predicate already offloaded: {in_flight.predicate}"
                     )
-                sliced = sliced.where(predicate_to_column(ast, sliced))
                 md.offload_type = "PREDICATE"
-            if cfg.list_partition_values:
-                if cfg.list_partition_column is None:
-                    raise OffloadValidationError(
-                        "list_partition_values requires list_partition_column"
-                    )
+            if in_flight.list_values:
                 # Bookkeeping compares STRING forms: the metadata JSON
                 # round-trips dates/decimals as strings (default=str),
                 # so raw equality would silently re-offload them.
                 already = {str(x) for x in md.offloaded_high_values}
-                dup = [
-                    v
-                    for v in cfg.list_partition_values
-                    if str(v) in already
-                ]
+                dup = [v for v in in_flight.list_values if str(v) in already]
                 if dup:
                     raise OffloadValidationError(
                         f"LIST values already offloaded: {dup}"
                     )
-                sliced = sliced.where(
-                    F.col(cfg.list_partition_column).isin(
-                        cfg.list_partition_values
-                    )
-                )
                 md.offload_type = "LIST"
                 md.incremental_key = cfg.list_partition_column
+            sliced = source_df
             if cfg.partition is not None:
                 sliced = sliced.withColumn(SYNTHETIC_COL, cfg.partition.expr())
-                if cfg.hwm is not None:
-                    lower = md.incremental_high_value
-                    cond = F.col(SYNTHETIC_COL) <= F.lit(cfg.hwm)
-                    if lower is not None:
-                        cond = cond & (F.col(SYNTHETIC_COL) > F.lit(lower))
-                    sliced = sliced.where(cond)
-                    md.offload_type = "RANGE"
-                    md.incremental_key = cfg.partition.source_column
+            if in_flight.hwm is not None:
+                md.offload_type = "RANGE"
+                md.incremental_key = cfg.partition.source_column
+            sliced = in_flight.where(sliced)
 
         # STAGING_TRANSPORT: write staging files with string-staged
         # exotics (the reference's Avro/Parquet staging schema,
@@ -524,11 +480,7 @@ class OffloadPipeline:
         # and we snapshot the target's file set first so a failed
         # verification can roll the append back (retryable failure
         # instead of silently-committed bad rows).
-        full_replace = (
-            pred_ast is None
-            and cfg.hwm is None
-            and not cfg.list_partition_values
-        )
+        full_replace = in_flight.clause is None
         with step("FINAL_LOAD"):
             final_proj = [final_cast_sql(c) for c in canonical_cols]
             pre_snapshot = (
@@ -549,57 +501,28 @@ class OffloadPipeline:
             # the sort key, the Spark rendering of BigQuery CLUSTER BY.
             # After the spread: a repartition would undo the sort.
             final_df_out = apply_sort_on_write(final_df_out, sort_cols)
-            # The incremental slice clause, recorded by warehouse
-            # writers as the INSERT's WHERE (the reference passes the
-            # same filter_clauses into load_final_table).
-            slice_clause = None
-            if pred_ast is not None:
-                slice_clause = predicate_to_sql(pred_ast)
-            elif cfg.list_partition_values:
-                vals = ", ".join(repr(v) for v in cfg.list_partition_values)
-                slice_clause = f"{cfg.list_partition_column} IN ({vals})"
-            elif cfg.partition is not None and cfg.hwm is not None:
-                lo = md.incremental_high_value
-                slice_clause = f"{SYNTHETIC_COL} <= {cfg.hwm!r}"
-                if lo is not None:
-                    slice_clause += f" AND {SYNTHETIC_COL} > {lo!r}"
+            # The slice clause: warehouse writers record it as the
+            # INSERT's WHERE (the reference passes the same
+            # filter_clauses into load_final_table) and a relational
+            # rollback DELETEs by it.
             writer.load_final(
                 final_df_out,
                 replace=full_replace,
                 partition_col=(
                     SYNTHETIC_COL if cfg.partition is not None else None
                 ),
-                slice_clause=slice_clause,
+                slice_clause=in_flight.clause,
             )
 
         # VERIFY_EXPORTED_DATA: count ("minus") validation, scoped to
-        # THIS run's slice — the reference passes the in-flight
-        # predicate into build_verification_clauses (goe.py
+        # THIS run's slice — the same condition FIND applied, now on
+        # the target. The reference passes the in-flight predicate
+        # into build_verification_clauses (goe.py
         # verify_offload_by_backend_count) for the same reason: the
         # final table holds every previously offloaded slice, so an
         # unscoped count can only match on the very first offload.
         with step("VERIFY_EXPORTED_DATA"):
-            final_df = writer.read_final(self.spark)
-            check_df = final_df
-            if pred_ast is not None:
-                check_df = check_df.where(
-                    predicate_to_column(pred_ast, check_df)
-                )
-            if cfg.list_partition_values:
-                check_df = check_df.where(
-                    F.col(cfg.list_partition_column).isin(
-                        cfg.list_partition_values
-                    )
-                )
-            if cfg.partition is not None and cfg.hwm is not None:
-                check_df = check_df.where(
-                    (F.col(SYNTHETIC_COL) <= F.lit(cfg.hwm))
-                    & (
-                        F.col(SYNTHETIC_COL) > F.lit(md.incremental_high_value)
-                        if md.incremental_high_value is not None
-                        else F.lit(True)
-                    )
-                )
+            check_df = in_flight.where(writer.read_final(self.spark))
             self._partitions_read = []
             rows_final = self._verify_count(check_df)
             if rows_final != rows_staged:
@@ -610,7 +533,10 @@ class OffloadPipeline:
                     f"final={rows_final} (appended files rolled back)"
                 )
 
-        # SAVE_METADATA: HWM / predicate bookkeeping.
+        # SAVE_METADATA: HWM / predicate / LIST bookkeeping. The
+        # partition spec writes its own metadata record
+        # (PartitionSpec.to_metadata), which the hybrid view and the
+        # status report read back through plans/slices.offloaded.
         with step("SAVE_METADATA"):
             partitions_written = self._partitions_read
             if cfg.partition is not None:
@@ -623,17 +549,10 @@ class OffloadPipeline:
                     md.offload_type = "RANGE"
                     md.incremental_key = cfg.partition.source_column
                     md.incremental_high_value = boundary_hwm
-                md.synthetic_partition = {
-                    "source_column": cfg.partition.source_column,
-                    "kind": cfg.partition.kind,
-                    "granularity": cfg.partition.granularity,
-                    "digits": cfg.partition.digits,
-                }
-            if cfg.offload_predicate or boundary_predicate:
-                sql_text = predicate_to_sql(
-                    parse_predicate_dsl(
-                        cfg.offload_predicate or boundary_predicate
-                    )
+                cfg.partition.to_metadata(md)
+            if in_flight.predicate or boundary_predicate:
+                sql_text = in_flight.predicate or predicate_to_sql(
+                    parse_predicate_dsl(boundary_predicate)
                 )
                 if sql_text not in md.offloaded_predicates:
                     md.offloaded_predicates.append(sql_text)

@@ -409,27 +409,6 @@ def resolve_offload_type(
     return offload_type, include_hwm, notes
 
 
-def native_range_split(incremental_key: str | None, hv):
-    """(offloaded, retained) Column pair for a native (possibly
-    multi-column) RANGE key. Offloaded rows are exactly those where the
-    lexicographic boundary predicate is TRUE; retained is its exact
-    complement — FALSE **or NULL**. The NULL arm matters in both
-    directions: a row whose leading key decides the comparison (e.g.
-    (2011, NULL) against HWM (2012, 2)) evaluates TRUE and IS
-    offloaded, while a NULL that reaches the deciding position leaves
-    the predicate NULL and the row stays frontend-side. The hybrid view
-    and the status report both split rows through this one helper so
-    their classifications can never diverge."""
-    if incremental_key is None:
-        raise PartitionSelectionError(
-            "RANGE metadata has an incremental high value but no "
-            "incremental_key to apply it to"
-        )
-    columns = [c.strip() for c in incremental_key.split(",")]
-    cond = hv_boundary_filter(columns, hv)
-    return cond, ~cond | cond.isNull()
-
-
 def with_subpartition_boundary_info(
     partitions: list[SourcePartition],
 ) -> list[SourcePartition]:

@@ -7,13 +7,14 @@ holds (rows, bytes, files, partitions) and — when the frontend source
 is mapped — the reference's offloaded / RETAINED / RECLAIMABLE split
 (offload_status_report.py:715-760):
 
-- retained: frontend rows ABOVE the incremental HWM — not offloaded
-  yet, must stay in the source;
-- reclaimable: frontend rows AT/BELOW the HWM — already offloaded,
-  deletable source-side. A FULL offload makes the whole source
-  reclaimable; a PREDICATE offload reports NULL (the reference also
-  declines: "no current means of calculating" reclaimable space for
-  predicate offloads).
+- reclaimable: frontend rows the metadata says have moved
+  (``plans/slices.offloaded``, the same split the hybrid view
+  serves) — deletable source-side. A FULL offload makes the whole
+  source reclaimable; a PREDICATE offload reports NULL (the reference
+  also declines: "no current means of calculating" reclaimable space
+  for predicate offloads);
+- retained: every other frontend row — not offloaded yet, must stay
+  in the source.
 
 Frontend byte figures are pro-rated from the row split against the
 source files' physical size (the reference reads exact segment sizes
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.plans.metadata import MetadataStore
+from goe_spark.plans.slices import offloaded
 
 SUMMARY_KEYS = [
     "offloaded_tables",
@@ -62,86 +64,20 @@ def _frontend_split(
     spark: SparkSession, md, source_path: str
 ) -> tuple[int | None, int | None, int | None, int | None]:
     """(retained_rows, retained_bytes, reclaimable_rows,
-    reclaimable_bytes) for one table's frontend source."""
-    from goe_spark.functions.synthetic import (
-        synthetic_date_expr,
-        synthetic_number_expr,
-        synthetic_string_expr,
-    )
-
-    src = spark.read.parquet(source_path)
-    src_rows = src.count()
-    src_bytes, _files = _dir_stats(source_path)
-
-    if md.offload_type == "PREDICATE":
-        # No means of computing reclaimable space for predicate
-        # offloads (reference: offload_status_report.py:737-740).
+    reclaimable_bytes) for one table's frontend source: one aggregate
+    counts the source and the rows ``slices.offloaded`` selects."""
+    moved = offloaded(md)
+    if not moved.reclaimable:
         return None, None, None, None
-    if md.offload_type == "LIST":
-        # Reclaimable = rows whose LIST value was offloaded; a LIST
-        # table must NOT fall into the FULL branch (it has no HWM) or
-        # the report would call never-offloaded values deletable.
-        offloaded = [str(v) for v in (md.offloaded_high_values or [])]
-        if md.incremental_key is None or not offloaded:
-            return src_rows, src_bytes, 0, 0
-        key = F.col(md.incremental_key).cast("string")
-        reclaimable_rows = src.where(key.isin(offloaded)).count()
-        retained_rows = src_rows - reclaimable_rows
-        if src_rows:
-            reclaimable_bytes = int(src_bytes * reclaimable_rows / src_rows)
-            retained_bytes = src_bytes - reclaimable_bytes
-        else:
-            reclaimable_bytes = retained_bytes = 0
-        return retained_rows, retained_bytes, reclaimable_rows, reclaimable_bytes
-    if md.incremental_key is None or md.incremental_high_value is None:
-        # FULL offload: everything is backend-side, whole source
-        # reclaimable.
-        return 0, 0, src_rows, src_bytes
-
-    if md.synthetic_partition is None:
-        # Native RANGE key (possibly multi-column, e.g. "year,month"):
-        # reclaimable = boundary-predicate-IS-TRUE, the same split the
-        # hybrid view complements (plans/partitions.native_range_split).
-        from goe_spark.plans.partitions import native_range_split
-
-        reclaim_cond, _ = native_range_split(
-            md.incremental_key, md.incremental_high_value
-        )
-        reclaimable_rows = src.where(reclaim_cond).count()
-        retained_rows = src_rows - reclaimable_rows
-        if src_rows:
-            reclaimable_bytes = int(src_bytes * reclaimable_rows / src_rows)
-            retained_bytes = src_bytes - reclaimable_bytes
-        else:
-            reclaimable_bytes = retained_bytes = 0
-        return retained_rows, retained_bytes, reclaimable_rows, reclaimable_bytes
-
-    sp = md.synthetic_partition or {}
-    kind = sp.get("kind", "date")
-    if kind == "date":
-        part = synthetic_date_expr(
-            sp.get("source_column", md.incremental_key),
-            str(sp.get("granularity", "M")),
-        )
-    elif kind == "number":
-        part = synthetic_number_expr(
-            sp["source_column"], int(sp["granularity"]), sp.get("digits")
-        )
-    else:
-        part = synthetic_string_expr(sp["source_column"], int(sp["granularity"]))
-    reclaimable_rows = src.where(
-        part <= F.lit(md.incremental_high_value)
-    ).count()
-    retained_rows = src_rows - reclaimable_rows
+    row = spark.read.parquet(source_path).agg(
+        F.count(F.lit(1)).alias("n"), F.count_if(moved.frontend).alias("moved")
+    ).first()
+    src_bytes, _files = _dir_stats(source_path)
     # Pro-rate bytes over the row split: file formats do not expose
     # per-slice physical size (the reference reads per-partition
     # segment sizes from the RDBMS catalog instead).
-    if src_rows:
-        reclaimable_bytes = int(src_bytes * reclaimable_rows / src_rows)
-        retained_bytes = src_bytes - reclaimable_bytes
-    else:
-        reclaimable_bytes = retained_bytes = 0
-    return retained_rows, retained_bytes, reclaimable_rows, reclaimable_bytes
+    moved_bytes = src_bytes * row.moved // row.n if row.n else 0
+    return row.n - row.moved, src_bytes - moved_bytes, row.moved, moved_bytes
 
 
 def status_report(

@@ -7,9 +7,9 @@ recursive-descent parser because the language is tiny):
     column(ALIAS.COL) = numeric(42)
     column(created) >= datetime(2024-01-01) and column(st) in ("a", "b")
 
-Renderers produce a pyspark Column (the engine path — Catalyst pushes
-the resulting filter into the scan) and ANSI SQL text (JDBC pushdown
-and the DuckDB oracle).
+Renderers produce ANSI SQL text (the offload metadata's spelling and
+the DuckDB oracle's) and a pyspark Column that Spark parses from that
+same text — Catalyst pushes the resulting filter into the scan.
 """
 
 from goe_spark.predicate.parser import parse_predicate_dsl  # noqa: F401

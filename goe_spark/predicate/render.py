@@ -1,14 +1,20 @@
-"""Predicate AST renderers: pyspark Column and ANSI SQL text.
+"""Predicate AST renderers: SQL text, and the pyspark Column Spark
+evaluates from that same text.
 
 The Column renderer optionally type-checks against a DataFrame schema
 (the reference's GenericPredicateToTyped stage,
 predicate_offload.py:358-467): datetime values against non-date
 columns and numeric values against non-numeric columns are rejected.
+A column name Spark SQL cannot parse unquoted (the DSL allows ``$``
+and ``#``) fails when the Column is applied.
 
-The SQL renderer serves the JDBC pushdown path and the DuckDB
-correctness oracle (reference: GenericPredicateToSQL + the
-literal/bind template family, predicate_offload.py:469-587 — binds are
-unnecessary here because Spark JDBC pushes literal WHERE text).
+The SQL text is the one spelling of a predicate: Spark evaluates it,
+offload metadata stores it, backend writers receive it in the slice
+clause and the DuckDB correctness oracle runs it (reference:
+GenericPredicateToSQL + the literal/bind template family,
+predicate_offload.py:469-587 — binds are unnecessary here because the
+literal text is what every consumer runs). ``sql_literal`` writes every
+literal in it.
 
 TRUST BOUNDARY: predicate DSL text is trusted OPERATOR input, exactly
 as in the reference (predicates arrive via the goe CLI run by a DBA).
@@ -24,6 +30,7 @@ drop it) before accepting predicates.
 from __future__ import annotations
 
 import datetime as _dt
+import decimal
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -70,77 +77,58 @@ def _check_type(col_name: str, dt: T.DataType, value: Value) -> None:
         )
 
 
-def _value_to_lit(value: Value) -> Column:
-    if value.kind == "literal":
-        return F.expr(str(value.value))
-    if value.kind == "numeric":
-        v = value.value
-        return F.lit(float(v) if not isinstance(v, int) else v)
-    return F.lit(value.value)
+def _operands(node):
+    """(column, value or None) for every leaf of the AST."""
+    if isinstance(node, Group):
+        for item in node.items:
+            yield from _operands(item)
+    elif isinstance(node, Comparison):
+        yield node.column, node.value
+    elif isinstance(node, InList):
+        for v in node.values:
+            yield node.column, v
+    elif isinstance(node, NullTest):
+        yield node.column, None
+    else:
+        raise PredicateParseError(f"unknown AST node: {node!r}")
 
 
 def predicate_to_column(node, df: DataFrame | None = None) -> Column:
-    """Render the AST to a pyspark boolean Column. When df is given,
-    column existence and value/type compatibility are enforced."""
-    schema = {f.name.lower(): f.dataType for f in df.schema.fields} if df is not None else None
-
-    def col_of(ref) -> Column:
-        if schema is not None and ref.name.lower() not in schema:
-            raise PredicateTypeError(f"unknown column: {ref.name}")
-        return F.col(ref.name)
-
-    def check(ref, value: Value) -> None:
-        if schema is not None and value.kind != "literal":
+    """The AST as a pyspark boolean Column: Spark evaluates the SQL
+    text of ``predicate_to_sql``, the spelling offload metadata stores.
+    When df is given, column existence and value/type compatibility
+    are enforced."""
+    if df is not None:
+        schema = {f.name.lower(): f.dataType for f in df.schema.fields}
+        for ref, value in _operands(node):
             if ref.name.lower() not in schema:
                 raise PredicateTypeError(f"unknown column: {ref.name}")
-            _check_type(ref.name, schema[ref.name.lower()], value)
+            if value is not None and value.kind != "literal":
+                _check_type(ref.name, schema[ref.name.lower()], value)
+    return F.expr(predicate_to_sql(node))
 
-    def walk(n) -> Column:
-        if isinstance(n, Group):
-            out = walk(n.items[0])
-            for item in n.items[1:]:
-                out = (out & walk(item)) if n.op == "AND" else (out | walk(item))
-            return out
-        if isinstance(n, Comparison):
-            check(n.column, n.value)
-            c = col_of(n.column)
-            v = _value_to_lit(n.value)
-            return {
-                "=": c == v,
-                "!=": c != v,
-                ">": c > v,
-                ">=": c >= v,
-                "<": c < v,
-                "<=": c <= v,
-            }[n.op]
-        if isinstance(n, InList):
-            for v in n.values:
-                check(n.column, v)
-            c = col_of(n.column)
-            lits = [_value_to_lit(v) for v in n.values]
-            expr = c.isin(*lits)
-            return ~expr if n.negated else expr
-        if isinstance(n, NullTest):
-            c = col_of(n.column)
-            return c.isNotNull() if n.negated else c.isNull()
-        raise PredicateParseError(f"unknown AST node: {n!r}")
 
-    return walk(node)
+def sql_literal(v) -> str:
+    """SQL text for one Python value: the one spelling of every
+    literal in a predicate, an offload slice and a writer clause.
+    Strings escape a quote as '' and a backslash as \\\\, as Spark
+    reads them."""
+    if isinstance(v, decimal.Decimal):
+        return format(v, "f")
+    if isinstance(v, (int, float)):
+        return str(v)
+    if isinstance(v, _dt.datetime):
+        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    s = str(v).replace("\\", "\\\\").replace("'", "''")
+    return f"'{s}'"
 
 
 def _sql_literal(value: Value) -> str:
     if value.kind == "literal":
         return str(value.value)
-    if value.kind == "numeric":
-        return str(value.value)
-    if value.kind == "datetime":
-        v = value.value
-        assert isinstance(v, _dt.datetime)
-        if v.microsecond:
-            return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-        return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S')}'"
-    s = str(value.value).replace("'", "''")
-    return f"'{s}'"
+    return sql_literal(value.value)
 
 
 def predicate_to_sql(node) -> str:

@@ -1,12 +1,12 @@
 """Offload-pipeline queries: the predicate DSL slice and (in
 test_offload_pipeline.py) the staged-load lifecycle.
 
-predicate_offload_slice renders ONE DSL string through both renderers:
-the Spark Column filters the DataFrame (predicate pushdown reaches the
-parquet scan) and the SQL renderer produces the oracle's WHERE text —
-so the query proves the two renderers agree, which is the property the
-reference's predicate engine lives and dies by
-(predicate_offload.py:469-587).
+predicate_offload_slice renders ONE DSL string through the single SQL
+renderer: Spark parses the text into the DataFrame filter (predicate
+pushdown reaches the parquet scan) and the oracle runs the same text
+as its WHERE — so the query proves Spark and DuckDB read the rendered
+slice alike, which is the property the reference's predicate engine
+lives and dies by (predicate_offload.py:469-587).
 """
 
 from __future__ import annotations

@@ -35,9 +35,8 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.functions.synthetic import synthetic_date_expr
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
-from goe_spark.plans.offload import SYNTHETIC_COL
+from goe_spark.plans.slices import SYNTHETIC_COL, PartitionSpec
 from goe_spark.streaming.events import events_stream
 
 
@@ -162,13 +161,12 @@ def make_batch_sink(
     leave exactly one copy of the batch."""
     ledger = BatchLedger(metadata_dir, owner, table, checkpoint_dir)
     store = MetadataStore(metadata_dir)
+    spec = PartitionSpec("ts", "date", granularity)
 
     def sink(batch_df, batch_id: int) -> None:
         if int(batch_id) in ledger.committed():
             return  # re-delivery of a fully committed batch
-        out = batch_df.withColumn(
-            SYNTHETIC_COL, synthetic_date_expr("ts", granularity)
-        )
+        out = batch_df.withColumn(SYNTHETIC_COL, spec.expr())
         # Per-batch directory + overwrite: a re-delivered batch (crash
         # between this write and the ledger commit) rewrites the SAME
         # directory — idempotent without sink transactions.
@@ -186,12 +184,7 @@ def make_batch_sink(
             or str(hwm) > str(md.incremental_high_value)
         ):
             md.incremental_high_value = hwm
-        md.synthetic_partition = {
-            "source_column": "ts",
-            "kind": "date",
-            "granularity": granularity,
-            "digits": None,
-        }
+        spec.to_metadata(md)
         store.save(md)
         ledger.commit(batch_id)
 

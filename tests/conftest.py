@@ -108,3 +108,13 @@ def listing(spark, job: int) -> bool:
     Spark runs for a read of more than 32 paths."""
     desc = spark.sparkContext._jsc.sc().statusStore().job(job).description()
     return desc.isDefined() and desc.get().startswith("Listing leaf files")
+
+
+def stage_tasks(spark, job: int, writes_only: bool = False) -> list[int]:
+    """Task counts of the stages of Spark job ``job``, read from
+    Spark's status store; ``writes_only`` keeps the stages that wrote
+    output records."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = store.job(job).stageIds()
+    attempts = [store.lastStageAttempt(stages.apply(i)) for i in range(stages.size())]
+    return [s.numTasks() for s in attempts if not writes_only or s.outputRecords() > 0]

@@ -229,3 +229,31 @@ class TestParquetWriterParity:
             "sh", "t", [spark_to_canonical("a", LongType(), True)]
         )
         assert "CREATE TABLE sh.t" in ddl and "USING PARQUET" in ddl
+
+
+@pytest.mark.parametrize(
+    "column, value, clause",
+    [
+        ("d", "date", "d IN (DATE '2024-01-01')"),
+        ("name", "O'Brien", "name IN ('O''Brien')"),
+    ],
+)
+def test_list_slice_clause_is_valid_sql(spark, tmp_path, column, value, clause):
+    """LIST values reach the writer as SQL literals: a date discovered
+    from the source is a DATE literal and a quote is doubled, not
+    Python's repr of either."""
+    import datetime
+
+    if value == "date":
+        value = datetime.date(2024, 1, 1)
+    src = spark.createDataFrame(
+        [(1, datetime.date(2024, 1, 1), "O'Brien"), (2, datetime.date(2024, 2, 1), "x")],
+        "id long, d date, name string",
+    )
+    w = FakeWarehouseWriter(str(tmp_path / "bq"))
+    res = OffloadPipeline(
+        spark,
+        _cfg(tmp_path, writer=w, list_partition_column=column, list_partition_values=[value]),
+    ).run(src)
+    assert res.rows_final == 1
+    assert w.commands[-1] == f"INSERT INTO sh.orders SELECT * FROM staging WHERE {clause}"

@@ -229,3 +229,114 @@ def test_native_range_missing_key_raises(spark, tmp_path):
     )
     with pytest.raises(PartitionSelectionError, match="incremental_key"):
         hybrid_view_df(spark, md, backend_path, src)
+
+
+# --- exactly once, per offload type -----------------------------------------
+
+
+def _t(tmp_path, **kw):
+    return OffloadConfig(
+        owner="sh",
+        table_name="t",
+        target_dir=str(tmp_path / "final"),
+        staging_dir=str(tmp_path / "staging"),
+        metadata_dir=str(tmp_path / "md"),
+        **kw,
+    )
+
+
+def _full(spark, src, tmp_path):
+    return _t(tmp_path)
+
+
+def _synthetic_range_with_nulls(spark, src, tmp_path):
+    # The NULL-date row has no partition key: it never moves, and the
+    # frontend serves it.
+    return _t(
+        tmp_path, partition=PartitionSpec("d", "date", "M"), hwm="2024-02"
+    )
+
+
+def _list_dates(spark, src, tmp_path):
+    import datetime
+
+    return _t(
+        tmp_path,
+        list_partition_column="d",
+        list_partition_values=[datetime.date(2024, 1, 15)],
+    )
+
+
+def _predicate_decimal(spark, src, tmp_path):
+    # A double literal reads 1.000000000000000001 as 1.0, so x of row 1
+    # would not compare greater; the exact decimal does.
+    return _t(
+        tmp_path, offload_predicate="column(x) > numeric(1.000000000000000001)"
+    )
+
+
+def _native_multicol_range(spark, src, tmp_path):
+    from goe_spark.plans.metadata import OffloadMetadata
+
+    src.where("(y < 2024) OR (y = 2024 AND m <= 2)").write.parquet(str(tmp_path / "final"))
+    MetadataStore(str(tmp_path / "md")).save(
+        OffloadMetadata(
+            owner="sh",
+            table_name="t",
+            offload_type="RANGE",
+            incremental_key="y,m",
+            incremental_high_value=(2024, 2),
+        )
+    )
+    return None
+
+
+@pytest.mark.parametrize(
+    "offload",
+    [
+        _full,
+        _synthetic_range_with_nulls,
+        _native_multicol_range,
+        _list_dates,
+        _predicate_decimal,
+    ],
+)
+def test_every_source_row_served_exactly_once(spark, tmp_path, offload):
+    """For each offload type the hybrid view serves every source row
+    once, and the status report's reclaimable rows are exactly the
+    rows ``offloaded(md)`` selects (PREDICATE reports none)."""
+    import datetime
+    from decimal import Decimal
+
+    from goe_spark.plans.slices import offloaded
+    from goe_spark.plans.status_report import status_report
+
+    rows = [
+        (1, datetime.date(2023, 12, 31), 2023, 12, Decimal("1.000000000000000010")),
+        (2, datetime.date(2024, 1, 15), 2024, 1, Decimal("2")),
+        (3, datetime.date(2024, 2, 10), 2024, None, Decimal("3")),
+        (4, datetime.date(2024, 3, 5), 2024, 3, Decimal("1.000000000000000001")),
+        (5, None, None, 1, None),
+    ]
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        rows, "id long, d date, y int, m int, x decimal(20,18)"
+    ).write.parquet(src_path)
+    src = spark.read.parquet(src_path)
+    cfg = offload(spark, src, tmp_path)
+    if cfg is not None:
+        res = OffloadPipeline(spark, cfg).run(src)
+        assert res.rows_final > 0
+    store = MetadataStore(str(tmp_path / "md"))
+    md = store.get("sh", "t")
+
+    hybrid = hybrid_view_df(spark, md, str(tmp_path / "final"), src)
+    assert sorted(r.id for r in hybrid.collect()) == [1, 2, 3, 4, 5]
+
+    row = status_report(spark, store, source_paths={("sh", "t"): src_path}).first()
+    moved = offloaded(md)
+    if md.offload_type == "PREDICATE":
+        assert row.reclaimable_rows is None
+    else:
+        assert row.reclaimable_rows == src.where(moved.frontend).count()
+        assert row.retained_rows == 5 - row.reclaimable_rows

@@ -124,3 +124,28 @@ def test_incremental_hwm_append_and_delete_rollback(
         pipe.run(orders)
     assert spark.read.jdbc(derby_url, "SH_ORDERS").count() == n2
     assert any(s.startswith("DELETE FROM SH_ORDERS") for s in w.statements)
+
+
+def test_list_rollback_deletes_exactly_the_quoted_slice(
+    spark, tmp_path, derby_url, monkeypatch
+):
+    """A LIST value holding a quote reaches Derby's DELETE as a string
+    literal: a failed verification removes exactly the in-flight rows
+    and keeps the earlier slice."""
+    w = JdbcBackendWriter(derby_url)
+    src = spark.createDataFrame(
+        [(1, "a"), (2, "O'Brien"), (3, "O'Brien"), (4, "z")], "id long, name string"
+    )
+    OffloadPipeline(
+        spark,
+        _cfg(tmp_path, w, list_partition_column="name", list_partition_values=["a"]),
+    ).run(src)
+    pipe = OffloadPipeline(
+        spark,
+        _cfg(tmp_path, w, list_partition_column="name", list_partition_values=["O'Brien"]),
+    )
+    monkeypatch.setattr(pipe, "_verify_count", lambda df: -1)
+    with pytest.raises(OffloadValidationError, match="count validation"):
+        pipe.run(src)
+    assert "DELETE FROM SH_REGION WHERE name IN ('O''Brien')" in w.statements
+    assert [r[0] for r in spark.read.jdbc(derby_url, "SH_REGION").collect()] == [1]

@@ -286,3 +286,51 @@ def test_offload_jdbc_route(base_url, tmp_path, spark):
             },
         )
     assert exc.value.code == 400
+
+
+def test_curate_and_delete_forward_every_cli_field(base_url, monkeypatch):
+    """/api/curate and /api/delete pass on the fields the CLI passes:
+    containment_min and span_min_run, use_bloom and maintain_index."""
+    from types import SimpleNamespace
+
+    import goe_spark.plans.curation as curation
+    import goe_spark.plans.targeted_delete as targeted_delete
+
+    seen = {}
+
+    class Pipeline:
+        def __init__(self, spark, cfg):
+            seen["curate"] = cfg
+
+        def run(self):
+            return SimpleNamespace(funnel={}, final_rows=0, resumed_steps=[], execution_id="x")
+
+    def delete_rows(spark, path, key_column, keys, **kw):
+        seen["delete"] = kw
+        return SimpleNamespace(rows_deleted=0, partitions_affected=0, partitions_healed=0)
+
+    monkeypatch.setattr(curation, "CurationPipeline", Pipeline)
+    monkeypatch.setattr(targeted_delete, "delete_rows", delete_rows)
+    _post(
+        f"{base_url}/api/curate",
+        {
+            "source_dir": "s",
+            "work_dir": "w",
+            "metadata_dir": "m",
+            "containment_min": 0.75,
+            "span_min_run": 4,
+        },
+    )
+    _post(
+        f"{base_url}/api/delete",
+        {
+            "target_dir": "t",
+            "key_column": "k",
+            "keys": [1],
+            "use_bloom": True,
+            "maintain_index": ["idx"],
+        },
+    )
+    assert (seen["curate"].containment_min, seen["curate"].span_min_run) == (0.75, 4)
+    assert seen["delete"]["use_bloom"] is True
+    assert seen["delete"]["maintain_indexes"] == ["idx"]

@@ -436,3 +436,30 @@ def test_staged_null_in_not_null_column_fails_validation(
     )
     with pytest.raises(OffloadValidationError, match="'nn_k': 1"):
         OffloadPipeline(spark, cfg).run(src)
+
+
+def test_predicate_on_unparseable_column_fails_in_find(spark, tmp_path):
+    """The DSL accepts ``$`` in a column name but Spark SQL cannot
+    parse it unquoted. The offload fails in FIND_OFFLOAD_DATA, before
+    anything is staged or any metadata saved — not later, in the
+    hybrid view that evaluates the stored predicate."""
+    import os
+
+    from pyspark.errors import ParseException
+
+    from goe_spark.plans.history import ExecutionHistoryStore
+
+    src = spark.createDataFrame([(1, 5), (2, 7)], "id long, `a$b` long")
+    cfg = _cfg(
+        tmp_path,
+        table_name="t",
+        partition=None,
+        offload_predicate="column(a$b) = numeric(5)",
+    )
+    with pytest.raises(ParseException):
+        OffloadPipeline(spark, cfg).run(src)
+    assert not os.path.exists(cfg.staging_dir)
+    assert MetadataStore(cfg.metadata_dir).get("tpch", "t") is None
+    (rec,) = ExecutionHistoryStore(cfg.metadata_dir).list_executions("tpch", "t")
+    assert rec.steps[-1]["name"] == "FIND_OFFLOAD_DATA"
+    assert rec.steps[-1]["status"] == "error"

@@ -132,3 +132,13 @@ def test_column_render_type_checks(spark):
         predicate_to_column(
             parse_predicate_dsl("column(nope) = numeric(1)"), df
         )
+
+
+def test_column_render_reads_quote_and_backslash_literally(spark):
+    """The Column is Spark's parse of the SQL text, so that text must
+    escape a quote and a backslash the way Spark reads them."""
+    df = spark.createDataFrame([("a\\b",), ("O'Brien",), ("a",)], "s string")
+    for value in ("a\\b", "O'Brien"):
+        body = value.replace("\\", "\\\\")
+        ast = parse_predicate_dsl(f'column(s) = string("{body}")')
+        assert [r.s for r in df.where(predicate_to_column(ast, df)).collect()] == [value]

@@ -30,7 +30,7 @@ from goe_spark.plans.zorder import (
     zorder_partitioned_table,
 )
 from goe_spark.sinks.backend_writer import ParquetBackendWriter
-from tests.conftest import SF_SMALL, listing, tagged_jobs
+from tests.conftest import SF_SMALL, listing, stage_tasks, tagged_jobs
 
 ZCOLS = ["o_custkey", "o_totalprice"]
 
@@ -44,7 +44,6 @@ def test_partitioned_final_load_uses_every_core(spark, tmp_path):
     month partitions must still run defaultParallelism tasks (it ran
     one before the spread), writing one file per partition."""
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
     write_tasks: list[int] = []
 
     class Tagged(ParquetBackendWriter):
@@ -52,11 +51,7 @@ def test_partitioned_final_load_uses_every_core(spark, tmp_path):
             with tagged_jobs(spark) as ids:
                 super().load_final(df, *a, **kw)
             for job_id in ids:
-                stages = store.job(job_id).stageIds()
-                for i in range(stages.size()):
-                    st = store.lastStageAttempt(stages.apply(i))
-                    if st.outputRecords() > 0:
-                        write_tasks.append(st.numTasks())
+                write_tasks.extend(stage_tasks(spark, job_id, writes_only=True))
 
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     assert len(src.inputFiles()) == 1
@@ -218,16 +213,9 @@ def test_partition_listing_runs_one_task_per_core(spark, offloaded_orders):
     target, _, _ = offloaded_orders
     assert len(_part_dirs(target)) > 32
     sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
     with tagged_jobs(spark) as ids:
         assert "goe_part_key" in spark.read.parquet(target).columns
-    tasks = []
-    for job_id in ids:
-        stages = store.job(job_id).stageIds()
-        tasks += [
-            store.lastStageAttempt(stages.apply(i)).numTasks()
-            for i in range(stages.size())
-        ]
+    tasks = [n for job_id in ids for n in stage_tasks(spark, job_id)]
     assert tasks and max(tasks) <= sc.defaultParallelism, tasks
 
 
@@ -278,12 +266,6 @@ def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
     runs one task per partition."""
     from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
 
-    sc = spark.sparkContext
-
-    def tasks(job):
-        info = sc.statusTracker().getJobInfo(job)
-        return [sc.statusTracker().getStageInfo(s).numTasks for s in info.stageIds]
-
     def jobs(n_parts):
         root = str(tmp_path / f"p{n_parts}")
         _fragmented(spark, root, n_parts)
@@ -294,7 +276,7 @@ def test_maintenance_jobs_do_not_grow_with_partitions(spark, tmp_path):
         with tagged_jobs(spark) as ids:
             rep = compact_partitioned_table(spark, root)
         assert rep.partitions_compacted == rep.files_after == n_parts
-        assert [tasks(j) for j in ids] == [[n_parts]]
+        assert [stage_tasks(spark, j) for j in ids] == [[n_parts]]
         counts["compact"] = ids
         with tagged_jobs(spark) as ids:
             rep = delete_rows(spark, root, "id", list(range(n_parts)))
