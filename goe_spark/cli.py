@@ -101,38 +101,12 @@ def cmd_delete(args) -> int:
     from goe_spark.plans.targeted_delete import delete_rows
 
     spark = _spark("goe-delete")
-    # Coerce CSV values by the KEY COLUMN's actual type — guessing
-    # int-ness from the spelling would turn a string key '0123' into
-    # 123 and silently match nothing, and leaving a decimal(38,0) key
-    # as a string would compare through double and corrupt keys above
-    # 2^53. (Schema-only read: one footer + partition listing.)
-    dtype = dict(
-        spark.read.parquet(args.target_dir).dtypes
-    ).get(args.key_column, "string")
-    vals = args.values.split(",")
-    if dtype in ("tinyint", "smallint", "int", "bigint"):
-        keys: list = [int(v) for v in vals]
-    elif dtype in ("float", "double"):
-        keys = [float(v) for v in vals]
-    elif dtype.startswith("decimal"):
-        from decimal import Decimal
-
-        keys = [Decimal(v) for v in vals]
-    elif dtype == "date":
-        import datetime
-
-        keys = [datetime.date.fromisoformat(v) for v in vals]
-    elif dtype.startswith("timestamp"):
-        import datetime
-
-        keys = [datetime.datetime.fromisoformat(v) for v in vals]
-    else:
-        keys = vals
+    # delete_rows types the values by the key column's type.
     rep = delete_rows(
         spark,
         args.target_dir,
         args.key_column,
-        keys,
+        args.values.split(","),
         partition_col=args.partition_column,
         use_bloom=args.use_bloom,
         maintain_indexes=args.maintain_index or None,
@@ -241,14 +215,14 @@ def cmd_zorder(args) -> int:
     directory) on the Morton curve over the given columns and build
     the file-skipping manifest. Sits beside compact/delete/merge in
     the maintenance family — layout only, content byte-equal."""
-    from goe_spark.plans.compaction import partition_dirs
-    from goe_spark.plans.zorder import heal_flat_zorder, zorder_flat_table
+    from goe_spark.plans.compaction import heal_swap, partition_dirs
+    from goe_spark.plans.zorder import zorder_flat_table
 
     spark = _spark("goe-zorder")
     target = args.target_dir.rstrip("/")
-    # Before the layout is read: a crash between the flat swap's two
+    # Before the layout is read: a crash between a whole swap's two
     # renames leaves no table at ``target`` until the heal puts it back.
-    heal_flat_zorder(target)
+    heal_swap(target)
     # A Hive-partitioned layout keeps its directories: each partition
     # is re-clustered in place behind compaction's marker swap, so the
     # delete/merge/compact family keeps working and partition pruning
@@ -299,12 +273,13 @@ def cmd_zorder(args) -> int:
 
 
 def cmd_heal(args) -> int:
-    """One-shot crash recovery for a target directory: complete any
-    interrupted compaction/delete swap, finish a pending keyed merge
-    from its durable staging copy, and recover an interrupted zorder
-    rewrite — the union of every maintenance op's heal path, so an
+    """One-shot crash recovery for a target directory: complete the
+    interrupted swap of the target itself (flat zorder, SCD2 apply,
+    streaming fold) and of its partitions (compact, delete, merge,
+    partitioned zorder) — one marker swap behind them all — then
+    finish a pending keyed merge from its durable staging copy, so an
     operator after an outage runs ONE command instead of knowing which
-    op crashed."""
+    op crashed. Prints {"swaps_healed": [...], "merge_healed": bool}."""
     from goe_spark.plans.heal import heal_target
 
     spark = _spark("goe-heal")
@@ -1047,7 +1022,8 @@ def build_parser() -> argparse.ArgumentParser:
     fo.set_defaults(fn=cmd_fold)
 
     he = sub.add_parser(
-        "heal", help="complete interrupted compact/delete/merge/zorder ops"
+        "heal",
+        help="complete interrupted compact/delete/merge/zorder/scd2/fold ops",
     )
     he.add_argument("--target-dir", required=True)
     he.set_defaults(fn=cmd_heal)

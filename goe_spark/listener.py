@@ -14,7 +14,10 @@ dependencies. Routes:
                                          is the completed result)
 - POST /api/delete                       targeted row deletion
 - POST /api/heal                         one-shot crash recovery for a
-                                         maintenance target
+                                         maintenance target (JSON body =
+                                         target_dir); responds
+                                         {"swaps_healed": [...],
+                                         "merge_healed": bool}
 - POST /api/ingest                       schema-validated file ingest
                                          with quarantine (JSON body =
                                          input/schema/good_dir/

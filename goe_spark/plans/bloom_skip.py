@@ -37,8 +37,10 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 from collections.abc import Callable
+from decimal import Decimal
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,11 +76,35 @@ def _positions_sql(col: str) -> str:
     )
 
 
+def spark_string(value) -> str:
+    """``value`` spelled as Spark's CAST(... AS STRING) spells it in a
+    column of its type: Java's Double.toString for floats (``5.0``,
+    ``1.0E-4``), Java's BigDecimal.toString for decimals (at the
+    column's scale: ``1.50``), ``true``/``false``; str() otherwise
+    (ints, strings, dates). Java before 19 spells a few doubles with
+    more digits than the shortest repr used here (2.82879384806159E17
+    as 2.82879384806159008E17)."""
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, Decimal):
+        return str(abs(value) if value == 0 else value)  # no -0 in Spark
+    if not isinstance(value, float):
+        return str(value)
+    if not math.isfinite(value) or value == 0 or 1e-3 <= abs(value) < 1e7:
+        # Plain notation, shortest digits.
+        java = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+        return java.get(repr(value), repr(value))
+    sign, digits, exp = Decimal(repr(value)).normalize().as_tuple()
+    mantissa = "".join(map(str, digits[1:])) or "0"
+    return f"{'-' * sign}{digits[0]}.{mantissa}E{exp + len(digits) - 1}"
+
+
 def value_positions(value) -> list[int]:
-    """The SAME k positions computed driver-side: md5 of str(value)
-    (Spark's cast-to-string of ints/strings is Python's str), first
-    15 hex chars as the 60-bit hash, then the identical arithmetic."""
-    h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16) % MERSENNE_P
+    """The SAME k positions computed driver-side: md5 of the value's
+    Spark string form (``spark_string``), first 15 hex chars as the
+    60-bit hash, then the identical arithmetic."""
+    text = spark_string(value)
+    h = int(hashlib.md5(text.encode()).hexdigest()[:15], 16) % MERSENNE_P
     return [((h * a + b) % MERSENNE_P) % M_BITS for a, b in _COEFFS]
 
 

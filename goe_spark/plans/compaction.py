@@ -20,13 +20,23 @@ pass through partition-value parsing. Compaction reads each directory
 in its own task, so each gets one file with no shuffle. Schemas and
 exact row checks come from the footers: no inference or counts.
 
-Crash safety (directories cannot be renamed atomically over data):
-each subtree moves to its partition's temp dir, a swap marker per
-partition recording the old file list is written atomically, and only
-then are old files deleted and new ones moved in; each marker goes
-last. Every run begins by HEALING: a marker on disk means a crash
-interrupted a swap, which the heal completes; the temp tree and
-marker-less temp dirs predate the markers and are discarded. At
+Crash safety is one marker swap, for any directory: its staged copy
+(``.<dir>._compact_tmp``) and marker (``.compact_swap.<dir>.json``,
+recording the old entries) live in its PARENT, so healing a directory
+touches only its own two names and a partitioned root heals all its
+partitions from one listing. The staged copy is complete before the
+marker is written atomically; then the listed old entries go, the
+staged entries move in (each replacing a namesake directory, so a name
+both removed and brought in survives every crash point), and the
+marker goes last. A marker without entries (``old_files`` null)
+replaces the directory WHOLE: the old one moves aside and the staged
+one in, one rename each, so a reader sees the old table or the new,
+never a mix. Partition rewrites (compact, delete, merge, partitioned
+zorder) swap files inside each partition; flat zorder and SCD2 apply
+swap a whole table; the streaming fold swaps batch roots for a new
+``base/``. Every run begins by HEALING: a marker on disk means a
+crash interrupted a swap, which the heal completes; the temp tree and
+marker-less staged copies predate the markers and are discarded. At
 100 TB compaction runs as a background janitor over HWM-closed
 partitions, which never receive appends, so it and ingest don't race.
 """
@@ -109,32 +119,83 @@ def _marker_path(path: str, d: str) -> str:
     return os.path.join(path, f".compact_swap.{d}.json")
 
 
-def _complete_swap(path: str, d: str, old_files: list[str]) -> int:
-    """Finish a marker-recorded swap: remove listed old files still
-    present, move remaining temp files in, clean up. Idempotent.
-    Returns the partition's final data-file count."""
+_REPLACED = "._replaced"  # a whole swap's old directory, until dropped
+
+
+def _drop(p: str) -> None:
+    """Remove the file or directory tree at ``p``, if there is one."""
+    if os.path.isdir(p):
+        shutil.rmtree(p)
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(p)
+
+
+def _move(src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``, replacing a directory there: a name
+    is dropped only while its replacement still waits in ``src``."""
+    if os.path.isdir(dst):
+        shutil.rmtree(dst)
+    os.rename(src, dst)
+
+
+def _complete_swap(path: str, d: str, old_files: list[str] | None) -> int:
+    """Finish a marker-recorded swap of directory ``d`` of ``path``:
+    drop the listed old entries still present and move the staged ones
+    in, or (``old_files`` None) move the old directory aside whole and
+    the staged one in its place. Idempotent. Returns the directory's
+    final data-file count."""
     full = os.path.join(path, d)
     tmp = _tmp_dir(path, d)
-    for f in old_files:
-        p = os.path.join(full, f)
-        if os.path.exists(p):
-            os.remove(p)
-    if os.path.isdir(tmp):
-        os.makedirs(full, exist_ok=True)  # a partition the swap adds
-        for f in _data_files(tmp):
-            shutil.move(os.path.join(tmp, f), os.path.join(full, f))
-        shutil.rmtree(tmp)
-    # A swap invalidates the partition's bloom and zorder manifests
-    # (they describe gone files and miss new ones): rebuild with `cli
-    # bloom` / `cli zorder`; zorder writes its own after its swaps.
-    from goe_spark.plans.bloom_skip import BLOOM_MANIFEST_NAME
-    from goe_spark.plans.zorder import MANIFEST_NAME
+    if old_files is None:
+        if os.path.isdir(tmp):
+            if os.path.isdir(full):
+                _move(full, os.path.join(tmp, _REPLACED))
+            _move(tmp, full)
+        _drop(os.path.join(full, _REPLACED))
+    else:
+        for f in old_files:
+            _drop(os.path.join(full, f))
+        if os.path.isdir(tmp):
+            os.makedirs(full, exist_ok=True)  # a partition the swap adds
+            for f in os.listdir(tmp):
+                if not f.startswith(("_", ".")):
+                    _move(os.path.join(tmp, f), os.path.join(full, f))
+            shutil.rmtree(tmp)
+        # A swap invalidates the partition's bloom and zorder manifests
+        # (they describe gone files and miss new ones): rebuild with `cli
+        # bloom` / `cli zorder`; zorder writes its own after its swaps.
+        from goe_spark.plans.bloom_skip import BLOOM_MANIFEST_NAME
+        from goe_spark.plans.zorder import MANIFEST_NAME
 
-    for name in (BLOOM_MANIFEST_NAME, MANIFEST_NAME):
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(full, name))
+        for name in (BLOOM_MANIFEST_NAME, MANIFEST_NAME):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(full, name))
     os.remove(_marker_path(path, d))
     return len(_data_files(full))
+
+
+def _arm(path: str, d: str, old_files: list[str] | None) -> None:
+    atomic_write_json(_marker_path(path, d), {"partition": d, "old_files": old_files})
+
+
+def swap_tmp(full: str) -> str:
+    """Where the staged copy of directory ``full`` is written."""
+    return _tmp_dir(*os.path.split(full.rstrip("/")))
+
+
+def swap_in(full: str, old_files: list[str] | None = None) -> None:
+    """Swap the complete staged copy (``swap_tmp(full)``) in behind a
+    marker: its entries replace ``old_files`` of ``full`` and their
+    namesakes, or (None) it replaces ``full`` whole."""
+    path, d = os.path.split(full.rstrip("/"))
+    _arm(path, d, old_files)
+    _complete_swap(path, d, old_files)
+
+
+def swap_pending(full: str) -> bool:
+    """Whether a crash left the swap of directory ``full`` armed."""
+    return os.path.exists(_marker_path(*os.path.split(full.rstrip("/"))))
 
 
 @dataclass
@@ -386,32 +447,50 @@ def rewrite_partitions(
     # Every marker BEFORE any partition is touched: from here a crash
     # at any point is completed by the next run's heal.
     for d, old_files, _ in targets:
-        atomic_write_json(
-            _marker_path(path, d), {"partition": d, "old_files": old_files}
-        )
+        _arm(path, d, old_files)
     return [(d, _complete_swap(path, d, old_files)) for d, old_files, _ in targets]
 
 
+def _heal(path: str, d: str) -> bool:
+    """Complete the armed swap of directory ``d`` of ``path``, or
+    discard its unarmed staged copy; True if a swap was completed."""
+    try:
+        with open(_marker_path(path, d)) as fh:
+            old_files = json.load(fh)["old_files"]
+    except FileNotFoundError:
+        _drop(_tmp_dir(path, d))
+        return False
+    _complete_swap(path, d, old_files)
+    return True
+
+
 def heal_interrupted_swaps(path: str) -> list[str]:
-    """Complete any swap a crash interrupted (marker present) and
-    discard the temp tree and marker-less temp dirs (crash before the
-    markers: the partitions are intact). Returns healed partitions."""
-    healed = []
-    for name in sorted(os.listdir(path)):
-        if name.startswith(".compact_swap.") and name.endswith(".json"):
-            with open(os.path.join(path, name)) as fh:
-                marker = json.load(fh)
-            _complete_swap(path, marker["partition"], marker["old_files"])
-            healed.append(marker["partition"])
-    for name in os.listdir(path):
-        if name == _TREE or (
-            name.endswith("._compact_tmp")
-            and not os.path.exists(
-                _marker_path(path, name[1 : -len("._compact_tmp")])
-            )
-        ):
-            shutil.rmtree(os.path.join(path, name))
-    return healed
+    """Heal the swaps of the directories of ``path`` (one listing) and
+    discard the temp tree. Returns the directories whose swap a crash
+    interrupted (marker present), now completed."""
+    names = os.listdir(path)
+    dirs = {
+        n[len(".compact_swap.") : -len(".json")]
+        for n in names
+        if n.startswith(".compact_swap.") and n.endswith(".json")
+    }
+    dirs |= {n[1 : -len("._compact_tmp")] for n in names if n.endswith("._compact_tmp")}
+    if _TREE in names:
+        shutil.rmtree(os.path.join(path, _TREE))
+    return [d for d in sorted(dirs) if _heal(path, d)]
+
+
+def heal_swap(full: str) -> bool:
+    """Heal the swap of directory ``full`` itself: its marker and
+    staged copy only, never a sibling's. True if a swap was completed."""
+    return _heal(*os.path.split(full.rstrip("/")))
+
+
+def heal_swaps(full: str) -> list[str]:
+    """Heal the swap of directory ``full`` itself (reported as ``.``)
+    and those of its directories (by name)."""
+    own = ["."] if heal_swap(full) else []
+    return own + (heal_interrupted_swaps(full) if os.path.isdir(full) else [])
 
 
 def compact_partitioned_table(

@@ -23,13 +23,15 @@ Spark-first shape: one broadcast-able join of the change batch
 against CURRENT rows only (the current slice is key-cardinality; the
 history can be arbitrarily deep and is never joined), null-safe
 attribute comparison, then untouched ∪ closed ∪ new versions written
-behind a staged-swap:
+behind compaction's whole-directory swap:
 
-Crash contract: the new table is COMPLETE in a dot-prefixed temp dir
-(invisible to readers) before the marker arms; the swap renames live
--> old, tmp -> live, drops old, unmarks. heal_pending_scd2 (run at
-every apply start) finishes an armed swap or discards an unarmed tmp.
-Readers see the old or the new table, never a mix.
+Crash contract: the new table is COMPLETE in the dimension's staged
+copy (dot-prefixed, invisible to readers) before the marker arms; the
+swap moves the old table aside whole and the new one in, one rename
+each, then drops the old and unmarks. heal_swap (run at every apply
+start; `cli heal` and POST /api/heal run it too) finishes an armed
+swap or discards an unarmed staged copy. Readers see the old or the
+new table, never a mix.
 
 Scale: dimensions are orders of magnitude smaller than facts (the
 customer dim at 100 TB of facts is GBs), so the whole-dimension
@@ -41,22 +43,16 @@ plans/merge_update.py's swap discipline.
 
 from __future__ import annotations
 
-import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from goe_spark.plans.metadata import atomic_write_json
+from goe_spark.plans.compaction import heal_swap, swap_in, swap_tmp
 
 VALID_FROM = "goe_valid_from"
 VALID_TO = "goe_valid_to"
 IS_CURRENT = "goe_is_current"
-
-_TMP = ".scd2_tmp"
-_OLD = ".scd2_old"
-_MARKER = ".scd2_pending.json"
 
 
 @dataclass
@@ -65,41 +61,6 @@ class Scd2Report:
     keys_changed: int = 0
     keys_unchanged: int = 0
     healed: bool = False
-
-
-def _paths(dim_path: str) -> tuple[str, str, str]:
-    parent = os.path.dirname(dim_path.rstrip("/"))
-    base = os.path.basename(dim_path.rstrip("/"))
-    return (
-        os.path.join(parent, base + _TMP),
-        os.path.join(parent, base + _OLD),
-        os.path.join(parent, base + _MARKER),
-    )
-
-
-def heal_pending_scd2(dim_path: str) -> bool:
-    """Finish (or roll back) a crashed apply. Armed marker + complete
-    tmp -> finish the swap; anything else -> discard leftovers. True
-    if an armed swap was completed."""
-    tmp, old, marker = _paths(dim_path)
-    healed = False
-    if os.path.exists(marker):
-        if os.path.exists(tmp) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            # crash may have left any prefix of the swap: re-run the
-            # remaining renames idempotently.
-            if os.path.exists(dim_path):
-                if os.path.exists(old):
-                    shutil.rmtree(old)
-                os.rename(dim_path, old)
-            os.rename(tmp, dim_path)
-            healed = True
-        os.remove(marker)
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-    return healed
 
 
 def scd2_init(
@@ -128,8 +89,7 @@ def scd2_apply(
 ) -> Scd2Report:
     """Apply one change batch (unique per key) effective at
     ``effective``. See module docstring for semantics."""
-    report = Scd2Report(healed=heal_pending_scd2(dim_path))
-    tmp, old, marker = _paths(dim_path)
+    report = Scd2Report(healed=heal_swap(dim_path))
 
     n = changes.count()
     n_keys = changes.select(key_col).distinct().count()
@@ -196,14 +156,6 @@ def scd2_apply(
     )
     result = carried.unionByName(closed).unionByName(fresh)
 
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    result.write.mode("overwrite").parquet(tmp)
-    atomic_write_json(marker, {"dim": dim_path, "effective": str(effective)})
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(dim_path, old)
-    os.rename(tmp, dim_path)
-    shutil.rmtree(old)
-    os.remove(marker)
+    result.write.mode("overwrite").parquet(swap_tmp(dim_path))
+    swap_in(dim_path)
     return report

@@ -24,11 +24,23 @@ crash after them is completed by the heal.
 
 from __future__ import annotations
 
+import datetime
 from collections import Counter
 from dataclasses import dataclass, field
+from decimal import Context, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    DateType,
+    DecimalType,
+    FractionalType,
+    IntegralType,
+    StringType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from goe_spark.plans.compaction import (
     file_dir,
@@ -63,8 +75,10 @@ def delete_rows(
     """Delete every row whose ``key_column`` is in ``keys`` from the
     partitioned parquet table at ``path``.
 
-    ``keys`` is a Python list (small takedown lists) or a DataFrame
-    with a ``key_column`` column (large removal sets). A DataFrame
+    ``keys`` is a Python list (small takedown lists; typed to the key
+    column's type by ``typed_keys``, so the CLI's strings and a JSON
+    body's numbers delete alike) or a DataFrame with a ``key_column``
+    column (large removal sets). A DataFrame
     keyset is checkpointed once: phase 1 and the phase-2 anti-join
     must see the SAME key set, and a non-deterministic keys plan
     (limit, sample) evaluated twice would delete an inconsistent set.
@@ -87,16 +101,18 @@ def delete_rows(
     ensure_* neither serves deleted rows nor full-rebuilds an index
     this pass already fixed."""
     healed = len(heal_interrupted_swaps(path))
-    sources = [path]
-    if use_bloom and not isinstance(keys, DataFrame):
-        from goe_spark.plans.bloom_skip import prune_partitioned_bloom_in
-
-        sources, _ = prune_partitioned_bloom_in(path, key_column, list(keys))
-        if not sources:  # no file can hold any doomed key
-            return DeleteReport(partitions_healed=healed)
-    table = read_partitioned(spark, path, partition_col, sources)
+    table = read_partitioned(spark, path, partition_col)
     if isinstance(keys, DataFrame):
         keys = keys.select(key_column).distinct().localCheckpoint(eager=True)
+    else:
+        keys = typed_keys(keys, table.schema[key_column].dataType)
+        if use_bloom:
+            from goe_spark.plans.bloom_skip import prune_partitioned_bloom_in
+
+            sources, _ = prune_partitioned_bloom_in(path, key_column, keys)
+            if not sources:  # no file can hold any doomed key
+                return DeleteReport(partitions_healed=healed)
+            table = read_partitioned(spark, path, partition_col, sources)
     report = keyed_rewrite(spark, path, table, key_column, keys, partition_col)
     report.partitions_healed = healed
     if maintain_indexes:
@@ -111,6 +127,36 @@ def delete_rows(
         for idx_dir in maintain_indexes:
             evict_keys(spark, idx_dir, keys, key_column)
     return report
+
+
+def typed_keys(keys, dtype: DataType) -> list:
+    """``keys`` (a CLI's strings, a JSON body's numbers) as values of
+    the key column's Spark type ``dtype``: Spark compares them exactly
+    (a decimal(38,0) key never goes through double, a string key
+    '0123' stays a string) and the bloom probe spells them as Spark
+    does (a decimal at the column's scale, a double as a double)."""
+
+    def iso(parse):  # dates and timestamps: ISO text, or already typed
+        return lambda k: parse(k) if isinstance(k, str) else k
+
+    def scaled(k):  # a key with more digits than the scale matches no row
+        d = Decimal(str(k))
+        q = d.quantize(Decimal(1).scaleb(-dtype.scale), context=Context(prec=100))
+        return q if q == d else d
+
+    conv = {
+        IntegralType: int,
+        DecimalType: scaled,  # before FractionalType, its base class
+        FractionalType: float,
+        DateType: iso(datetime.date.fromisoformat),
+        TimestampType: iso(datetime.datetime.fromisoformat),
+        TimestampNTZType: iso(datetime.datetime.fromisoformat),
+        StringType: str,
+    }
+    for t, f in conv.items():
+        if isinstance(dtype, t):
+            return [None if k is None else f(k) for k in keys]
+    return list(keys)
 
 
 def read_partitioned(

@@ -40,6 +40,10 @@ one-shot; heavily skewed columns would use range-partition ranks
 Scope: numeric, date and timestamp columns (dates rank by epoch day,
 timestamps by epoch micros). Strings would rank by sampled quantile —
 not implemented, rejected loudly.
+
+Re-clustering a table in place runs behind compaction's marker swap: a
+partitioned table swaps each partition's files, a flat one is replaced
+whole (old aside, new in, one rename each); `cli heal` completes either.
 """
 
 from __future__ import annotations
@@ -47,7 +51,6 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,8 +73,11 @@ from goe_spark.plans.compaction import (
     file_dir,
     footer_facts,
     heal_interrupted_swaps,
+    heal_swap,
     partition_dirs,
     rewrite_partitions,
+    swap_in,
+    swap_tmp,
 )
 from goe_spark.plans.metadata import atomic_write_json
 
@@ -238,27 +244,6 @@ def write_zordered(
     )
 
 
-def heal_flat_zorder(target: str) -> bool:
-    """Finish or discard a flat zorder swap a crash interrupted: old
-    without target = the crash fell between the two renames, so the
-    original goes back in; old WITH target = stale cleanup debris that
-    would wedge the next rename, discarded; tmp = an incomplete copy,
-    discarded. Returns whether anything was healed. Idempotent."""
-    target = target.rstrip("/")
-    tmp, old = f"{target}.zorder_tmp", f"{target}.zorder_old"
-    healed = False
-    if os.path.isdir(old):
-        if os.path.isdir(target):
-            shutil.rmtree(old)
-        else:
-            os.rename(old, target)
-        healed = True
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-        healed = True
-    return healed
-
-
 def zorder_flat_table(
     df: DataFrame,
     target: str,
@@ -267,21 +252,16 @@ def zorder_flat_table(
     rank: str = "linear",
 ) -> ZorderReport:
     """Re-cluster the flat parquet table at ``target`` (which ``df``
-    reads) in place. Crash-safe: the clustered copy is COMPLETE in a
-    sibling ``.zorder_tmp`` dir before two renames swap it in, so a
-    crash leaves the original (tmp partial), both renamed halves, or
-    the new table plus a stale ``.zorder_old`` — each healed by
-    ``heal_flat_zorder``, which this begins with. An in-place
-    overwrite backed only by localCheckpoint would destroy the table
-    on a crash or an executor loss mid-write."""
-    target = target.rstrip("/")
-    heal_flat_zorder(target)
-    tmp, old = f"{target}.zorder_tmp", f"{target}.zorder_old"
-    rep = write_zordered(df, tmp, cols, n_files=n_files, rank=rank)
-    os.rename(target, old)
-    os.rename(tmp, target)
-    shutil.rmtree(old)
-    rep.manifest_path = _mpath(target)
+    reads) in place, behind compaction's whole-directory swap: the
+    clustered copy is COMPLETE in the staged copy before the swap
+    replaces the table whole, and a crash is healed by ``heal_swap``
+    (which this begins with; `cli heal`). An in-place overwrite backed
+    only by localCheckpoint would destroy the table on a crash or an
+    executor loss mid-write."""
+    heal_swap(target)
+    rep = write_zordered(df, swap_tmp(target), cols, n_files=n_files, rank=rank)
+    swap_in(target)
+    rep.manifest_path = _mpath(target.rstrip("/"))
     return rep
 
 

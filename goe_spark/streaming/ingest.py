@@ -20,6 +20,9 @@ idempotent. Read through read_streamed_table(), which lists the batch
 roots; partition discovery applies per root, so goe_part_key behaves
 exactly as on a batch-offloaded table. The HWM (max partition key
 seen) is folded into the offload metadata store after each batch.
+The fold janitor (fold_protocol) replaces old batch roots with one
+``base/`` root behind compaction's marker swap, so `cli heal` and the
+next fold complete a crashed one.
 
 At 100 TB/day the plan per micro-batch is map-side only (projection +
 partitioned write, no shuffle unless the sink repartitions); state is
@@ -30,11 +33,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from goe_spark.plans.compaction import heal_swap, swap_in, swap_pending, swap_tmp
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
 from goe_spark.plans.slices import SYNTHETIC_COL, PartitionSpec
 from goe_spark.streaming.events import events_stream
@@ -114,12 +117,12 @@ def read_streamed_table(
     its retention window: a snapshot older than the folded ``base/``
     root can no longer be reconstructed and raises.
 
-    An armed fold marker means a crash left the roots mid-swap — some
+    An armed fold swap means a crash left the roots mid-swap — some
     may already be removed — so reading would silently drop rows;
     refuse until the fold is healed (run fold, or CLI/REST heal)."""
     if not os.path.isdir(target_dir):
         return None
-    if os.path.exists(os.path.join(target_dir, FOLD_MARKER)):
+    if swap_pending(target_dir):
         raise RuntimeError(
             f"{target_dir} has a crashed fold pending (some batch roots "
             "may already be removed); heal it first — rerun fold, or "
@@ -192,82 +195,32 @@ def make_batch_sink(
 
 
 BASE_DIR = "base"
-FOLD_MARKER = ".fold_pending.json"
-
-
-def heal_fold(target_dir: str) -> bool:
-    """Complete a crashed fold; True if there was one. Filesystem-only
-    (no SparkSession), so plans/heal.heal_target can call it too.
-
-    Crash phases, distinguished by whether the COMPLETE temp copy
-    still exists:
-    - marker + tmp present: crash during doomed-root removal — finish
-      removing doomed roots (the OLD base included; its contents live
-      in tmp), rename tmp in, drop the marker.
-    - marker present, tmp gone: the rename already happened, so
-      ``base/`` is the NEW data and must NOT be touched — doomed
-      roots were removed before the rename; only the marker remains
-      to clean. (Deleting base here was the data-loss bug this
-      function replaces: every folded row gone with nothing to rename
-      back.)
-    - tmp without marker: crash before the marker — the original
-      roots are intact; discard the incomplete copy.
-    """
-    marker = os.path.join(target_dir, FOLD_MARKER)
-    tmp = os.path.join(target_dir, ".base_fold_tmp")
-    base = os.path.join(target_dir, BASE_DIR)
-    if os.path.exists(marker):
-        if os.path.isdir(tmp):
-            with open(marker) as fh:
-                doomed = json.load(fh)["doomed"]
-            for d in doomed:
-                full = os.path.join(target_dir, d)
-                if os.path.isdir(full):
-                    shutil.rmtree(full)
-            os.rename(tmp, base)
-        os.remove(marker)
-        return True
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-        return True
-    return False
 
 
 def fold_protocol(
     spark: SparkSession, target_dir: str, keep_last: int, compact
 ) -> dict:
-    """The crash-safe fold swap, shared by the row-preserving ingest
-    fold and the merging rollup fold (streaming/rollup.py): heal any
-    crashed predecessor, pick the roots older than the newest
-    ``keep_last``, let ``compact(src_df, tmp_dir, spark) -> extra``
-    write the COMPLETE folded copy to the temp dir (raising — after
-    removing tmp — if its own invariant fails), then arm the marker
-    listing the doomed roots, remove them, rename the temp in, and
-    drop the marker. A crash at any point is healed at the start of
-    the next fold; readers see either the old roots or the folded
-    base — never both live at once past the heal."""
-    from goe_spark.plans.metadata import atomic_write_json
-
-    marker = os.path.join(target_dir, FOLD_MARKER)
-    tmp = os.path.join(target_dir, ".base_fold_tmp")
-    base = os.path.join(target_dir, BASE_DIR)
-
-    healed = heal_fold(target_dir)
-
+    """The crash-safe fold, shared by the row-preserving ingest fold
+    and the merging rollup fold (streaming/rollup.py): heal any crashed
+    predecessor, pick the roots older than the newest ``keep_last``,
+    let ``compact(src_df, out_dir, spark) -> extra`` write the COMPLETE
+    folded ``base/`` into the target's staged copy (raising if its own
+    invariant fails), then swap it in with compaction's marker swap:
+    the folded roots go and the new ``base/`` replaces the old. A
+    crash at any point is healed at the start of the next fold (or by
+    `cli heal`); readers refuse while the swap is armed."""
+    healed = heal_swap(target_dir)
     fold = [d for _, d in _sorted_batches(target_dir)]
     fold = fold[: max(0, len(fold) - keep_last)]
     if not fold:
         return {"folded": 0, "healed": healed}
     roots = [os.path.join(target_dir, d) for d in fold]
+    base = os.path.join(target_dir, BASE_DIR)
     if os.path.isdir(base):
         roots.append(base)
-    extra = compact(_union_roots(spark, roots), tmp, spark)
-    doomed = fold + ([BASE_DIR] if os.path.isdir(base) else [])
-    atomic_write_json(marker, {"doomed": doomed})
-    for d in doomed:
-        shutil.rmtree(os.path.join(target_dir, d))
-    os.rename(tmp, base)
-    os.remove(marker)
+    out = os.path.join(swap_tmp(target_dir), BASE_DIR)
+    extra = compact(_union_roots(spark, roots), out, spark)
+    swap_in(target_dir, fold)
     return {"folded": len(fold), "healed": healed, **extra}
 
 
@@ -285,8 +238,7 @@ def fold_streamed_batches(
     def compact(out, tmp, spark):
         n_before = out.count()
         out.write.mode("overwrite").partitionBy(SYNTHETIC_COL).parquet(tmp)
-        if spark.read.parquet(tmp).count() != n_before:
-            shutil.rmtree(tmp)  # pragma: no cover - defensive
+        if spark.read.parquet(tmp).count() != n_before:  # pragma: no cover
             raise RuntimeError("fold row mismatch")
         return {"rows": n_before}
 

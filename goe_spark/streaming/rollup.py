@@ -12,15 +12,15 @@ own streamed-batch machinery from streaming/ingest.py):
   re-delivered batch overwrites its partial instead of double-
   counting, with the ledger short-circuiting committed ids;
 - reading the rollup unions the partial roots (reusing
-  read_streamed_table: fold-marker guard and ``as_of_batch`` snapshot
+  read_streamed_table: armed-swap guard and ``as_of_batch`` snapshot
   reads come free) and merge-aggregates them — sums of partial sums,
   exact because the measures are additive and money math is
   decimal(20,2);
 - the fold janitor compacts old partial roots into one merged
-  ``base/`` root behind the SAME crash-safe marker swap (heal_fold is
-  shared verbatim); unlike the row-preserving ingest fold, folding a
-  rollup re-aggregates — the invariant checked before the swap is
-  measure preservation (total n_events), not row count.
+  ``base/`` root through the SAME fold_protocol, behind compaction's
+  crash-safe marker swap; unlike the row-preserving ingest fold,
+  folding a rollup re-aggregates — the invariant checked before the
+  swap is measure preservation (total n_events), not row count.
 
 Scale: per micro-batch cost is one batch-sized shuffle down to grain
 cardinality (days x event types — thousands of rows regardless of
@@ -30,8 +30,6 @@ without a nightly full recompute.
 """
 
 from __future__ import annotations
-
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -134,8 +132,7 @@ def fold_rollup(
         total_after = (
             spark.read.parquet(tmp).agg(F.sum("n_events")).first()[0] or 0
         )
-        if total_after != total_before:
-            shutil.rmtree(tmp)  # pragma: no cover - defensive
+        if total_after != total_before:  # pragma: no cover - defensive
             raise RuntimeError("rollup fold measure mismatch")
         # Same result key as the ingest fold so `cli fold` output has
         # one schema regardless of --rollup; here it counts the merged

@@ -118,3 +118,59 @@ def stage_tasks(spark, job: int, writes_only: bool = False) -> list[int]:
     stages = store.job(job).stageIds()
     attempts = [store.lastStageAttempt(stages.apply(i)) for i in range(stages.size())]
     return [s.numTasks() for s in attempts if not writes_only or s.outputRecords() > 0]
+
+
+CRASH_POINTS = ("staged", "armed", "dropped", "moved", "unmarked")
+
+
+@contextlib.contextmanager
+def crash_swap(point: str, nth: int = 1):
+    """Make the marker swaps (plans/compaction) started inside the
+    block die at ``point``, in the real code:
+    - ``staged``: the staged copy is complete, its marker not written;
+    - ``armed``: the marker is written, nothing swapped yet;
+    - ``dropped``: right after the swap's ``nth`` removal;
+    - ``moved``: right after its ``nth`` move (a whole-directory swap
+      first moves the old directory aside, then the staged one in);
+    - ``unmarked``: swapped, right before the marker is dropped.
+    The block must raise the injected ``OSError("crash")``."""
+    from goe_spark.plans import compaction
+
+    def crash(*_a, **_k):
+        raise OSError("crash")
+
+    real_complete = compaction._complete_swap
+
+    def complete(path, d, old_files):
+        if point == "armed":
+            crash()
+        with pytest.MonkeyPatch.context() as m:
+            if point in ("dropped", "moved"):
+                name = "_drop" if point == "dropped" else "_move"
+                real, left = getattr(compaction, name), [nth]
+
+                def step(*a):
+                    real(*a)
+                    left[0] -= 1
+                    if not left[0]:
+                        crash()
+
+                m.setattr(compaction, name, step)
+            elif point == "unmarked":
+                marker, real_remove = compaction._marker_path(path, d), os.remove
+
+                def remove(p, *a, **k):
+                    if p == marker:
+                        crash()
+                    real_remove(p, *a, **k)
+
+                m.setattr(os, "remove", remove)
+            return real_complete(path, d, old_files)
+
+    with pytest.MonkeyPatch.context() as m:
+        if point == "staged":
+            m.setattr(compaction, "atomic_write_json", crash)
+        else:
+            m.setattr(compaction, "_complete_swap", complete)
+        with pytest.raises(OSError, match="crash"):
+            yield

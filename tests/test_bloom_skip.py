@@ -40,15 +40,40 @@ def _write_fixture(spark, path: str):
 
 def test_spark_and_python_positions_agree(spark):
     """The prune-time Python positions must equal the build-time Spark
-    positions for ints and strings — THE invariant the no-false-
-    negative property rests on."""
-    vals = [0, 1, 42, 999_999_999_999, "x", "lang_7", "héllo wörld"]
-    df = spark.createDataFrame(
-        [(str(v),) for v in vals], "v string"
-    ).selectExpr("v", f"{_positions_sql('v')} AS ps")
-    got = {r.v: [int(p) for p in r.ps] for r in df.collect()}
-    for v in vals:
-        assert got[str(v)] == value_positions(v), v
+    positions — THE invariant the no-false-negative property rests on
+    — for keys typed to their column as a delete types them: the
+    Python value is spelled as Spark's CAST(col AS STRING) spells it
+    (5.0 and 1.0E-4 for doubles, 1.50 for a decimal(10,2))."""
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        DateType,
+        DecimalType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+    )
+
+    from goe_spark.plans.targeted_delete import typed_keys
+
+    cases = [
+        (IntegerType(), [0, 1, 42, -7]),
+        (LongType(), [999_999_999_999, -(2**62)]),
+        (DecimalType(10, 2), [Decimal("1.5"), Decimal("0"), Decimal("-12345678.9")]),
+        (DoubleType(), [5, 1.5, 1e-4, 1e16, 123456789.0, -0.25, 0.001]),
+        (DateType(), [datetime.date(2024, 1, 5), datetime.date(1999, 12, 31)]),
+        (StringType(), ["x", "lang_7", "héllo wörld", "0123"]),
+    ]
+    for dtype, vals in cases:
+        typed = typed_keys(vals, dtype)
+        df = spark.createDataFrame([(v,) for v in typed], f"v {dtype.simpleString()}")
+        got = [
+            [int(p) for p in r.ps]
+            for r in df.selectExpr(f"{_positions_sql('v')} AS ps").collect()
+        ]
+        assert got == [value_positions(v) for v in typed], dtype
 
 
 @settings(max_examples=25, deadline=None)
@@ -235,3 +260,32 @@ def test_partitioned_manifests_equal_flat_builds(spark, tmp_path):
         assert built == build_bloom_manifest(spark, full, cols), d
     with open(os.path.join(path, "goe_part_key=1", BLOOM_MANIFEST_NAME)) as fh:
         assert all("n" not in entry for entry in json.load(fh).values())
+
+
+@pytest.mark.parametrize(
+    "dtype,key", [("decimal(10,2)", "1.5"), ("double", 5), ("double", 1e-4)]
+)
+def test_bloom_pruned_delete_matches_unpruned(spark, tmp_path, dtype, key):
+    """A bloom-pruned delete deletes what the unpruned one does on a
+    decimal or double key, whose Spark string form (1.50, 5.0, 1.0E-4)
+    is not Python's str() of the key."""
+    import shutil
+
+    from goe_spark.plans.bloom_skip import build_bloom_manifest_partitioned
+    from goe_spark.plans.targeted_delete import delete_rows
+
+    plain, pruned = str(tmp_path / "plain"), str(tmp_path / "pruned")
+    spark.sql(
+        f"SELECT CAST(element_at(array(1.5, 5, 1e-4, 2.25), CAST(id % 4 AS INT) + 1)"
+        f" + IF(id < 4, 0, id) AS {dtype}) AS k, id, CAST(id % 2 AS STRING) AS goe_part_key"
+        " FROM range(40)"
+    ).repartition(4).write.partitionBy("goe_part_key").parquet(plain)
+    build_bloom_manifest_partitioned(spark, plain, ["k"])
+    shutil.copytree(plain, pruned)
+
+    want = delete_rows(spark, plain, "k", [key]).rows_deleted
+    got = delete_rows(spark, pruned, "k", [key], use_bloom=True).rows_deleted
+    assert want == got == 1
+    assert sorted(spark.read.parquet(pruned).collect()) == sorted(
+        spark.read.parquet(plain).collect()
+    )

@@ -219,8 +219,8 @@ def test_zorder_command_rewrites_in_place(tmp_path, capsys, spark):
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["n_files"] == 8
     assert os.path.exists(res["manifest"])
-    assert not os.path.isdir(target + ".zorder_tmp")
-    assert not os.path.isdir(target + ".zorder_old")
+    assert [n for n in os.listdir(tmp_path) if "compact" in n] == []
+    assert not os.path.exists(os.path.join(target, "._replaced"))
     after = spark.read.parquet(target).groupBy().agg(
         F.count("*"), F.sum("o_orderkey")
     ).first()
@@ -263,13 +263,16 @@ def test_curate_command(tmp_path, capsys):
 
 def test_heal_command_recovers_crashed_merge_and_zorder(tmp_path, capsys, spark):
     """One heal command completes a staged merge left by a crash and
-    finishes an interrupted zorder rename."""
+    finishes the partition swaps of a zorder that died after arming
+    its markers."""
     import os
     import shutil
 
+    from goe_spark.plans.compaction import partition_dirs
     from goe_spark.plans.merge_update import MERGE_MARKER, MERGE_STAGING_DIR
     from goe_spark.plans.metadata import atomic_write_json
     from goe_spark.plans.offload import PartitionSpec
+    from tests.conftest import crash_swap
 
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     spec = PartitionSpec(source_column="o_orderdate", kind="date", granularity="M")
@@ -300,14 +303,16 @@ def test_heal_command_recovers_crashed_merge_and_zorder(tmp_path, capsys, spark)
         os.path.join(target, MERGE_MARKER),
         {"key_column": "o_orderkey", "partition_col": "goe_part_key"},
     )
-    # Interrupted zorder: stale tmp dir next to the target.
-    os.makedirs(target + ".zorder_tmp")
+    # Interrupted zorder: every partition's marker armed, none swapped.
+    with crash_swap("armed"):
+        main(["zorder", "--target-dir", target, "--columns", "o_custkey,o_totalprice"])
+    capsys.readouterr()
 
     rc = main(["heal", "--target-dir", target])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert res["merge_healed"] is True
-    assert res["zorder_healed"] is True
+    assert res["swaps_healed"] == partition_dirs(target)
     from pyspark.sql import functions as F
 
     got = (
@@ -316,8 +321,9 @@ def test_heal_command_recovers_crashed_merge_and_zorder(tmp_path, capsys, spark)
         .collect()
     )
     assert len(got) == 1 and got[0].o_totalprice == 31337.0
-    assert not os.path.isdir(target + ".zorder_tmp")
+    assert spark.read.parquet(target).count() == src.count()
     assert not os.path.exists(os.path.join(target, MERGE_MARKER))
+    assert [n for n in os.listdir(target) if "compact" in n] == []
 
 
 def test_zorder_partitioned_target_rewrites_per_partition(tmp_path, capsys, spark):
@@ -351,20 +357,27 @@ def test_zorder_partitioned_target_rewrites_per_partition(tmp_path, capsys, spar
 
 
 def test_heal_discards_stale_zorder_old(tmp_path, capsys, spark):
-    """Crash during the old-copy cleanup leaves target + .zorder_old;
-    heal discards the stale copy so the next rewrite can swap."""
+    """A flat zorder that died after its new table moved in, with the
+    old table still set aside inside it: heal drops the old copy and
+    the rezordered table stays."""
     import os
+
+    from tests.conftest import crash_swap
 
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     target = str(tmp_path / "t")
     src.write.parquet(target)
-    os.makedirs(target + ".zorder_old")
+    with crash_swap("moved", nth=2):
+        main(["zorder", "--target-dir", target, "--columns", "o_custkey,o_totalprice"])
+    capsys.readouterr()
+    assert os.path.isdir(os.path.join(target, "._replaced"))
     rc = main(["heal", "--target-dir", target])
     assert rc == 0
     res = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert res["zorder_healed"] is True
-    assert not os.path.isdir(target + ".zorder_old")
-    # target untouched
+    assert res == {"swaps_healed": ["."], "merge_healed": False}
+    assert not os.path.exists(os.path.join(target, "._replaced"))
+    assert os.path.exists(os.path.join(target, "_zorder_manifest.json"))
+    # target content intact
     assert spark.read.parquet(target).count() == src.count()
 
 

@@ -151,16 +151,27 @@ def test_curate_route_missing_field_400(base_url):
 
 
 def test_heal_route_noop_on_clean_target(base_url, tmp_path, spark):
-    import os
-
     target = str(tmp_path / "t")
     spark.range(5).write.parquet(target)
-    os.makedirs(target + ".zorder_tmp")
     status, body = _post(f"{base_url}/api/heal", {"target_dir": target})
     assert status == 200
-    assert body["zorder_healed"] is True
-    assert body["merge_healed"] is False
-    assert not os.path.isdir(target + ".zorder_tmp")
+    assert body == {"swaps_healed": [], "merge_healed": False}
+
+
+def test_heal_route_completes_armed_swap(base_url, tmp_path, spark):
+    """A flat zorder that died with its marker armed is completed by
+    POST /api/heal, which reports the target's own swap as '.'."""
+    from goe_spark.plans.zorder import zorder_flat_table
+    from tests.conftest import crash_swap
+
+    target = str(tmp_path / "t")
+    spark.range(50).selectExpr("id", "id % 7 AS x").write.parquet(target)
+    with crash_swap("armed"):
+        zorder_flat_table(spark.read.parquet(target), target, ["id", "x"], n_files=2)
+    status, body = _post(f"{base_url}/api/heal", {"target_dir": target})
+    assert status == 200
+    assert body == {"swaps_healed": ["."], "merge_healed": False}
+    assert spark.read.parquet(target).count() == 50
 
 
 def test_scd2_route_init_and_apply(base_url, tmp_path, spark):

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -13,7 +12,6 @@ from goe_spark.plans.scd2 import (
     IS_CURRENT,
     VALID_FROM,
     VALID_TO,
-    heal_pending_scd2,
     scd2_apply,
     scd2_init,
 )
@@ -134,31 +132,35 @@ def test_duplicate_keys_in_batch_rejected(spark, tmp_path):
 
 
 def test_crash_heal_completes_armed_swap(spark, tmp_path):
-    """Simulate a crash after the marker armed but before the swap:
-    tmp complete + marker present. Heal must finish the swap; a
-    second heal is a no-op."""
-    path = _dim(spark, tmp_path)
-    tmp = path + ".scd2_tmp"
-    marker = path + ".scd2_pending.json"
-    # build a "new version" table in tmp (complete, _SUCCESS present)
-    spark.read.parquet(path).withColumn(
-        "tier", F.lit("healed")
-    ).write.mode("overwrite").parquet(tmp)
-    import json
+    """A crash after the marker armed but before the swap: the heal
+    finishes the swap; a second heal is a no-op. An apply that died
+    before arming leaves the table untouched and its staged copy is
+    discarded."""
+    from goe_spark.plans.compaction import heal_swap, swap_tmp
+    from tests.conftest import crash_swap
 
-    with open(marker, "w") as fh:
-        json.dump({"dim": path, "effective": "2024-06-01"}, fh)
-    assert heal_pending_scd2(path) is True
-    got = {r.tier for r in spark.read.parquet(path).collect()}
+    path = _dim(spark, tmp_path)
+    healed = spark.read.parquet(path).withColumn("tier", F.lit("healed"))
+    with crash_swap("armed"):
+        scd2_apply(spark, path, healed.select("cust_id", "tier", "city"),
+                   "cust_id", ["tier", "city"], D(2024, 6, 1))
+    assert heal_swap(path) is True
+    got = {r.tier for r in spark.read.parquet(path).where(F.col(IS_CURRENT)).collect()}
     assert got == {"healed"}
-    assert not os.path.exists(tmp) and not os.path.exists(marker)
-    assert heal_pending_scd2(path) is False
+    assert not os.path.exists(swap_tmp(path))
+    assert heal_swap(path) is False
 
     # unarmed leftovers (no marker) are discarded, table untouched
-    shutil.copytree(path, tmp)
-    assert heal_pending_scd2(path) is False
-    assert not os.path.exists(tmp)
-    assert {r.tier for r in spark.read.parquet(path).collect()} == {"healed"}
+    before = spark.read.parquet(path).count()
+    current = spark.read.parquet(path).where(F.col(IS_CURRENT))
+    again = current.withColumn("tier", F.lit("again"))
+    with crash_swap("staged"):
+        scd2_apply(spark, path, again.select("cust_id", "tier", "city"),
+                   "cust_id", ["tier", "city"], D(2024, 7, 1))
+    assert os.path.isdir(swap_tmp(path))
+    assert heal_swap(path) is False
+    assert not os.path.exists(swap_tmp(path))
+    assert spark.read.parquet(path).count() == before
 
 
 def test_scd2_cli_roundtrip(spark, tmp_path, capsys):

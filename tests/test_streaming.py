@@ -212,11 +212,11 @@ def test_fold_streamed_batches_retention(spark, tmp_path):
     from goe_spark.catalog import load_table
     from goe_spark.streaming.ingest import (
         BASE_DIR,
-        FOLD_MARKER,
         fold_streamed_batches,
         make_batch_sink,
         read_streamed_table,
     )
+    from tests.conftest import crash_swap
 
     target = str(tmp_path / "t")
     sink = make_batch_sink(
@@ -250,72 +250,64 @@ def test_fold_streamed_batches_retention(spark, tmp_path):
     assert rep2["folded"] == 1
     assert read_streamed_table(spark, target).count() == total
 
-    # Crash simulation: marker armed, doomed root still present.
-    from goe_spark.plans.metadata import atomic_write_json
-
-    victim = os.path.join(target, "batch-000003")
-    fake_tmp = os.path.join(target, ".base_fold_tmp")
-    shutil.copytree(os.path.join(target, BASE_DIR), fake_tmp)
-    spark.read.parquet(victim).write.mode("append").partitionBy(
-        "goe_part_key"
-    ).parquet(fake_tmp)
-    atomic_write_json(
-        os.path.join(target, FOLD_MARKER),
-        {"doomed": ["batch-000003", BASE_DIR]},
-    )
+    # Crash: marker armed, the folded root removed, the new base still
+    # staged — reads refuse until a heal (here: the next fold).
+    sink(e.subtract(chunks[0]).limit(1), 4)
+    with crash_swap("dropped"):
+        fold_streamed_batches(spark, target, keep_last=1)
+    assert not os.path.isdir(os.path.join(target, "batch-000003"))
+    with _pytest.raises(RuntimeError, match="crashed fold pending"):
+        read_streamed_table(spark, target)
     rep3 = fold_streamed_batches(spark, target, keep_last=1)
-    assert rep3["healed"] is True
-    assert read_streamed_table(spark, target).count() == total
-    assert not os.path.exists(os.path.join(target, FOLD_MARKER))
+    assert rep3["healed"] is True and rep3["folded"] == 0
+    assert not os.path.isdir(os.path.join(target, "batch-000003"))
+    assert read_streamed_table(spark, target).count() == total + 1
+    assert [n for n in os.listdir(tmp_path) if "compact" in n] == []
     e.unpersist()
 
 
 def test_fold_heal_after_rename_keeps_new_base(spark, tmp_path):
-    """The data-loss phase: crash AFTER os.rename(tmp, base) but
+    """The data-loss phase: crash AFTER the new base moved in but
     before the marker is removed. Heal must leave the new base alone
-    (deleting it with tmp gone would lose every folded row) — and an
-    armed marker makes reads refuse instead of silently dropping
-    rows."""
+    (deleting it would lose every folded row) — and an armed swap
+    makes reads refuse instead of silently dropping rows."""
     import os
 
     from goe_spark.catalog import load_table
-    from goe_spark.plans.metadata import atomic_write_json
+    from goe_spark.plans.heal import heal_target
     from goe_spark.streaming.ingest import (
         BASE_DIR,
-        FOLD_MARKER,
         fold_streamed_batches,
-        heal_fold,
         make_batch_sink,
         read_streamed_table,
     )
+    from tests.conftest import crash_swap
 
     target = str(tmp_path / "t")
     sink = make_batch_sink(target, str(tmp_path / "ck"), str(tmp_path / "md"))
-    e = load_table(spark, SF_SMALL, "events").limit(200).cache()
+    e = load_table(spark, SF_SMALL, "events").limit(300).cache()
     b0 = e.limit(100)
     sink(b0, 0)
-    sink(e.subtract(b0).limit(100), 1)
+    b1 = e.subtract(b0).limit(100)
+    sink(b1, 1)
+    sink(e.subtract(b0).subtract(b1).limit(100), 2)
     total = read_streamed_table(spark, target).count()
-    fold_streamed_batches(spark, target, keep_last=1)
-    base_rows = spark.read.parquet(os.path.join(target, BASE_DIR)).count()
+    fold_streamed_batches(spark, target, keep_last=2)  # base/ = batch 0
 
-    # Crash-after-rename simulation: marker re-armed, tmp absent,
-    # base/ holds the NEW folded data.
-    atomic_write_json(
-        os.path.join(target, FOLD_MARKER),
-        {"doomed": ["batch-000000", BASE_DIR]},
-    )
+    with crash_swap("unmarked"):
+        fold_streamed_batches(spark, target, keep_last=1)  # base/ + batch 1
+    base_rows = spark.read.parquet(os.path.join(target, BASE_DIR)).count()
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="crashed fold pending"):
         read_streamed_table(spark, target)
 
-    assert heal_fold(target) is True
-    assert not os.path.exists(os.path.join(target, FOLD_MARKER))
+    assert heal_target(spark, target)["swaps_healed"] == ["."]
     # The new base survived; nothing was lost.
     assert (
         spark.read.parquet(os.path.join(target, BASE_DIR)).count()
         == base_rows
+        == total - 100
     )
     assert read_streamed_table(spark, target).count() == total
     e.unpersist()
