@@ -839,10 +839,12 @@ def build_parser() -> argparse.ArgumentParser:
     )
     o.add_argument(
         "--staging-format",
-        default="parquet",
+        default=None,
         choices=["parquet", "orc", "json", "csv", "avro"],
-        help="staging file format (avro works jar-free via the "
-        "pure-Python container writer)",
+        help="stage the offload through files of this format (avro "
+        "works jar-free via the pure-Python container writer); unset, "
+        "a local parquet target loads straight from the source and "
+        "other backends stage parquet",
     )
     o.add_argument(
         "--chunked",

@@ -35,14 +35,15 @@ test suite's invariant, not a hope).
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
-import math
 import os
 from collections.abc import Callable
 from decimal import Decimal
 from urllib.parse import unquote
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,25 +79,33 @@ def _positions_sql(col: str) -> str:
 
 def spark_string(value) -> str:
     """``value`` spelled as Spark's CAST(... AS STRING) spells it in a
-    column of its type: Java's Double.toString for floats (``5.0``,
-    ``1.0E-4``), Java's BigDecimal.toString for decimals (at the
-    column's scale: ``1.50``), ``true``/``false``; str() otherwise
-    (ints, strings, dates). Java before 19 spells a few doubles with
-    more digits than the shortest repr used here (2.82879384806159E17
-    as 2.82879384806159008E17)."""
+    column of its type: the running JVM's Double.toString for floats
+    (``5.0``, ``1.0E-4``; before JDK 19 some doubles take more digits
+    than their shortest repr, ``2.82879384806159008E17``), Java's
+    BigDecimal.toString for decimals (at the column's scale:
+    ``1.50``), ``true``/``false``, timestamps with their fraction's
+    trailing zeros dropped (``2024-01-05 10:00:00.5``); str() otherwise
+    (ints, strings, dates)."""
     if isinstance(value, bool):
         return "true" if value else "false"
     if isinstance(value, Decimal):
         return str(abs(value) if value == 0 else value)  # no -0 in Spark
-    if not isinstance(value, float):
-        return str(value)
-    if not math.isfinite(value) or value == 0 or 1e-3 <= abs(value) < 1e7:
-        # Plain notation, shortest digits.
-        java = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
-        return java.get(repr(value), repr(value))
-    sign, digits, exp = Decimal(repr(value)).normalize().as_tuple()
-    mantissa = "".join(map(str, digits[1:])) or "0"
-    return f"{'-' * sign}{digits[0]}.{mantissa}E{exp + len(digits) - 1}"
+    if isinstance(value, float):
+        return _java_double(value)
+    if isinstance(value, datetime.datetime):
+        text = value.isoformat(sep=" ", timespec="seconds")
+        frac = f"{value.microsecond:06d}".rstrip("0")
+        return f"{text}.{frac}" if frac else text
+    return str(value)
+
+
+def _java_double(value: float) -> str:
+    """Double.toString of the JVM behind the active SparkContext (a
+    py4j call, no Spark job)."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("spelling a double probe needs a running SparkContext")
+    return sc._jvm.java.lang.Double.toString(value)
 
 
 def value_positions(value) -> list[int]:

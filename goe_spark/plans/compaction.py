@@ -285,6 +285,11 @@ def footer_facts(d: str, files: list[str], cols=()) -> FooterFacts:
     return facts
 
 
+def footer_rows(d: str) -> int:
+    """Rows in the data files of directory ``d``, from their footers."""
+    return footer_facts(d, _data_files(d)).rows
+
+
 def _first_data_file(path: str) -> str | None:
     if os.path.isfile(path):
         return path

@@ -1,24 +1,35 @@
 """The offload pipeline — the reference's `offload_table` lifecycle
-(goe.py:2666-2926, SURVEY §3.1) re-expressed as one Spark job graph:
+(goe.py:2666-2926, SURVEY §3.1) re-expressed as one Spark job graph.
+A local parquet target (the writer's ``direct_dir``) loads straight
+from the source in one pass:
 
   source scan -> canonical schema map -> [predicate/HWM slice]
-    -> staging write (parquet, string-staged exotics)
-    -> staged-data validation aggregate (A5)
-    -> cast-corruption probe (A6)
-    -> final write (partitioned by the synthetic column)
-    -> count + aggregate validation (A1/A3)
+    -> staged projection (string-staged exotics)
+       + validation aggregate (A5) and cast-corruption probe (A6),
+         observed on the write
+    -> final write (partitioned by the synthetic column) into a swap
+       copy (full replace) or the target (append, snapshot first);
+       a failed check leaves the target as it was
+    -> count validation (A1/A3): footer counts for whole partitions,
+       a read-back for predicate and LIST slices
     -> metadata save (HWM / predicate bookkeeping)
+
+Every other writer (warehouse, JDBC, DFS targets), and any offload
+that asks for a staging format, stages as GOE does: staging write ->
+staged-data validation aggregate -> final write from the staged files
+-> read-back count validation. Steps that do not run are recorded as
+skipped, with detail ``direct``.
 
 Scale design: the per-chunk loop bounds any single Spark job to
 max_chunk_bytes of input (reference default 16G) so restart scope and
 executor memory stay fixed no matter how big the table is; within a
 chunk everything is one lineage — Catalyst fuses the projection+filter
 into the scan. partitionBy itself never shuffles: the partitioned final
-write adds one hash exchange on the synthetic column only when the
-staged input has too few splits to use the cores (``catalog.spread``),
-plus whatever a sort-on-write needs. The staging and final read-backs
-carry the schema of the frame written, so neither runs a
-schema-inference job.
+write adds one hash exchange on the synthetic column only when its
+input has too few splits to use the cores (``catalog.spread``; a JDBC
+read always counts as too few), plus whatever a sort-on-write needs.
+The staging and final read-backs carry the schema of the frame
+written, so neither runs a schema-inference job.
 
 Each named step runs through the one step tracker
 (``plans/steps.StepRunner``): it times the step, tags the step's Spark
@@ -29,9 +40,10 @@ a step's jobs can be found in Spark's status store without the UI.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from goe_spark.catalog import spread
@@ -41,6 +53,7 @@ from goe_spark.functions.casts import (
     quote,
     staging_sql,
 )
+from goe_spark.plans.compaction import footer_rows, partition_dirs
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
 from goe_spark.plans.slices import SYNTHETIC_COL, InFlight, PartitionSpec
 from goe_spark.plans.steps import StepRunner
@@ -50,6 +63,26 @@ from goe_spark.types.spark_map import spark_to_canonical
 
 class OffloadValidationError(RuntimeError):
     pass
+
+
+def _validate(row: dict) -> None:
+    """Fail on any NOT NULL (``nn_*``) or cast-corruption
+    (``corrupt_*``) count of the validation aggregate ``row``."""
+    violations = {k: v for k, v in row.items() if k != "row_count" and v}
+    if violations:
+        raise OffloadValidationError(f"staged-data validation failed: {violations}")
+
+
+def _spread_partitions(df: DataFrame) -> DataFrame:
+    """Hash ``df`` on the synthetic column across the cores when it
+    under-splits (``catalog.spread``), so a small load writes each
+    partition from one task, one file each. A frame with no input
+    files (a JDBC read) counts as under-split: each of its splits
+    holds every partition, and its split count costs a slow RDD probe
+    to learn."""
+    if df.inputFiles():
+        return spread(df, SYNTHETIC_COL)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, SYNTHETIC_COL)
 
 
 @dataclass
@@ -89,13 +122,15 @@ class OffloadConfig:
     # (or a real BigQuery/Snowflake writer) slots in here with the
     # same step sequence.
     backend_writer: object | None = None
-    # Staging file format (S10/S11). The reference stages Avro by
-    # default (avro_staging_file.py:268-291); parquet is our default
-    # because the staging read-back is columnar. "avro" uses the
-    # spark-avro datasource when present and otherwise the pure-Python
-    # container writer/reader (sources/avro_io.py) — still fully
-    # distributed, real spec-compliant .avro files.
-    staging_format: str = "parquet"
+    # Staging file format (S10/S11). None (the default) stages only
+    # where the writer needs staged files, in parquet; a local parquet
+    # target loads straight from the source. Any explicit format
+    # stages. The reference stages Avro by default
+    # (avro_staging_file.py:268-291); "avro" uses the spark-avro
+    # datasource when present and otherwise the pure-Python container
+    # writer/reader (sources/avro_io.py) — still fully distributed,
+    # real spec-compliant .avro files.
+    staging_format: str | None = None
     # --offload-type FULL|INCREMENTAL (reference goe.py:1051-1052,
     # resolved by plans/partitions.resolve_offload_type). FULL with a
     # partition+hwm is the reference's 100/10: everything moves, the
@@ -118,12 +153,13 @@ class OffloadConfig:
 class OffloadResult:
     rows_staged: int
     rows_final: int
-    # Write-side row count observed DURING the staging write via the
-    # Observation API — the engine-native twin of the reference's
-    # Spark-listener recordsWritten scraping (GOETaskListener.scala:
-    # 24-44, offload_transport.py:183-190), at zero extra scan cost.
-    # Cross-checked against the staged READ-BACK count: a mismatch
-    # means the files do not faithfully hold what was written.
+    # Write-side row count observed DURING the staging write (or the
+    # direct final write) via the Observation API — the engine-native
+    # twin of the reference's Spark-listener recordsWritten scraping
+    # (GOETaskListener.scala:24-44, offload_transport.py:183-190), at
+    # zero extra scan cost. A staged load cross-checks it against the
+    # staged READ-BACK count: a mismatch means the files do not
+    # faithfully hold what was written.
     rows_staged_observed: int = -1
     partitions_written: list = field(default_factory=list)
     steps: list = field(default_factory=list)
@@ -149,15 +185,82 @@ class OffloadPipeline:
         self.cfg = config
         self.store = MetadataStore(config.metadata_dir)
 
-    def _verify_count(self, check_df: DataFrame) -> int:
-        """Count the slice read back, grouped by the synthetic column
-        when partitioned: that one job also gives SAVE_METADATA the
-        partitions written. Seam for tests to inject a mismatch."""
-        if self.cfg.partition is None:
-            return check_df.count()
-        counts = check_df.groupBy(SYNTHETIC_COL).count().collect()
-        self._partitions_read = [r[0] for r in counts]
-        return sum(r[1] for r in counts)
+    def _verify_count(self, in_flight: InFlight) -> int:
+        """Rows of this run's slice now in the target. A slice of whole
+        partitions on a local parquet target is counted from the
+        footers of the directories it selects, as Spark's own count
+        under partition pruning would, with no Spark job; any other is
+        read back and counted, grouped by the synthetic column when
+        partitioned. Either way the partitions counted go to
+        SAVE_METADATA. Seam for tests to inject a mismatch."""
+        writer, part = self._writer, self.cfg.partition
+        local = writer.direct_dir
+        if local is None or not in_flight.whole_partitions:
+            check_df = in_flight.where(writer.read_final(self.spark))
+            if part is None:
+                return check_df.count()
+            counts = check_df.groupBy(SYNTHETIC_COL).count().collect()
+            self._partitions_read = [r[0] for r in counts]
+            return sum(r[1] for r in counts)
+        if part is None:
+            return footer_rows(local)
+        dirs = partition_dirs(local, SYNTHETIC_COL) if os.path.isdir(local) else []
+        dtype = self._loaded[SYNTHETIC_COL].dataType
+        rows = {}
+        for d, value in in_flight.partitions(self.spark, dirs, dtype):
+            if n := footer_rows(os.path.join(local, d)):
+                rows[value] = rows.get(value, 0) + n
+        self._partitions_read = list(rows)
+        return sum(rows.values())
+
+    def _stage(self, to_stage: DataFrame, aggs: list[str]) -> tuple[DataFrame, int]:
+        """STAGING_TRANSPORT and VALIDATE_STAGED_DATA: write the staged
+        projection as staging files (format per cfg.staging_format),
+        read them back and validate them with one aggregate. Returns
+        the staged read-back and its row count."""
+        cfg, step = self.cfg, self._tracker.step
+        with step("STAGING_TRANSPORT"):
+            from goe_spark.sources.files import read_staging, write_staging
+
+            # Avro staging (the reference's default format) no longer
+            # needs the spark-avro jar: write_staging/read_staging
+            # fall back to the pure-Python container writer/reader
+            # (sources/avro_io.py — distributed via mapInPandas /
+            # binaryFile) when the datasource is absent. The staged
+            # projection string-stages exotics either way, so the cast
+            # map sees identical shapes on every format.
+            fmt = cfg.staging_format or "parquet"
+            # Observation rides the write job: rows counted as they
+            # are written, no listener-log scraping, no extra scan
+            # (reference S15 counts rows via a Spark task listener).
+            written = Observation()
+            write_staging(
+                to_stage.observe(written, F.count(F.lit(1)).alias("rows_written")),
+                cfg.staging_dir,
+                fmt=fmt,
+            )
+            rows_written = int(written.get["rows_written"])
+            staged = read_staging(
+                self.spark, cfg.staging_dir, fmt=fmt, schema=to_stage.schema
+            )
+
+        # VALIDATE_STAGED_DATA (A5): one aggregate pass (the cast-
+        # corruption probes ride the same aggregate, so VALIDATE_CASTS
+        # is recorded with it).
+        with step("VALIDATE_STAGED_DATA"):
+            row = staged.selectExpr(*aggs).collect()[0].asDict()
+            # Write-vs-read integrity: the read-back count must equal
+            # what the write job observed leaving the executors.
+            if row["row_count"] != rows_written:
+                raise OffloadValidationError(
+                    f"staging integrity failed: wrote "
+                    f"{rows_written} rows but read back "
+                    f"{row['row_count']}"
+                )
+            _validate(row)
+        with step("VALIDATE_CASTS"):
+            pass  # probes evaluated in the shared aggregate above
+        return staged, row["row_count"]
 
     # -- steps (named like the reference's command_steps) ------------------
 
@@ -389,72 +492,36 @@ class OffloadPipeline:
                 md.incremental_key = cfg.partition.source_column
             sliced = in_flight.where(sliced)
 
-        # STAGING_TRANSPORT: write staging files with string-staged
-        # exotics (the reference's Avro/Parquet staging schema,
-        # staging format per cfg.staging_format).
-        with step("STAGING_TRANSPORT"):
-            from goe_spark.sources.files import read_staging, write_staging
-
-            # Avro staging (the reference's default format) no longer
-            # needs the spark-avro jar: write_staging/read_staging
-            # fall back to the pure-Python container writer/reader
-            # (sources/avro_io.py — distributed via mapInPandas /
-            # binaryFile) when the datasource is absent. The staged
-            # projection below string-stages exotics either way, so
-            # the cast map sees identical shapes on every format.
-            staged_proj = [staging_sql(c) for c in canonical_cols]
-            if cfg.partition is not None:
-                staged_proj.append(quote(SYNTHETIC_COL))
-            # Observation rides the write job: rows counted as they
-            # are written, no listener-log scraping, no extra scan
-            # (reference S15 counts rows via a Spark task listener).
-            from pyspark.sql import Observation
-
-            staging_obs = Observation()
-            to_stage = sliced.selectExpr(*staged_proj)
-            write_staging(
-                to_stage.observe(
-                    staging_obs, F.count(F.lit(1)).alias("rows_written")
-                ),
-                cfg.staging_dir,
-                fmt=cfg.staging_format,
-            )
-            rows_staged_observed = int(staging_obs.get["rows_written"])
-            staged = read_staging(
-                self.spark,
-                cfg.staging_dir,
-                fmt=cfg.staging_format,
-                schema=to_stage.schema,
-            )
-
-        # VALIDATE_STAGED_DATA (A5): one aggregate pass (the cast-
-        # corruption probes ride the same aggregate, so VALIDATE_CASTS
-        # is recorded with it).
-        with step("VALIDATE_STAGED_DATA"):
-            aggs = ["count(1) AS row_count"]
-            aggs += [
-                f"count_if({quote(c.name)} IS NULL) AS {quote('nn_' + c.name)}"
-                for c in canonical_cols
-                if not c.nullable
-            ]
-            aggs += corruption_probe_sql(canonical_cols)
-            row = staged.selectExpr(*aggs).collect()[0].asDict()
-            rows_staged = row.pop("row_count")
-            # Write-vs-read integrity: the read-back count must equal
-            # what the write job observed leaving the executors.
-            if rows_staged != rows_staged_observed:
-                raise OffloadValidationError(
-                    f"staging integrity failed: wrote "
-                    f"{rows_staged_observed} rows but read back "
-                    f"{rows_staged}"
-                )
-            violations = {k: v for k, v in row.items() if v}
-            if violations:
-                raise OffloadValidationError(
-                    f"staged-data validation failed: {violations}"
-                )
-        with step("VALIDATE_CASTS"):
-            pass  # probes evaluated in the shared aggregate above
+        # The staged projection (string-staged exotics: the reference's
+        # Avro/Parquet staging schema), the validation aggregate over
+        # it (A5, with the A6 cast-corruption probes) and the cast map
+        # back to the final types.
+        partitioned = cfg.partition is not None
+        staged_proj = [staging_sql(c) for c in canonical_cols]
+        final_proj = [final_cast_sql(c) for c in canonical_cols]
+        if partitioned:
+            staged_proj.append(quote(SYNTHETIC_COL))
+            final_proj.append(quote(SYNTHETIC_COL))
+        aggs = ["count(1) AS row_count"]
+        aggs += [
+            f"count_if({quote(c.name)} IS NULL) AS {quote('nn_' + c.name)}"
+            for c in canonical_cols
+            if not c.nullable
+        ]
+        aggs += corruption_probe_sql(canonical_cols)
+        # GOE stages because its backend loads from staged files; a
+        # local parquet target is written by this same Spark job, so
+        # unless a staging format is asked for, FINAL_LOAD reads the
+        # slice once and the validation aggregate rides its write as
+        # an Observation, checked before the load is committed.
+        direct = cfg.staging_format is None and writer.direct_dir is not None
+        if direct:
+            for name in ("STAGING_TRANSPORT", "VALIDATE_STAGED_DATA", "VALIDATE_CASTS"):
+                self._tracker.skipped(name, "direct")
+            staged = sliced.selectExpr(*staged_proj)
+        else:
+            staged, rows_staged = self._stage(sliced.selectExpr(*staged_proj), aggs)
+            rows_staged_observed = rows_staged
 
         if cfg.expectations:
             with step("CHECK_EXPECTATIONS"):
@@ -478,41 +545,50 @@ class OffloadPipeline:
         # non-incremental offloads, and append semantics would make a
         # re-offload duplicate every row. Incremental offloads append,
         # and we snapshot the target's file set first so a failed
-        # verification can roll the append back (retryable failure
-        # instead of silently-committed bad rows).
+        # load or verification rolls the append back (retryable
+        # failure instead of silently-committed bad rows).
         full_replace = in_flight.clause is None
         with step("FINAL_LOAD"):
-            final_proj = [final_cast_sql(c) for c in canonical_cols]
             pre_snapshot = (
                 None if full_replace else writer.snapshot(self.spark)
             )
-            if cfg.partition is not None:
-                # A one-file staged read would write every partition
-                # from one task; spread hashes it on the partition key
-                # across the cores (no exchange at 8+ staged splits).
-                final_df_out = spread(
-                    staged.selectExpr(*final_proj, quote(SYNTHETIC_COL)),
-                    SYNTHETIC_COL,
+            to_load = sliced if direct else staged
+            if partitioned:
+                to_load = _spread_partitions(to_load)
+            if direct:
+                # Observed above the spread: under AQE an observation
+                # below the exchange of a partitioned write is lost
+                # when the slice is empty (its shuffle stage is dropped).
+                checked = Observation()
+                to_load = to_load.selectExpr(*staged_proj).observe(
+                    checked, *map(F.expr, aggs)
                 )
-            else:
-                final_df_out = staged.selectExpr(*final_proj)
             # SORT_COLUMNS: cluster-on-write (plans/sort_columns.py) —
             # a per-partition sort gives parquet row-group locality on
             # the sort key, the Spark rendering of BigQuery CLUSTER BY.
             # After the spread: a repartition would undo the sort.
-            final_df_out = apply_sort_on_write(final_df_out, sort_cols)
+            to_load = apply_sort_on_write(to_load.selectExpr(*final_proj), sort_cols)
             # The slice clause: warehouse writers record it as the
             # INSERT's WHERE (the reference passes the same
             # filter_clauses into load_final_table) and a relational
-            # rollback DELETEs by it.
-            writer.load_final(
-                final_df_out,
-                replace=full_replace,
-                partition_col=(
-                    SYNTHETIC_COL if cfg.partition is not None else None
-                ),
-                slice_clause=in_flight.clause,
-            )
+            # rollback DELETEs by it, so it is spelled in their dialect.
+            # Only a direct_dir writer takes a check.
+            check = {"check": lambda: _validate(dict(checked.get))} if direct else {}
+            try:
+                writer.load_final(
+                    to_load,
+                    replace=full_replace,
+                    partition_col=SYNTHETIC_COL if partitioned else None,
+                    slice_clause=in_flight.clause_in(writer.dialect),
+                    **check,
+                )
+            except BaseException:
+                if pre_snapshot is not None:
+                    writer.rollback_to(pre_snapshot, self.spark)
+                raise
+            if direct:
+                rows_staged = rows_staged_observed = checked.get["row_count"]
+            self._writer, self._loaded = writer, to_load.schema
 
         # VERIFY_EXPORTED_DATA: count ("minus") validation, scoped to
         # THIS run's slice — the same condition FIND applied, now on
@@ -522,9 +598,8 @@ class OffloadPipeline:
         # final table holds every previously offloaded slice, so an
         # unscoped count can only match on the very first offload.
         with step("VERIFY_EXPORTED_DATA"):
-            check_df = in_flight.where(writer.read_final(self.spark))
             self._partitions_read = []
-            rows_final = self._verify_count(check_df)
+            rows_final = self._verify_count(in_flight)
             if rows_final != rows_staged:
                 if not full_replace:
                     writer.rollback_to(pre_snapshot, self.spark)
@@ -620,7 +695,9 @@ class OffloadPipeline:
             rows_staged=rows_staged,
             rows_final=rows_final,
             rows_staged_observed=rows_staged_observed,
-            partitions_written=sorted(partitions_written),
+            partitions_written=sorted(
+                partitions_written, key=lambda v: (v is not None, v)
+            ),
             notes=notes,
         )
 
@@ -745,7 +822,7 @@ def offload_from_spec(spark: SparkSession, spec: dict) -> dict:
         sort_columns_csv=spec.get("sort_columns"),
         zorder_columns_csv=spec.get("zorder_columns"),
         ddl_file=spec.get("ddl_file"),
-        staging_format=spec.get("staging_format", "parquet"),
+        staging_format=spec.get("staging_format"),
         list_partition_column=spec.get("list_partition_column"),
         list_partition_values=spec.get("list_partition_values"),
         offload_type=spec.get("offload_type"),

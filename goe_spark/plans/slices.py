@@ -8,10 +8,11 @@ offload_validation.py:90-256).
 - ``InFlight`` is the slice one offload run moves. FIND_OFFLOAD_DATA
   builds it once: its ``clause`` is one SQL condition over the source
   columns and ``SYNTHETIC_COL``. FIND filters the source with it,
-  VERIFY filters the target with it, and FINAL_LOAD hands the same
-  text to the backend writer (the INSERT's WHERE, and the DELETE a
-  relational rollback runs). Every literal in it is written by
-  ``predicate.render.sql_literal``.
+  VERIFY filters the target with it (or, for whole partitions, the
+  target's partition directories), and FINAL_LOAD hands the same
+  condition to the backend writer in its dialect (the INSERT's WHERE,
+  and the DELETE a relational rollback runs). Every literal in it is
+  written by ``predicate.render.sql_literal``.
 - ``offloaded(md)`` is the slice the metadata says has moved: the
   frontend condition, plus the backend condition a synthetic RANGE
   prunes on. The hybrid view and the status report both split rows
@@ -25,6 +26,7 @@ counts as moved cannot differ.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,6 +45,7 @@ from goe_spark.predicate import (
 from goe_spark.predicate.render import sql_literal
 
 SYNTHETIC_COL = "goe_part_key"
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"  # the directory of NULL keys
 
 
 @dataclass
@@ -86,11 +89,11 @@ class PartitionSpec:
 
 @dataclass(frozen=True)
 class InFlight:
-    """The rows this run moves: a predicate (already rendered SQL),
-    LIST values of one column, and the synthetic range (lower, hwm].
-    Each part is optional; no part at all means every row."""
+    """The rows this run moves: a predicate (the parsed DSL), LIST
+    values of one column, and the synthetic range (lower, hwm]. Each
+    part is optional; no part at all means every row."""
 
-    predicate: str | None = None
+    ast: object | None = None
     list_column: str | None = None
     list_values: tuple = ()
     hwm: object | None = None
@@ -101,14 +104,13 @@ class InFlight:
         """The slice ``cfg`` asks for on top of the prior HWM
         ``lower``. A predicate is checked against the source's columns
         and types here, before anything is staged."""
-        predicate = None
+        ast = None
         if cfg.offload_predicate:
             ast = parse_predicate_dsl(cfg.offload_predicate)
             predicate_to_column(ast, source_df)
-            predicate = predicate_to_sql(ast)
         ranged = cfg.partition is not None and cfg.hwm is not None
         return cls(
-            predicate=predicate,
+            ast=ast,
             list_column=cfg.list_partition_column,
             list_values=tuple(cfg.list_partition_values or ()),
             hwm=cfg.hwm if ranged else None,
@@ -116,22 +118,69 @@ class InFlight:
         )
 
     @property
+    def predicate(self) -> str | None:
+        """The predicate's SQL text, the spelling metadata records."""
+        return None if self.ast is None else predicate_to_sql(self.ast)
+
+    @property
+    def whole_partitions(self) -> bool:
+        """Whether the slice selects whole partition directories (every
+        row, or a synthetic range alone), so target footers count it."""
+        return self.ast is None and not self.list_values
+
+    @property
     def clause(self) -> str | None:
+        return self.clause_in()
+
+    def clause_in(self, dialect: str | None = None) -> str | None:
+        """The slice as one SQL condition, its literals spelled for
+        ``dialect`` (None: Spark's)."""
+        def lit(v):
+            return sql_literal(v, dialect)
+
         parts = []
         if self.list_values:
-            vals = ", ".join(sql_literal(v) for v in self.list_values)
+            vals = ", ".join(lit(v) for v in self.list_values)
             parts.append(f"{self.list_column} IN ({vals})")
         if self.hwm is not None:
-            parts.append(f"{SYNTHETIC_COL} <= {sql_literal(self.hwm)}")
+            parts.append(f"{SYNTHETIC_COL} <= {lit(self.hwm)}")
             if self.lower is not None:
-                parts.append(f"{SYNTHETIC_COL} > {sql_literal(self.lower)}")
-        if self.predicate:
+                parts.append(f"{SYNTHETIC_COL} > {lit(self.lower)}")
+        if self.ast is not None:
             # The predicate may OR at its top level.
-            parts.insert(0, f"({self.predicate})" if parts else self.predicate)
+            pred = predicate_to_sql(self.ast, dialect)
+            parts.insert(0, f"({pred})" if parts else pred)
         return " AND ".join(parts) or None
 
     def where(self, df: DataFrame) -> DataFrame:
         return df if self.clause is None else df.where(self.clause)
+
+    def partitions(self, spark, names: list[str], dtype) -> list[tuple[str, object]]:
+        """(directory name, partition value) of each Hive partition
+        directory in ``names`` (``SYNTHETIC_COL=<value>``) this slice
+        of whole partitions selects. Spark decides, the way its
+        partition pruning does: each unescaped directory value is cast
+        to ``dtype`` (the Hive NULL directory is NULL) and filtered by
+        the clause, over an inline table the optimizer evaluates on
+        the driver: no Spark job."""
+        if not names:
+            return []
+        values = ", ".join(
+            f"({i}, {_dir_value_sql(n)})" for i, n in enumerate(names)
+        )
+        rows = self.where(
+            spark.sql(
+                f"SELECT i, CAST(v AS {dtype.simpleString()}) AS {SYNTHETIC_COL}"
+                f" FROM VALUES {values} AS t(i, v)"
+            )
+        ).collect()
+        return [(names[r.i], r[SYNTHETIC_COL]) for r in rows]
+
+
+def _dir_value_sql(name: str) -> str:
+    """SQL for the raw string value of partition directory ``name``."""
+    raw = unquote(name.split("=", 1)[1])
+    return "NULL" if raw == HIVE_NULL else sql_literal(raw)
 
 
 @dataclass(frozen=True)

@@ -140,12 +140,16 @@ class StepRunner:
             if sc is not None:
                 sc.removeJobTag(step_tag(name))
 
+    def skipped(self, name: str, reason: str | None = None) -> None:
+        """Record step ``name`` as skipped (for ``reason``)."""
+        self._record(StepResult(name, STEP_SKIPPED, detail=reason))
+
     def run(self, name: str, fn, *args, **kwargs):
         if name in self.resume_done:
-            self._record(StepResult(name, STEP_SKIPPED, detail="resumed"))
+            self.skipped(name, "resumed")
             return None
         if name in self.skip:
-            self._record(StepResult(name, STEP_SKIPPED))
+            self.skipped(name)
             return None
         if self.error_at == name:
             err = RuntimeError(f"injected error before step {name}")

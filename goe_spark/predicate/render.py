@@ -108,42 +108,51 @@ def predicate_to_column(node, df: DataFrame | None = None) -> Column:
     return F.expr(predicate_to_sql(node))
 
 
-def sql_literal(v) -> str:
+def sql_literal(v, dialect: str | None = None) -> str:
     """SQL text for one Python value: the one spelling of every
     literal in a predicate, an offload slice and a writer clause.
-    Strings escape a quote as '' and a backslash as \\\\, as Spark
-    reads them."""
+    Strings escape a quote as '' and (not on Derby) a backslash as
+    \\\\, as Spark reads them. Dates and timestamps are typed
+    literals (``DATE '...'``); Derby has none and takes its conversion
+    functions (``DATE('...')``) instead."""
     if isinstance(v, decimal.Decimal):
         return format(v, "f")
     if isinstance(v, (int, float)):
         return str(v)
     if isinstance(v, _dt.datetime):
-        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-    if isinstance(v, _dt.date):
-        return f"DATE '{v.isoformat()}'"
-    s = str(v).replace("\\", "\\\\").replace("'", "''")
+        kind, text = "TIMESTAMP", v.isoformat(sep=" ")
+    elif isinstance(v, _dt.date):
+        kind, text = "DATE", v.isoformat()
+    else:
+        kind = None
+    if kind is not None:
+        return f"{kind}('{text}')" if dialect == "derby" else f"{kind} '{text}'"
+    s = str(v).replace("'", "''")
+    if dialect != "derby":  # Derby reads a backslash as itself
+        s = s.replace("\\", "\\\\")
     return f"'{s}'"
 
 
-def _sql_literal(value: Value) -> str:
+def _sql_literal(value: Value, dialect: str | None) -> str:
     if value.kind == "literal":
         return str(value.value)
-    return sql_literal(value.value)
+    return sql_literal(value.value, dialect)
 
 
-def predicate_to_sql(node) -> str:
-    """Render the AST to ANSI SQL WHERE-clause text."""
+def predicate_to_sql(node, dialect: str | None = None) -> str:
+    """Render the AST to ANSI SQL WHERE-clause text, its literals
+    spelled for ``dialect`` (see ``sql_literal``)."""
     if isinstance(node, Group):
-        parts = [predicate_to_sql(i) for i in node.items]
+        parts = [predicate_to_sql(i, dialect) for i in node.items]
         joined = f" {node.op} ".join(
             f"({p})" if isinstance(i, Group) else p
             for p, i in zip(parts, node.items)
         )
         return joined
     if isinstance(node, Comparison):
-        return f"{node.column.name} {node.op} {_sql_literal(node.value)}"
+        return f"{node.column.name} {node.op} {_sql_literal(node.value, dialect)}"
     if isinstance(node, InList):
-        vals = ", ".join(_sql_literal(v) for v in node.values)
+        vals = ", ".join(_sql_literal(v, dialect) for v in node.values)
         op = "NOT IN" if node.negated else "IN"
         return f"{node.column.name} {op} ({vals})"
     if isinstance(node, NullTest):

@@ -22,9 +22,15 @@ exactly that surface so the offload pipeline is backend-agnostic:
   aren't shipped here, and a fake that pretended otherwise would just
   hide the gap.
 
-At 100 TB the writer is never the shuffle: every implementation takes
-the already-staged DataFrame and hands it to a distributed sink —
-nothing is collected to the driver.
+Staging is the writer's choice: a writer whose table is a local
+parquet directory (``direct_dir``) takes the sliced source with the
+final casts applied and no staged copy; the pipeline's validation
+rides that write as an Observation and runs as the ``check`` before
+the load is committed. Every other writer takes the staged frame.
+
+At 100 TB the writer is never the shuffle: every implementation hands
+its DataFrame to a distributed sink — nothing is collected to the
+driver.
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ import abc
 import contextlib
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +116,8 @@ class BackendWriter(abc.ABC):
     """The five calls the offload pipeline makes against a backend."""
 
     backend_name: str = "abstract"
+    # The SQL dialect the slice clause is rendered in (None: Spark's).
+    dialect: str | None = None
 
     @abc.abstractmethod
     def create_table(
@@ -122,6 +131,17 @@ class BackendWriter(abc.ABC):
         """Ensure the final table exists; return the DDL text issued
         (for logging/DDL-file parity)."""
 
+    @property
+    def direct_dir(self) -> str | None:
+        """The local parquet directory of the table when the pipeline
+        may load it straight from the source (no staged copy) and
+        count it from footers; None when the writer needs staged
+        files. Such a writer's ``load_final`` takes a ``check`` that
+        runs once the rows are written and before a replace is
+        committed: when it raises, a replace leaves the table as it
+        was, and the caller undoes an append from its snapshot."""
+        return None
+
     @abc.abstractmethod
     def load_final(
         self,
@@ -130,8 +150,8 @@ class BackendWriter(abc.ABC):
         partition_col: str | None = None,
         slice_clause: str | None = None,
     ) -> None:
-        """Write the staged frame: full replace, or append of the
-        incremental slice described by ``slice_clause``."""
+        """Write the frame: full replace, or append of the incremental
+        slice described by ``slice_clause``."""
 
     @abc.abstractmethod
     def read_final(self, spark: SparkSession) -> DataFrame:
@@ -173,8 +193,14 @@ class ParquetBackendWriter(BackendWriter):
         cluster_columns=None,
     ) -> str:
         # Parquet tables materialize on first write; emit the DDL text
-        # for parity with executing backends.
+        # for parity with executing backends. A full replace a crash
+        # interrupted is completed first: an append must not land
+        # beside a table still waiting to be swapped in.
+        from goe_spark.plans.compaction import heal_swap
         from goe_spark.plans.ddl_file import build_create_table_ddl
+
+        if self.direct_dir is not None:
+            heal_swap(self.target_dir)
 
         return build_create_table_ddl(
             owner,
@@ -185,13 +211,33 @@ class ParquetBackendWriter(BackendWriter):
             sort_columns=cluster_columns,
         )
 
+    @property
+    def direct_dir(self) -> str | None:
+        return None if is_dfs_uri(self.target_dir) else self.target_dir
+
     def load_final(
-        self, df, replace, partition_col=None, slice_clause=None
+        self, df, replace, partition_col=None, slice_clause=None, check=None
     ) -> None:
+        """A local full replace is written beside the table and swapped
+        in whole behind compaction's marker, so a crash leaves the old
+        table or the new one (``heal_target`` completes the swap)."""
+        from goe_spark.plans.compaction import swap_in, swap_tmp
+
+        swapped = replace and self.direct_dir is not None
+        out = swap_tmp(self.target_dir) if swapped else self.target_dir
         writer = df.write.mode("overwrite" if replace else "append")
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
-        writer.parquet(self.target_dir)
+        try:
+            writer.parquet(out)
+            if check is not None:
+                check()
+        except BaseException:
+            if swapped:
+                shutil.rmtree(out, ignore_errors=True)
+            raise
+        if swapped:
+            swap_in(self.target_dir)
         self._loaded_schema = df.schema
 
     def read_final(self, spark) -> DataFrame:

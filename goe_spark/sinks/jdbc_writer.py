@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from goe_spark.sinks.backend_writer import BackendWriter
+from goe_spark.sources.jdbc import dialect_from_jdbc_url
 from goe_spark.types import canonical as C
 
 # Canonical -> ANSI/Derby type declarations. Derby caps DECIMAL
@@ -89,6 +90,9 @@ class JdbcBackendWriter(BackendWriter):
         spark: SparkSession | None = None,
     ):
         self.url = url
+        # The slice clause it records and rolls back by is rendered
+        # for its database (Derby has no typed DATE '...' literals).
+        self.dialect = dialect_from_jdbc_url(url)
         self.properties = dict(properties or {})
         # The session whose JVM issues driver-side DDL. create_table's
         # protocol signature takes no session, so it is pinned at

@@ -43,7 +43,10 @@ def test_spark_and_python_positions_agree(spark):
     positions — THE invariant the no-false-negative property rests on
     — for keys typed to their column as a delete types them: the
     Python value is spelled as Spark's CAST(col AS STRING) spells it
-    (5.0 and 1.0E-4 for doubles, 1.50 for a decimal(10,2))."""
+    (5.0 and 1.0E-4 for doubles, 1.50 for a decimal(10,2), a timestamp
+    without its fraction's trailing zeros). Doubles take the running
+    JVM's spelling: before JDK 19 some have more digits than their
+    shortest repr (2.82879384806159008E17)."""
     import datetime
     from decimal import Decimal
 
@@ -54,6 +57,8 @@ def test_spark_and_python_positions_agree(spark):
         IntegerType,
         LongType,
         StringType,
+        TimestampNTZType,
+        TimestampType,
     )
 
     from goe_spark.plans.targeted_delete import typed_keys
@@ -63,7 +68,10 @@ def test_spark_and_python_positions_agree(spark):
         (LongType(), [999_999_999_999, -(2**62)]),
         (DecimalType(10, 2), [Decimal("1.5"), Decimal("0"), Decimal("-12345678.9")]),
         (DoubleType(), [5, 1.5, 1e-4, 1e16, 123456789.0, -0.25, 0.001]),
+        (DoubleType(), [2.82879384806159e17, 1e23, float("nan"), -0.0, 1e-300]),
         (DateType(), [datetime.date(2024, 1, 5), datetime.date(1999, 12, 31)]),
+        (TimestampType(), ["2024-01-05 10:00:00.5", "2024-01-05 10:00:00", "1999-12-31 23:59:59.000123"]),
+        (TimestampNTZType(), ["2024-01-05 10:00:00.120", "2024-01-05 00:00:00.000001"]),
         (StringType(), ["x", "lang_7", "héllo wörld", "0123"]),
     ]
     for dtype, vals in cases:

@@ -140,8 +140,11 @@ class TestOffloadPipelineHistory:
         # Step sequence matches the pipeline result, with real timings.
         assert rec.step_names("ok") == res.steps
         timed = {s["name"]: s["seconds"] for s in rec.steps}
-        assert timed["STAGING_TRANSPORT"] > 0
         assert timed["FINAL_LOAD"] > 0
+        # A local parquet target loads straight from the source: the
+        # staging steps are recorded, as skipped.
+        skipped = {s["name"]: s["detail"] for s in rec.steps if s["status"] == "skipped"}
+        assert skipped["STAGING_TRANSPORT"] == "direct"
 
     def test_failure_records_error_step_and_status(self, spark, tmp_path):
         from goe_spark.plans.offload import (
@@ -181,5 +184,8 @@ class TestOffloadPipelineHistory:
             "FINAL_LOAD",
             "SAVE_METADATA",
         }
+        # A local parquet target loads straight from the source.
+        (staging,) = [r for r in rows if r.step == "STAGING_TRANSPORT"]
+        assert (staging.step_status, staging.step_detail) == ("skipped", "direct")
         assert all(r.status == COMMAND_SUCCESS for r in rows)
         assert any(r.step_seconds > 0 for r in rows)

@@ -7,6 +7,8 @@ rollback shape file snapshots can't provide."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,4 +150,44 @@ def test_list_rollback_deletes_exactly_the_quoted_slice(
     with pytest.raises(OffloadValidationError, match="count validation"):
         pipe.run(src)
     assert "DELETE FROM SH_REGION WHERE name IN ('O''Brien')" in w.statements
+    assert [r[0] for r in spark.read.jdbc(derby_url, "SH_REGION").collect()] == [1]
+
+
+@pytest.mark.parametrize(
+    "slice_kw, delete",
+    [
+        (
+            {"list_partition_column": "d", "list_partition_values": [dt.date(2024, 2, 1)]},
+            "DELETE FROM SH_REGION WHERE d IN (DATE('2024-02-01'))",
+        ),
+        (
+            {"offload_predicate": "column(ts) >= datetime(2024-02-01 00:00:00)"},
+            "DELETE FROM SH_REGION WHERE ts >= TIMESTAMP('2024-02-01 00:00:00')",
+        ),
+    ],
+    ids=["list_date", "predicate_timestamp"],
+)
+def test_rollback_of_a_dated_slice_speaks_derby(
+    spark, tmp_path, derby_url, monkeypatch, slice_kw, delete
+):
+    """Derby has no typed DATE '...' or TIMESTAMP '...' literals: the
+    slice a relational rollback DELETEs by is rendered in its dialect
+    (DATE('...'), TIMESTAMP('...')), so a failed verification of a
+    dated slice removes exactly the in-flight rows and keeps the
+    earlier slice."""
+    w = JdbcBackendWriter(derby_url)
+    days = [dt.date(2024, 1, 1), dt.date(2024, 2, 1), dt.date(2024, 2, 1), dt.date(2024, 3, 1)]
+    src = spark.createDataFrame(
+        [(i, d, dt.datetime.combine(d, dt.time())) for i, d in enumerate(days, 1)],
+        "id long, d date, ts timestamp",
+    )
+    OffloadPipeline(
+        spark,
+        _cfg(tmp_path, w, list_partition_column="d", list_partition_values=[days[0]]),
+    ).run(src)
+    pipe = OffloadPipeline(spark, _cfg(tmp_path, w, **slice_kw))
+    monkeypatch.setattr(pipe, "_verify_count", lambda df: -1)
+    with pytest.raises(OffloadValidationError, match="count validation"):
+        pipe.run(src)
+    assert delete in w.statements
     assert [r[0] for r in spark.read.jdbc(derby_url, "SH_REGION").collect()] == [1]

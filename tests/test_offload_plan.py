@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from goe_spark.plans.chunker import chunk_partitions
+from goe_spark.plans.history import ExecutionHistoryStore
 from goe_spark.plans.metadata import MetadataStore, OffloadMetadata
 from goe_spark.plans.offload import (
     OffloadConfig,
@@ -179,7 +180,16 @@ def test_offload_full_table(spark, tmp_path):
     result = OffloadPipeline(spark, cfg).run(src)
     assert result.rows_staged == src.count()
     assert result.rows_final == result.rows_staged
-    assert "VALIDATE_STAGED_DATA" in result.steps
+    # A local parquet target loads straight from the source: the
+    # staged-data validation rides the final write and its step is
+    # recorded as skipped.
+    assert "FINAL_LOAD" in result.steps
+    assert "VALIDATE_STAGED_DATA" not in result.steps
+    (rec,) = ExecutionHistoryStore(cfg.metadata_dir).list_executions()
+    skipped = {s["name"]: s["detail"] for s in rec.steps if s["status"] == "skipped"}
+    assert skipped == dict.fromkeys(
+        ["STAGING_TRANSPORT", "VALIDATE_STAGED_DATA", "VALIDATE_CASTS"], "direct"
+    )
     final = spark.read.parquet(cfg.target_dir)
     # Partition pruning works on the synthetic column.
     one_month = result.partitions_written[0]
@@ -433,6 +443,7 @@ def test_staged_null_in_not_null_column_fails_validation(
         target_dir=str(tmp_path / "final"),
         staging_dir=str(tmp_path / "stage"),
         metadata_dir=str(tmp_path / "md"),
+        staging_format="parquet",  # the NULL is injected into staged files
     )
     with pytest.raises(OffloadValidationError, match="'nn_k': 1"):
         OffloadPipeline(spark, cfg).run(src)
@@ -463,3 +474,122 @@ def test_predicate_on_unparseable_column_fails_in_find(spark, tmp_path):
     (rec,) = ExecutionHistoryStore(cfg.metadata_dir).list_executions("tpch", "t")
     assert rec.steps[-1]["name"] == "FIND_OFFLOAD_DATA"
     assert rec.steps[-1]["status"] == "error"
+
+
+# --- the direct path: a local parquet target loads from the source -------
+
+
+def _amounts(spark):
+    """40 rows over four months of 2024; ``amount`` reaches 1462.50."""
+    return spark.range(40).selectExpr(
+        "id",
+        "CAST(id * 37.5 AS DECIMAL(10,2)) AS amount",
+        "date_add(DATE'2024-01-01', CAST(id * 3 AS INT)) AS d",
+    )
+
+
+def _tree_bytes(root):
+    """Every directory and file under ``root``, with the files' bytes."""
+    import os
+
+    out = {}
+    for dirpath, _, filenames in os.walk(root):
+        out[os.path.relpath(dirpath, root)] = None
+        for f in filenames:
+            with open(os.path.join(dirpath, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(dirpath, f), root)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("hwm, corrupt", [(None, 13), ("2024-03", 4)])
+def test_direct_cast_corruption_leaves_target_byte_identical(
+    spark, tmp_path, hwm, corrupt
+):
+    """A column-controls decimal too narrow for the data makes
+    try_cast return NULL: the observed probe on the direct write fails
+    the offload naming ``corrupt_amount``, and the target is left
+    byte-identical, both when a full replace would have swapped in a
+    new table and when an HWM append had written into it."""
+    import os
+
+    from goe_spark.types.controls import ColumnControls
+
+    src = _amounts(spark)
+    part = PartitionSpec("d", "date", "M")
+    OffloadPipeline(
+        spark, _cfg(tmp_path, partition=part, hwm=None if hwm is None else "2024-01")
+    ).run(src)
+    before = _tree_bytes(tmp_path / "final")
+    narrow = ColumnControls(
+        decimal_columns_csv_list=["amount"], decimal_columns_type_list=["5,2"]
+    )
+    with pytest.raises(OffloadValidationError, match=f"'corrupt_amount': {corrupt}}}"):
+        OffloadPipeline(
+            spark, _cfg(tmp_path, partition=part, hwm=hwm, column_controls=narrow)
+        ).run(src)
+    assert _tree_bytes(tmp_path / "final") == before
+    assert not [n for n in os.listdir(tmp_path) if n.startswith(".")]
+    assert not os.path.exists(tmp_path / "staging")
+
+
+def test_partitions_written_keeps_values_and_types(spark, tmp_path):
+    """The footer-counted partitions keep the values and types the
+    read-back grouping gave: longs for a number granularity, None for
+    the Hive NULL directory, unescaped strings for string prefixes."""
+    src = spark.createDataFrame(
+        [(1, 10, "a/bc"), (2, None, "a%d"), (3, 25, None), (4, 130, "a=b"), (5, 27, "a/x")],
+        "id long, n long, s string",
+    )
+    by_number = OffloadPipeline(
+        spark, _cfg(tmp_path, partition=PartitionSpec("n", "number", 20))
+    ).run(src)
+    assert by_number.partitions_written == [None, 0, 20, 120]
+    assert [type(p) for p in by_number.partitions_written[1:]] == [int] * 3
+    assert by_number.rows_final == 5
+
+    by_prefix = OffloadPipeline(
+        spark,
+        _cfg(
+            tmp_path,
+            target_dir=str(tmp_path / "by_prefix"),
+            metadata_dir=str(tmp_path / "meta2"),
+            partition=PartitionSpec("s", "string", 2),
+        ),
+    ).run(src)
+    assert by_prefix.partitions_written == [None, "a%", "a/", "a="]
+    assert by_prefix.rows_final == 5
+
+    # A RANGE append counts only the directories of its slice.
+    cfg = _cfg(
+        tmp_path,
+        target_dir=str(tmp_path / "ranged"),
+        metadata_dir=str(tmp_path / "meta3"),
+        partition=PartitionSpec("n", "number", 20),
+    )
+    from dataclasses import replace
+
+    first = OffloadPipeline(spark, replace(cfg, hwm=0)).run(src)
+    assert (first.partitions_written, first.rows_final) == ([0], 1)
+    rest = OffloadPipeline(spark, replace(cfg, hwm=200)).run(src)
+    assert (rest.partitions_written, rest.rows_final) == ([20, 120], 3)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"hwm": "2023-12"},
+        {"list_partition_column": "id", "list_partition_values": [1000]},
+        {"offload_predicate": "column(id) > numeric(1000)"},
+    ],
+    ids=["full", "range", "list", "predicate"],
+)
+def test_direct_load_of_an_empty_slice(spark, tmp_path, kw):
+    """A slice with no rows loads, validates and verifies as zero rows
+    on the direct path: the observed validation of a partitioned write
+    arrives even when the hashed input is empty."""
+    part = PartitionSpec("d", "date", "M")
+    res = OffloadPipeline(
+        spark, _cfg(tmp_path, partition=part, **kw)
+    ).run(_amounts(spark).where("id < 0"))
+    assert (res.rows_staged, res.rows_final, res.partitions_written) == (0, 0, [])

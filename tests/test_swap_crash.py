@@ -1,7 +1,8 @@
 """One crash-safe swap: every user of compaction's marker swap (a
-partition rewrite, flat zorder, SCD2 apply, the streaming fold) dies
-at each point of the swap, and one heal leaves exactly the old table
-or exactly the new one, with nothing left behind."""
+partition rewrite, flat zorder, SCD2 apply, the streaming fold, an
+offload's full replace of a local parquet target) dies at each point
+of the swap, and one heal leaves exactly the old table or exactly the
+new one, with nothing left behind."""
 
 from __future__ import annotations
 
@@ -89,11 +90,33 @@ def _read_streamed(spark, t):
     return read_streamed_table(spark, t)
 
 
+def _offload(spark, t, n, k="id % 4", **kw):
+    """An offload of ``n`` rows into ``t``, partitioned on ``k`` (full
+    unless ``kw`` names a slice)."""
+    from goe_spark.plans.offload import OffloadConfig, OffloadPipeline, PartitionSpec
+
+    cfg = OffloadConfig(
+        owner="o",
+        table_name="t",
+        target_dir=t,
+        staging_dir=f"{t}.staging",
+        metadata_dir=f"{t}.md",
+        partition=PartitionSpec("k", "number", 1),
+        **kw,
+    )
+    return OffloadPipeline(spark, cfg).run(spark.range(n).selectExpr("id", f"{k} AS k"))
+
+
 USERS = {  # name: (build the table, run the swap, read the table)
     "partition_rewrite": (_partitioned, _delete, lambda s, t: s.read.parquet(t)),
     "flat_zorder": (_flat, _zorder, lambda s, t: s.read.parquet(t)),
     "scd2_apply": (_dim, _apply, lambda s, t: s.read.parquet(t)),
     "fold": (_streamed, _fold, _read_streamed),
+    "offload_full_replace": (
+        lambda s, t: _offload(s, t, 300),
+        lambda s, t: _offload(s, t, 500),
+        lambda s, t: s.read.parquet(t),
+    ),
 }
 
 
@@ -137,6 +160,29 @@ def test_crash_matrix_heals_to_old_or_new(spark, tmp_path, user, point):
     assert _rows(read(spark, t)) == (old if point == "staged" else new)
     assert _debris(str(tmp_path), t) == []
     assert heal_target(spark, t) == {"swaps_healed": [], "merge_healed": False}
+
+
+@pytest.mark.parametrize("point", ["armed", "moved"])
+def test_next_offload_completes_an_interrupted_full_replace(spark, tmp_path, point):
+    """A full replace that died after its marker (the old table moved
+    aside, at "moved") is completed when the next offload of the
+    target begins, before a LIST append lands: the append goes into
+    the new table, and no staged copy or marker is left."""
+    t = str(tmp_path / "t")
+    _offload(spark, t, 300)
+    with crash_swap(point):
+        _offload(spark, t, 500)
+    res = _offload(
+        spark,
+        t,
+        500,
+        k="10 + id % 5",
+        list_partition_column="k",
+        list_partition_values=[10],
+    )
+    assert (res.partitions_written, res.rows_final) == ([10], 100)
+    assert spark.read.parquet(t).count() == 600
+    assert _debris(str(tmp_path), t) == []
 
 
 @pytest.mark.parametrize("point", ["staged", "armed"])

@@ -1,5 +1,6 @@
 """Job-budget guards for the write path: the partitioned final load
-spreads a one-file staged input across the cores, a partition rewrite
+spreads a one-file input across the cores, an offload of a local
+parquet target verifies from footers, a partition rewrite
 (compaction, targeted delete, partitioned zorder) costs one write job
 plus driver-side footer reads, read-backs of files the offload wrote
 infer no schema, and listing runs at most one task per core. Counted from Spark's status
@@ -178,9 +179,11 @@ def test_partitioned_zorder_job_budget_and_manifest(
 
 
 def test_incremental_offload_reads_back_with_known_schema(spark, tmp_path):
-    """An HWM append reads its staged files and the final table back
-    with the schema of the frames written, so neither read-back runs
-    a schema-inference job: 7 jobs, where inferring both ran 9."""
+    """An HWM append of a local parquet target reads the source once:
+    2 jobs, the hash exchange and the write the validation rides. It
+    stages nothing and counts its slice from footers, so nothing is
+    read back. Staged, with both read-backs carrying the schema of the
+    frame written, it ran 7 jobs; inferring both schemas ran 9."""
     src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
     target = str(tmp_path / "final")
 
@@ -203,7 +206,38 @@ def test_incremental_offload_reads_back_with_known_schema(spark, tmp_path):
         res = offload("1995-12")
     assert res.partitions_written == [f"1995-{m:02d}" for m in range(7, 13)]
     assert res.rows_final == res.rows_staged > 0
-    assert len(ids) <= 7, len(ids)
+    assert len(ids) <= 2, len(ids)
+
+
+def test_full_and_range_offloads_verify_from_footers(spark, tmp_path):
+    """A FULL and a RANGE offload of a local parquet target count their
+    slice from the footers of the partition directories it selects:
+    no Spark job runs under VERIFY_EXPORTED_DATA. A grouped read-back
+    count ran 2 (and a listing job past 32 partitions)."""
+    src = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+
+    def verify_jobs(name, **kw):
+        with tagged_jobs(spark) as ids:
+            res = OffloadPipeline(
+                spark,
+                OffloadConfig(
+                    owner="tpch",
+                    table_name="orders",
+                    target_dir=str(tmp_path / name),
+                    staging_dir=str(tmp_path / "staging"),
+                    metadata_dir=str(tmp_path / f"{name}_meta"),
+                    partition=PartitionSpec("o_orderdate", "date", "M"),
+                    **kw,
+                ),
+            ).run(src)
+        assert res.rows_final == res.rows_staged > 0
+        verify = tracker.getJobIdsForTag(step_tag("VERIFY_EXPORTED_DATA"))
+        return set(ids) & set(verify)
+
+    assert verify_jobs("full") == set()
+    assert verify_jobs("range", hwm="1995-06") == set()
+    assert verify_jobs("range", hwm="1995-12") == set()
 
 
 def test_partition_listing_runs_one_task_per_core(spark, offloaded_orders):
